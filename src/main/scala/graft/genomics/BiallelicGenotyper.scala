@@ -23,20 +23,13 @@ import org.apache.spark.sql.functions._
   */
 object BiallelicGenotyper {
 
-  /** Genotype calls for `variants` given `reads`. Output is flat
-    * (scalar + array columns), one row per (site, sample).
-    */
-  /** Genotype calls. `copyNumbers` switches on variable-ploidy calling:
-    * each site's state space follows the CNV map's local copy number
-    * (SURVEY.md A8/J5 integration — the reference threads copyNumber
-    * through the observation key the same way).
-    */
   /** The metadata-validated entry point (P4; reference
     * BiallelicGenotyper.scala:99-105): require a single sample and
-    * compatible sequence dictionaries BEFORE planning the join. This
-    * variant runs two small driver-side aggregations, so it is separate
-    * from the pure plan constructor `call` — use it at pipeline
-    * boundaries (the CLI does), not inside loops.
+    * compatible sequence dictionaries BEFORE planning the join, then
+    * [[call]]. This variant runs two small driver-side aggregations, so
+    * it is separate from the pure plan constructor `call` — use it at
+    * pipeline boundaries, not inside loops. The CLI calls `call`
+    * directly and skips these two jobs.
     */
   def callValidated(
       reads: Dataset[Read],
@@ -88,6 +81,13 @@ object BiallelicGenotyper {
     math.min(1e7, math.max(2.0 * meanSpan, raw))
   }
 
+  /** Genotype calls for `variants` given `reads`. Output is flat
+    * (scalar + array columns), one row per (site, sample).
+    * `copyNumbers` switches on variable-ploidy calling: each site's state
+    * space follows the CNV map's local copy number (SURVEY.md A8/J5
+    * integration — the reference threads copyNumber through the
+    * observation key the same way).
+    */
   def call(
       reads: Dataset[Read],
       variants: Dataset[DiscoveredVariant],
@@ -261,13 +261,9 @@ object BiallelicGenotyper {
       if (scoreAllSites) snvObs.unionByName(indelObs).unionByName(nonRefObs)
       else snvObs.unionByName(indelObs)
 
-    // -- score attachment (S9 + J3); clamp quals to the domain; per-site
-    // copy number from the broadcast CNV map (or flat ploidy).
-    // Two equivalent flavors, selected by graft.inlineK7 (system
-    // property / SPARK_GRAFT_INLINE_K7 env): the broadcast dimension
-    // table (default) or the inline codegen'd K7 expressions — same
-    // values bit-identically (ScoreTable.inlineScoreColumns); PROFILE_r07
-    // records the measured comparison on g6's cost center.
+    // -- score attachment (S9 + J3): clamp quals to the domain, take the
+    // per-site copy number from the broadcast CNV map (or flat ploidy),
+    // then join the broadcast score table.
     val cnCol = copyNumbers
       .map(m => m.copyNumberAt(col("contigName"), col("start")))
       .getOrElse(lit(ploidy))
@@ -281,21 +277,8 @@ object BiallelicGenotyper {
         when(col("qual") < 0, lit(graft.kernels.Likelihood.NoQual))
           .otherwise(greatest(least(col("qual"), lit(maxQual)), lit(1))))
       .withColumn("mapq", greatest(least(col("mapq"), lit(maxMapQ)), lit(1)))
-    val inlineK7 = sys.props.get("graft.inlineK7")
-      .orElse(sys.env.get("SPARK_GRAFT_INLINE_K7")).exists(_.toBoolean)
-    val keyed =
-      if (inlineK7)
-        // null-key parity with the table flavor: the inner join drops
-        // rows whose (copyNumber, qual, mapq) is null; the expression
-        // path must too, or the two flavors would aggregate different
-        // observation sets on degenerate rows
-        clamped
-          .where(col("copyNumber").isNotNull && col("qual").isNotNull && col("mapq").isNotNull)
-          .select(clamped.columns.map(col) ++ ScoreTable.inlineScoreColumns(maxP): _*)
-      else {
-        val scores = ScoreTable.buildForCopyNumbers(spark, cnValues, maxP, maxQual, maxMapQ)
-        clamped.join(broadcast(scores), Seq("copyNumber", "qual", "mapq"))
-      }
+    val scores = ScoreTable.buildForCopyNumbers(spark, cnValues, maxP, maxQual, maxMapQ)
+    val keyed = clamped.join(broadcast(scores), Seq("copyNumber", "qual", "mapq"))
 
     // -- per-row per-state contribution (weighted by the compressed
     // multiplicity), then the wide hash agg (A3). Nulled (nonref)

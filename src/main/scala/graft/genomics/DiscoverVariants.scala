@@ -1,6 +1,6 @@
 package graft.genomics
 
-import graft.kernels.{AlignmentOps, AlnClip, AlnDel, AlnIns, AlnMatch}
+import graft.kernels.AlignmentOps
 import graft.model.{DiscoveredVariant, Read}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -18,60 +18,21 @@ import scala.util.Try
   */
 object DiscoverVariants {
 
-  /** Per-read variant extraction (kernel K5). Walks the parsed operators
-    * with a (referencePos, readIdx) cursor pair:
-    *  - mismatch base  -> SNV at that position, emitted iff phred >= minQual
-    *  - insertion      -> left-anchored at the preceding reference base,
-    *                      emitted iff mean insert phred >= minQual
-    *  - deletion       -> left-anchored, spans the deleted reference bases.
-    * Malformed reads yield no variants (per-row failure isolation, as the
-    * reference warns-and-skips; DiscoverVariants.scala:121-127).
+  /** Per-read variant extraction (kernel K5): the read's
+    * [[AlignmentOps.variants]], kept when their quality reaches
+    * `minPhred` — an SNV by its base's phred, an insertion by the mean
+    * phred of its bases; deletions carry no base quality and are always
+    * kept. Malformed reads yield no variants (per-row failure isolation,
+    * as the reference warns-and-skips; DiscoverVariants.scala:121-127).
     */
-  def variantsInRead(read: Read, minPhred: Int): Seq[DiscoveredVariant] = {
+  def variantsInRead(read: Read, minPhred: Int): Seq[DiscoveredVariant] =
     Try {
-      val ops = AlignmentOps.parse(read.cigar, read.mdTag)
-      val out = scala.collection.mutable.ArrayBuffer.empty[DiscoveredVariant]
-      var pos = read.start
-      var idx = 0
-      def phred(i: Int): Int = read.qual.charAt(i) - 33
-      ops.foreach {
-        case AlnMatch(n, None) =>
-          pos += n; idx += n
-        case AlnMatch(n, Some(refBases)) =>
-          var i = 0
-          while (i < n) {
-            if (phred(idx + i) >= minPhred) {
-              out += DiscoveredVariant(
-                read.contigName, pos + i,
-                refBases.substring(i, i + 1),
-                Some(read.sequence.substring(idx + i, idx + i + 1)))
-            }
-            i += 1
-          }
-          pos += n; idx += n
-        case AlnIns(n) =>
-          val meanQ = (idx until (idx + n)).map(phred).sum.toDouble / n
-          if (meanQ >= minPhred && idx > 0) {
-            out += DiscoveredVariant(
-              read.contigName, pos - 1,
-              read.sequence.substring(idx - 1, idx),
-              Some(read.sequence.substring(idx - 1, idx + n)))
-          }
-          idx += n
-        case AlnDel(bases) =>
-          if (idx > 0) {
-            out += DiscoveredVariant(
-              read.contigName, pos - 1,
-              read.sequence.substring(idx - 1, idx) + bases,
-              Some(read.sequence.substring(idx - 1, idx)))
-          }
-          pos += bases.length
-        case AlnClip(n, true)  => idx += n
-        case AlnClip(_, false) => ()
+      val ops = AlignmentOps.parseRead(read.cigar, read.mdTag, read.sequence, read.qual)
+      AlignmentOps.variants(read.start, read.sequence, read.qual, ops).collect {
+        case v if v.quals == 0 || v.qualSum.toDouble / v.quals >= minPhred =>
+          DiscoveredVariant(read.contigName, v.start, v.ref, Some(v.alt))
       }
-      out.toSeq
     }.getOrElse(Nil)
-  }
 
   /** Discovery pipeline: flatMap kernel -> groupBy(site).count().where().
     * Output columns: contigName, start, referenceAllele, alternateAllele,

@@ -1,6 +1,6 @@
 package graft.genomics
 
-import graft.kernels.{AlignmentOps, AlnClip, AlnDel, AlnIns, AlnMatch}
+import graft.kernels.{AlignmentOps, AlnClip, AlnDel, AlnIns, Likelihood}
 import graft.model.{DiscoveredVariant, Read}
 
 import scala.util.Try
@@ -54,58 +54,28 @@ object Observer {
       clipBoundaries: Set[Long]) // aligned positions where a soft clip abuts
 
   private def walk(read: Read): SitePileup = {
-    val ops = AlignmentOps.parse(read.cigar, read.mdTag)
+    val ops = AlignmentOps.parseRead(read.cigar, read.mdTag, read.sequence, read.qual)
     val bases = Map.newBuilder[Long, (Char, Int)]
     val refs = Map.newBuilder[Long, Char]
-    val vars = Map.newBuilder[(Long, String, String), Int]
     val anchors = Set.newBuilder[Long]
     val clips = Set.newBuilder[Long]
-    var pos = read.start
-    var idx = 0
-    def phred(i: Int): Int = read.qual.charAt(i) - 33
-    ops.foreach {
-      case AlnMatch(n, None) =>
-        var i = 0
-        while (i < n) {
-          bases += (pos + i) -> ((read.sequence.charAt(idx + i), phred(idx + i)))
-          refs += (pos + i) -> read.sequence.charAt(idx + i)
-          i += 1
-        }
-        pos += n; idx += n
-      case AlnMatch(n, Some(refBases)) =>
-        var i = 0
-        while (i < n) {
-          bases += (pos + i) -> ((read.sequence.charAt(idx + i), phred(idx + i)))
-          refs += (pos + i) -> refBases.charAt(i)
-          vars += ((pos + i, refBases.substring(i, i + 1),
-            read.sequence.substring(idx + i, idx + i + 1))) -> phred(idx + i)
-          i += 1
-        }
-        pos += n; idx += n
-      case AlnIns(n) =>
-        if (idx > 0) {
-          val meanQ = (idx until (idx + n)).map(phred).sum / n
-          vars += ((pos - 1, read.sequence.substring(idx - 1, idx),
-            read.sequence.substring(idx - 1, idx + n))) -> meanQ
-        }
-        anchors += (pos - 1)
-        idx += n
-      case AlnDel(del) =>
-        // deleted bases carry no read quality: score on mapQ alone
-        // (reference Observer.scala:120-137 emits optQuality = None)
-        if (idx > 0) {
-          vars += ((pos - 1, read.sequence.substring(idx - 1, idx) + del,
-            read.sequence.substring(idx - 1, idx))) -> graft.kernels.Likelihood.NoQual
-        }
-        anchors += (pos - 1)
-        pos += del.length
-      case AlnClip(n, true) =>
-        // boundary position where the clip meets the aligned core
-        clips += (if (idx == 0) pos else pos - 1)
-        idx += n
-      case AlnClip(_, false) => ()
+    AlignmentOps.foreachAlignedBase(read.start, read.sequence, ops) { (pos, idx, ref) =>
+      bases += pos -> ((read.sequence.charAt(idx), AlignmentOps.phred(read.qual, idx)))
+      refs += pos -> ref
     }
-    SitePileup(bases.result(), refs.result(), vars.result(), anchors.result(), clips.result())
+    AlignmentOps.walk(read.start, ops) {
+      case (AlnIns(_) | AlnDel(_), pos, _) => anchors += pos - 1
+      // boundary position where the clip meets the aligned core
+      case (AlnClip(_, true), pos, idx) => clips += (if (idx == 0) pos else pos - 1)
+      case _                            => ()
+    }
+    // an insertion scores its bases' (integer) mean phred; deleted bases
+    // carry no read quality and score on mapQ alone (reference
+    // Observer.scala:120-137 emits optQuality = None)
+    val vars = AlignmentOps.variants(read.start, read.sequence, read.qual, ops).map { v =>
+      (v.start, v.ref, v.alt) -> (if (v.quals == 0) Likelihood.NoQual else v.qualSum / v.quals)
+    }.toMap
+    SitePileup(bases.result(), refs.result(), vars, anchors.result(), clips.result())
   }
 
   /** One aligned base of one read: the exploded pileup row for the
@@ -157,8 +127,7 @@ object Observer {
         // span from the CIGAR itself (what basePileup actually emits),
         // not the record's end field — an inconsistent end would clamp
         // bases out of every bin and silently lose depth
-        val refLen = Try(AlignmentOps.referenceLength(
-          AlignmentOps.parse(r.cigar, r.mdTag)).toLong).getOrElse(0L)
+        val refLen = Try(AlignmentOps.cigarRefLength(r.cigar)).getOrElse(0L)
         val last = math.max(r.start, math.max(r.end - 1, r.start + refLen - 1))
         val b0 = r.start / binSize
         val b1 = last / binSize
@@ -186,35 +155,18 @@ object Observer {
     * read regardless of how many variants overlap it. Malformed reads
     * emit nothing.
     */
-  def basePileup(read: Read): Seq[BaseObs] = {
+  def basePileup(read: Read): Seq[BaseObs] =
     Try {
-      val ops = AlignmentOps.parse(read.cigar, read.mdTag)
+      val ops = AlignmentOps.parseRead(read.cigar, read.mdTag, read.sequence, read.qual)
       val out = new scala.collection.mutable.ArrayBuffer[BaseObs](read.sequence.length)
-      var pos = read.start
-      var idx = 0
-      def phred(i: Int): Int = read.qual.charAt(i) - 33
-      def emit(n: Int, refBases: Option[String]): Unit = {
-        var i = 0
-        while (i < n) {
-          val rb = refBases.fold(read.sequence.substring(idx + i, idx + i + 1))(
-            r => r.substring(i, i + 1))
-          out += BaseObs(read.contigName, pos + i,
-            read.sequence.substring(idx + i, idx + i + 1), rb, phred(idx + i),
-            !read.readNegativeStrand, read.mapq, read.sampleId)
-          i += 1
-        }
-        pos += n; idx += n
-      }
-      ops.foreach {
-        case AlnMatch(n, r)    => emit(n, r)
-        case AlnIns(n)         => idx += n
-        case AlnDel(b)         => pos += b.length
-        case AlnClip(n, true)  => idx += n
-        case AlnClip(_, false) => ()
+      AlignmentOps.foreachAlignedBase(read.start, read.sequence, ops) { (pos, idx, ref) =>
+        val base = read.sequence.substring(idx, idx + 1)
+        out += BaseObs(read.contigName, pos, base,
+          if (ref == base.charAt(0)) base else ref.toString, AlignmentOps.phred(read.qual, idx),
+          !read.readNegativeStrand, read.mapq, read.sampleId)
       }
       out.toSeq
     }.getOrElse(Nil)
-  }
 
   /** Observations of one read at the given candidate variants. Malformed
     * reads observe nothing (per-row failure isolation).

@@ -54,19 +54,4 @@ object ScoreTable {
         (states.map(g => col("a_ll").getItem(g).as(s"a_ll_$g")) ++
           states.map(g => col("o_ll").getItem(g).as(s"o_ll_$g"))): _*)
   }
-
-  /** Inline-K7 (SURVEY §4's benchmark alternative to the broadcast
-    * table): the SAME a_ll_g / o_ll_g values as [[buildForCopyNumbers]],
-    * computed per row by the codegen'd [[graft.functions.K7Scores]]
-    * expression instead of joined — bit-identical by construction (the
-    * expression calls the same Likelihood kernel the table is generated
-    * from). Padding above a row's copy number is 0.0, as in the table.
-    */
-  def inlineScoreColumns(maxPloidy: Int): Seq[org.apache.spark.sql.Column] = {
-    val sc = graft.functions.NativeExpressions.k7_scores(
-      col("qual"), col("mapq"), col("copyNumber"), maxPloidy)
-    val states = 0 to maxPloidy
-    states.map(g => element_at(sc, g + 1).as(s"a_ll_$g")) ++
-      states.map(g => element_at(sc, maxPloidy + 1 + g + 1).as(s"o_ll_$g"))
-  }
 }

@@ -1,15 +1,21 @@
 package graft.kernels
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.{ArrayBuffer, ListBuffer}
 
-/** Pure-Scala alignment-operator kernel library (no Spark imports).
+/** Pure-Scala alignment-operator kernel library (no Spark imports): the
+  * one module that knows CIGAR/MD semantics, for the readers and the
+  * kernels alike.
   *
   * Re-implements, from the public SAM spec (CIGAR + MD tag semantics),
   * the capability of the reference's ObservationOperator ADT
   * (reference: avocado-core/.../models/ObservationOperator.scala:42-367):
-  * parse a CIGAR+MD pair into a normalized run-length alignment, collapse
-  * adjacent runs, reconstruct the reference substring, and render back to
-  * CIGAR+MD. Used inside Dataset kernels; never a column type.
+  * tokenize a CIGAR, parse a CIGAR+MD pair into a normalized run-length
+  * alignment, collapse adjacent runs, walk it with one (reference
+  * position, read index) cursor, extract the variants a read shows,
+  * reconstruct the reference substring, and render back to CIGAR+MD.
+  * The readers take a read's span from the bare CIGAR and count `N`
+  * skips in it; the kernels parse CIGAR+MD and reject `N`/`P`. Used
+  * inside Dataset kernels; never a column type.
   */
 sealed trait AlnOp {
   def size: Int
@@ -29,7 +35,66 @@ final case class AlnDel(bases: String) extends AlnOp {
 }
 final case class AlnClip(size: Int, soft: Boolean = true) extends AlnOp
 
+/** Per-base callback of [[AlignmentOps.foreachAlignedBase]]; a SAM type
+  * rather than a Function3 so the per-base call does not box.
+  */
+trait AlignedBase {
+  def apply(refPos: Long, readIdx: Int, refBase: Char): Unit
+}
+
+/** A variant one read shows, left-anchored the way VCF writes indels: an
+  * SNV at its base, an insertion or deletion at the aligned base before
+  * it. `qualSum` sums the phred scores of the `quals` read bases that
+  * carry it: the SNV base, the inserted bases, none for a deletion.
+  */
+final case class ReadVariant(start: Long, ref: String, alt: String, qualSum: Int, quals: Int)
+
 object AlignmentOps {
+
+  // ---- CIGAR tokenizer --------------------------------------------------
+
+  private val CigarCodes = "MIDNSHP=X"
+  private val RefConsuming = "M=XDN"
+  private val ReadConsuming = "M=XIS"
+
+  /** The one CIGAR tokenizer: `"*"` and `""` have no ops; anything else
+    * must be `(length op)+` with op one of `MIDNSHP=X`, or it throws
+    * IllegalArgumentException.
+    */
+  def cigarOps(cigar: String): Seq[(Int, Char)] =
+    if (cigar == "*" || cigar.isEmpty) Nil
+    else {
+      val out = ListBuffer.empty[(Int, Char)]
+      var i = 0
+      while (i < cigar.length) {
+        var j = i
+        while (j < cigar.length && cigar.charAt(j).isDigit) j += 1
+        require(j > i && j < cigar.length && CigarCodes.indexOf(cigar.charAt(j)) >= 0,
+          s"Bad CIGAR '$cigar'")
+        out += ((cigar.substring(i, j).toInt, cigar.charAt(j)))
+        i = j + 1
+      }
+      out.toList
+    }
+
+  /** Reference span of a read as the readers count it: `M/=/X/D/N`. */
+  def cigarRefLength(ops: Seq[(Int, Char)]): Long =
+    ops.collect { case (n, op) if RefConsuming.indexOf(op) >= 0 => n.toLong }.sum
+
+  def cigarRefLength(cigar: String): Long = cigarRefLength(cigarOps(cigar))
+
+  /** The same cursor as [[walk]] over raw CIGAR ops, for writers that
+    * have no MD: `f(len, op, refPos, readIdx)` at the start of each op.
+    */
+  def walkCigar(start: Long, ops: Seq[(Int, Char)])(f: (Int, Char, Long, Int) => Unit): Unit = {
+    var pos = start
+    var idx = 0
+    ops.foreach { case (n, op) =>
+      f(n, op, pos, idx)
+      if (RefConsuming.indexOf(op) >= 0) pos += n
+      if (ReadConsuming.indexOf(op) >= 0) idx += n
+    }
+  }
 
   // ---- MD tag tokenizer -------------------------------------------------
 
@@ -74,18 +139,8 @@ object AlignmentOps {
     * (the reference skips-and-warns; DiscoverVariants.scala:121-127).
     */
   def parse(cigar: String, md: String): Seq[AlnOp] = {
-    require(cigar.nonEmpty && cigar != "*", "Empty CIGAR")
-    // tokenize cigar into (len, op) pairs
-    val cigarOps = ArrayBuffer.empty[(Int, Char)]
-    var i = 0
-    while (i < cigar.length) {
-      var j = i
-      while (j < cigar.length && cigar.charAt(j).isDigit) j += 1
-      require(j > i && j < cigar.length, s"Bad CIGAR '$cigar'")
-      cigarOps += ((cigar.substring(i, j).toInt, cigar.charAt(j)))
-      i = j + 1
-    }
-
+    val ops = cigarOps(cigar)
+    require(ops.nonEmpty, "Empty CIGAR")
     var mdTokens = tokenizeMd(md)
     val out = ArrayBuffer.empty[AlnOp]
 
@@ -112,7 +167,7 @@ object AlignmentOps {
       }
     }
 
-    cigarOps.foreach { case (len, op) =>
+    ops.foreach { case (len, op) =>
       op match {
         case 'M' | '=' | 'X' => consumeAligned(len)
         case 'I'             => out += AlnIns(len)
@@ -127,13 +182,86 @@ object AlignmentOps {
           }
         case 'S' => out += AlnClip(len, soft = true)
         case 'H' => out += AlnClip(len, soft = false)
-        case 'N' | 'P' =>
+        case _ => // 'N' | 'P'
           throw new IllegalArgumentException(s"Unsupported CIGAR op '$op'")
-        case _ =>
-          throw new IllegalArgumentException(s"Unknown CIGAR op '$op'")
       }
     }
     collapse(out.toSeq)
+  }
+
+  /** [[parse]] for a read the walks index by read position: the CIGAR's
+    * read length must be the sequence length, with one quality per base.
+    */
+  def parseRead(cigar: String, md: String, sequence: String, qual: String): Seq[AlnOp] = {
+    val ops = parse(cigar, md)
+    require(readLength(ops) == sequence.length && qual.length == sequence.length,
+      s"CIGAR '$cigar' for ${sequence.length} bases and ${qual.length} qualities")
+    ops
+  }
+
+  def phred(qual: String, i: Int): Int = qual.charAt(i) - 33
+
+  // ---- the cursor walk ---------------------------------------------------
+
+  /** The one (reference position, read index) cursor: calls
+    * `f(op, refPos, readIdx)` at the start of each op. Matches advance
+    * both, deletions the position, insertions and soft clips the index.
+    */
+  def walk(start: Long, ops: Seq[AlnOp])(f: (AlnOp, Long, Int) => Unit): Unit = {
+    var pos = start
+    var idx = 0
+    ops.foreach { op =>
+      f(op, pos, idx)
+      op match {
+        case AlnMatch(n, _)    => pos += n; idx += n
+        case AlnIns(n)         => idx += n
+        case AlnDel(b)         => pos += b.length
+        case AlnClip(n, true)  => idx += n
+        case AlnClip(_, false) => ()
+      }
+    }
+  }
+
+  /** Every aligned base as `f(refPos, readIdx, refBase)`; the reference
+    * base is the MD's on a mismatch, else the read's own.
+    */
+  def foreachAlignedBase(start: Long, sequence: String, ops: Seq[AlnOp])(f: AlignedBase): Unit =
+    walk(start, ops) {
+      case (AlnMatch(n, misBases), pos, idx) =>
+        val ref = misBases.getOrElse(sequence.substring(idx, idx + n))
+        var i = 0
+        while (i < n) {
+          f(pos + i, idx + i, ref.charAt(i))
+          i += 1
+        }
+      case _ => ()
+    }
+
+  /** The variants a read shows, in read order (kernel K5's extraction;
+    * discovery gates them on quality, the observer keys its indel
+    * evidence by them). An insertion or deletion at the first aligned
+    * base has no anchor and is skipped.
+    */
+  def variants(start: Long, sequence: String, qual: String, ops: Seq[AlnOp]): Seq[ReadVariant] = {
+    val out = ListBuffer.empty[ReadVariant]
+    walk(start, ops) {
+      case (AlnMatch(n, Some(ref)), pos, idx) =>
+        var i = 0
+        while (i < n) {
+          out += ReadVariant(pos + i, ref.substring(i, i + 1),
+            sequence.substring(idx + i, idx + i + 1), phred(qual, idx + i), 1)
+          i += 1
+        }
+      case (AlnIns(n), pos, idx) if idx > 0 =>
+        val q = (idx until idx + n).map(phred(qual, _)).sum
+        out += ReadVariant(pos - 1, sequence.substring(idx - 1, idx),
+          sequence.substring(idx - 1, idx + n), q, n)
+      case (AlnDel(bases), pos, idx) if idx > 0 =>
+        val anchor = sequence.substring(idx - 1, idx)
+        out += ReadVariant(pos - 1, anchor + bases, anchor, 0, 0)
+      case _ => ()
+    }
+    out.toList
   }
 
   // ---- collapse (run-length merge) -------------------------------------
@@ -170,16 +298,11 @@ object AlignmentOps {
     */
   def extractReference(readSequence: String, ops: Seq[AlnOp]): String = {
     val sb = new StringBuilder
-    var idx = 0
-    ops.foreach {
-      case AlnMatch(n, None) =>
-        sb.append(readSequence.substring(idx, idx + n)); idx += n
-      case AlnMatch(n, Some(ref)) =>
-        sb.append(ref); idx += n
-      case AlnIns(n)  => idx += n
-      case AlnDel(b)  => sb.append(b)
-      case AlnClip(n, true)  => idx += n
-      case AlnClip(_, false) => ()
+    walk(0L, ops) {
+      case (AlnMatch(n, None), _, idx) => sb.append(readSequence.substring(idx, idx + n))
+      case (AlnMatch(_, Some(ref)), _, _) => sb.append(ref)
+      case (AlnDel(b), _, _)              => sb.append(b)
+      case _                              => ()
     }
     sb.toString
   }

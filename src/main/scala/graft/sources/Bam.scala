@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.kernels.AlignmentOps
 import graft.model.Read
 import org.apache.spark.sql.{Dataset, SparkSession}
 
@@ -52,10 +53,6 @@ object Bam {
 
   private def le(bytes: Array[Byte]): ByteBuffer =
     ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-
-  /** Reference-consumed length from decoded cigar ops. */
-  private def refLength(cigar: Seq[(Int, Char)]): Long =
-    cigar.collect { case (n, 'M' | '=' | 'X' | 'D' | 'N') => n.toLong }.sum
 
   /** Parse the BAM header from a decompressed stream: (reference names,
     * sample id from the first @RG SM:, falling back to `defaultSample`).
@@ -151,7 +148,7 @@ object Bam {
             readName = readName,
             contigName = if (refId >= 0 && refId < refs.size) refs(refId) else "*",
             start = start,
-            end = start + refLength(cigar),
+            end = start + AlignmentOps.cigarRefLength(cigar),
             sequence = seq.toString,
             qual = qual,
             cigar = cigarStr,
@@ -527,19 +524,7 @@ object Bam {
     }
     reads.foreach { r =>
       val rec = ByteBuffer.allocate(1 << 16).order(ByteOrder.LITTLE_ENDIAN)
-      val cigar: Seq[(Int, Char)] =
-        if (r.cigar == "*") Nil
-        else {
-          val out = ArrayBuffer.empty[(Int, Char)]
-          var i = 0
-          while (i < r.cigar.length) {
-            var j = i
-            while (r.cigar.charAt(j).isDigit) j += 1
-            out += ((r.cigar.substring(i, j).toInt, r.cigar.charAt(j)))
-            i = j + 1
-          }
-          out.toSeq
-        }
+      val cigar = AlignmentOps.cigarOps(r.cigar)
       var flag = 0
       if (!r.readMapped) flag |= FlagUnmapped
       if (r.readNegativeStrand) flag |= FlagReverse

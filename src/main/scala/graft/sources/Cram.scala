@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.kernels.AlignmentOps
 import graft.model.Read
 import org.apache.spark.sql.{Dataset, SparkSession}
 
@@ -674,8 +675,7 @@ object Cram {
         fillFromRef(r.rl)
         if (mdOk) { md.append(mdRun); mdFromRef = Some(md.toString) }
         val cig = if (ops.isEmpty) s"${r.rl}M" else ops.map { case (n, op) => s"$n$op" }.mkString
-        val rl = ops.collect { case (n, 'M' | 'D' | 'N') => n.toLong }.sum.max(
-          if (ops.isEmpty) r.rl.toLong else 0L)
+        val rl = AlignmentOps.cigarRefLength(ops.toSeq).max(if (ops.isEmpty) r.rl.toLong else 0L)
         (new String(bases, "ISO-8859-1"), cig, rl)
       }
 
@@ -954,24 +954,6 @@ object Cram {
     encodingBytes(6, p.toByteArray)
   }
   private def gammaEnc(offset: Int): Array[Byte] = encodingBytes(9, itf8Bytes(offset))
-
-  /** Reference-consumed length of a cigar string (M/D/N/=/X). */
-  def cigarRefLength(cigar: String): Long =
-    parseCigarOps(cigar).collect { case (n, 'M' | 'D' | 'N' | '=' | 'X') => n.toLong }.sum
-
-  private def parseCigarOps(cigar: String): Seq[(Int, Char)] =
-    if (cigar == "*" || cigar.isEmpty) Nil
-    else {
-      val out = ArrayBuffer.empty[(Int, Char)]
-      var i = 0
-      while (i < cigar.length) {
-        var j = i
-        while (cigar.charAt(j).isDigit) j += 1
-        out += ((cigar.substring(i, j).toInt, cigar.charAt(j)))
-        i = j + 1
-      }
-      out.toSeq
-    }
 
   /** Write reads as one local .cram (fixtures / CLI outputs; a
     * distributed sink would shard per partition like [[Vcf]]).
@@ -1292,14 +1274,12 @@ object Cram {
   private def buildFeatures(r: Read, reference: Option[Map[String, String]],
       subs: SubMatrix): Seq[Feature] = {
     val feats = ArrayBuffer.empty[Feature]
-    val ops = parseCigarOps(r.cigar) match {
+    val ops = AlignmentOps.cigarOps(r.cigar) match {
       case Nil => Seq((r.sequence.length, 'M'))
       case o => o
     }
-    var rp = 0 // 0-based read cursor
-    var ref0 = r.start // 0-based reference cursor
     val refStr = reference.flatMap(_.get(r.contigName))
-    ops.foreach { case (n, op) =>
+    AlignmentOps.walkCigar(r.start, ops) { (n, op, ref0, rp) =>
       op match {
         case 'M' | '=' | 'X' =>
           refStr match {
@@ -1322,18 +1302,9 @@ object Cram {
             case None =>
               feats += Feature('b', rp + 1, n, r.sequence.substring(rp, rp + n).getBytes("ISO-8859-1"))
           }
-          rp += n; ref0 += n
-        case 'I' =>
-          feats += Feature('I', rp + 1, n, r.sequence.substring(rp, rp + n).getBytes("ISO-8859-1"))
-          rp += n
-        case 'S' =>
-          feats += Feature('S', rp + 1, n, r.sequence.substring(rp, rp + n).getBytes("ISO-8859-1"))
-          rp += n
-        case 'D' => feats += Feature('D', rp + 1, n, null); ref0 += n
-        case 'N' => feats += Feature('N', rp + 1, n, null); ref0 += n
-        case 'P' => feats += Feature('P', rp + 1, n, null)
-        case 'H' => feats += Feature('H', rp + 1, n, null)
-        case other => throw new IllegalArgumentException(s"cigar op $other")
+        case 'I' | 'S' =>
+          feats += Feature(op, rp + 1, n, r.sequence.substring(rp, rp + n).getBytes("ISO-8859-1"))
+        case _ => feats += Feature(op, rp + 1, n, null) // D, N, P, H
       }
     }
     feats.toSeq

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.kernels.AlignmentOps
 import graft.model.Read
 import org.apache.spark.sql.{Dataset, SparkSession}
 
@@ -20,22 +21,6 @@ object Sam {
   private val FlagDuplicate = 0x400
   private val FlagSupplementary = 0x800
 
-  /** Reference-consumed length from a CIGAR string (for end coords). */
-  private def refLength(cigar: String): Long = {
-    var i = 0; var total = 0L
-    while (i < cigar.length) {
-      var j = i
-      while (j < cigar.length && cigar.charAt(j).isDigit) j += 1
-      val n = cigar.substring(i, j).toLong
-      cigar.charAt(j) match {
-        case 'M' | '=' | 'X' | 'D' | 'N' => total += n
-        case _                           => ()
-      }
-      i = j + 1
-    }
-    total
-  }
-
   /** Parse one SAM data line (None for headers/malformed). */
   def parseLine(line: String, sampleId: String = "sample"): Option[Read] = {
     if (line.isEmpty || line.startsWith("@")) return None
@@ -49,7 +34,7 @@ object Sam {
         readName = f(0),
         contigName = f(2),
         start = start,
-        end = start + (if (cigar == "*") 0L else refLength(cigar)),
+        end = start + AlignmentOps.cigarRefLength(cigar),
         sequence = f(9),
         qual = f(10),
         cigar = cigar,

@@ -159,42 +159,6 @@ class GenotyperSpec extends SparkSpec {
     assert(Observer.observe(ref, Seq(v)).map(_.support) === Seq(Observer.SupportRef))
   }
 
-  test("inline-K7 expressions are bit-identical to the broadcast score table") {
-    import spark.implicits._
-    // every (copyNumber, qual, mapq) cell of a small table vs the inline
-    // expressions over the same keys — exact doubles, no tolerance: the
-    // inline path replicates Likelihood's op order and JVM intrinsics
-    val maxP = 3
-    val table = ScoreTable.buildForCopyNumbers(spark, Seq(2, 3), maxP,
-      maxQual = 40, maxMapQ = 40)
-    val inline = table.select("copyNumber", "qual", "mapq")
-      .select(Seq(org.apache.spark.sql.functions.col("copyNumber"),
-        org.apache.spark.sql.functions.col("qual"),
-        org.apache.spark.sql.functions.col("mapq")) ++
-        ScoreTable.inlineScoreColumns(maxP): _*)
-    val key = (r: org.apache.spark.sql.Row) => (r.getInt(0), r.getInt(1), r.getInt(2))
-    val t = table.collect().map(r => key(r) -> r.toSeq.drop(3)).toMap
-    val i = inline.collect().map(r => key(r) -> r.toSeq.drop(3)).toMap
-    assert(t.keySet === i.keySet)
-    t.foreach { case (k, vs) =>
-      assert(vs === i(k), s"cell $k differs between table and inline")
-    }
-
-    // end-to-end: the full genotyper under the inline flag equals the
-    // table path row-for-row
-    val reads = ((0 until 6).map(n => read(s"alt$n", snvOff = 5)) ++
-      (0 until 4).map(n => read(s"ref$n"))).toDS()
-    val variants = Seq(DiscoveredVariant("chr1", 105, "A", Some("C"))).toDS()
-    def callOnce() = BiallelicGenotyper.call(reads, variants, ploidy = 2, binSize = 100.0)
-      .orderBy("contigName", "start").collect().map(_.toString).toSeq
-    val viaTable = callOnce()
-    System.setProperty("graft.inlineK7", "true")
-    try {
-      val viaInline = callOnce()
-      assert(viaInline === viaTable)
-    } finally System.clearProperty("graft.inlineK7")
-  }
-
   test("chooseBinSize targets the requested reads-per-bin band") {
     import spark.implicits._
     // 20k reads uniform over 100 kbp on one contig: density 0.2/base,

@@ -1,5 +1,7 @@
 package graft.kernels
 
+import graft.genomics.{DiscoverVariants, Observer}
+import graft.model.Read
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
@@ -107,6 +109,67 @@ class AlignmentOpsSpec extends AnyFunSuite {
       val back = AlignmentOps.parse(cigar, md)
       assert(AlignmentOps.readLength(back) === AlignmentOps.readLength(ops))
       assert(AlignmentOps.referenceLength(back) === AlignmentOps.referenceLength(ops))
+    }
+  }
+
+  // ---- cross-kernel properties over generated valid reads ---------------
+
+  /** A read that agrees with a generated alignment: soft clips at either
+    * end, mismatch bases that differ from the MD's reference base, and
+    * one quality per base.
+    */
+  private val readGen: Gen[Read] = for {
+    core <- alignmentGen
+    lead <- Gen.choose(0, 3)
+    trail <- Gen.choose(0, 3)
+    start <- Gen.choose(0L, 100000L)
+    seed <- Gen.long
+  } yield {
+    val rnd = new scala.util.Random(seed)
+    def bases(n: Int) = Seq.fill(n)("ACGT".charAt(rnd.nextInt(4))).mkString
+    def clip(n: Int) = if (n > 0) Seq(AlnClip(n)) else Nil
+    val ops = clip(lead) ++ core ++ clip(trail)
+    val sequence = ops.map {
+      case AlnMatch(_, Some(ref)) =>
+        ref.map(r => "ACGT".filterNot(_ == r).charAt(rnd.nextInt(3))).mkString
+      case AlnDel(_) => ""
+      case op        => bases(op.size)
+    }.mkString
+    val qual = sequence.map(_ => (35 + rnd.nextInt(39)).toChar)
+    val (cigar, md) = AlignmentOps.render(ops)
+    Read(s"r$seed", "chr1", start, start + AlignmentOps.referenceLength(ops), sequence, qual,
+      cigar, md, 60, readMapped = true, readNegativeStrand = rnd.nextBoolean(),
+      duplicateRead = false, primaryAlignment = true, sampleId = "s1")
+  }
+
+  test("property: the readers' CIGAR span equals the parsed reference length") {
+    forAll(readGen) { r =>
+      assert(AlignmentOps.cigarRefLength(r.cigar) ===
+        AlignmentOps.referenceLength(AlignmentOps.parse(r.cigar, r.mdTag)))
+    }
+  }
+
+  test("property: every discovered variant is observed as alt support by its own read") {
+    forAll(readGen) { r =>
+      val vs = DiscoverVariants.variantsInRead(r, 0)
+      assert(vs.nonEmpty || AlignmentOps.parse(r.cigar, r.mdTag).forall {
+        case AlnMatch(_, None) | AlnClip(_, _) => true
+        case _                                 => false
+      })
+      vs.foreach { v =>
+        assert(Observer.observe(r, Seq(v)).map(_.support) === Seq(Observer.SupportAlt), s"$v in $r")
+      }
+    }
+  }
+
+  test("property: basePileup emits exactly one row per aligned base") {
+    forAll(readGen) { r =>
+      val ops = AlignmentOps.parse(r.cigar, r.mdTag)
+      val rows = Observer.basePileup(r)
+      assert(rows.size === ops.collect { case AlnMatch(n, _) => n }.sum)
+      assert(rows.map(_.pos).distinct.size === rows.size)
+      assert(rows.forall(p => p.pos >= r.start && p.pos < r.end))
+      assert(rows.count(p => p.base != p.refBase) === ops.collect { case AlnMatch(n, Some(_)) => n }.sum)
     }
   }
 }

@@ -57,7 +57,7 @@ class CramSpec extends SparkSpec {
   private def q(n: Int): String = Array.tabulate(n)(i => (43 + (i % 30)).toChar).mkString
 
   private def mk(name: String, start: Long, seq: String, cigar: String): Read = {
-    val refLen = Cram.cigarRefLength(cigar)
+    val refLen = graft.kernels.AlignmentOps.cigarRefLength(cigar)
     Read(name, "chr1", start, start + refLen, seq, q(seq.length), cigar, "", 60,
       readMapped = true, readNegativeStrand = false, duplicateRead = false,
       primaryAlignment = true, sampleId = "s1")
