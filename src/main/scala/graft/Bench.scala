@@ -345,21 +345,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // bytes-derived shuffle sizing (graft.util.Tuning): the r15 w2 proof
     // (370.5s -> 73.0s at 256 partitions, sf100) applied engine-wide
-    val shufflePartitions = graft.util.Tuning.shufflePartitions(sfDir, cpus.toInt)
-    System.err.println(s"[bench] shuffle partitions: $shufflePartitions " +
-      s"(leg ${graft.util.Tuning.legBytes(sfDir) >> 20} MB, cpus $cpus)")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.plans.GraftExtensions.catalogSession(sfDir)
+    System.err.println("[bench] shuffle partitions: " +
+      spark.conf.get("spark.sql.shuffle.partitions") +
+      s" (leg ${graft.util.Tuning.legBytes(sfDir) >> 20} MB, " +
+      s"cpus ${spark.sparkContext.defaultParallelism})")
     spark.sparkContext.setLogLevel("WARN")
 
     // JVM/codegen warmup on the smallest SF so headline timings measure

@@ -50,26 +50,9 @@ object Main {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    // builder extensions are silently IGNORED when getOrCreate returns a
-    // pre-existing session (shared-JVM callers, tests) — ensure the
-    // interval-join rewrite either way, so a raw SQL overlap join from
-    // this session never plans nested-loop. Safe to stack with the
-    // injected rule: the rewrite is idempotent (its own dedup predicate
-    // fails the equis-only guard on an already-rewritten join).
-    if (!s.experimental.extraOptimizations.exists(
-        _.isInstanceOf[graft.plans.IntervalJoinRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.IntervalJoinRewrite()
-    // BandJoinRewrite additionally WANTS the extraOptimizations slot (the
-    // last optimizer batch): an EXISTS-spelled band becomes a LeftSemi
-    // join only at RewriteSubquery, AFTER the injected operator batch —
-    // only a late copy of the rule sees it. Idempotent (the __lband
-    // reference guard), so stacking with the injected copy is safe.
-    if (!s.experimental.extraOptimizations.exists(
-        _.isInstanceOf[graft.plans.BandJoinRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.BandJoinRewrite()
-    s
+    // builder extensions are ignored when a session already exists, and
+    // the band rewrite wants the late optimizer batch: install ensures both
+    graft.plans.GraftExtensions.install(s)
   }
 
   private def loadReads(spark: SparkSession, path: String,

@@ -1290,40 +1290,20 @@ object Dedup {
     * the 60-bit token hash). Near-dups then differ in few bits (Hamming).
     * 60 bits (not 64) so the "md5" hash family is SQL-reproducible and
     * the pair set oracle-checkable; discrimination loss is negligible.
-    *
-    * PERF: a single-pass kernel UDF — one walk over the distinct tokens
-    * updates all 60 bit-votes at once. The Column-expression alternative
-    * (60 `aggregate` lambdas) evaluates 60 interpreted passes over the
-    * hash array per document.
+    * Word 1 of [[hashFn2]] is [[hashFn]], so this equals [[simHash120]]'s
+    * `sh_lo` bit for bit.
     */
   def simHash(df: DataFrame, idCol: String, textCol: String,
-      hashFamily: String = "xx64"): DataFrame = {
-    val tokenHash = hashFn(hashFamily)
-    val sim = udf((toks: Seq[String]) => {
-      val votes = new Array[Int](60)
-      val seen = new java.util.HashSet[String]()
-      toks.foreach { t =>
-        if (seen.add(t)) {
-          val h = tokenHash(t)
-          var j = 0
-          while (j < 60) {
-            if (((h >>> j) & 1L) == 1L) votes(j) += 1 else votes(j) -= 1
-            j += 1
-          }
-        }
-      }
-      var out = 0L
-      var j = 0
-      while (j < 60) { if (votes(j) > 0) out |= (1L << j); j += 1 }
-      out
-    })
-    df.select(col(idCol).as("doc_id"), sim(split(col(textCol), " ")).as("simhash"))
-  }
+      hashFamily: String = "xx64"): DataFrame =
+    df.select(col(idCol).as("doc_id"),
+      simHashKernel(hashFamily, wide = false)(split(col(textCol), " "))(0).as("simhash"))
 
   /** SimHash near-dup pairs within maxHamming bits, LSH-bucketed by
     * 15-bit chunks (a pair within Hamming distance <= 3 of a 60-bit hash
     * must agree on at least one of 4 15-bit chunks — pigeonhole), so the
-    * join is an equi-join on chunk value, not a cross join.
+    * join is an equi-join on chunk value, not a cross join. Pins the
+    * sketch (both join sides read it); the candidate join and verify live
+    * in [[HammingNearDup.pairs]].
     *
     * SCALE CEILING: the chunk space is FIXED (2^15 buckets per chunk),
     * so once the corpus outgrows ~32k x desired occupancy the per-bucket
@@ -1333,65 +1313,66 @@ object Dedup {
     * e3 -> e12 relationship).
     */
   def simHashPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, hashFamily: String = "xx64"): DataFrame = {
-    require(maxHamming <= 3, "chunking scheme assumes <= 3 for 4 chunks")
-    // the sketch table feeds both self-join sides; one kernel pass
-    // (doc-bounded: one long per doc — the d19/d20 `classes` precedent)
-    val sh = graft.util.Barriers.corpusScale(simHash(df, idCol, textCol, hashFamily))
-    val chunkStructs = array((0 until 4).map { c =>
-      struct(lit(c).as("chunk"),
-        shiftright(col("simhash"), c * 15).bitwiseAND(lit(0x7fffL)).as("cv"))
-    }: _*)
-    val chunked = sh
-      .select(col("doc_id"), col("simhash"), explode(chunkStructs).as("c"))
-      .select(col("doc_id"), col("simhash"), col("c.chunk"), col("c.cv"))
-    val l = chunked.alias("l")
-    val r = chunked.alias("r")
-    l.join(r, col("l.chunk") === col("r.chunk") && col("l.cv") === col("r.cv") && col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
-        col("l.simhash").as("ha"), col("r.simhash").as("hb"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))))
-      .where(col("hamming") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-  }
+      maxHamming: Int = 3, hashFamily: String = "xx64"): DataFrame =
+    HammingNearDup.pairs(
+      graft.util.Barriers.corpusScale(simHash(df, idCol, textCol, hashFamily)),
+      Seq("simhash"), (0 until 4).map(c => HammingNearDup.Chunk(0, c * 15)),
+      width = 15, maxHamming)
 
   /** 120-bit SimHash per document — the wide sketch behind the scaled
     * near-dup path: bit votes over the (lo, hi) 60-bit token-hash pair
     * ([[hashFn2]]), output as two 60-bit longs (sh_lo = bits 0..59,
-    * sh_hi = bits 60..119). Same single-pass kernel rationale as
-    * [[simHash]].
+    * sh_hi = bits 60..119). Same kernel as [[simHash]].
     */
   def simHash120(df: DataFrame, idCol: String, textCol: String,
-      hashFamily: String = "xx64"): DataFrame = {
-    val tokenHash = hashFn2(hashFamily)
-    val sim = udf((toks: Seq[String]) => {
-      val votes = new Array[Int](120)
+      hashFamily: String = "xx64"): DataFrame =
+    df.select(col(idCol).as("doc_id"),
+        simHashKernel(hashFamily, wide = true)(split(col(textCol), " ")).as("s"))
+      .select(col("doc_id"), col("s")(0).as("sh_lo"), col("s")(1).as("sh_hi"))
+
+  /** The one simhash bit-vote kernel: a single walk over the distinct
+    * tokens updates every bit vote at once, over one 60-bit token-hash
+    * word ([[hashFn]]) or two ([[hashFn2]] when `wide`); returns one
+    * sketch word per token-hash word.
+    *
+    * PERF: a kernel UDF, deliberately. The Column-expression alternative
+    * (one `aggregate` lambda per bit) evaluates 60 interpreted passes
+    * over the hash array per document.
+    */
+  private def simHashKernel(hashFamily: String, wide: Boolean) = {
+    val hash1 = hashFn(hashFamily)
+    val hash2 = hashFn2(hashFamily)
+    val nVotes = if (wide) 120 else 60
+    udf((toks: Seq[String]) => {
+      val votes = new Array[Int](nVotes)
+      def vote(h: Long, off: Int): Unit = {
+        var j = 0
+        while (j < 60) {
+          if (((h >>> j) & 1L) == 1L) votes(off + j) += 1 else votes(off + j) -= 1
+          j += 1
+        }
+      }
       val seen = new java.util.HashSet[String]()
       toks.foreach { t =>
         if (seen.add(t)) {
-          val (lo, hi) = tokenHash(t)
-          var j = 0
-          while (j < 60) {
-            if (((lo >>> j) & 1L) == 1L) votes(j) += 1 else votes(j) -= 1
-            if (((hi >>> j) & 1L) == 1L) votes(60 + j) += 1 else votes(60 + j) -= 1
-            j += 1
-          }
+          if (wide) { val (lo, hi) = hash2(t); vote(lo, 0); vote(hi, 60) }
+          else vote(hash1(t), 0)
         }
       }
-      var outLo = 0L
-      var outHi = 0L
-      var j = 0
-      while (j < 60) {
-        if (votes(j) > 0) outLo |= (1L << j)
-        if (votes(60 + j) > 0) outHi |= (1L << j)
-        j += 1
+      Array.tabulate(nVotes / 60) { w =>
+        var out = 0L
+        var j = 0
+        while (j < 60) { if (votes(60 * w + j) > 0) out |= (1L << j); j += 1 }
+        out
       }
-      (outLo, outHi)
     })
-    df.select(col(idCol).as("doc_id"), sim(split(col(textCol), " ")).as("s"))
-      .select(col("doc_id"), col("s._1").as("sh_lo"), col("s._2").as("sh_hi"))
   }
+
+  /** The 120-bit sketch's words and its 4 disjoint chunk regions: the low
+    * bits of each 30-bit half-word. */
+  private val Sketch120 = Seq("sh_lo", "sh_hi")
+  private val Regions120 =
+    for (w <- 0 to 1; shift <- Seq(0, 30)) yield HammingNearDup.Chunk(w, shift)
 
   /** Accumulator from the most recent [[simHashPairsScaled]] plan (test
     * hook / post-run observability): chunk buckets whose membership
@@ -1409,25 +1390,22 @@ object Dedup {
     *  - the sketch widens to 120 bits ([[simHash120]]), leaving 4
     *    disjoint 30-bit regions to draw chunk keys from;
     *  - the chunk-key WIDTH derives from the corpus size (one count()
-    *    job + [[SimilaritySearch.autoBits]]), so expected bucket
-    *    occupancy stays at targetOccupancy however large the corpus and
-    *    candidate volume tracks N, not N²/2^w. The 30-bit region cap
-    *    means O(1) occupancy holds to ~2^30 x targetOccupancy documents
-    *    (8B+ docs at the default) — past that, raise targetOccupancy.
+    *    over the pinned sketch + [[SimilaritySearch.autoBits]]), so
+    *    expected bucket occupancy stays at targetOccupancy however large
+    *    the corpus and candidate volume tracks N, not N²/2^w. The 30-bit
+    *    region cap means O(1) occupancy holds to ~2^30 x targetOccupancy
+    *    documents (8B+ docs at the default) — past that, raise
+    *    targetOccupancy.
     *
-    * RECALL IS STILL EXACT (pigeonhole, any chunk width): the 4 chunk
-    * keys are disjoint bit sets, so a pair within Hamming distance <= 3
-    * of the FULL 120-bit sketch differs inside at most 3 of them and
-    * must agree on at least one — every true pair survives candidate
-    * generation and the exact 120-bit Hamming verify keeps it. Narrower
-    * chunks only lower precision (more candidates), never recall.
+    * Recall stays exact at any width (pigeonhole over disjoint chunks).
+    * Pins the sketch: the per-token hash UDF otherwise re-runs for the
+    * count, the guard aggregate and both join sides. The candidate join
+    * and verify live in [[HammingNearDup.pairs]].
     *
-    * SCALE GUARD (the [[embeddingCosinePairs]] pattern, minus its
-    * broadcast of every bucket count — at adaptive width the count
-    * table is ~N/occupancy rows, so it joins back co-partitioned on the
-    * chunk key instead): any bucket above maxBucketRows warns + bumps
-    * `dedup.simHashPairsScaled.oversizedBuckets` once. The guard
-    * observes; it never drops rows.
+    * SCALE GUARD: any bucket above maxBucketRows warns + bumps
+    * `dedup.simHashPairsScaled.oversizedBuckets` once
+    * ([[HammingNearDup.BucketGuard]]). The guard observes; it never
+    * drops rows.
     */
   def simHashPairsScaled(
       df: DataFrame,
@@ -1437,58 +1415,13 @@ object Dedup {
       hashFamily: String = "xx64",
       targetOccupancy: Long = 8L,
       maxBucketRows: Long = 1000000L): DataFrame = {
-    require(maxHamming <= 3, "chunking scheme assumes <= 3 for 4 chunks")
-    val spark = df.sparkSession
-    // One sketch pass, pinned: the per-token hash UDF over the whole
-    // corpus otherwise re-runs for the corpus count, the guard aggregate
-    // and BOTH self-join sides (4x). The count for autoBits then reads
-    // the checkpointed blocks instead of re-scanning the source.
     val sh = graft.util.Barriers.corpusScale(simHash120(df, idCol, textCol, hashFamily))
     val w = SimilaritySearch.autoBits(sh.count(), targetOccupancy)
-    val mask = (1L << w) - 1L
-    // 4 disjoint chunk keys: the low w bits of each 30-bit region
-    val chunkStructs = array(
-      struct(lit(0).as("chunk"), col("sh_lo").bitwiseAND(lit(mask)).as("cv")),
-      struct(lit(1).as("chunk"), shiftright(col("sh_lo"), 30).bitwiseAND(lit(mask)).as("cv")),
-      struct(lit(2).as("chunk"), col("sh_hi").bitwiseAND(lit(mask)).as("cv")),
-      struct(lit(3).as("chunk"), shiftright(col("sh_hi"), 30).bitwiseAND(lit(mask)).as("cv")))
-    val chunked = sh
-      .select(col("doc_id"), col("sh_lo"), col("sh_hi"), explode(chunkStructs).as("c"))
-      .select(col("doc_id"), col("sh_lo"), col("sh_hi"), col("c.chunk"), col("c.cv"))
-    val oversizedAcc = spark.sparkContext.longAccumulator(
+    val oversizedAcc = df.sparkSession.sparkContext.longAccumulator(
       "dedup.simHashPairsScaled.oversizedBuckets")
     lastOversizedChunks = Some(oversizedAcc)
-    val warnOversized = udf { (chunk: Int, cv: Long, n: Long) =>
-      if (n > maxBucketRows) {
-        oversizedAcc.add(1)
-        org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup").warn(
-          s"simHashPairsScaled chunk $chunk bucket $cv holds $n rows " +
-            s"(> $maxBucketRows): the in-bucket pair join is O(m²) — raise " +
-            "targetOccupancy headroom or investigate a degenerate corpus " +
-            "(constant documents collapse to one sketch)")
-      }
-      true
-    }.asNondeterministic() // side-effecting: must not be pruned or reordered
-    // every (chunk, cv) of `chunked` appears in `sized`, so the inner
-    // join loses nothing; it exists to evaluate the guard once per
-    // bucket, co-partitioned on the same key the pair join shuffles on
-    val sized = chunked.groupBy("chunk", "cv")
-      .agg(count(lit(1)).as("__n"))
-      .filter(warnOversized(col("chunk"), col("cv"), col("__n")))
-      .select("chunk", "cv")
-    val l = chunked.join(sized, Seq("chunk", "cv")).alias("l")
-    val r = chunked.alias("r")
-    l.join(r, col("l.chunk") === col("r.chunk") && col("l.cv") === col("r.cv") &&
-        col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
-        col("l.sh_lo").as("ala"), col("l.sh_hi").as("aha"),
-        col("r.sh_lo").as("bla"), col("r.sh_hi").as("bha"))
-      .distinct()
-      .withColumn("hamming",
-        bit_count(col("ala").bitwiseXOR(col("bla"))) +
-          bit_count(col("aha").bitwiseXOR(col("bha"))))
-      .where(col("hamming") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
+    HammingNearDup.pairs(sh, Sketch120, Regions120, w, maxHamming,
+      Some(HammingNearDup.BucketGuard(maxBucketRows, oversizedAcc)))
   }
 
   /** Collapsed scaled SimHash near-dup — [[simHashPairsScaled]]'s output
@@ -1509,8 +1442,9 @@ object Dedup {
     * |simHashPairsScaled output|), so downstream dedup/cluster math is
     * unchanged while output size tracks DISTINCT content. Candidate
     * generation reuses the occupancy-adaptive chunk scheme over the
-    * class table (chunk width still derives from the corpus row count —
-    * distinct classes are a subset, so expected occupancy only drops).
+    * class table, which [[HammingNearDup.collapsed]] builds and pins;
+    * the chunk width still derives from the raw document count —
+    * distinct classes are a subset, so expected occupancy only drops.
     */
   def simHashPairsCollapsed(
       df: DataFrame,
@@ -1519,43 +1453,9 @@ object Dedup {
       maxHamming: Int = 3,
       hashFamily: String = "xx64",
       targetOccupancy: Long = 8L): DataFrame = {
-    require(maxHamming <= 3, "chunking scheme assumes <= 3 for 4 chunks")
     val w = SimilaritySearch.autoBits(df.count(), targetOccupancy)
-    val mask = (1L << w) - 1L
-    val classes = simHash120(df, idCol, textCol, hashFamily)
-      .groupBy("sh_lo", "sh_hi")
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n"))
-      .transform(graft.util.Barriers.corpusScale) // feeds the exact leg + both join sides
-    val chunkStructs = array(
-      struct(lit(0).as("chunk"), col("sh_lo").bitwiseAND(lit(mask)).as("cv")),
-      struct(lit(1).as("chunk"), shiftright(col("sh_lo"), 30).bitwiseAND(lit(mask)).as("cv")),
-      struct(lit(2).as("chunk"), col("sh_hi").bitwiseAND(lit(mask)).as("cv")),
-      struct(lit(3).as("chunk"), shiftright(col("sh_hi"), 30).bitwiseAND(lit(mask)).as("cv")))
-    val chunked = classes
-      .select(col("rep"), col("n"), col("sh_lo"), col("sh_hi"),
-        explode(chunkStructs).as("c"))
-      .select(col("rep"), col("n"), col("sh_lo"), col("sh_hi"),
-        col("c.chunk"), col("c.cv"))
-    val exact = classes.where(col("n") >= 2)
-      .select(col("rep").as("rep_a"), col("rep").as("rep_b"),
-        lit(0).as("hamming"), expr("n * (n - 1) div 2").as("weight"))
-    val l = chunked.alias("l")
-    val r = chunked.alias("r")
-    val cross = l.join(r,
-        col("l.chunk") === col("r.chunk") && col("l.cv") === col("r.cv") &&
-          col("l.rep") < col("r.rep"))
-      .select(col("l.rep").as("rep_a"), col("r.rep").as("rep_b"),
-        col("l.n").as("na"), col("r.n").as("nb"),
-        col("l.sh_lo").as("ala"), col("l.sh_hi").as("aha"),
-        col("r.sh_lo").as("bla"), col("r.sh_hi").as("bha"))
-      .distinct()
-      .withColumn("hamming",
-        bit_count(col("ala").bitwiseXOR(col("bla"))) +
-          bit_count(col("aha").bitwiseXOR(col("bha"))))
-      .where(col("hamming") <= maxHamming)
-      .select(col("rep_a"), col("rep_b"), col("hamming"),
-        (col("na") * col("nb")).cast("long").as("weight"))
-    exact.unionByName(cross)
+    HammingNearDup.collapsed(simHash120(df, idCol, textCol, hashFamily),
+      Sketch120, Regions120, w, maxHamming)
   }
 
   /** Quality-aware duplicate-cluster keeper election — the step AFTER

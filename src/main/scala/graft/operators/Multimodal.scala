@@ -742,51 +742,30 @@ object Multimodal {
   /** Image near-dup pairs within `maxHamming` bits of dHash, LSH-bucketed
     * by 16-bit chunks: a pair within Hamming distance <= 3 of the 64-bit
     * hash must agree on at least one of 4 chunks (pigeonhole), so the
-    * candidate step is an equi-join on chunk value — the [[graft.operators.Dedup.simHashPairs]]
-    * scheme applied to the multimodal surface (perceptual dedup: LAION-style
-    * image corpus cleaning). Input is [[dHashBatch]] output; chunks 0-1
-    * come from `dhash_lo`, 2-3 from `dhash_hi`.
+    * candidate step is an equi-join on chunk value — perceptual dedup
+    * (LAION-style image corpus cleaning). Input is [[dHashBatch]] output;
+    * chunks 0-1 come from `dhash_lo`, 2-3 from `dhash_hi`. Pins the hash
+    * table: both join sides read it, and without the barrier the
+    * per-image DECODE kernel upstream in the m6 pipeline runs twice. The
+    * candidate join and exact verify live in [[HammingNearDup.pairs]].
     *
     * Scale: candidate volume tracks bucket occupancy (true near-dups +
-    * 16-bit chunk collisions), never n² — same contract as SimHash; the
-    * exact Hamming verify after `distinct` kills chunk-collision false
-    * positives.
+    * 16-bit chunk collisions), never n²; the exact Hamming verify after
+    * `distinct` kills chunk-collision false positives.
     */
-  def dHashNearDupPairs(hashes0: DataFrame, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3, "chunking scheme assumes <= 3 for 4 chunks")
-    // both self-join sides read the hash table; without a barrier the
-    // upstream (the per-image DECODE kernel in the m6 pipeline) runs
-    // twice. Doc-bounded: two longs per image.
-    val hashes = graft.util.Barriers.corpusScale(hashes0)
-    val chunkStructs = array(
-      (0 until 2).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("dhash_lo"), c * 16).bitwiseAND(lit(0xffffL)).as("cv"))
-      } ++ (0 until 2).map { c =>
-        struct(lit(c + 2).as("chunk"),
-          shiftright(col("dhash_hi"), c * 16).bitwiseAND(lit(0xffffL)).as("cv"))
-      }: _*)
-    val chunked = hashes
-      .select(col("doc_id"), col("dhash_hi"), col("dhash_lo"), explode(chunkStructs).as("c"))
-      .select(col("doc_id"), col("dhash_hi"), col("dhash_lo"), col("c.chunk"), col("c.cv"))
-    val l = chunked.alias("l")
-    val r = chunked.alias("r")
-    l.join(r, col("l.chunk") === col("r.chunk") && col("l.cv") === col("r.cv") &&
-        col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
-        col("l.dhash_hi").as("ha_hi"), col("l.dhash_lo").as("ha_lo"),
-        col("r.dhash_hi").as("hb_hi"), col("r.dhash_lo").as("hb_lo"))
-      .distinct()
-      .withColumn("hamming",
-        (bit_count(col("ha_hi").bitwiseXOR(col("hb_hi"))) +
-          bit_count(col("ha_lo").bitwiseXOR(col("hb_lo")))).cast("long"))
-      .where(col("hamming") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-  }
+  def dHashNearDupPairs(hashes0: DataFrame, maxHamming: Int = 3): DataFrame =
+    HammingNearDup.pairs(graft.util.Barriers.corpusScale(hashes0),
+        DHashWords, DHashChunks, width = 16, maxHamming)
+      .withColumn("hamming", col("hamming").cast("long"))
+
+  /** The two 32-bit dHash words and their 4 disjoint 16-bit chunks. */
+  private val DHashWords = Seq("dhash_lo", "dhash_hi")
+  private val DHashChunks =
+    for (w <- 0 to 1; shift <- Seq(0, 16)) yield HammingNearDup.Chunk(w, shift)
 
   /** Scale path for [[dHashNearDupPairs]] (M8, the e3→e12 pattern on the
     * multimodal surface): collapse exact-duplicate images FIRST — one
-    * representative (min doc_id) per distinct 128-bit dHash with a
+    * representative (min doc_id) per distinct 64-bit dHash with a
     * member count — then run the pigeonhole candidate join over DISTINCT
     * hashes only. Output is one row per duplicate relationship, weighted
     * by underlying pair mass:
@@ -800,48 +779,12 @@ object Multimodal {
     * fixed 97 image identities) makes pairwise output Ω(Σ n_i²) while
     * the collapsed form is O(#distinct + near-dup structure). Candidate
     * volume tracks distinct-hash bucket occupancy, never raw row count.
+    * [[HammingNearDup.collapsed]] builds and pins the class table (read
+    * by the exact leg and both join sides) and runs the join.
     */
-  def dHashNearDupScaled(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3, "chunking scheme assumes <= 3 for 4 chunks")
-    // distinct-hash-bounded class table, read by the exact leg AND both
-    // self-join sides — one decode+collapse instead of three (the
-    // d19/d20 `classes` barrier)
-    val grp = hashes.groupBy("dhash_hi", "dhash_lo")
-      .agg(min("doc_id").as("rep"), count(lit(1)).as("n"))
-      .transform(graft.util.Barriers.corpusScale)
-    val exact = grp.where(col("n") >= 2)
-      .select(col("rep").as("rep_a"), col("rep").as("rep_b"),
-        lit(0L).as("hamming"), expr("(n * (n - 1)) DIV 2").as("weight"))
-    val chunkStructs = array(
-      (0 until 2).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("dhash_lo"), c * 16).bitwiseAND(lit(0xffffL)).as("cv"))
-      } ++ (0 until 2).map { c =>
-        struct(lit(c + 2).as("chunk"),
-          shiftright(col("dhash_hi"), c * 16).bitwiseAND(lit(0xffffL)).as("cv"))
-      }: _*)
-    val chunked = grp
-      .select(col("rep"), col("n"), col("dhash_hi"), col("dhash_lo"),
-        explode(chunkStructs).as("c"))
-      .select(col("rep"), col("n"), col("dhash_hi"), col("dhash_lo"),
-        col("c.chunk"), col("c.cv"))
-    val l = chunked.alias("l")
-    val r = chunked.alias("r")
-    val cross = l.join(r, col("l.chunk") === col("r.chunk") && col("l.cv") === col("r.cv") &&
-        col("l.rep") < col("r.rep"))
-      .select(col("l.rep").as("rep_a"), col("r.rep").as("rep_b"),
-        col("l.n").as("na"), col("r.n").as("nb"),
-        col("l.dhash_hi").as("ha_hi"), col("l.dhash_lo").as("ha_lo"),
-        col("r.dhash_hi").as("hb_hi"), col("r.dhash_lo").as("hb_lo"))
-      .distinct()
-      .withColumn("hamming",
-        (bit_count(col("ha_hi").bitwiseXOR(col("hb_hi"))) +
-          bit_count(col("ha_lo").bitwiseXOR(col("hb_lo")))).cast("long"))
-      .where(col("hamming") <= maxHamming) // distinct hashes ⇒ hamming ≥ 1
-      .select(col("rep_a"), col("rep_b"), col("hamming"),
-        (col("na") * col("nb")).as("weight"))
-    exact.unionByName(cross)
-  }
+  def dHashNearDupScaled(hashes: DataFrame, maxHamming: Int = 3): DataFrame =
+    HammingNearDup.collapsed(hashes, DHashWords, DHashChunks, width = 16, maxHamming)
+      .withColumn("hamming", col("hamming").cast("long"))
 
   case class AudioFp(doc_id: Long, fp: Long, n_windows: Long)
 
@@ -1023,41 +966,13 @@ object Multimodal {
     * of the ≤40-bit fingerprint (distance ≤4 guarantees a shared
     * chunk), exact bit_count verify after distinct — candidate volume
     * tracks chunk-bucket occupancy over distinct fingerprints, never
-    * raw row count.
+    * raw row count. [[HammingNearDup.collapsed]] builds and pins the
+    * class table and runs the join.
     */
-  def audioNearDupCollapsed(fps: DataFrame, maxHamming: Int = 4): DataFrame = {
-    require(maxHamming <= 4, "chunking scheme assumes <= 4 for 5 chunks")
-    // distinct-fp-bounded class table, read by the exact leg AND both
-    // self-join sides — one audio-decode+collapse instead of three
-    val grp = fps.groupBy("fp")
-      .agg(min("doc_id").as("rep"), count(lit(1)).as("n"))
-      .transform(graft.util.Barriers.corpusScale)
-    val exact = grp.where(col("n") >= 2)
-      .select(col("rep").as("rep_a"), col("rep").as("rep_b"),
-        lit(0L).as("hamming"), expr("(n * (n - 1)) DIV 2").as("weight"))
-    val chunkStructs = array(
-      (0 until 5).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("fp"), c * 8).bitwiseAND(lit(0xffL)).as("cv"))
-      }: _*)
-    val chunked = grp
-      .select(col("rep"), col("n"), col("fp"), explode(chunkStructs).as("c"))
-      .select(col("rep"), col("n"), col("fp"), col("c.chunk"), col("c.cv"))
-    val l = chunked.alias("l")
-    val r = chunked.alias("r")
-    val cross = l.join(r, col("l.chunk") === col("r.chunk") &&
-        col("l.cv") === col("r.cv") && col("l.rep") < col("r.rep"))
-      .select(col("l.rep").as("rep_a"), col("r.rep").as("rep_b"),
-        col("l.n").as("na"), col("r.n").as("nb"),
-        col("l.fp").as("fa"), col("r.fp").as("fb"))
-      .distinct()
-      .withColumn("hamming",
-        bit_count(col("fa").bitwiseXOR(col("fb"))).cast("long"))
-      .where(col("hamming") <= maxHamming) // distinct fps ⇒ hamming ≥ 1
-      .select(col("rep_a"), col("rep_b"), col("hamming"),
-        (col("na") * col("nb")).as("weight"))
-    exact.unionByName(cross)
-  }
+  def audioNearDupCollapsed(fps: DataFrame, maxHamming: Int = 4): DataFrame =
+    HammingNearDup.collapsed(fps, Seq("fp"), (0 until 5).map(c => HammingNearDup.Chunk(0, c * 8)),
+        width = 8, maxHamming)
+      .withColumn("hamming", col("hamming").cast("long"))
 
   /** Video near-dup via sampled-frame fingerprints (M10) — the
     * content-ID shape: a video IS its set of frame fingerprints, two

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -124,15 +123,5 @@ case class IntervalJoinRewrite() extends Rule[LogicalPlan] with PredicateHelper 
             Join(lGen, rGen, Inner, Some(newCond), hint))
         case _ => j
       }
-  }
-}
-
-/** Session extension registering the interval-join and band-join
-  * rewrites.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => IntervalJoinRewrite())
-    e.injectOptimizerRule(_ => BandJoinRewrite())
   }
 }

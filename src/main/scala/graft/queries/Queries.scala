@@ -844,12 +844,6 @@ object Queries {
 
   // ---- genomics pipeline on synthesized reads (G1, G2) -----------------
 
-  /** Reads synthesized deterministically from lineitem: 10bp reads, all-A
-    * reference, one SNV per read at offset (l_suppkey % 10) with alt base
-    * from (l_orderkey % 3), phred 30 + (l_linenumber % 10), CIGAR/MD/qual
-    * rendered as real strings so the kernel pipeline parses them for
-    * real. The closed form is mirrored by the DuckDB oracles.
-    */
   /** Profiling hook (tools/Profile): the g2 read set. */
   def profileReads(spark: SparkSession, dir: String): Dataset[Read] =
     syntheticReads(spark, dir)
@@ -858,7 +852,25 @@ object Queries {
   def cohortReadsForProfile(spark: SparkSession, dir: String): Dataset[Read] =
     cohortReads(spark, dir)
 
-  private def syntheticReads(spark: SparkSession, dir: String): Dataset[Read] = {
+  /** The g1/g2 read set: one sample, contig from l_returnflag. */
+  private def syntheticReads(spark: SparkSession, dir: String): Dataset[Read] =
+    lineitemReads(spark, dir, contig = col("l_returnflag"), sample = lit("1"))
+
+  /** The g4/g6 synthetic cohort: same reads as g1/g2, sample derived
+    * from l_linestatus.
+    */
+  private def cohortReads(spark: SparkSession, dir: String): Dataset[Read] =
+    lineitemReads(spark, dir, contig = col("l_returnflag"), sample = col("l_linestatus"))
+
+  /** Reads synthesized deterministically from lineitem: 10bp reads, all-A
+    * reference, one SNV per read at offset (l_suppkey % 10) with alt base
+    * from (l_orderkey % 3), phred 30 + (l_linenumber % 10), CIGAR/MD/qual
+    * rendered as real strings so the kernel pipeline parses them for
+    * real; contig `chr<contig>`, sample `s<sample>`. The closed form is
+    * mirrored by the DuckDB oracles.
+    */
+  private def lineitemReads(spark: SparkSession, dir: String,
+      contig: Column, sample: Column): Dataset[Read] = {
     val spark2 = spark
     import spark2.implicits._
     val snvOff = (col("l_suppkey") % 10).cast("int")
@@ -880,7 +892,7 @@ object Queries {
       .repartition(col("l_orderkey"), col("l_linenumber"))
       .select(
       concat_ws("-", col("l_orderkey"), col("l_linenumber")).as("readName"),
-      concat(lit("chr"), col("l_returnflag")).as("contigName"),
+      concat(lit("chr"), contig).as("contigName"),
       ((col("l_partkey") % 1000) * 20).as("start"),
       ((col("l_partkey") % 1000) * 20 + 10).as("end"),
       concat(expr("repeat('A', l_suppkey % 10)"), altBase,
@@ -893,7 +905,7 @@ object Queries {
       lit(false).as("readNegativeStrand"),
       lit(false).as("duplicateRead"),
       lit(true).as("primaryAlignment"),
-      lit("s1").as("sampleId"),
+      concat(lit("s"), sample).as("sampleId"),
       lit(null).cast("string").as("mateContigName"),
       lit(null).cast("long").as("mateStart"),
       lit(false).as("mateMapped")).as[Read]
@@ -1013,53 +1025,6 @@ object Queries {
     * binomial-prior recall. Oracle mirrors the entire two-stage model in
     * closed form.
     */
-  /** The g4/g6 synthetic cohort: same reads as g1/g2, sample derived
-    * from l_linestatus.
-    */
-  private def cohortReads(spark: SparkSession, dir: String): Dataset[Read] = {
-    val spark2 = spark
-    import spark2.implicits._
-    val snvOff = (col("l_suppkey") % 10).cast("int")
-    val altBase = when(col("l_orderkey") % 3 === 0, "C")
-      .when(col("l_orderkey") % 3 === 1, "G")
-      .otherwise("T")
-    // the fixture parquet has 3 row groups, so WITHOUT this the whole
-    // per-read kernel chain runs map-side in 3 tasks on a 32-thread box
-    // (stage-listener measured: the two 3-task kernel stages dominate
-    // g4's wall). The shuffle moved BELOW the select in round 18: keyed
-    // on the raw (l_orderkey, l_linenumber) — 600 k distinct values —
-    // the string synthesis itself also runs post-exchange at full
-    // width; the old (contigName, start) keying computed the synthesis
-    // in the 3 scan tasks and no downstream stage reused that
-    // partitioning anyway (pileup and discovery re-shuffle on their own
-    // keys). One cheap shuffle of the raw columns (~10 MB/sample)
-    // unlocks full parallelism — and mirrors the real cluster, where a
-    // 100 TB scan yields thousands of tasks and the kernel is never
-    // scan-bound.
-    t(spark, dir, "lineitem")
-      .repartition(col("l_orderkey"), col("l_linenumber"))
-      .select(
-      concat_ws("-", col("l_orderkey"), col("l_linenumber")).as("readName"),
-      concat(lit("chr"), col("l_returnflag")).as("contigName"),
-      ((col("l_partkey") % 1000) * 20).as("start"),
-      ((col("l_partkey") % 1000) * 20 + 10).as("end"),
-      concat(expr("repeat('A', l_suppkey % 10)"), altBase,
-        expr("repeat('A', 9 - l_suppkey % 10)")).as("sequence"),
-      expr(s"repeat(chr(63 + l_linenumber % 10), 10)").as("qual"),
-      lit("10M").as("cigar"),
-      concat(snvOff.cast("string"), lit("A"), (lit(9) - snvOff).cast("string")).as("mdTag"),
-      lit(60).as("mapq"),
-      lit(true).as("readMapped"),
-      lit(false).as("readNegativeStrand"),
-      lit(false).as("duplicateRead"),
-      lit(true).as("primaryAlignment"),
-      concat(lit("s"), col("l_linestatus")).as("sampleId"),
-      lit(null).cast("string").as("mateContigName"),
-      lit(null).cast("long").as("mateStart"),
-      lit(false).as("mateMapped"))
-      .as[Read]
-  }
-
   def g4_joint_recall(spark: SparkSession, dir: String): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
@@ -1150,34 +1115,9 @@ object Queries {
   def g5_trio_phase(spark: SparkSession, dir: String): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
-    val snvOff = (col("l_suppkey") % 10).cast("int")
-    val altBase = when(col("l_orderkey") % 3 === 0, "C")
-      .when(col("l_orderkey") % 3 === 1, "G")
-      .otherwise("T")
-    // same 3-row-group fixture as syntheticReads: shuffle the raw
-    // columns first so synthesis + kernels run at full width (see the
-    // syntheticReads comment)
-    val rds = t(spark, dir, "lineitem")
-      .repartition(col("l_orderkey"), col("l_linenumber"))
-      .select(
-      concat_ws("-", col("l_orderkey"), col("l_linenumber")).as("readName"),
-      concat(lit("chr"), col("l_linestatus")).as("contigName"),
-      ((col("l_partkey") % 1000) * 20).as("start"),
-      ((col("l_partkey") % 1000) * 20 + 10).as("end"),
-      concat(expr("repeat('A', l_suppkey % 10)"), altBase,
-        expr("repeat('A', 9 - l_suppkey % 10)")).as("sequence"),
-      expr(s"repeat(chr(63 + l_linenumber % 10), 10)").as("qual"),
-      lit("10M").as("cigar"),
-      concat(snvOff.cast("string"), lit("A"), (lit(9) - snvOff).cast("string")).as("mdTag"),
-      lit(60).as("mapq"),
-      lit(true).as("readMapped"),
-      lit(false).as("readNegativeStrand"),
-      lit(false).as("duplicateRead"),
-      lit(true).as("primaryAlignment"),
-      concat(lit("s"), col("l_returnflag")).as("sampleId"),
-      lit(null).cast("string").as("mateContigName"),
-      lit(null).cast("long").as("mateStart"),
-      lit(false).as("mateMapped")).as[Read]
+    // contigs and samples swap roles against the cohort reads
+    val rds = lineitemReads(spark, dir,
+      contig = col("l_linestatus"), sample = col("l_returnflag"))
     val variants = DiscoverVariants
       .discover(rds, minPhred = 20, minObservations = 2)
       .select("contigName", "start", "referenceAllele", "alternateAllele")
@@ -2550,14 +2490,11 @@ object Queries {
       "doc_id")
       .toDF()
 
-  /** Multimodal near-dup dedup (M4): perceptual dHash over genuinely
-    * decoded pixels, then group-by-hash to elect a keeper. Docs sharing
-    * `doc_id % 97` carry byte-identical PNGs, so the fixture has real
-    * collision groups (~5 docs each at sf0.01); `dup_group` is the min
-    * doc_id sharing the 64-bit hash. One narrow decode+hash stage, one
-    * exchange on the 8-byte hash key for the window — no self-join.
+  /** The m4/m6/m8 image table: a synthetic PNG per document (docs
+    * sharing `doc_id % 97` carry byte-identical images), decoded and
+    * dHashed to (doc_id, dhash_hi, dhash_lo).
     */
-  def m4_image_dhash(spark: SparkSession, dir: String): DataFrame =
+  private def imageHashes(spark: SparkSession, dir: String): DataFrame =
     Multimodal.dHashBatch(
       Multimodal.attachSynthPng(
         t(spark, dir, "documents").select(col("doc_id"))
@@ -2566,6 +2503,16 @@ object Queries {
         .select(col("doc_id"), col("payload")),
       "doc_id")
       .toDF()
+
+  /** Multimodal near-dup dedup (M4): perceptual dHash over genuinely
+    * decoded pixels, then group-by-hash to elect a keeper. Docs sharing
+    * `doc_id % 97` carry byte-identical PNGs, so the fixture has real
+    * collision groups (~5 docs each at sf0.01); `dup_group` is the min
+    * doc_id sharing the 64-bit hash. One narrow decode+hash stage, one
+    * exchange on the 8-byte hash key for the window — no self-join.
+    */
+  def m4_image_dhash(spark: SparkSession, dir: String): DataFrame =
+    imageHashes(spark, dir)
       .withColumn("dup_group",
         min(col("doc_id")).over(Window.partitionBy("dhash_hi", "dhash_lo")))
 
@@ -2581,16 +2528,7 @@ object Queries {
     * scale row. See [[e3_embedding_dedup]] for the rationale.
     */
   def m6_image_neardup(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.dHashNearDupPairs(
-      Multimodal.dHashBatch(
-        Multimodal.attachSynthPng(
-          t(spark, dir, "documents").select(col("doc_id"))
-            .withColumn("img_id", pmod(col("doc_id"), lit(97L))),
-          "img_id")
-          .select(col("doc_id"), col("payload")),
-        "doc_id")
-        .toDF(),
-      maxHamming = 3)
+    Multimodal.dHashNearDupPairs(imageHashes(spark, dir), maxHamming = 3)
 
   /** Collapsed image near-dup (M8): m6's scale path. Exact-dup clusters
     * collapse to (rep, count) BEFORE pair enumeration, so output and
@@ -2600,16 +2538,7 @@ object Queries {
     * flat). The e3→e12 pattern on the multimodal surface.
     */
   def m8_image_neardup_scaled(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.dHashNearDupScaled(
-      Multimodal.dHashBatch(
-        Multimodal.attachSynthPng(
-          t(spark, dir, "documents").select(col("doc_id"))
-            .withColumn("img_id", pmod(col("doc_id"), lit(97L))),
-          "img_id")
-          .select(col("doc_id"), col("payload")),
-        "doc_id")
-        .toDF(),
-      maxHamming = 3)
+    Multimodal.dHashNearDupScaled(imageHashes(spark, dir), maxHamming = 3)
 
   /** Real audio decode end-to-end (M5): deterministic 16-bit PCM WAV per
     * document through the real `javax.sound.sampled` WAVE writer, decoded

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for named catalog queries to
   * `<outDir>/<name>_<tag>.txt` — the plan evidence the optimization
   * rounds commit under plans/r{N}/. Streaming (ev*) queries RUN inside
@@ -19,17 +17,7 @@ object ExplainDump {
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val dir = args.lift(2).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(3).getOrElse("plans/r17")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        graft.util.Tuning.shufflePartitions(dir, cpus.toInt))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.plans.GraftExtensions.catalogSession(dir)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     for (name <- names) {

@@ -1,12 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Generic per-query step-up prober (dev tool, not part of the driver
   * contract): times named catalog queries on one or more data legs —
   * warm run first (JIT + plan cache), then the measured run — through
   * the same noop sink Bench uses so Catalyst cannot prune the measured
-  * work. One line per (leg, query); feeds the PROFILE step-up tables.
+  * work, on the catalog session Bench builds
+  * ([[graft.plans.GraftExtensions.catalogSession]]: `SPARK_GRAFT_CPUS`
+  * threads, shuffle partitions sized by the first leg). One line per
+  * (leg, query); feeds the PROFILE step-up tables.
   *
   * Usage:
   *   sbt "runMain graft.tools.QueryProbe c13_cdc_upsert,t16_subword_tokenize \
@@ -16,19 +17,11 @@ object QueryProbe {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val legs = args.drop(1).toSeq
-    val b = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-query-probe")
     // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — A/B a conf without editing code
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); b.config(k, v)
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(_.split(';').map { kv =>
+      val Array(k, v) = kv.split("=", 2); k -> v
     })
-    val spark = b.getOrCreate()
+    val spark = graft.plans.GraftExtensions.catalogSession(legs.head, extra)
     // SPARK_GRAFT_STAGES=1: per-stage wall/max-task report after each run
     if (sys.env.contains("SPARK_GRAFT_STAGES")) {
       spark.sparkContext.addSparkListener(

@@ -708,6 +708,38 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  // word 1 of hashFn2 is hashFn for both families, so the 60-bit sketch
+  // is the low word of the 120-bit one — one bit-vote kernel serves both
+  test("simHash equals simHash120's sh_lo bit for bit (md5, xx64)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(29)
+    val vocab = Array.tabulate(50)(i => s"t$i")
+    val corpus = ((0 until 60).map { i =>
+      (i.toLong, Array.fill(1 + rnd.nextInt(20))(vocab(rnd.nextInt(vocab.length))).mkString(" "))
+    } :+ ((60L, ""))).toDF("doc_id", "text")
+    for (fam <- Seq("md5", "xx64")) {
+      val narrow = Dedup.simHash(corpus, "doc_id", "text", fam)
+        .as[(Long, Long)].collect().toMap
+      val wide = Dedup.simHash120(corpus, "doc_id", "text", fam)
+        .as[(Long, Long, Long)].collect().map(r => r._1 -> r._2).toMap
+      assert(narrow.size === 61, fam)
+      assert(narrow === wide, fam)
+    }
+  }
+
+  test("simhash pair functions keep their output schemas") {
+    import org.apache.spark.sql.types._
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    assert(shape(Dedup.simHashPairs(docs, "doc_id", "text")) ===
+      Seq("doc_a" -> LongType, "doc_b" -> LongType, "hamming" -> IntegerType))
+    assert(shape(Dedup.simHashPairsScaled(docs, "doc_id", "text")) ===
+      Seq("doc_a" -> LongType, "doc_b" -> LongType, "hamming" -> IntegerType))
+    assert(shape(Dedup.simHashPairsCollapsed(docs, "doc_id", "text")) ===
+      Seq("rep_a" -> LongType, "rep_b" -> LongType, "hamming" -> IntegerType,
+        "weight" -> LongType))
+  }
+
   test("simHashPairsScaled oversized-bucket guard observes, never drops") {
     import spark.implicits._
     val baseline = Dedup.simHashPairsScaled(docs, "doc_id", "text",

@@ -970,6 +970,66 @@ class ScaleOpsSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
+  // random signatures with planted exact copies and 1-3 bit flips, so
+  // every hamming value 0..3 carries mass
+  private def plantedWords(seed: Int, bits: Int, n: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    def word() = rnd.nextLong() & (-1L >>> (64 - bits))
+    def flip(w: Long, k: Int) =
+      rnd.shuffle((0 until bits).toList).take(k).foldLeft(w)((a, b) => a ^ (1L << b))
+    val base = (0 until n).map(i => i.toLong -> word())
+    val copies = base.take(n / 4).flatMap { case (id, w) =>
+      (1 to 1 + rnd.nextInt(4)).map(c => (1000L * c + id) -> w) }
+    val near = base.slice(n / 4, n / 2).map { case (id, w) =>
+      (5000L + id) -> flip(w, 1 + rnd.nextInt(3)) }
+    base ++ copies ++ near ++ near.take(3).map { case (id, w) => (id + 100L) -> w }
+  }
+
+  test("m6 -> m8: collapsed weights equal the pairwise row count, per hamming") {
+    import spark.implicits._
+    // 64-bit signatures split into the two 32-bit dHash words, so the
+    // planted flips land in either word
+    val df = plantedWords(11, 64, 60)
+      .map { case (id, w) => (id, w >>> 32, w & 0xffffffffL) }
+      .toDF("doc_id", "dhash_hi", "dhash_lo")
+    val pairs = Multimodal.dHashNearDupPairs(df).as[(Long, Long, Long)].collect()
+    val coll = Multimodal.dHashNearDupScaled(df).as[(Long, Long, Long, Long)].collect()
+    assert(coll.map(_._4).sum === pairs.length.toLong)
+    val pairsByH = pairs.groupBy(_._3).view.mapValues(_.length.toLong).toMap
+    val collByH = coll.groupBy(_._3).view.mapValues(_.map(_._4).sum).toMap
+    assert(collByH === pairsByH)
+    assert((0L to 3L).forall(pairsByH.contains), s"every hamming value planted: $pairsByH")
+  }
+
+  test("audioNearDupCollapsed mass equals a brute-force pair count over fingerprints") {
+    import spark.implicits._
+    val fps = plantedWords(17, 40, 80)
+    val brute = (for {
+      i <- fps.indices; j <- (i + 1) until fps.length
+      d = java.lang.Long.bitCount(fps(i)._2 ^ fps(j)._2)
+      if d <= 4
+    } yield d.toLong).groupBy(identity).view.mapValues(_.length.toLong).toMap
+    val coll = Multimodal.audioNearDupCollapsed(fps.toDF("doc_id", "fp"))
+      .as[(Long, Long, Long, Long)].collect()
+    assert(coll.groupBy(_._3).view.mapValues(_.map(_._4).sum).toMap === brute)
+    assert(brute.keySet.contains(0L) && brute.keySet.contains(3L), s"$brute")
+  }
+
+  test("image and audio near-dup functions keep their output schemas") {
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    val hashes = Seq((1L, 5L, 7L), (2L, 5L, 7L)).toDF("doc_id", "dhash_hi", "dhash_lo")
+    val fps = Seq((1L, 9L), (2L, 9L)).toDF("doc_id", "fp")
+    assert(shape(Multimodal.dHashNearDupPairs(hashes)) ===
+      Seq("doc_a" -> LongType, "doc_b" -> LongType, "hamming" -> LongType))
+    val weighted = Seq("rep_a" -> LongType, "rep_b" -> LongType,
+      "hamming" -> LongType, "weight" -> LongType)
+    assert(shape(Multimodal.dHashNearDupScaled(hashes)) === weighted)
+    assert(shape(Multimodal.audioNearDupCollapsed(fps)) === weighted)
+  }
+
   test("video near-dup (m10): exact classes collapse; cross pairs count shared frames") {
     import spark.implicits._
     def framesOf(pairs: Seq[(Long, Long)]) = { // (doc_id, content key)
