@@ -32,10 +32,12 @@ import org.apache.spark.sql.functions._
   * calls into the same path (reference
   * avocado-cli/.../BiallelicGenotyper.scala:245-251); interval CNV calls
   * and whole-contig overrides compose, intervals winning inside their
-  * span. -bin_size pins the genotyper's (contig, bin)
-  * shuffle granularity; without it the CLI sizes bins from the data
-  * ([[BiallelicGenotyper.chooseBinSize]]) — a constant tuned for one
-  * coverage is the first thing to go wrong at 100x.
+  * span. -bin_size pins the bin width of the genotyper's indel
+  * interval join (reads ⨝ indel candidates); without it the CLI sizes
+  * bins from the data ([[BiallelicGenotyper.chooseBinSize]]) — a
+  * constant tuned for one coverage is the first thing to go wrong at
+  * 100x. The SNV observation kernel and the gVCF pileup bin reads at a
+  * fixed 1000 bp.
   */
 object Main {
 
@@ -106,7 +108,7 @@ object Main {
     (base, cn)
   }
 
-  /** Bin size for the genotyper's (contig, bin) read shuffle: an explicit
+  /** Bin size for the genotyper's indel interval join: an explicit
     * `-bin_size N` wins; otherwise sized from the data
     * ([[BiallelicGenotyper.chooseBinSize]] — one cheap sampling job).
     */

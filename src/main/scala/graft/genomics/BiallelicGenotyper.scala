@@ -11,15 +11,23 @@ import org.apache.spark.sql.functions._
   * BiallelicGenotyper.scala:88-556, re-expressed Spark-first).
   *
   * Plan shape (shuffles annotated for the 100 TB budget):
-  *   reads ⨝ variants            bin-bucketed interval join (J1/J2) —
+  *   SNVs: reads ⨝ site bins     reads keyed to (contig, 1000 bp bin),
+  *                               joined to the candidates' site-bin table
+  *                               (broadcast) before the one read shuffle;
+  *                               Observer.snvObservations compresses
+  *                               each bin's observations in one pass
+  *   indels: reads ⨝ variants    bin-bucketed interval join (J1/J2) —
   *                               broadcast when the variant side is small,
-  *                               else co-partitioned shuffle equi-join
-  *   flatMap Observer kernel     narrow
-  *   ⨝ broadcast(score table)    broadcast hash join (J3) — replaces
-  *                               per-row log/exp with a lookup
+  *                               else co-partitioned shuffle equi-join —
+  *                               then the Observer.observe kernel, narrow
+  *   ⨝ broadcast(score table)    broadcast hash join (J3) on one packed
+  *                               int key — replaces per-row log/exp
+  *                               with a lookup
   *   groupBy(site, sample).agg   the one unavoidable shuffle (A3):
   *                               partial+final hash agg, ~40 flat columns
   *   per-row emission exprs      narrow (argmax, GQ, Fisher, RMS)
+  * gVCF mode (scoreAllSites) adds the full compressed pileup, anti-joined
+  * against the broadcast candidate positions.
   */
 object BiallelicGenotyper {
 
@@ -46,11 +54,11 @@ object BiallelicGenotyper {
       scoreAllSites = scoreAllSites)
   }
 
-  /** Data-driven bin sizing for the pileup/interval-join shuffles —
+  /** Data-driven bin sizing for the indel interval join's shuffle —
     * the one tunable whose right value depends on the data, not the
     * code. Targets ~`targetReadsPerBin` reads per (contig, bin) group:
     * big enough to amortize per-group overhead, small enough that one
-    * bin's pileup fits an executor's working set at any coverage. Stats
+    * bin's reads fit an executor's working set at any coverage. Stats
     * come from a bounded sample (one cheap job over `fraction` of the
     * reads — an explicit utility action, deliberately NOT inside the
     * pure plan constructor `call()`), scaled back up. Clamped to
@@ -121,12 +129,11 @@ object BiallelicGenotyper {
       binSize: Double = 1000.0,
       broadcastVariants: Boolean = true,
       copyNumbers: Option[CopyNumberMap.Built] = None,
-      scoreAllSites: Boolean = false,
-      materializePileup: Boolean = false): DataFrame = {
+      scoreAllSites: Boolean = false): DataFrame = {
     require(variants.columns.contains("sampleId"),
       "callPerSample: variants must carry a sampleId column (use DiscoverVariants.discoverPerSample)")
     callImpl(reads, variants, perSample = true, ploidy, maxQual, maxMapQ,
-      binSize, broadcastVariants, copyNumbers, scoreAllSites, materializePileup)
+      binSize, broadcastVariants, copyNumbers, scoreAllSites)
   }
 
   private def callImpl(
@@ -139,8 +146,7 @@ object BiallelicGenotyper {
       binSize: Double,
       broadcastVariants: Boolean,
       copyNumbers: Option[CopyNumberMap.Built],
-      scoreAllSites: Boolean,
-      materializePileup: Boolean = false): DataFrame = {
+      scoreAllSites: Boolean): DataFrame = {
 
     val spark = reads.sparkSession
     import spark.implicits._
@@ -150,15 +156,17 @@ object BiallelicGenotyper {
       .map(m => (m.minPloidy to m.maxPloidy) :+ m.basePloidy)
       .getOrElse(Seq(ploidy)).distinct
 
-    // -- split candidate variants: SNVs ride the fully-declarative fast
-    // path; indels need the alignment-aware object kernel.
+    // -- split candidate variants: SNVs are observed at their own sites
+    // by one kernel; indels need the alignment-aware object kernel.
     // No persist and no driver-side action here: call() must stay a pure
     // plan constructor (a limit(1).count() probe would launch a Spark job
     // on every call and the persist it guarded was never unpersisted — a
     // cache leak in long-lived sessions). The indel branch is always
     // unioned in; when no indel candidates exist it scans an empty
     // filtered side, which AQE collapses at runtime.
-    val vdf = variantsDf.select(
+    val isSnv = col("alternateAllele").isNotNull &&
+      length(col("referenceAllele")) === 1 && length(col("alternateAllele")) === 1
+    def renamed(df: DataFrame) = df.select(
       Seq(
         col("contigName").as("v_contig"),
         col("start").as("v_start"),
@@ -166,42 +174,20 @@ object BiallelicGenotyper {
         col("alternateAllele").as("v_alt"),
         (col("start") + greatest(length(col("referenceAllele")), lit(1))).as("v_end")) ++
         (if (perSample) Seq(col("sampleId").as("v_sample")) else Nil): _*)
-    val isSnv = length(col("v_ref")) === 1 && length(col("v_alt")) === 1
-    val snvV = vdf.where(col("v_alt").isNotNull && isSnv)
-    val indelV = vdf.where(col("v_alt").isNull || !isSnv)
+    val vdf = renamed(variantsDf)
+    val indelV = renamed(variantsDf.where(!isSnv))
 
-    // -- SNV fast path: compress the per-base pileup to weighted
-    // observations — the reference's SummarizedObservation insight
-    // (SummarizedObservation.scala:37-43): the discrete observation key
-    // has tiny cardinality, so the variant-density fan-out multiplies
-    // compressed rows, not raw bases. The compression itself shuffles
-    // READS to position bins and hash-compresses per partition
-    // (Observer.compressedPileup) — readLength× fewer shuffled rows
-    // than exploding first. Then equi-join on (contig, position) with
-    // codegen'd support classification. No per-(read,variant) kernel.
-    // scoreAllSites references the pileup twice (SNV equi-join + the
-    // non-ref anti-join); materializePileup (an EXPLICIT opt-in — it
-    // runs a job, so the default call() stays a pure plan constructor)
-    // evaluates the compression once instead of twice
-    val pileup0 = Observer.compressedPileup(reads)
-    val pileup = if (materializePileup) graft.util.Barriers.corpusScale(pileup0) else pileup0
-    val snvSide = if (broadcastVariants) broadcast(snvV) else snvV
-    val snvCond = {
-      val base = pileup("contigName") === snvV("v_contig") && pileup("pos") === snvV("v_start")
-      if (perSample) base && pileup("sampleId") === snvV("v_sample") else base
-    }
-    val snvObs = pileup
-      .join(snvSide, snvCond)
-      .select(
-        col("contigName"),
-        col("v_start").as("start"),
-        col("v_ref").as("referenceAllele"),
-        col("v_alt").as("alternateAllele"),
-        col("sampleId"),
-        when(col("base") === col("v_alt"), Observer.SupportAlt)
-          .when(col("base") === col("v_ref"), Observer.SupportRef)
-          .otherwise(Observer.SupportOther).as("support"),
-        col("forwardStrand"), col("qual"), col("mapq"), col("w"))
+    // -- SNV path: weighted observations at the candidate sites only
+    // (avocado's Observer; the reference's SummarizedObservation insight,
+    // SummarizedObservation.scala:37-43 — the discrete observation key
+    // has tiny cardinality, so a site's reads compress to a few weighted
+    // rows). Observer.snvObservations joins reads to the candidates'
+    // (contig, bin) site table before its one read shuffle, so a read
+    // that covers no candidate never shuffles and no per-base pileup is
+    // built; support (alt, else ref, else other) is classified in the
+    // kernel. No per-(read, variant) object join.
+    val snvObs = Observer.snvObservations(reads, variantsDf.where(isSnv), perSample,
+      broadcastVariants)
 
     // -- indel path (K6/K8): interval join + per-read observation kernel
     // with nullOut ambiguity handling; indel candidate sets are orders of
@@ -238,6 +224,7 @@ object BiallelicGenotyper {
     // null, and the downstream likelihood blend gives the log-odds of
     // 0..m copies of an unknown non-reference allele. Anti-join on the
     // (tiny, broadcast) candidate-position set keeps this narrow.
+    lazy val pileup = Observer.compressedPileup(reads)
     lazy val vPos = vdf.select(
       Seq(col("v_contig"), col("v_start")) ++
         (if (perSample) Seq(col("v_sample")) else Nil): _*).distinct()
@@ -263,7 +250,7 @@ object BiallelicGenotyper {
 
     // -- score attachment (S9 + J3): clamp quals to the domain, take the
     // per-site copy number from the broadcast CNV map (or flat ploidy),
-    // then join the broadcast score table.
+    // then join the broadcast score table on its packed int key.
     val cnCol = copyNumbers
       .map(m => m.copyNumberAt(col("contigName"), col("start")))
       .getOrElse(lit(ploidy))
@@ -278,7 +265,10 @@ object BiallelicGenotyper {
           .otherwise(greatest(least(col("qual"), lit(maxQual)), lit(1))))
       .withColumn("mapq", greatest(least(col("mapq"), lit(maxMapQ)), lit(1)))
     val scores = ScoreTable.buildForCopyNumbers(spark, cnValues, maxP, maxQual, maxMapQ)
-    val keyed = clamped.join(broadcast(scores), Seq("copyNumber", "qual", "mapq"))
+    val keyed = clamped
+      .withColumn("scoreKey",
+        ScoreTable.key(col("copyNumber"), col("qual"), col("mapq"), maxP, maxQual, maxMapQ))
+      .join(broadcast(scores), "scoreKey")
 
     // -- per-row per-state contribution (weighted by the compressed
     // multiplicity), then the wide hash agg (A3). Nulled (nonref)

@@ -1,6 +1,6 @@
 package graft.genomics
 
-import graft.kernels.{AlignmentOps, AlnClip, AlnDel, AlnIns, Likelihood}
+import graft.kernels.{AlignmentOps, AlnClip, AlnDel, AlnIns, AlnMatch, Likelihood}
 import graft.model.{DiscoveredVariant, Read}
 
 import scala.util.Try
@@ -105,16 +105,34 @@ object Observer {
       sampleId: String,
       w: Long)
 
-  /** Weighted pileup WITHOUT a per-base shuffle: reads are re-keyed to
-    * (contig, position-bin) — border reads replicated, base emission
-    * clamped to the owning bin so nothing double-counts — and each
-    * partition compresses its pileup in one hash pass. The shuffle
-    * carries one row per READ (readLength× fewer rows than shuffling the
-    * exploded pileup into a hash agg, the shape this replaces: measured
-    * 7.0 s -> see bench for the win at sf0.1). Per-partition state is
-    * the distinct observation keys of its bins — the same cardinality
-    * the old partial agg held. Equivalent to
-    * flatMap(basePileup).groupBy(key).count, by construction.
+  /** Reads keyed to the (contig, position bin)s their pileup feeds, for
+    * the bin shuffles of [[compressedPileup]] and [[snvObservations]], as
+    * (contig, bin, read, end of the read's span). The span comes from the
+    * CIGAR itself (what the walks actually emit), not the record's end
+    * field — an inconsistent end would clamp bases out of every bin and
+    * silently lose depth. A read crossing a bin border is replicated to
+    * every bin it touches; each bin emits only the positions it owns, so
+    * nothing double-counts.
+    */
+  private def binnedReads(
+      reads: org.apache.spark.sql.Dataset[Read],
+      binSize: Long): org.apache.spark.sql.Dataset[(String, Long, Read, Long)] = {
+    import reads.sparkSession.implicits._
+    reads.flatMap { r =>
+      val refLen = Try(AlignmentOps.cigarRefLength(r.cigar)).getOrElse(0L)
+      val last = math.max(r.start, math.max(r.end - 1, r.start + refLen - 1))
+      (r.start / binSize to last / binSize).map(b => (r.contigName, b, r, last + 1))
+    }
+  }
+
+  /** Weighted pileup of every aligned base WITHOUT a per-base shuffle:
+    * reads are keyed by [[binnedReads]] and each partition
+    * compresses its pileup in one hash pass. The shuffle carries one row
+    * per READ (readLength× fewer rows than shuffling the exploded pileup
+    * into a hash agg). Equivalent to flatMap(basePileup).groupBy(key)
+    * .count, by construction. It serves the genotyper's gVCF non-ref
+    * model, which needs every position; SNV candidates are observed by
+    * [[snvObservations]], which never builds this table.
     */
   def compressedPileup(
       reads: org.apache.spark.sql.Dataset[Read],
@@ -122,21 +140,13 @@ object Observer {
     val spark = reads.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    reads
-      .flatMap { r =>
-        // span from the CIGAR itself (what basePileup actually emits),
-        // not the record's end field — an inconsistent end would clamp
-        // bases out of every bin and silently lose depth
-        val refLen = Try(AlignmentOps.cigarRefLength(r.cigar)).getOrElse(0L)
-        val last = math.max(r.start, math.max(r.end - 1, r.start + refLen - 1))
-        val b0 = r.start / binSize
-        val b1 = last / binSize
-        (b0 to b1).map(b => (r.contigName, b, r))
-      }
-      .repartition(col("_1"), col("_2"))
+    // a fixed partition count: the per-read work runs after this shuffle,
+    // and AQE would coalesce its small input into a few long tasks
+    binnedReads(reads, binSize)
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("_1"), col("_2"))
       .mapPartitions { it =>
         val m = scala.collection.mutable.HashMap.empty[BaseObs, Long]
-        it.foreach { case (_, bin, r) =>
+        it.foreach { case (_, bin, r, _) =>
           val lo = bin * binSize
           val hi = lo + binSize
           basePileup(r).foreach { p =>
@@ -150,6 +160,180 @@ object Observer {
       }
       .toDF()
   }
+
+  /** One SNV candidate packed into a long: position in the high 32 bits,
+    * then the reference and alternate base, 16 bits each. Longs sort by
+    * position first, and a bin's site list ships as one primitive array.
+    */
+  object SnvSite {
+    def apply(pos: Long, ref: String, alt: String): Long = {
+      require(pos >= 0 && pos <= Int.MaxValue, s"SNV position $pos does not fit a site key")
+      (pos << 32) | (ref.charAt(0).toLong << 16) | alt.charAt(0).toLong
+    }
+    def pos(site: Long): Long = site >>> 32
+    def ref(site: Long): Char = ((site >>> 16) & 0xFFFF).toChar
+    def alt(site: Long): Char = (site & 0xFFFF).toChar
+  }
+
+  // one-base allele strings, shared instead of allocated per observation
+  private val baseStrings = Array.tabulate(128)(_.toChar.toString)
+  private def baseString(c: Char): String = if (c < 128) baseStrings(c) else c.toString
+
+  /** [[SiteObservation]] plus its compressed multiplicity: the
+    * genotyper's observation schema.
+    */
+  case class WeightedObservation(
+      contigName: String,
+      start: Long,
+      referenceAllele: String,
+      alternateAllele: String,
+      sampleId: String,
+      support: Int,
+      forwardStrand: Boolean,
+      qual: Int,
+      mapq: Int,
+      w: Long)
+
+  /** The per-read part of an observation key: one hash map of packed
+    * per-site keys per group, looked up once per read.
+    */
+  private case class ReadGroup(
+      contigName: String, sampleId: String, forwardStrand: Boolean, mapq: Int, bin: Long)
+
+  private val readGroupOrder: Ordering[ReadGroup] = Ordering.by(g =>
+    (Option(g.contigName), Option(g.sampleId), g.forwardStrand, g.mapq, g.bin))
+
+  /** The per-site part of an observation key packed into a long, high to
+    * low: offset in the bin (13 bits), reference and alternate base (16
+    * each), support (2) and quality + 33 (16, the qual character). Longs
+    * sort like (pos, ref, alt, support, qual).
+    */
+  private object SiteKey {
+    final val MaxBin = 1L << 13
+    def apply(offset: Long, site: Long, support: Int, qual: Int): Long =
+      (offset << 50) | ((site & 0xFFFFFFFFL) << 18) | (support.toLong << 16) | (qual + 33).toLong
+    def offset(k: Long): Long = k >>> 50
+    def ref(k: Long): Char = ((k >>> 34) & 0xFFFF).toChar
+    def alt(k: Long): Char = ((k >>> 18) & 0xFFFF).toChar
+    def support(k: Long): Int = ((k >>> 16) & 3).toInt
+    def qual(k: Long): Int = (k & 0xFFFF).toInt - 33
+  }
+
+  /** Receives one SNV observation of a read; a SAM type rather than a
+    * Function3 so the per-site call does not box.
+    */
+  trait SnvObserved {
+    def apply(site: Long, support: Int, qual: Int): Unit
+  }
+
+  /** Weighted observations of `reads` at the SNV candidates `snvs`
+    * (contigName, start, referenceAllele, alternateAllele, plus sampleId
+    * when `perSample`): the pileup restricted to candidate sites, without
+    * building the pileup of every base.
+    *
+    * The candidates become a site-bin table, one row per (contig, bin)
+    * (and sample) holding that bin's sites. Reads keyed by
+    * [[binnedReads]] are joined to it BEFORE the one read shuffle
+    * (broadcast when `broadcastSites`) and keep only the sites inside
+    * their own span, so a read that covers no candidate never shuffles
+    * and a read carries a handful of sites however dense its bin is.
+    * Each (contig, bin) then lives in one partition, which compresses its
+    * observations in one hash pass — one map of packed site keys per
+    * (contig, sample, strand, mapq, bin) — and emits them sorted by
+    * (contig, sample, strand, mapq, pos, ref, alt, support, qual): a site's
+    * weights are summed in an order that does not depend on how the input
+    * was partitioned or which other samples it holds. A bin holds only
+    * the sites it owns, so a read replicated across a border observes
+    * each site once.
+    */
+  def snvObservations(
+      reads: org.apache.spark.sql.Dataset[Read],
+      snvs: org.apache.spark.sql.DataFrame,
+      perSample: Boolean,
+      broadcastSites: Boolean,
+      binSize: Long = 1000L): org.apache.spark.sql.DataFrame = {
+    require(binSize <= SiteKey.MaxBin, s"bin size $binSize exceeds the site key's ${SiteKey.MaxBin}")
+    val spark = reads.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val siteBins = snvs
+      .select(col("contigName"), col("start"), col("referenceAllele"), col("alternateAllele"),
+        (if (perSample) col("sampleId") else lit(null).cast("string")))
+      .as[(String, Long, String, String, String)]
+      .map { case (contig, pos, ref, alt, sample) =>
+        (contig, pos / binSize, sample, SnvSite(pos, ref, alt))
+      }
+      .toDF("site_contig", "site_bin", "site_sample", "site")
+      .groupBy(Seq(col("site_contig"), col("site_bin")) ++
+        (if (perSample) Seq(col("site_sample")) else Nil): _*)
+      .agg(array_sort(collect_list(col("site"))).as("sites"))
+    val cond = {
+      val base = col("_1") === col("site_contig") && col("_2") === col("site_bin")
+      if (perSample) base && col("_3.sampleId") === col("site_sample") else base
+    }
+    binnedReads(reads, binSize)
+      .join(if (broadcastSites) broadcast(siteBins) else siteBins, cond)
+      .withColumn("sites", graft.functions.NativeExpressions.sorted_range(
+        col("sites"), shiftleft(col("_3.start"), 32), shiftleft(col("_4"), 32)))
+      .where(size(col("sites")) > 0)
+      // fixed partition count, as in compressedPileup
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("_1"), col("_2"))
+      .select(col("_2"), col("sites"), col("_3"))
+      .as[(Long, Array[Long], Read)]
+      .mapPartitions { it =>
+        val groups = scala.collection.mutable.HashMap.empty[ReadGroup,
+          scala.collection.mutable.LongMap[Array[Long]]]
+        it.foreach { case (bin, sites, r) =>
+          val counts = groups.getOrElseUpdate(
+            ReadGroup(r.contigName, r.sampleId, !r.readNegativeStrand, r.mapq, bin),
+            scala.collection.mutable.LongMap.empty[Array[Long]])
+          val lo = bin * binSize
+          observeSnvs(r, sites) { (site, support, qual) =>
+            counts.getOrElseUpdate(SiteKey(SnvSite.pos(site) - lo, site, support, qual),
+              new Array[Long](1))(0) += 1
+          }
+        }
+        groups.toArray.sortBy(_._1)(readGroupOrder).iterator.flatMap { case (g, counts) =>
+          val keys = new Array[Long](counts.size)
+          var i = 0
+          counts.foreachKey { k => keys(i) = k; i += 1 }
+          java.util.Arrays.sort(keys)
+          keys.iterator.map { k =>
+            WeightedObservation(g.contigName, g.bin * binSize + SiteKey.offset(k),
+              baseString(SiteKey.ref(k)), baseString(SiteKey.alt(k)), g.sampleId,
+              SiteKey.support(k), g.forwardStrand, SiteKey.qual(k), g.mapq, counts(k)(0))
+          }
+        }
+      }
+      .toDF()
+  }
+
+  /** What one read shows at the SNV candidates `sites` ([[SnvSite]]s,
+    * sorted): one (site, support, base quality) per candidate under an
+    * aligned base — alt, else ref, else other; a multiallelic position
+    * observes every candidate. A malformed read observes nothing.
+    */
+  def observeSnvs(read: Read, sites: Array[Long])(emit: SnvObserved): Unit =
+    Try(AlignmentOps.parseRead(read.cigar, read.mdTag, read.sequence, read.qual)).foreach { ops =>
+      var i = 0
+      AlignmentOps.walk(read.start, ops) {
+        case (AlnMatch(n, _), pos, idx) =>
+          while (i < sites.length && SnvSite.pos(sites(i)) < pos) i += 1
+          var j = i
+          while (j < sites.length && SnvSite.pos(sites(j)) < pos + n) {
+            val s = sites(j)
+            val at = idx + (SnvSite.pos(s) - pos).toInt
+            val b = read.sequence.charAt(at)
+            val support =
+              if (SnvSite.alt(s) == b) SupportAlt
+              else if (SnvSite.ref(s) == b) SupportRef
+              else SupportOther
+            emit(s, support, AlignmentOps.phred(read.qual, at))
+            j += 1
+          }
+        case _ => ()
+      }
+    }
 
   /** Explode a read into per-aligned-base pileup rows — runs ONCE per
     * read regardless of how many variants overlap it. Malformed reads

@@ -1,7 +1,7 @@
 package graft.genomics
 
 import graft.kernels.Likelihood
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Generated likelihood dimension table (SURVEY.md S9; reference
@@ -13,17 +13,34 @@ import org.apache.spark.sql.functions._
   * scale), we materialize the function once (~8.8k rows), broadcast it,
   * and turn per-row math into a broadcast hash join. Per-state arrays
   * are flattened to scalar columns (a_ll_0.., o_ll_0..) so the downstream
-  * sum aggregation stays in Tungsten codegen.
+  * sum aggregation stays in Tungsten codegen. Rows are keyed by one
+  * packed integer, [[key]] of (copyNumber, qual, mapq): a single integral
+  * join key plans as a LongHashedRelation, while a multi-column key would
+  * build a byte-keyed relation that holds a 64 MiB page.
   */
 object ScoreTable {
+
+  /** The table's join key: (copyNumber, qual, mapq) packed into one int,
+    * with radixes from the qual domain (NoQual to maxQual) and the mapq
+    * domain (0 to maxMapQ).
+    */
+  def key(copyNumber: Column, qual: Column, mapq: Column,
+      maxPloidy: Int, maxQual: Int, maxMapQ: Int): Column = {
+    val qualRadix = maxQual - Likelihood.NoQual + 1
+    val mapqRadix = maxMapQ + 1
+    require((maxPloidy + 1).toLong * qualRadix * mapqRadix <= Int.MaxValue,
+      s"score key overflows an int: ploidy $maxPloidy, qual $maxQual, mapq $maxMapQ")
+    (copyNumber * qualRadix + (qual - Likelihood.NoQual)) * mapqRadix + mapq
+  }
 
   def build(spark: SparkSession, ploidy: Int = 2, maxQual: Int = 93, maxMapQ: Int = 93): DataFrame =
     buildForCopyNumbers(spark, Seq(ploidy), ploidy, maxQual, maxMapQ)
 
-  /** Variable-ploidy variant: one row per (copyNumber, qual, mapq), with
-    * per-state columns sized for maxPloidy and zero-padded above each
-    * row's own copy number (padding contributes nothing to the sums; the
-    * emission slices to the site's real state count).
+  /** Variable-ploidy variant: one row per (copyNumber, qual, mapq),
+    * keyed `scoreKey` ([[key]]), with per-state columns sized for
+    * maxPloidy and zero-padded above each row's own copy number (padding
+    * contributes nothing to the sums; the emission slices to the site's
+    * real state count).
     */
   def buildForCopyNumbers(
       spark: SparkSession,
@@ -50,7 +67,7 @@ object ScoreTable {
     val nested = rows.toDF("copyNumber", "qual", "mapq", "a_ll", "o_ll")
     val states = 0 to maxPloidy
     nested.select(
-      col("copyNumber") +: col("qual") +: col("mapq") +:
+      key(col("copyNumber"), col("qual"), col("mapq"), maxPloidy, maxQual, maxMapQ).as("scoreKey") +:
         (states.map(g => col("a_ll").getItem(g).as(s"a_ll_$g")) ++
           states.map(g => col("o_ll").getItem(g).as(s"o_ll_$g"))): _*)
   }

@@ -1088,11 +1088,7 @@ object Queries {
     // in-session equivalent and truncates the lineage the self-join
     // would otherwise duplicate.
     val cohort = BiallelicGenotyper
-      .callPerSample(rds, vs, ploidy = 2, binSize = 20.0, scoreAllSites = true,
-        // gVCF mode reads the compressed pileup twice (SNV join + the
-        // non-ref anti-join); evaluating the compression once is ~30%
-        // off the cohort call at sf0.1
-        materializePileup = true)
+      .callPerSample(rds, vs, ploidy = 2, binSize = 20.0, scoreAllSites = true)
       .withColumn("end", col("start") + greatest(length(col("referenceAllele")), lit(1)))
       .select("contigName", "start", "end", "referenceAllele", "alternateAllele",
         "sampleId", "genotypeState", "genotypeQuality", "readDepth",

@@ -29,8 +29,7 @@ object G6Profile {
       .select("sampleId", "contigName", "start", "referenceAllele", "alternateAllele")
     time("discoverPerSample")(vs.count())
     val cohort = BiallelicGenotyper
-      .callPerSample(rds, vs, ploidy = 2, binSize = 20.0, scoreAllSites = true,
-        materializePileup = sys.env.get("G6_MAT_PILEUP").contains("1"))
+      .callPerSample(rds, vs, ploidy = 2, binSize = 20.0, scoreAllSites = true)
       .withColumn("end", col("start") + greatest(length(col("referenceAllele")), lit(1)))
       .select("contigName", "start", "end", "referenceAllele", "alternateAllele",
         "sampleId", "genotypeState", "genotypeQuality", "readDepth",

@@ -72,6 +72,20 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
+  test("genotyper: SNVs observed at candidate sites, no per-base pileup; packed score key") {
+    val plan = planOf(Queries.g2_genotype_calls(spark, sf("0.001")))
+    // the per-base pileup carries the aligned reference base; the default
+    // call observes the candidates' own sites and never builds it, so no
+    // pileup is joined to the candidates either
+    assert(!plan.contains("refBase"), plan)
+    val joins = plan.linesIterator.filter(_.contains("Join")).toSeq
+    // reads meet the (contig, bin) site table in a broadcast join
+    assert(joins.exists(l => l.contains("BroadcastHashJoin") && l.contains("site_bin")), plan)
+    // the score table joins on one int key (a LongHashedRelation)
+    assert(joins.exists(l => l.contains("BroadcastHashJoin") &&
+      """\[scoreKey#\d+\], \[scoreKey#\d+\]""".r.findFirstIn(l).isDefined), plan)
+  }
+
   test("gVCF pipeline: anti-join broadcasts, no nested loop, partial aggs") {
     // g6 checkpoints the called cohort before the square-off self-join,
     // so inspect the cohort CONSTRUCTION plan (where the genotyper lives)
