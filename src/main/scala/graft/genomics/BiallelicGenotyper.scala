@@ -26,8 +26,11 @@ import org.apache.spark.sql.functions._
   *   groupBy(site, sample).agg   the one unavoidable shuffle (A3):
   *                               partial+final hash agg, ~40 flat columns
   *   per-row emission exprs      narrow (argmax, GQ, Fisher, RMS)
-  * gVCF mode (scoreAllSites) adds the full compressed pileup, anti-joined
-  * against the broadcast candidate positions.
+  * gVCF mode (scoreAllSites) observes every position instead: the full
+  * compressed pileup, left-joined to the broadcast SNV candidates (a
+  * matched row is an SNV observation, an unmatched one a non-ref
+  * observation), then anti-joined against the broadcast candidate
+  * positions to drop the non-ref rows under indel candidates.
   */
 object BiallelicGenotyper {
 
@@ -175,6 +178,7 @@ object BiallelicGenotyper {
         (col("start") + greatest(length(col("referenceAllele")), lit(1))).as("v_end")) ++
         (if (perSample) Seq(col("sampleId").as("v_sample")) else Nil): _*)
     val vdf = renamed(variantsDf)
+    val snvV = renamed(variantsDf.where(isSnv))
     val indelV = renamed(variantsDf.where(!isSnv))
 
     // -- SNV path: weighted observations at the candidate sites only
@@ -185,8 +189,9 @@ object BiallelicGenotyper {
     // (contig, bin) site table before its one read shuffle, so a read
     // that covers no candidate never shuffles and no per-base pileup is
     // built; support (alt, else ref, else other) is classified in the
-    // kernel. No per-(read, variant) object join.
-    val snvObs = Observer.snvObservations(reads, variantsDf.where(isSnv), perSample,
+    // kernel. No per-(read, variant) object join. gVCF mode takes its
+    // SNV observations from the pileup it builds anyway (below).
+    lazy val siteObs = Observer.snvObservations(reads, variantsDf.where(isSnv), perSample,
       broadcastVariants)
 
     // -- indel path (K6/K8): interval join + per-read observation kernel
@@ -222,31 +227,46 @@ object BiallelicGenotyper {
     // variant emits a symbolic non-ref observation — support is "shows
     // the reference" vs "shows anything else", the alternate allele is
     // null, and the downstream likelihood blend gives the log-odds of
-    // 0..m copies of an unknown non-reference allele. Anti-join on the
-    // (tiny, broadcast) candidate-position set keeps this narrow.
-    lazy val pileup = Observer.compressedPileup(reads)
-    lazy val vPos = vdf.select(
-      Seq(col("v_contig"), col("v_start")) ++
-        (if (perSample) Seq(col("v_sample")) else Nil): _*).distinct()
-    lazy val antiCond = {
-      val base = pileup("contigName") === col("v_contig") && pileup("pos") === col("v_start")
-      if (perSample) base && pileup("sampleId") === col("v_sample") else base
-    }
-    lazy val nonRefObs = pileup
-      .join(if (broadcastVariants) broadcast(vPos) else vPos, antiCond, "left_anti")
-      .select(
-        col("contigName"),
-        col("pos").as("start"),
-        col("refBase").as("referenceAllele"),
-        lit(null).cast("string").as("alternateAllele"),
-        col("sampleId"),
-        when(col("base") === col("refBase"), Observer.SupportRef)
-          .otherwise(Observer.SupportAlt).as("support"),
-        col("forwardStrand"), col("qual"), col("mapq"), col("w"))
-
-    val obs =
-      if (scoreAllSites) snvObs.unionByName(indelObs).unionByName(nonRefObs)
-      else snvObs.unionByName(indelObs)
+    // 0..m copies of an unknown non-reference allele. One pass over the
+    // pileup serves both kinds: a left join to the (broadcast) SNV
+    // candidates classifies matched rows as SNV observations and leaves
+    // the rest as non-ref rows; an anti-join on the (tiny, broadcast)
+    // candidate-position set, whose null-alternate condition lets the SNV
+    // rows through, drops the non-ref rows under indel candidates.
+    val snvObs =
+      if (!scoreAllSites) siteObs
+      else {
+        val pileup = Observer.compressedPileup(reads)
+        val snvCond = {
+          val base = pileup("contigName") === snvV("v_contig") && pileup("pos") === snvV("v_start")
+          if (perSample) base && pileup("sampleId") === snvV("v_sample") else base
+        }
+        val pileupObs = pileup
+          .join(if (broadcastVariants) broadcast(snvV) else snvV, snvCond, "left_outer")
+          .select(
+            col("contigName"),
+            col("pos").as("start"),
+            coalesce(col("v_ref"), col("refBase")).as("referenceAllele"),
+            col("v_alt").as("alternateAllele"),
+            col("sampleId"),
+            when(col("v_alt").isNull,
+              when(col("base") === col("refBase"), Observer.SupportRef)
+                .otherwise(Observer.SupportAlt))
+              .when(col("base") === col("v_alt"), Observer.SupportAlt)
+              .when(col("base") === col("v_ref"), Observer.SupportRef)
+              .otherwise(Observer.SupportOther).as("support"),
+            col("forwardStrand"), col("qual"), col("mapq"), col("w"))
+        val vPos = vdf.select(
+          Seq(col("v_contig"), col("v_start")) ++
+            (if (perSample) Seq(col("v_sample")) else Nil): _*).distinct()
+        val antiCond = {
+          val base = pileupObs("contigName") === col("v_contig") &&
+            pileupObs("start") === col("v_start") && pileupObs("alternateAllele").isNull
+          if (perSample) base && pileupObs("sampleId") === col("v_sample") else base
+        }
+        pileupObs.join(if (broadcastVariants) broadcast(vPos) else vPos, antiCond, "left_anti")
+      }
+    val obs = snvObs.unionByName(indelObs)
 
     // -- score attachment (S9 + J3): clamp quals to the domain, take the
     // per-site copy number from the broadcast CNV map (or flat ploidy),

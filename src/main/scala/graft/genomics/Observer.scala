@@ -1,6 +1,6 @@
 package graft.genomics
 
-import graft.kernels.{AlignmentOps, AlnClip, AlnDel, AlnIns, AlnMatch, Likelihood}
+import graft.kernels.{AlignmentOps, AlnClip, AlnDel, AlnIns, Likelihood}
 import graft.model.{DiscoveredVariant, Read}
 
 import scala.util.Try
@@ -105,6 +105,9 @@ object Observer {
       sampleId: String,
       w: Long)
 
+  /** Width of the (contig, position bin)s the read shuffles key by. */
+  private final val BinSize = 1000L
+
   /** Reads keyed to the (contig, position bin)s their pileup feeds, for
     * the bin shuffles of [[compressedPileup]] and [[snvObservations]], as
     * (contig, bin, read, end of the read's span). The span comes from the
@@ -115,13 +118,12 @@ object Observer {
     * nothing double-counts.
     */
   private def binnedReads(
-      reads: org.apache.spark.sql.Dataset[Read],
-      binSize: Long): org.apache.spark.sql.Dataset[(String, Long, Read, Long)] = {
+      reads: org.apache.spark.sql.Dataset[Read]): org.apache.spark.sql.Dataset[(String, Long, Read, Long)] = {
     import reads.sparkSession.implicits._
     reads.flatMap { r =>
       val refLen = Try(AlignmentOps.cigarRefLength(r.cigar)).getOrElse(0L)
       val last = math.max(r.start, math.max(r.end - 1, r.start + refLen - 1))
-      (r.start / binSize to last / binSize).map(b => (r.contigName, b, r, last + 1))
+      (r.start / BinSize to last / BinSize).map(b => (r.contigName, b, r, last + 1))
     }
   }
 
@@ -130,25 +132,23 @@ object Observer {
     * compresses its pileup in one hash pass. The shuffle carries one row
     * per READ (readLength× fewer rows than shuffling the exploded pileup
     * into a hash agg). Equivalent to flatMap(basePileup).groupBy(key)
-    * .count, by construction. It serves the genotyper's gVCF non-ref
-    * model, which needs every position; SNV candidates are observed by
-    * [[snvObservations]], which never builds this table.
+    * .count, by construction. It serves the genotyper's gVCF mode, which
+    * observes every position; the default call observes SNV candidates
+    * with [[snvObservations]], which never builds this table.
     */
-  def compressedPileup(
-      reads: org.apache.spark.sql.Dataset[Read],
-      binSize: Long = 1000L): org.apache.spark.sql.DataFrame = {
+  def compressedPileup(reads: org.apache.spark.sql.Dataset[Read]): org.apache.spark.sql.DataFrame = {
     val spark = reads.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // a fixed partition count: the per-read work runs after this shuffle,
     // and AQE would coalesce its small input into a few long tasks
-    binnedReads(reads, binSize)
+    binnedReads(reads)
       .repartition(spark.sessionState.conf.numShufflePartitions, col("_1"), col("_2"))
       .mapPartitions { it =>
         val m = scala.collection.mutable.HashMap.empty[BaseObs, Long]
         it.foreach { case (_, bin, r, _) =>
-          val lo = bin * binSize
-          val hi = lo + binSize
+          val lo = bin * BinSize
+          val hi = lo + BinSize
           basePileup(r).foreach { p =>
             if (p.pos >= lo && p.pos < hi) m.update(p, m.getOrElse(p, 0L) + 1L)
           }
@@ -175,10 +175,6 @@ object Observer {
     def alt(site: Long): Char = (site & 0xFFFF).toChar
   }
 
-  // one-base allele strings, shared instead of allocated per observation
-  private val baseStrings = Array.tabulate(128)(_.toChar.toString)
-  private def baseString(c: Char): String = if (c < 128) baseStrings(c) else c.toString
-
   /** [[SiteObservation]] plus its compressed multiplicity: the
     * genotyper's observation schema.
     */
@@ -204,12 +200,12 @@ object Observer {
     (Option(g.contigName), Option(g.sampleId), g.forwardStrand, g.mapq, g.bin))
 
   /** The per-site part of an observation key packed into a long, high to
-    * low: offset in the bin (13 bits), reference and alternate base (16
-    * each), support (2) and quality + 33 (16, the qual character). Longs
-    * sort like (pos, ref, alt, support, qual).
+    * low: offset in the bin (13 bits, so [[BinSize]] must stay below
+    * 8192), reference and alternate base (16 each), support (2) and
+    * quality + 33 (16, the qual character). Longs sort like (pos, ref,
+    * alt, support, qual).
     */
   private object SiteKey {
-    final val MaxBin = 1L << 13
     def apply(offset: Long, site: Long, support: Int, qual: Int): Long =
       (offset << 50) | ((site & 0xFFFFFFFFL) << 18) | (support.toLong << 16) | (qual + 33).toLong
     def offset(k: Long): Long = k >>> 50
@@ -217,13 +213,6 @@ object Observer {
     def alt(k: Long): Char = ((k >>> 18) & 0xFFFF).toChar
     def support(k: Long): Int = ((k >>> 16) & 3).toInt
     def qual(k: Long): Int = (k & 0xFFFF).toInt - 33
-  }
-
-  /** Receives one SNV observation of a read; a SAM type rather than a
-    * Function3 so the per-site call does not box.
-    */
-  trait SnvObserved {
-    def apply(site: Long, support: Int, qual: Int): Unit
   }
 
   /** Weighted observations of `reads` at the SNV candidates `snvs`
@@ -250,9 +239,7 @@ object Observer {
       reads: org.apache.spark.sql.Dataset[Read],
       snvs: org.apache.spark.sql.DataFrame,
       perSample: Boolean,
-      broadcastSites: Boolean,
-      binSize: Long = 1000L): org.apache.spark.sql.DataFrame = {
-    require(binSize <= SiteKey.MaxBin, s"bin size $binSize exceeds the site key's ${SiteKey.MaxBin}")
+      broadcastSites: Boolean): org.apache.spark.sql.DataFrame = {
     val spark = reads.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -261,7 +248,7 @@ object Observer {
         (if (perSample) col("sampleId") else lit(null).cast("string")))
       .as[(String, Long, String, String, String)]
       .map { case (contig, pos, ref, alt, sample) =>
-        (contig, pos / binSize, sample, SnvSite(pos, ref, alt))
+        (contig, pos / BinSize, sample, SnvSite(pos, ref, alt))
       }
       .toDF("site_contig", "site_bin", "site_sample", "site")
       .groupBy(Seq(col("site_contig"), col("site_bin")) ++
@@ -271,7 +258,7 @@ object Observer {
       val base = col("_1") === col("site_contig") && col("_2") === col("site_bin")
       if (perSample) base && col("_3.sampleId") === col("site_sample") else base
     }
-    binnedReads(reads, binSize)
+    binnedReads(reads)
       .join(if (broadcastSites) broadcast(siteBins) else siteBins, cond)
       .withColumn("sites", graft.functions.NativeExpressions.sorted_range(
         col("sites"), shiftleft(col("_3.start"), 32), shiftleft(col("_4"), 32)))
@@ -287,20 +274,16 @@ object Observer {
           val counts = groups.getOrElseUpdate(
             ReadGroup(r.contigName, r.sampleId, !r.readNegativeStrand, r.mapq, bin),
             scala.collection.mutable.LongMap.empty[Array[Long]])
-          val lo = bin * binSize
+          val lo = bin * BinSize
           observeSnvs(r, sites) { (site, support, qual) =>
             counts.getOrElseUpdate(SiteKey(SnvSite.pos(site) - lo, site, support, qual),
               new Array[Long](1))(0) += 1
           }
         }
         groups.toArray.sortBy(_._1)(readGroupOrder).iterator.flatMap { case (g, counts) =>
-          val keys = new Array[Long](counts.size)
-          var i = 0
-          counts.foreachKey { k => keys(i) = k; i += 1 }
-          java.util.Arrays.sort(keys)
-          keys.iterator.map { k =>
-            WeightedObservation(g.contigName, g.bin * binSize + SiteKey.offset(k),
-              baseString(SiteKey.ref(k)), baseString(SiteKey.alt(k)), g.sampleId,
+          counts.keys.toArray.sorted.iterator.map { k =>
+            WeightedObservation(g.contigName, g.bin * BinSize + SiteKey.offset(k),
+              SiteKey.ref(k).toString, SiteKey.alt(k).toString, g.sampleId,
               SiteKey.support(k), g.forwardStrand, SiteKey.qual(k), g.mapq, counts(k)(0))
           }
         }
@@ -309,29 +292,24 @@ object Observer {
   }
 
   /** What one read shows at the SNV candidates `sites` ([[SnvSite]]s,
-    * sorted): one (site, support, base quality) per candidate under an
+    * sorted): `emit(site, support, base quality)` per candidate under an
     * aligned base — alt, else ref, else other; a multiallelic position
     * observes every candidate. A malformed read observes nothing.
     */
-  def observeSnvs(read: Read, sites: Array[Long])(emit: SnvObserved): Unit =
+  def observeSnvs(read: Read, sites: Array[Long])(emit: (Long, Int, Int) => Unit): Unit =
     Try(AlignmentOps.parseRead(read.cigar, read.mdTag, read.sequence, read.qual)).foreach { ops =>
       var i = 0
-      AlignmentOps.walk(read.start, ops) {
-        case (AlnMatch(n, _), pos, idx) =>
-          while (i < sites.length && SnvSite.pos(sites(i)) < pos) i += 1
-          var j = i
-          while (j < sites.length && SnvSite.pos(sites(j)) < pos + n) {
-            val s = sites(j)
-            val at = idx + (SnvSite.pos(s) - pos).toInt
-            val b = read.sequence.charAt(at)
-            val support =
-              if (SnvSite.alt(s) == b) SupportAlt
-              else if (SnvSite.ref(s) == b) SupportRef
-              else SupportOther
-            emit(s, support, AlignmentOps.phred(read.qual, at))
-            j += 1
-          }
-        case _ => ()
+      AlignmentOps.foreachAlignedBase(read.start, read.sequence, ops) { (pos, idx, _) =>
+        while (i < sites.length && SnvSite.pos(sites(i)) < pos) i += 1
+        var j = i
+        while (j < sites.length && SnvSite.pos(sites(j)) == pos) {
+          val s = sites(j)
+          val b = read.sequence.charAt(idx)
+          emit(s,
+            if (SnvSite.alt(s) == b) SupportAlt else if (SnvSite.ref(s) == b) SupportRef else SupportOther,
+            AlignmentOps.phred(read.qual, idx))
+          j += 1
+        }
       }
     }
 
