@@ -416,11 +416,9 @@ object Bench {
       System.err.println(s"[bench] WARNING: SPARK_GRAFT_SKIP name matched nothing: $miss")
     val selected = preSelected.filterNot(skipped)
 
-    // RDDs persisted BEFORE the suite belong to the caller (getOrCreate
-    // can attach to an existing session): unpersisting a caller's
-    // localCheckpointed dataset would truncate its lineage — the data
-    // becomes unrecoverable, not recomputable — so the per-query cleanup
-    // below only releases ids created during the bench run
+    // RDDs persisted BEFORE the suite belong to the caller: the
+    // per-query boundary (Barriers.releaseSince) only releases ids
+    // created during the bench run
     val preexisting = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
     // a failed query records -1.0 (numeric, so the driver's parse still
@@ -450,19 +448,7 @@ object Bench {
     def runOnce(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
       peakResidentRdds = math.max(peakResidentRdds, residentRdds)
-      // release localCheckpoint blocks deterministically: queries that
-      // materialize intermediates (g6's cohort gVCF, d9's bench grams)
-      // pin RDD blocks until the ASYNC ContextCleaner gets to them, so
-      // a System.gc() alone still lets tens of GB of block debris leak
-      // into later queries' timings (BENCH_r05: g4 16.9s in-suite vs
-      // 7.1s isolated, identical code). Unpersist is synchronous.
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) =>
-          if (!preexisting.contains(id)) rdd.unpersist(blocking = true) }
-      // then prompt the GC-triggered ContextCleaner for broadcast/
-      // shuffle debris (full GCs are rare on a 24g heap, so late
-      // queries otherwise absorb reclamation as phantom regressions)
-      System.gc()
+      graft.util.Barriers.releaseSince(spark, preexisting)
       val t0 = System.nanoTime()
       // in-query GC wall time: the one cumulative-state mechanism a
       // CPU-only calibration probe cannot see (heap debris from prior
@@ -594,9 +580,7 @@ object Bench {
     // bench cannot release — the storage-leak signature the r16
     // BloomJoin unpersist bug had
     peakResidentRdds = math.max(peakResidentRdds, residentRdds)
-    spark.sparkContext.getPersistentRDDs
-      .foreach { case (id, rdd) =>
-        if (!preexisting.contains(id)) rdd.unpersist(blocking = true) }
+    graft.util.Barriers.releaseSince(spark, preexisting)
     val postSweepResidentRdds = residentRdds
     val calPost = probeMin(spark, 5)
     val memPost = memProbeGbps()

@@ -10,21 +10,29 @@ import org.apache.spark.sql.functions._
   * and emit genotype calls (the reference's flagship pipeline,
   * BiallelicGenotyper.scala:88-556, re-expressed Spark-first).
   *
-  * Plan shape (shuffles annotated for the 100 TB budget):
-  *   SNVs: reads ⨝ site bins     reads keyed to (contig, 1000 bp bin),
-  *                               joined to the candidates' site-bin table
-  *                               (broadcast) before the one read shuffle;
-  *                               Observer.snvObservations compresses
-  *                               each bin's observations in one pass
-  *   indels: reads ⨝ variants    bin-bucketed interval join (J1/J2) —
-  *                               broadcast when the variant side is small,
-  *                               else co-partitioned shuffle equi-join —
-  *                               then the Observer.observe kernel, narrow
-  *   ⨝ broadcast(score table)    broadcast hash join (J3) on one packed
-  *                               int key — replaces per-row log/exp
-  *                               with a lookup
-  *   groupBy(site, sample).agg   the one unavoidable shuffle (A3):
-  *                               partial+final hash agg, ~40 flat columns
+  * Plan shape of the default `call` (broadcastVariants, no gVCF): four
+  * shuffles and three broadcasts, checked against the formatted g2 plan.
+  *   SNVs: reads ⨝ site bins     Observer.snvObservations. Shuffle 1:
+  *                               the site-bin table's groupBy(contig,
+  *                               bin) + collect_list; broadcast 1: that
+  *                               table, joined to reads keyed to their
+  *                               (contig, 1000 bp bin). Shuffle 2: the
+  *                               read shuffle, repartition on (contig,
+  *                               bin) — only reads in a candidate bin —
+  *                               then one compression pass per bin
+  *   indels: reads ⨝ variants    bin-bucketed interval join (J1/J2);
+  *                               broadcast 2: the indel candidates (else
+  *                               a co-partitioned shuffle equi-join, two
+  *                               more exchanges). Shuffle 3:
+  *                               groupBy(struct(read)) shuffles each
+  *                               overlapping read whole, then the
+  *                               Observer.observe kernel per read
+  *   ⨝ broadcast(score table)    broadcast 3: hash join (J3) on one
+  *                               packed int key — replaces per-row
+  *                               log/exp with a lookup
+  *   groupBy(site, sample).agg   shuffle 4 (A3): partial+final hash agg
+  *                               keyed (site, sample, copyNumber), ~40
+  *                               flat columns
   *   per-row emission exprs      narrow (argmax, GQ, Fisher, RMS)
   * gVCF mode (scoreAllSites) observes every position instead: the full
   * compressed pileup, left-joined to the broadcast SNV candidates (a

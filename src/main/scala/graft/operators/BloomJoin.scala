@@ -55,7 +55,7 @@ object BloomJoin {
 
   /** Build the sketch at its OPTIMAL size with a correct-at-size path.
     *
-    * Two findings from the r15 BloomProbe/BloomIso investigation (the
+    * Two findings from the r15 investigation (PROFILE_r15.md §5, the
     * "j8 11x over the last decade" mystery), both against
     * `stat.bloomFilter`'s BloomFilterAggregate path:
     *
@@ -66,11 +66,11 @@ object BloomJoin {
     *     probe pass rate collapsed to 0.957 (true match rate 0.2) —
     *     j8 degenerated to the plain join plus a useless 8 MB probe.
     *  2. With the clamp lifted it is BROKEN AT SIZE: a 30 M-key build
-    *     at the optimal 288 M bits measures fp = 0.762 (BloomIso,
-    *     synthetic disjoint probe) — numerically the fp of an
+    *     at the optimal 288 M bits measures fp = 0.762 (synthetic
+    *     disjoint probe, PROFILE_r15.md §5) — numerically the fp of an
     *     effective 2^26-bit filter — while the SAME insert/probe
     *     workload through the pure `util.sketch.BloomFilter` library
-    *     measures fp = 0.0100 at both 3 M and 30 M keys (BloomPure).
+    *     measures fp = 0.0100 at both 3 M and 30 M keys.
     *
     * So the build runs on the pure sketch library distributed the
     * classic way: one partition-local filter per (bounded-count)

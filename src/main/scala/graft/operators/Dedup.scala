@@ -196,7 +196,8 @@ object Dedup {
     // exploded index and both verification sides), and the exploded
     // index again by two (freq agg + prefix join) — without a barrier
     // the tokenize+shingle UDF re-runs over the whole corpus once per
-    // reference (4 passes total; D2Probe: ~45% of the query at sf0.1).
+    // reference (4 passes total; OPTIMIZATION_r17.md change 3: ~45%
+    // of the query at sf0.1).
     // Materialize it once: the fingerprint-once pattern (guide §8) —
     // at corpus scale this stores block-local shingle arrays instead of
     // re-tokenizing the corpus four times, the same trade g6 makes for

@@ -36,8 +36,8 @@ import org.apache.spark.sql.functions._
   * within a genuine k-deletion ball collide (measured, same corpus:
   * 956k distinct candidates for 262k true pairs, 3.7x, the whole
   * candidate stage in 5 s). Blocking specificity scales with string
-  * entropy, not alphabet size; `graft.tools.FuzzyProbe` reproduces
-  * these numbers on any (table, id, str) input.
+  * entropy, not alphabet size (the commit that added j10 records the
+  * comparison).
   *
   * Cost model: ~(len choose ≤k) variants per string (19 at len=18/k=1,
   * 172 at k=2) — corpus-linear rows through one equi-join, no window,

@@ -15,9 +15,12 @@ import org.apache.spark.util.LongAccumulator
   * words whose bits together form the signature. Candidates come from
   * disjoint bit-chunk keys — `width` bits of one word from a given shift
   * — through a self equi-join on (chunk, value), so the shuffle is keyed
-  * on chunk buckets and never a cartesian product. `distinct` folds a
-  * pair that shares several chunks, and an exact `bit_count` over every
-  * word keeps the pairs within maxHamming.
+  * on chunk buckets and never a cartesian product. An exact
+  * `bit_count` over every word keeps the pairs within maxHamming, and a
+  * pair that shares several chunks is then folded on its id pair alone:
+  * ids are unique (doc ids, or one class representative per distinct
+  * signature), so the pair determines its carried columns and distance,
+  * and the fold's shuffle hashes two columns, not every column.
   *
   * RECALL IS EXACT (pigeonhole, any chunk width): a pair within Hamming
   * distance h of the whole signature differs inside at most h of the
@@ -42,8 +45,9 @@ object HammingNearDup {
   final case class BucketGuard(maxRows: Long, acc: LongAccumulator)
 
   /** Doc-level near-dup pairs `(doc_a, doc_b, hamming)` with
-    * doc_a < doc_b and an int `hamming` <= maxHamming. The signature
-    * table is read by both join sides (and the guard), so callers pin it.
+    * doc_a < doc_b and an int `hamming` <= maxHamming. `doc_id` must be
+    * unique in `sigs`. The signature table is read by both join sides
+    * (and the guard), so callers pin it.
     */
   def pairs(sigs: DataFrame, words: Seq[String], chunks: Seq[Chunk], width: Int,
       maxHamming: Int, guard: Option[BucketGuard] = None): DataFrame =
@@ -78,9 +82,11 @@ object HammingNearDup {
     exact.unionByName(cross)
   }
 
-  /** Chunk keys → self equi-join → distinct → exact Hamming verify, over
-    * `table` keyed by `id`. Returns `a < b`, the `carry` columns of each
-    * side as `a_<c>`/`b_<c>`, and `hamming`.
+  /** Chunk keys → self equi-join → exact Hamming verify → fold on
+    * (a, b), over `table` keyed by the unique column `id`. Returns
+    * `a < b`, the `carry` columns of each side as `a_<c>`/`b_<c>`, and
+    * `hamming`. The verify runs before the fold so only verified pairs
+    * reach the fold's shuffle.
     */
   private def verified(table: DataFrame, id: String, carry: Seq[String],
       words: Seq[String], chunks: Seq[Chunk], width: Int, maxHamming: Int,
@@ -98,15 +104,14 @@ object HammingNearDup {
     val l = guard.fold(chunked)(g => chunked.join(guarded(chunked, g), Seq("chunk", "cv")))
       .alias("l")
     val r = chunked.alias("r")
-    def side(s: String, p: String) = (carry ++ words).map(c => col(s"$s.$c").as(s"${p}_$c"))
+    def side(s: String, p: String) = carry.map(c => col(s"$s.$c").as(s"${p}_$c"))
+    val hamming = words.map(w => bit_count(col(s"l.$w").bitwiseXOR(col(s"r.$w")))).reduce(_ + _)
     l.join(r, col("l.chunk") === col("r.chunk") && col("l.cv") === col("r.cv") &&
         col(s"l.$id") < col(s"r.$id"))
       .select(Seq(col(s"l.$id").as("a"), col(s"r.$id").as("b")) ++
-        side("l", "a") ++ side("r", "b"): _*)
-      .distinct()
-      .withColumn("hamming",
-        words.map(w => bit_count(col(s"a_$w").bitwiseXOR(col(s"b_$w")))).reduce(_ + _))
+        side("l", "a") ++ side("r", "b") :+ hamming.as("hamming"): _*)
       .where(col("hamming") <= maxHamming)
+      .dropDuplicates("a", "b")
   }
 
   // every (chunk, cv) of `chunked` appears in the result, so the inner

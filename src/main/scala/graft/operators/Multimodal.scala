@@ -751,7 +751,7 @@ object Multimodal {
     *
     * Scale: candidate volume tracks bucket occupancy (true near-dups +
     * 16-bit chunk collisions), never n²; the exact Hamming verify after
-    * `distinct` kills chunk-collision false positives.
+    * the pair fold kills chunk-collision false positives.
     */
   def dHashNearDupPairs(hashes0: DataFrame, maxHamming: Int = 3): DataFrame =
     HammingNearDup.pairs(graft.util.Barriers.corpusScale(hashes0),
@@ -964,7 +964,7 @@ object Multimodal {
     * exact-cluster; `(rep_a, rep_b, h, n_a·n_b)` for a cross pair at
     * Hamming h ≤ maxHamming. Candidates via 5×8-bit pigeonhole chunks
     * of the ≤40-bit fingerprint (distance ≤4 guarantees a shared
-    * chunk), exact bit_count verify after distinct — candidate volume
+    * chunk), exact bit_count verify after the pair fold — candidate volume
     * tracks chunk-bucket occupancy over distinct fingerprints, never
     * raw row count. [[HammingNearDup.collapsed]] builds and pins the
     * class table and runs the join.

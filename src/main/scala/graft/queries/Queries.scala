@@ -195,7 +195,7 @@ object Queries {
     // the buffer 10 digits, and past 18 digits a decimal stops being a
     // mutable fixed-width agg field — every per-row update then
     // ser/des a BigDecimal and the hash agg leaves its fast path
-    // (A3Probe, sf100 solo: decimal 30.2 s vs an identical-shape
+    // (PROFILE_r17.md §2, sf100 solo: decimal 30.2 s vs an identical-shape
     // double twin 4.4 s). The inputs are 2-decimal money values, so
     // the SAME exact sums are long sums of scaled integers — cents,
     // x100 more per discount/tax factor — reconstructed into decimals
@@ -844,11 +844,8 @@ object Queries {
 
   // ---- genomics pipeline on synthesized reads (G1, G2) -----------------
 
-  /** Profiling hook (tools/Profile): the g2 read set. */
-  def profileReads(spark: SparkSession, dir: String): Dataset[Read] =
-    syntheticReads(spark, dir)
-
-  /** Profiling hook (tools/G6Profile): the g4/g6 cohort read set. */
+  /** The g4/g6 cohort read set, exposed for the plan-shape spec that
+    * inspects the cohort genotyper's construction plan. */
   def cohortReadsForProfile(spark: SparkSession, dir: String): Dataset[Read] =
     cohortReads(spark, dir)
 
@@ -967,13 +964,11 @@ object Queries {
     * behavior on every retained read is fully checked by the hash.
     */
   def g3_realign(spark: SparkSession, dir: String): DataFrame =
-    graft.genomics.Realigner.realign(sloppyReadsForProfile(spark, dir), k = 6)
+    graft.genomics.Realigner.realign(sloppyReads(spark, dir), k = 6)
       .select("readName", "contigName", "start", "cigar", "mdTag")
 
-  /** The g3 synthetic sloppy-read set, exposed for stage-level profiling
-    * (G3Profile) — construction cost vs realignment-kernel cost.
-    */
-  private[graft] def sloppyReadsForProfile(spark: SparkSession, dir: String): Dataset[Read] = {
+  /** The g3 synthetic sloppy-read set. */
+  private def sloppyReads(spark: SparkSession, dir: String): Dataset[Read] = {
     val spark2 = spark
     import spark2.implicits._
     t(spark, dir, "lineitem")

@@ -1,13 +1,39 @@
 package graft.tools
 
-/** Generic per-query step-up prober (dev tool, not part of the driver
-  * contract): times named catalog queries on one or more data legs —
-  * warm run first (JIT + plan cache), then the measured run — through
-  * the same noop sink Bench uses so Catalyst cannot prune the measured
-  * work, on the catalog session Bench builds
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import graft.util.Barriers
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** The catalog profiler, a development tool. It
+  * times named catalog queries on one or more data legs the way `Bench`
+  * does: on the session Bench builds
   * ([[graft.plans.GraftExtensions.catalogSession]]: `SPARK_GRAFT_CPUS`
-  * threads, shuffle partitions sized by the first leg). One line per
-  * (leg, query); feeds the PROFILE step-up tables.
+  * threads, shuffle partitions sized by the first leg), after Bench's
+  * JVM/codegen warm-up, through the noop sink, and with Bench's query
+  * boundary ([[graft.util.Barriers.releaseSince]]) after every run, so a
+  * row's time does not depend on where it sits in the list.
+  *
+  * Per (leg, query) it prints two lines: the cold time (first
+  * execution: plan compile + JIT included) and the warm time, then the
+  * warm run's executed-plan counts (file scans, shuffle/broadcast
+  * exchanges, reused exchanges, sort-merge joins, broadcast hash joins,
+  * windows), read after the timer stops. They count the plan the sink
+  * ran, not the barrier jobs a query runs while it is being built (m9's
+  * audio scan happens there, so its line reads scans=0). Every stage
+  * over 0.5 s prints a `[stage]` line with its task count and wall time
+  * as it completes.
+  *
+  * `SPARK_GRAFT_EXTRA_CONF="k=v;k=v"` A/Bs a conf without editing code;
+  * the session applies it last, so e.g.
+  * `spark.sql.shuffle.partitions=256` overrides the leg-sized count.
   *
   * Usage:
   *   sbt "runMain graft.tools.QueryProbe c13_cdc_upsert,t16_subword_tokenize \
@@ -17,38 +43,82 @@ object QueryProbe {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val legs = args.drop(1).toSeq
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — A/B a conf without editing code
     val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(_.split(';').map { kv =>
       val Array(k, v) = kv.split("=", 2); k -> v
     })
     val spark = graft.plans.GraftExtensions.catalogSession(legs.head, extra)
-    // SPARK_GRAFT_STAGES=1: per-stage wall/max-task report after each run
-    if (sys.env.contains("SPARK_GRAFT_STAGES")) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            val wall = (for {s <- si.submissionTime; c <- si.completionTime}
-              yield (c - s) / 1e3).getOrElse(-1.0)
-            if (wall > 0.5)
-              println(f"[stage] id=${si.stageId}%4d tasks=${si.numTasks}%3d " +
-                f"wall=$wall%6.2fs  ${si.name.take(70)}")
-          }
-        })
-    }
     spark.sparkContext.setLogLevel("ERROR")
-    for (leg <- legs; name <- names) {
-      val fn = graft.SparkEntry.queries(name)
-      def run(): Double = {
-        val t0 = System.nanoTime()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val si = sc.stageInfo
+        val wall = (for {s <- si.submissionTime; c <- si.completionTime}
+          yield (c - s) / 1e3).getOrElse(-1.0)
+        if (wall > 0.5)
+          println(f"[stage] id=${si.stageId}%4d tasks=${si.numTasks}%3d " +
+            f"wall=$wall%6.2fs  ${si.name.take(70)}")
+      }
+    })
+    // the same warm-up Bench runs, so the first probed query does not
+    // pay class loading and codegen for the rest
+    val start = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    try graft.SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+    catch { case _: Throwable => () }
+    Barriers.releaseSince(spark, start)
+    for (leg <- legs; name <- names) probe(spark, leg, name).foreach(println)
+    spark.stop()
+  }
+
+  /** Probe one query: cold run, query boundary, warm run, query
+    * boundary. Returns the timing line and the warm run's plan-count
+    * line. The boundary releases only RDDs persisted after the call
+    * started, so the caller's own persisted data survives.
+    */
+  def probe(spark: SparkSession, leg: String, name: String): Seq[String] = {
+    val fn = graft.SparkEntry.queries(name)
+    val preexisting = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // the noop sink's save is a V2 overwrite; listener events arrive
+    // asynchronously, so the plans are taken from this queue after the
+    // timed runs
+    val writes = new LinkedBlockingQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "overwrite") writes.put(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    def run(): Double = {
+      val t0 = System.nanoTime()
+      try {
         fn(spark, leg).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      }
-      val cold = run() // first execution: plan compile + JIT included
-      val warm = run()
-      println(f"[query-probe] $leg $name%-28s cold $cold%8.2f s  warm $warm%8.2f s")
+      } finally Barriers.releaseSince(spark, preexisting)
     }
-    spark.stop()
+    try {
+      val cold = run()
+      val warm = run()
+      writes.poll(30, TimeUnit.SECONDS) // the cold run's write
+      val warmPlan = Option(writes.poll(30, TimeUnit.SECONDS))
+      val counts = warmPlan.fold("plan unavailable")(qe => planCounts(qe.executedPlan))
+      Seq(f"[query-probe] $leg $name%-28s cold $cold%8.2f s  warm $warm%8.2f s",
+        s"[query-probe] $leg $name $counts")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Node counts of an executed plan, looking through adaptive plans and
+    * query stages into what actually ran. */
+  private def planCounts(plan: SparkPlan): String = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => (p.children ++ p.subqueries).flatMap(nodes)
+    })
+    val all = nodes(plan)
+    def n(pf: PartialFunction[SparkPlan, Unit]) = all.count(pf.isDefinedAt)
+    s"scans=${n { case _: FileSourceScanExec => }} " +
+      s"exchanges=${n { case _: ShuffleExchangeExec | _: BroadcastExchangeExec => }} " +
+      s"reusedExchanges=${n { case _: ReusedExchangeExec => }} " +
+      s"sortMergeJoins=${n { case _: SortMergeJoinExec => }} " +
+      s"broadcastJoins=${n { case _: BroadcastHashJoinExec => }} " +
+      s"windows=${n { case _: WindowExec => }}"
   }
 }

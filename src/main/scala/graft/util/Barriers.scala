@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialization barriers for re-referenced intermediates — the
   * fingerprint-once pattern (optimization guide §8) with the storage
@@ -49,4 +49,28 @@ object Barriers {
   def corpusScale(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
+
+  /** The query boundary `Bench` and `QueryProbe` run between queries:
+    * unpersist, blocking, every persistent RDD whose id is not in
+    * `preexisting`, then `System.gc()`.
+    *
+    * Queries that materialize intermediates (g6's cohort gVCF, d9's
+    * bench grams) pin RDD blocks until the ASYNC ContextCleaner gets to
+    * them, so a `System.gc()` alone still lets block debris leak into
+    * later queries' timings (BENCH_r05: g4 16.9 s in-suite vs 7.1 s
+    * isolated, identical code); unpersist is synchronous. The GC then
+    * prompts the GC-triggered ContextCleaner for broadcast/shuffle
+    * debris, which full GCs rarely reach on a large heap.
+    *
+    * RDDs persisted before the caller started (`preexisting`) belong to
+    * someone else (getOrCreate can attach to an existing session):
+    * unpersisting a localCheckpointed dataset truncates its lineage, so
+    * its data would be lost, not recomputed.
+    */
+  def releaseSince(spark: SparkSession, preexisting: Set[Int]): Unit = {
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!preexisting.contains(id)) rdd.unpersist(blocking = true)
+    }
+    System.gc()
+  }
 }

@@ -24,8 +24,10 @@ package graft.util
   * — the local cap exists only because local[32] gains nothing past a
   * few thousand tasks per stage.
   *
-  * `SPARK_GRAFT_SHUFFLE_PARTITIONS` overrides for A/B probes (the
-  * QueryProbe workflow that produced the w2 evidence).
+  * To A/B a different count, pass
+  * `SPARK_GRAFT_EXTRA_CONF="spark.sql.shuffle.partitions=N"` to
+  * `tools/QueryProbe`: the catalog session applies extra confs after
+  * this rule.
   */
 object Tuning {
   val BytesPerPartition: Long = 64L << 20
@@ -41,13 +43,12 @@ object Tuning {
     if (root.exists) walk(root) else 0L
   }
 
-  /** Shuffle-partition count for a leg: env override, else
+  /** Shuffle-partition count for a leg:
     * max(cpus, ceil(legBytes / 64MB)) capped at 4096. */
-  def shufflePartitions(sfDir: String, cpus: Int): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.trim.toInt).getOrElse {
-      val byBytes = ((legBytes(sfDir) + BytesPerPartition - 1) / BytesPerPartition).toInt
-      math.max(cpus, math.min(MaxLocalPartitions, byBytes))
-    }
+  def shufflePartitions(sfDir: String, cpus: Int): Int = {
+    val byBytes = ((legBytes(sfDir) + BytesPerPartition - 1) / BytesPerPartition).toInt
+    math.max(cpus, math.min(MaxLocalPartitions, byBytes))
+  }
 
   /** Streaming STATE partition count for a leg: the same bytes-derived
     * rule WITHOUT the core-count floor (floored at 4), env-overridable
@@ -62,8 +63,9 @@ object Tuning {
     * floor only binds when per-partition state is far below the 64 MB
     * sizing target, i.e. exactly when store-open overhead dominates
     * compute) and costs ~3x per-trigger wall at the small legs
-    * (measured, StreamProbe at sf0.1: addBatch 3.4-4.1 s at 32
-    * partitions vs 1.1-1.2 s at 4 for the identical windowed agg).
+    * (measured at sf0.1, OPTIMIZATION_r17.md change 1: addBatch
+    * 3.4-4.1 s at 32 partitions vs 1.1-1.2 s at 4 for the identical
+    * windowed agg).
     * From sf10 up the bytes-derived count exceeds any core count and the
     * two rules agree, so the at-scale posture is unchanged: state
     * volume, not a constant, sizes the store count — on a cluster this
