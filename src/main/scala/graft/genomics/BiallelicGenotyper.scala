@@ -2,7 +2,6 @@ package graft.genomics
 
 import graft.kernels.LogMath
 import graft.model.{DiscoveredVariant, Read}
-import graft.operators.IntervalJoin
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -10,8 +9,10 @@ import org.apache.spark.sql.functions._
   * and emit genotype calls (the reference's flagship pipeline,
   * BiallelicGenotyper.scala:88-556, re-expressed Spark-first).
   *
-  * Plan shape of the default `call` (broadcastVariants, no gVCF): four
-  * shuffles and three broadcasts, checked against the formatted g2 plan.
+  * Plan shape of the default `call` (no gVCF): three shuffles and three
+  * broadcasts, checked against the formatted g2 plan. The candidates
+  * always broadcast, as the reference's J1 (TreeRegionJoin's broadcast
+  * interval tree) requires.
   *   SNVs: reads ⨝ site bins     Observer.snvObservations. Shuffle 1:
   *                               the site-bin table's groupBy(contig,
   *                               bin) + collect_list; broadcast 1: that
@@ -20,17 +21,15 @@ import org.apache.spark.sql.functions._
   *                               read shuffle, repartition on (contig,
   *                               bin) — only reads in a candidate bin —
   *                               then one compression pass per bin
-  *   indels: reads ⨝ variants    bin-bucketed interval join (J1/J2);
-  *                               broadcast 2: the indel candidates (else
-  *                               a co-partitioned shuffle equi-join, two
-  *                               more exchanges). Shuffle 3:
-  *                               groupBy(struct(read)) shuffles each
-  *                               overlapping read whole, then the
-  *                               Observer.observe kernel per read
+  *   indels: reads ⨝ variants    Observer.indelObservations: bin-bucketed
+  *                               interval join (J1/J2); broadcast 2: the
+  *                               indel candidates. No shuffle: the
+  *                               Observer.observe kernel runs on each
+  *                               (read, candidate) row
   *   ⨝ broadcast(score table)    broadcast 3: hash join (J3) on one
   *                               packed int key — replaces per-row
   *                               log/exp with a lookup
-  *   groupBy(site, sample).agg   shuffle 4 (A3): partial+final hash agg
+  *   groupBy(site, sample).agg   shuffle 3 (A3): partial+final hash agg
   *                               keyed (site, sample, copyNumber), ~40
   *                               flat columns
   *   per-row emission exprs      narrow (argmax, GQ, Fisher, RMS)
@@ -114,11 +113,10 @@ object BiallelicGenotyper {
       maxQual: Int = 93,
       maxMapQ: Int = 93,
       binSize: Double = 1000.0,
-      broadcastVariants: Boolean = true,
       copyNumbers: Option[CopyNumberMap.Built] = None,
       scoreAllSites: Boolean = false): DataFrame =
     callImpl(reads, variants.toDF, perSample = false, ploidy, maxQual, maxMapQ,
-      binSize, broadcastVariants, copyNumbers, scoreAllSites)
+      binSize, copyNumbers, scoreAllSites)
 
   /** Multi-sample calling in ONE pass: `variants` carries a `sampleId`
     * column and each sample is scored ONLY against its own variant set —
@@ -138,13 +136,12 @@ object BiallelicGenotyper {
       maxQual: Int = 93,
       maxMapQ: Int = 93,
       binSize: Double = 1000.0,
-      broadcastVariants: Boolean = true,
       copyNumbers: Option[CopyNumberMap.Built] = None,
       scoreAllSites: Boolean = false): DataFrame = {
     require(variants.columns.contains("sampleId"),
       "callPerSample: variants must carry a sampleId column (use DiscoverVariants.discoverPerSample)")
     callImpl(reads, variants, perSample = true, ploidy, maxQual, maxMapQ,
-      binSize, broadcastVariants, copyNumbers, scoreAllSites)
+      binSize, copyNumbers, scoreAllSites)
   }
 
   private def callImpl(
@@ -155,12 +152,10 @@ object BiallelicGenotyper {
       maxQual: Int,
       maxMapQ: Int,
       binSize: Double,
-      broadcastVariants: Boolean,
       copyNumbers: Option[CopyNumberMap.Built],
       scoreAllSites: Boolean): DataFrame = {
 
     val spark = reads.sparkSession
-    import spark.implicits._
     val maxP = math.max(ploidy, copyNumbers.map(_.maxPloidy).getOrElse(ploidy))
     val states = 0 to maxP
     val cnValues = copyNumbers
@@ -182,52 +177,23 @@ object BiallelicGenotyper {
         col("contigName").as("v_contig"),
         col("start").as("v_start"),
         col("referenceAllele").as("v_ref"),
-        col("alternateAllele").as("v_alt"),
-        (col("start") + greatest(length(col("referenceAllele")), lit(1))).as("v_end")) ++
+        col("alternateAllele").as("v_alt")) ++
         (if (perSample) Seq(col("sampleId").as("v_sample")) else Nil): _*)
     val vdf = renamed(variantsDf)
     val snvV = renamed(variantsDf.where(isSnv))
-    val indelV = renamed(variantsDf.where(!isSnv))
 
     // -- SNV path: weighted observations at the candidate sites only
     // (avocado's Observer; the reference's SummarizedObservation insight,
     // SummarizedObservation.scala:37-43 — the discrete observation key
     // has tiny cardinality, so a site's reads compress to a few weighted
-    // rows). Observer.snvObservations joins reads to the candidates'
-    // (contig, bin) site table before its one read shuffle, so a read
-    // that covers no candidate never shuffles and no per-base pileup is
-    // built; support (alt, else ref, else other) is classified in the
-    // kernel. No per-(read, variant) object join. gVCF mode takes its
-    // SNV observations from the pileup it builds anyway (below).
-    lazy val siteObs = Observer.snvObservations(reads, variantsDf.where(isSnv), perSample,
-      broadcastVariants)
+    // rows). gVCF mode takes its SNV observations from the pileup it
+    // builds anyway (below).
+    lazy val siteObs = Observer.snvObservations(reads, variantsDf.where(isSnv), perSample)
 
-    // -- indel path (K6/K8): interval join + per-read observation kernel
-    // with nullOut ambiguity handling; indel candidate sets are orders of
-    // magnitude smaller than the base pileup. Always unioned in: with no
-    // indel candidates the join side is an empty filter (near-zero cost
-    // under AQE), which keeps call() action-free.
-    val indelJoined = IntervalJoin.overlap(
-      reads.toDF, "start", "end",
-      indelV, "v_start", "v_end",
-      binSize,
-      keys = Seq("contigName" -> "v_contig") ++
-        (if (perSample) Seq("sampleId" -> "v_sample") else Nil),
-      broadcastRight = broadcastVariants)
-    val indelObs = indelJoined
-      .select(
-        struct(reads.columns.map(col): _*).as("r"),
-        struct(col("v_start"), col("v_ref"), col("v_alt")).as("v"))
-      .groupBy(col("r"))
-      .agg(collect_list(col("v")).as("vs"))
-      .as[(Read, Seq[(Long, String, Option[String])])]
-      .flatMap { case (r, vs) =>
-        Observer.observe(r, vs.map(t => DiscoveredVariant(r.contigName, t._1, t._2, t._3)))
-      }
-      .toDF()
-      .select(col("contigName"), col("start"), col("referenceAllele"),
-        col("alternateAllele"), col("sampleId"), col("support"),
-        col("forwardStrand"), col("qual"), col("mapq"), lit(1L).as("w"))
+    // -- indel path (K6/K8), with nullOut ambiguity handling. Always
+    // unioned in: with no indel candidates the join side is an empty
+    // filter (near-zero cost under AQE), which keeps call() action-free.
+    val indelObs = Observer.indelObservations(reads, variantsDf.where(!isSnv), perSample, binSize)
 
     // -- gVCF non-ref model (P10/§2 gVCF; reference DiscoveredVariant
     // .scala:81 alternateAllele=None + ScoredObservation nonRef arrays):
@@ -250,7 +216,7 @@ object BiallelicGenotyper {
           if (perSample) base && pileup("sampleId") === snvV("v_sample") else base
         }
         val pileupObs = pileup
-          .join(if (broadcastVariants) broadcast(snvV) else snvV, snvCond, "left_outer")
+          .join(broadcast(snvV), snvCond, "left_outer")
           .select(
             col("contigName"),
             col("pos").as("start"),
@@ -272,7 +238,7 @@ object BiallelicGenotyper {
             pileupObs("start") === col("v_start") && pileupObs("alternateAllele").isNull
           if (perSample) base && pileupObs("sampleId") === col("v_sample") else base
         }
-        pileupObs.join(if (broadcastVariants) broadcast(vPos) else vPos, antiCond, "left_anti")
+        pileupObs.join(broadcast(vPos), antiCond, "left_anti")
       }
     val obs = snvObs.unionByName(indelObs)
 

@@ -127,38 +127,34 @@ object Observer {
     }
   }
 
-  /** Weighted pileup of every aligned base WITHOUT a per-base shuffle:
-    * reads are keyed by [[binnedReads]] and each partition
-    * compresses its pileup in one hash pass. The shuffle carries one row
-    * per READ (readLength× fewer rows than shuffling the exploded pileup
-    * into a hash agg). Equivalent to flatMap(basePileup).groupBy(key)
-    * .count, by construction. It serves the genotyper's gVCF mode, which
-    * observes every position; the default call observes SNV candidates
-    * with [[snvObservations]], which never builds this table.
+  /** Weighted pileup of every aligned base: flatMap([[basePileup]])
+    * .groupBy(every column).count by construction, without a per-base
+    * shuffle. Reads keyed by [[binnedReads]] go through [[compressBins]];
+    * each aligned base in the bin becomes one packed [[SiteKey]] (ref =
+    * the aligned reference base, alt = the read's base, support 0), and
+    * strings are built only for the emitted rows. It serves the
+    * genotyper's gVCF mode, which observes every position; the default
+    * call observes SNV candidates with [[snvObservations]], which never
+    * builds this table.
     */
   def compressedPileup(reads: org.apache.spark.sql.Dataset[Read]): org.apache.spark.sql.DataFrame = {
-    val spark = reads.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    // a fixed partition count: the per-read work runs after this shuffle,
-    // and AQE would coalesce its small input into a few long tasks
-    binnedReads(reads)
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("_1"), col("_2"))
-      .mapPartitions { it =>
-        val m = scala.collection.mutable.HashMap.empty[BaseObs, Long]
-        it.foreach { case (_, bin, r, _) =>
+    import reads.sparkSession.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    compressBins(binnedReads(reads)
+      .select(col("_1"), col("_2"), col("_3"), lit(null).cast("array<bigint>").as("sites"))) {
+      (r, bin, _, add) =>
+        Try(AlignmentOps.parseRead(r.cigar, r.mdTag, r.sequence, r.qual)).foreach { ops =>
           val lo = bin * BinSize
-          val hi = lo + BinSize
-          basePileup(r).foreach { p =>
-            if (p.pos >= lo && p.pos < hi) m.update(p, m.getOrElse(p, 0L) + 1L)
+          AlignmentOps.foreachAlignedBase(r.start, r.sequence, ops) { (pos, idx, ref) =>
+            if (pos >= lo && pos < lo + BinSize)
+              add(SiteKey(pos - lo, ref, r.sequence.charAt(idx), SupportOther,
+                AlignmentOps.phred(r.qual, idx)))
           }
         }
-        m.iterator.map { case (p, w) =>
-          WeightedBaseObs(p.contigName, p.pos, p.base, p.refBase, p.qual,
-            p.forwardStrand, p.mapq, p.sampleId, w)
-        }
-      }
-      .toDF()
+    } { (g, k, w) =>
+      WeightedBaseObs(g.contigName, g.bin * BinSize + SiteKey.offset(k), SiteKey.alt(k).toString,
+        SiteKey.ref(k).toString, SiteKey.qual(k), g.forwardStrand, g.mapq, g.sampleId, w)
+    }.toDF()
   }
 
   /** One SNV candidate packed into a long: position in the high 32 bits,
@@ -201,18 +197,55 @@ object Observer {
 
   /** The per-site part of an observation key packed into a long, high to
     * low: offset in the bin (13 bits, so [[BinSize]] must stay below
-    * 8192), reference and alternate base (16 each), support (2) and
+    * 8192), reference and alternate base (16 each; a pileup row's are the
+    * aligned reference base and the read's base), support (2) and
     * quality + 33 (16, the qual character). Longs sort like (pos, ref,
     * alt, support, qual).
     */
   private object SiteKey {
-    def apply(offset: Long, site: Long, support: Int, qual: Int): Long =
-      (offset << 50) | ((site & 0xFFFFFFFFL) << 18) | (support.toLong << 16) | (qual + 33).toLong
+    def apply(offset: Long, ref: Char, alt: Char, support: Int, qual: Int): Long =
+      (offset << 50) | (ref.toLong << 34) | (alt.toLong << 18) | (support.toLong << 16) |
+        (qual + 33).toLong
     def offset(k: Long): Long = k >>> 50
     def ref(k: Long): Char = ((k >>> 34) & 0xFFFF).toChar
     def alt(k: Long): Char = ((k >>> 18) & 0xFFFF).toChar
     def support(k: Long): Int = ((k >>> 16) & 3).toInt
     def qual(k: Long): Int = (k & 0xFFFF).toInt - 33
+  }
+
+  /** The one per-bin compressor, behind [[compressedPileup]] and
+    * [[snvObservations]]. `binned` holds reads keyed to their (contig
+    * `_1`, bin `_2`), the read `_3` and a `sites` array; one shuffle puts
+    * each (contig, bin) in one partition (a fixed partition count: AQE
+    * would coalesce this small input into a few long per-read tasks).
+    * Each partition counts the [[SiteKey]]s `keys(read, bin, sites, add)`
+    * adds, one map per (contig, sample, strand, mapq, bin), and emits
+    * `row(group, key, weight)` sorted by group, then key: a bin's rows
+    * and their order do not depend on how the input was partitioned.
+    */
+  private def compressBins[T: org.apache.spark.sql.Encoder](binned: org.apache.spark.sql.DataFrame)(
+      keys: (Read, Long, Array[Long], Long => Unit) => Unit)(
+      row: (ReadGroup, Long, Long) => T): org.apache.spark.sql.Dataset[T] = {
+    val spark = binned.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    binned
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("_1"), col("_2"))
+      .select(col("_2"), col("sites"), col("_3"))
+      .as[(Long, Array[Long], Read)]
+      .mapPartitions { it =>
+        val groups = scala.collection.mutable.HashMap.empty[ReadGroup,
+          scala.collection.mutable.LongMap[Array[Long]]]
+        it.foreach { case (bin, sites, r) =>
+          val counts = groups.getOrElseUpdate(
+            ReadGroup(r.contigName, r.sampleId, !r.readNegativeStrand, r.mapq, bin),
+            scala.collection.mutable.LongMap.empty[Array[Long]])
+          keys(r, bin, sites, k => counts.getOrElseUpdate(k, new Array[Long](1))(0) += 1)
+        }
+        groups.toArray.sortBy(_._1)(readGroupOrder).iterator.flatMap { case (g, counts) =>
+          counts.keys.toArray.sorted.iterator.map(k => row(g, k, counts(k)(0)))
+        }
+      }
   }
 
   /** Weighted observations of `reads` at the SNV candidates `snvs`
@@ -222,24 +255,18 @@ object Observer {
     *
     * The candidates become a site-bin table, one row per (contig, bin)
     * (and sample) holding that bin's sites. Reads keyed by
-    * [[binnedReads]] are joined to it BEFORE the one read shuffle
-    * (broadcast when `broadcastSites`) and keep only the sites inside
-    * their own span, so a read that covers no candidate never shuffles
-    * and a read carries a handful of sites however dense its bin is.
-    * Each (contig, bin) then lives in one partition, which compresses its
-    * observations in one hash pass — one map of packed site keys per
-    * (contig, sample, strand, mapq, bin) — and emits them sorted by
-    * (contig, sample, strand, mapq, pos, ref, alt, support, qual): a site's
-    * weights are summed in an order that does not depend on how the input
-    * was partitioned or which other samples it holds. A bin holds only
-    * the sites it owns, so a read replicated across a border observes
-    * each site once.
+    * [[binnedReads]] meet it in a broadcast join BEFORE the read shuffle
+    * of [[compressBins]] and keep only the sites inside their own span,
+    * so a read that covers no candidate never shuffles and a read carries
+    * a handful of sites however dense its bin is. Support (alt, else ref,
+    * else other) is classified by [[observeSnvs]]. A bin holds only the
+    * sites it owns, so a read replicated across a border observes each
+    * site once.
     */
   def snvObservations(
       reads: org.apache.spark.sql.Dataset[Read],
       snvs: org.apache.spark.sql.DataFrame,
-      perSample: Boolean,
-      broadcastSites: Boolean): org.apache.spark.sql.DataFrame = {
+      perSample: Boolean): org.apache.spark.sql.DataFrame = {
     val spark = reads.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -258,37 +285,61 @@ object Observer {
       val base = col("_1") === col("site_contig") && col("_2") === col("site_bin")
       if (perSample) base && col("_3.sampleId") === col("site_sample") else base
     }
-    binnedReads(reads)
-      .join(if (broadcastSites) broadcast(siteBins) else siteBins, cond)
+    compressBins(binnedReads(reads)
+      .join(broadcast(siteBins), cond)
       .withColumn("sites", graft.functions.NativeExpressions.sorted_range(
         col("sites"), shiftleft(col("_3.start"), 32), shiftleft(col("_4"), 32)))
-      .where(size(col("sites")) > 0)
-      // fixed partition count, as in compressedPileup
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("_1"), col("_2"))
-      .select(col("_2"), col("sites"), col("_3"))
-      .as[(Long, Array[Long], Read)]
-      .mapPartitions { it =>
-        val groups = scala.collection.mutable.HashMap.empty[ReadGroup,
-          scala.collection.mutable.LongMap[Array[Long]]]
-        it.foreach { case (bin, sites, r) =>
-          val counts = groups.getOrElseUpdate(
-            ReadGroup(r.contigName, r.sampleId, !r.readNegativeStrand, r.mapq, bin),
-            scala.collection.mutable.LongMap.empty[Array[Long]])
-          val lo = bin * BinSize
-          observeSnvs(r, sites) { (site, support, qual) =>
-            counts.getOrElseUpdate(SiteKey(SnvSite.pos(site) - lo, site, support, qual),
-              new Array[Long](1))(0) += 1
-          }
-        }
-        groups.toArray.sortBy(_._1)(readGroupOrder).iterator.flatMap { case (g, counts) =>
-          counts.keys.toArray.sorted.iterator.map { k =>
-            WeightedObservation(g.contigName, g.bin * BinSize + SiteKey.offset(k),
-              SiteKey.ref(k).toString, SiteKey.alt(k).toString, g.sampleId,
-              SiteKey.support(k), g.forwardStrand, SiteKey.qual(k), g.mapq, counts(k)(0))
-          }
+      .where(size(col("sites")) > 0)) { (r, bin, sites, add) =>
+      observeSnvs(r, sites) { (site, support, qual) =>
+        add(SiteKey(SnvSite.pos(site) - bin * BinSize, SnvSite.ref(site), SnvSite.alt(site),
+          support, qual))
+      }
+    } { (g, k, w) =>
+      WeightedObservation(g.contigName, g.bin * BinSize + SiteKey.offset(k),
+        SiteKey.ref(k).toString, SiteKey.alt(k).toString, g.sampleId,
+        SiteKey.support(k), g.forwardStrand, SiteKey.qual(k), g.mapq, w)
+    }.toDF()
+  }
+
+  /** Observations of `reads` at the indel candidates `indels`
+    * (contigName, start, referenceAllele, alternateAllele, plus sampleId
+    * when `perSample`), each of weight 1: the bin-bucketed interval join
+    * (J1/J2, `binSize` wide bins) against the broadcast candidates, then
+    * [[observe]] on each (read, candidate) row. `observe` keeps no state
+    * between candidates, so, as in the reference's broadcast probe
+    * (TreeRegionJoin.joinAndGroupByRight), no read is shuffled to gather
+    * its candidates; the join streams reads, so a read's rows arrive
+    * together and it is walked once for all of them. A malformed read
+    * observes nothing.
+    */
+  def indelObservations(
+      reads: org.apache.spark.sql.Dataset[Read],
+      indels: org.apache.spark.sql.DataFrame,
+      perSample: Boolean,
+      binSize: Double): org.apache.spark.sql.DataFrame = {
+    val spark = reads.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val v = indels.select(Seq(col("contigName").as("v_contig"), col("start").as("v_start"),
+      col("referenceAllele").as("v_ref"), col("alternateAllele").as("v_alt"),
+      (col("start") + greatest(length(col("referenceAllele")), lit(1))).as("v_end")) ++
+      (if (perSample) Seq(col("sampleId").as("v_sample")) else Nil): _*)
+    graft.operators.IntervalJoin.overlap(reads.toDF, "start", "end", v, "v_start", "v_end", binSize,
+        keys = Seq("contigName" -> "v_contig") ++
+          (if (perSample) Seq("sampleId" -> "v_sample") else Nil),
+        broadcastRight = true)
+      .select(struct(reads.columns.map(col): _*), col("v_start"), col("v_ref"), col("v_alt"))
+      .as[(Read, Long, String, Option[String])]
+      .mapPartitions { rows =>
+        var last: Read = null
+        var walked: Try[SitePileup] = null
+        rows.flatMap { case (r, start, ref, alt) =>
+          if (r != last) { last = r; walked = Try(walk(r)) }
+          walked.flatMap(p => Try(observeAt(r, p, DiscoveredVariant(r.contigName, start, ref, alt))))
+            .toOption.flatten
         }
       }
-      .toDF()
+      .withColumn("w", lit(1L))
   }
 
   /** What one read shows at the SNV candidates `sites` ([[SnvSite]]s,
@@ -333,84 +384,86 @@ object Observer {
   /** Observations of one read at the given candidate variants. Malformed
     * reads observe nothing (per-row failure isolation).
     */
-  def observe(read: Read, variants: Seq[DiscoveredVariant]): Seq[SiteObservation] = {
+  def observe(read: Read, variants: Seq[DiscoveredVariant]): Seq[SiteObservation] =
     Try {
       val p = walk(read)
-      variants.flatMap { v =>
-        val alt = v.alternateAllele.getOrElse("")
-        def obs(support: Int, q: Int) = Some(SiteObservation(
-          v.contigName, v.start, v.referenceAllele, alt, read.sampleId,
-          support, !read.readNegativeStrand, q, read.mapq))
-        val isSnv = v.referenceAllele.length == 1 && alt.length == 1
-        if (isSnv) {
-          p.base.get(v.start) match {
-            case Some((b, q)) if b.toString == alt              => obs(SupportAlt, q)
-            case Some((b, q)) if b.toString == v.referenceAllele => obs(SupportRef, q)
-            case Some((_, q))                                    => obs(SupportOther, q)
-            case None                                            => None
-          }
-        } else {
-          val key = (v.start, v.referenceAllele, alt)
-          p.variants.get(key) match {
-            case Some(q) => obs(SupportAlt, q)
-            case None =>
-              val span = v.start until v.end
-              // a read whose OWN extracted variant sits at this same
-              // start attests a DIFFERENT allele of this site: that is
-              // other-alt evidence (reference otherAlt reclassification,
-              // BiallelicGenotyper.scala:337-346), and it must win over
-              // the ambiguity null-out below — at a multiallelic indel
-              // site the competing carrier reads ARE the evidence that
-              // this allele is absent (e.g. the T->TAAA carriers at the
-              // T->CAAA candidate, reference suite 1/4120185).
-              val competing = p.variants.keys.exists(_._1 == v.start)
-              // ambiguity window: a nearby indel anchor or a soft-clip
-              // boundary means this read's alignment cannot attest
-              // presence/absence of the indel (fragmented insertions,
-              // clipped-out inserts) -> observe nothing (the reference's
-              // nullOut reclassification, BiallelicGenotyper.scala:287-373)
-              val w = math.max(v.referenceAllele.length, alt.length) + 8L
-              val ambiguous =
-                p.indelAnchors.exists(a => a >= v.start - w && a <= v.end + w) ||
-                  p.clipBoundaries.exists(c => c >= v.start - w && c <= v.end + w)
-              val covered = span.forall(p.base.contains)
-              // Insertion tail-matching (reference BiallelicGenotyper
-              // .scala:306-330): in a repeat tract, a read whose aligned
-              // tail past the anchor is consistent with BOTH haplotypes
-              // (its bases equal the alt haplotype insBases ++ refTail for
-              // as far as it reaches) cannot attest absence of the
-              // insertion — observe nothing rather than reference support.
-              def insertionTailAmbiguous: Boolean = {
-                val isIns = v.referenceAllele.length == 1 && alt.length > 1
-                if (!isIns) false
-                else {
-                  val tailPos = Iterator.from(1).map(v.start + _)
-                    .takeWhile(p.base.contains).toSeq
-                  val readTail = tailPos.map(p.base(_)._1).mkString
-                  val refTail = tailPos.map(p.refBase(_)).mkString
-                  val altHap = (alt.drop(1) + refTail).take(readTail.length)
-                  readTail.isEmpty || readTail == altHap
-                }
-              }
-              // nulled (nonref) observations keep the read in the depth
-              // and nonReferenceLikelihoods accounting without touching
-              // the alt/ref blend — reference nullOut semantics
-              if (competing) {
-                if (p.base.contains(v.start)) obs(SupportOther, p.base(v.start)._2)
-                else None
-              } else if (ambiguous) {
-                if (p.base.contains(v.start)) obs(SupportNonRef, p.base(v.start)._2)
-                else None
-              } else if (covered) {
-                if (insertionTailAmbiguous) obs(SupportNonRef, p.base(v.start)._2)
-                else {
-                  val quals = span.map(p.base(_)._2)
-                  obs(SupportRef, quals.sum / quals.length)
-                }
-              } else None
-          }
-        }
-      }
+      variants.flatMap(observeAt(read, p, _))
     }.getOrElse(Nil)
+
+  /** What the walked read `p` shows at one candidate `v`. */
+  private def observeAt(read: Read, p: SitePileup, v: DiscoveredVariant): Option[SiteObservation] = {
+    val alt = v.alternateAllele.getOrElse("")
+    def obs(support: Int, q: Int) = Some(SiteObservation(
+      v.contigName, v.start, v.referenceAllele, alt, read.sampleId,
+      support, !read.readNegativeStrand, q, read.mapq))
+    val isSnv = v.referenceAllele.length == 1 && alt.length == 1
+    if (isSnv) {
+      p.base.get(v.start) match {
+        case Some((b, q)) if b.toString == alt              => obs(SupportAlt, q)
+        case Some((b, q)) if b.toString == v.referenceAllele => obs(SupportRef, q)
+        case Some((_, q))                                    => obs(SupportOther, q)
+        case None                                            => None
+      }
+    } else {
+      val key = (v.start, v.referenceAllele, alt)
+      p.variants.get(key) match {
+        case Some(q) => obs(SupportAlt, q)
+        case None =>
+          val span = v.start until v.end
+          // a read whose OWN extracted variant sits at this same
+          // start attests a DIFFERENT allele of this site: that is
+          // other-alt evidence (reference otherAlt reclassification,
+          // BiallelicGenotyper.scala:337-346), and it must win over
+          // the ambiguity null-out below — at a multiallelic indel
+          // site the competing carrier reads ARE the evidence that
+          // this allele is absent (e.g. the T->TAAA carriers at the
+          // T->CAAA candidate, reference suite 1/4120185).
+          val competing = p.variants.keys.exists(_._1 == v.start)
+          // ambiguity window: a nearby indel anchor or a soft-clip
+          // boundary means this read's alignment cannot attest
+          // presence/absence of the indel (fragmented insertions,
+          // clipped-out inserts) -> observe nothing (the reference's
+          // nullOut reclassification, BiallelicGenotyper.scala:287-373)
+          val w = math.max(v.referenceAllele.length, alt.length) + 8L
+          val ambiguous =
+            p.indelAnchors.exists(a => a >= v.start - w && a <= v.end + w) ||
+              p.clipBoundaries.exists(c => c >= v.start - w && c <= v.end + w)
+          val covered = span.forall(p.base.contains)
+          // Insertion tail-matching (reference BiallelicGenotyper
+          // .scala:306-330): in a repeat tract, a read whose aligned
+          // tail past the anchor is consistent with BOTH haplotypes
+          // (its bases equal the alt haplotype insBases ++ refTail for
+          // as far as it reaches) cannot attest absence of the
+          // insertion — observe nothing rather than reference support.
+          def insertionTailAmbiguous: Boolean = {
+            val isIns = v.referenceAllele.length == 1 && alt.length > 1
+            if (!isIns) false
+            else {
+              val tailPos = Iterator.from(1).map(v.start + _)
+                .takeWhile(p.base.contains).toSeq
+              val readTail = tailPos.map(p.base(_)._1).mkString
+              val refTail = tailPos.map(p.refBase(_)).mkString
+              val altHap = (alt.drop(1) + refTail).take(readTail.length)
+              readTail.isEmpty || readTail == altHap
+            }
+          }
+          // nulled (nonref) observations keep the read in the depth
+          // and nonReferenceLikelihoods accounting without touching
+          // the alt/ref blend — reference nullOut semantics
+          if (competing) {
+            if (p.base.contains(v.start)) obs(SupportOther, p.base(v.start)._2)
+            else None
+          } else if (ambiguous) {
+            if (p.base.contains(v.start)) obs(SupportNonRef, p.base(v.start)._2)
+            else None
+          } else if (covered) {
+            if (insertionTailAmbiguous) obs(SupportNonRef, p.base(v.start)._2)
+            else {
+              val quals = span.map(p.base(_)._2)
+              obs(SupportRef, quals.sum / quals.length)
+            }
+          } else None
+      }
+    }
   }
 }

@@ -27,7 +27,6 @@ sealed trait AlnOp {
   */
 final case class AlnMatch(size: Int, misBases: Option[String] = None) extends AlnOp {
   require(misBases.forall(_.length == size), s"mismatch run $misBases != size $size")
-  def isMismatch: Boolean = misBases.isDefined
 }
 final case class AlnIns(size: Int) extends AlnOp
 final case class AlnDel(bases: String) extends AlnOp {

@@ -26,12 +26,6 @@ object Multimodal {
   // when the first closure touches this object.
   ImageIO.setUseCache(false)
 
-  /** Attach a binary payload column (here: the UTF-8 bytes of a text
-    * column stand in for media bytes).
-    */
-  def attachBinary(df: DataFrame, srcCol: String, binCol: String = "payload"): DataFrame =
-    df.withColumn(binCol, col(srcCol).cast("binary"))
-
   /** Real container-header metadata, parsed declaratively: pure Column
     * expressions (substring/hex/conv — whole-stage codegen'd, no UDF)
     * read the actual header bytes of the payload.

@@ -639,111 +639,6 @@ object SimilaritySearch {
     }
   }
 
-  /** Train the PQ codebooks: Lloyd refinement in every subspace
-    * SIMULTANEOUSLY — one corpus pass per iteration assigns each
-    * vector's m subvectors to their nearest codebook entries (the
-    * [[pqEncode]] kernel inlined, plus the subvector itself), and one
-    * partial+final agg over (subspace, code, component) averages the
-    * members; the shuffle carries m·ksub·(dim/m) = ksub·dim partial
-    * sums, never vectors, and the driver collects only that
-    * parameter-sized table per round (the [[kmeansTrain]] contract,
-    * applied per subspace). Per-round rounding to `scale` decimals
-    * keeps the trajectory engine-reproducible; a code that captures no
-    * subvectors keeps its previous centroid (the standard empty-cluster
-    * rule); converged rounds short-circuit. Training the codebooks on
-    * the corpus (vs the seed-vector draw of [[pqCodebooks]]) is what
-    * tightens [[pqTopK]]/[[ivfPqTopKEncoded]] ranking — the spec gates
-    * the quantization-error drop.
-    */
-  def pqTrainCodebooks(df: DataFrame, idCol: String, embCol: String,
-      init: Array[Array[Array[Double]]], iters: Int,
-      scale: Int = 6): Array[Array[Array[Double]]] = {
-    require(iters >= 1, s"iters=$iters must be >= 1")
-    var cbs = init.map(_.map(_.clone()))
-    val m = cbs.length
-    val ksub = cbs(0).length
-    val sub = cbs(0)(0).length
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      val frozen = cbs.map(_.map(_.clone())) // the UDF must close over THIS round's books
-      val assignExplode = udf((v: Seq[Double]) => {
-        if (v == null || v.length < m * sub) Seq.empty[(Int, Int, Seq[Double])]
-        else {
-          val arr = v.toArray
-          (0 until m).map { mi =>
-            var bestD = Double.MaxValue
-            var bestJ = 0
-            var j = 0
-            while (j < ksub) {
-              val c = frozen(mi)(j)
-              var d = 0.0
-              var i = 0
-              while (i < sub) { val x = arr(mi * sub + i) - c(i); d += x * x; i += 1 }
-              if (d < bestD) { bestD = d; bestJ = j }
-              j += 1
-            }
-            (mi, bestJ, java.util.Arrays.copyOfRange(arr, mi * sub, (mi + 1) * sub).toSeq)
-          }
-        }
-      })
-      val rows = df
-        .select(explode(assignExplode(col(embCol).cast("array<double>"))).as("t"))
-        .select(col("t._1").as("mi"), col("t._2").as("code"), posexplode(col("t._3")))
-        .groupBy("mi", "code", "pos")
-        .agg(round(avg(col("col")), scale).as("mean"))
-        .collect()
-      val next = cbs.map(_.map(_.clone()))
-      rows.foreach { r =>
-        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3)
-      }
-      converged = next.zip(cbs).forall { case (a, b) =>
-        a.zip(b).forall { case (x, y) => x.sameElements(y) }
-      }
-      cbs = next
-      it += 1
-    }
-    cbs
-  }
-
-  /** Mean squared quantization error of a codebook over the corpus —
-    * the Lloyd objective ([[pqTrainCodebooks]]'s gate): average over
-    * rows of the summed squared distance between each subvector and its
-    * assigned codebook entry.
-    */
-  def pqQuantizationError(df: DataFrame, idCol: String, embCol: String,
-      codebooks: Array[Array[Array[Double]]]): Double = {
-    val m = codebooks.length
-    val ksub = codebooks(0).length
-    val sub = codebooks(0)(0).length
-    val err = udf((v: Seq[Double]) => {
-      if (v == null || v.length < m * sub) null.asInstanceOf[java.lang.Double]
-      else {
-        val arr = v.toArray
-        var total = 0.0
-        var mi = 0
-        while (mi < m) {
-          var bestD = Double.MaxValue
-          var j = 0
-          while (j < ksub) {
-            val c = codebooks(mi)(j)
-            var d = 0.0
-            var i = 0
-            while (i < sub) { val x = arr(mi * sub + i) - c(i); d += x * x; i += 1 }
-            if (d < bestD) bestD = d
-            j += 1
-          }
-          total += bestD
-          mi += 1
-        }
-        java.lang.Double.valueOf(total)
-      }
-    })
-    df.select(err(col(embCol).cast("array<double>")).as("e"))
-      .where(col("e").isNotNull)
-      .agg(avg("e")).head().getDouble(0)
-  }
-
   /** PQ encode: each vector → m codes (argmin squared L2 distance to
     * the subspace's centroids, ties to the lowest code). One-pass
     * kernel UDF (the bestCell rationale); codes are the 100 TB storage

@@ -3,7 +3,7 @@ package graft.tools
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import graft.util.Barriers
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -25,11 +25,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * execution: plan compile + JIT included) and the warm time, then the
   * warm run's executed-plan counts (file scans, shuffle/broadcast
   * exchanges, reused exchanges, sort-merge joins, broadcast hash joins,
-  * windows), read after the timer stops. They count the plan the sink
-  * ran, not the barrier jobs a query runs while it is being built (m9's
-  * audio scan happens there, so its line reads scans=0). Every stage
-  * over 0.5 s prints a `[stage]` line with its task count and wall time
-  * as it completes.
+  * windows), read after the timer stops. They are summed over every SQL
+  * execution of the warm run: the barriers a query materializes while it
+  * is being built (`Barriers.corpusScale`'s checkpoints, which hold m9's
+  * audio scan) and the plan the sink ran. Every stage over 0.5 s prints
+  * a `[stage]` line with its task count, wall time and the run it
+  * belongs to (`<query> cold|warm`, the job description, which AQE's
+  * pool carries to the stages it submits) as it completes.
   *
   * `SPARK_GRAFT_EXTRA_CONF="k=v;k=v"` A/Bs a conf without editing code;
   * the session applies it last, so e.g.
@@ -40,6 +42,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *        /root/testdata/sf0.1 /tmp/sf1"
   */
 object QueryProbe {
+  /** The local property `setJobDescription` sets (Spark keeps its own
+    * name for it private). */
+  private val JobDescription = "spark.job.description"
+
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val legs = args.drop(1).toSeq
@@ -49,13 +55,18 @@ object QueryProbe {
     val spark = graft.plans.GraftExtensions.catalogSession(legs.head, extra)
     spark.sparkContext.setLogLevel("ERROR")
     spark.sparkContext.addSparkListener(new SparkListener {
+      private val runs = scala.collection.mutable.HashMap.empty[Int, String]
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+        runs(ss.stageInfo.stageId) = Option(ss.properties)
+          .flatMap(p => Option(p.getProperty(JobDescription))).getOrElse("-")
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
+        val run = runs.remove(si.stageId).getOrElse("-")
         val wall = (for {s <- si.submissionTime; c <- si.completionTime}
           yield (c - s) / 1e3).getOrElse(-1.0)
         if (wall > 0.5)
           println(f"[stage] id=${si.stageId}%4d tasks=${si.numTasks}%3d " +
-            f"wall=$wall%6.2fs  ${si.name.take(70)}")
+            f"wall=$wall%6.2fs  $run  ${si.name.take(70)}")
       }
     })
     // the same warm-up Bench runs, so the first probed query does not
@@ -76,43 +87,60 @@ object QueryProbe {
   def probe(spark: SparkSession, leg: String, name: String): Seq[String] = {
     val fn = graft.SparkEntry.queries(name)
     val preexisting = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    // the noop sink's save is a V2 overwrite; listener events arrive
-    // asynchronously, so the plans are taken from this queue after the
-    // timed runs
-    val writes = new LinkedBlockingQueue[QueryExecution]
+    // a run's last SQL execution is the noop sink's save, a V2
+    // overwrite; listener events arrive asynchronously but in order, so
+    // each run's executions are taken from this queue after the timed
+    // runs, up to and including its overwrite
+    val executions = new LinkedBlockingQueue[(String, QueryExecution)]
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (funcName == "overwrite") writes.put(qe)
+        executions.put(funcName -> qe)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    def run(): Double = {
+    def run(label: String): Double = {
+      val sc = spark.sparkContext
+      val description = sc.getLocalProperty(JobDescription)
+      sc.setJobDescription(s"$name $label")
       val t0 = System.nanoTime()
       try {
         fn(spark, leg).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      } finally Barriers.releaseSince(spark, preexisting)
+      } finally {
+        sc.setJobDescription(description)
+        Barriers.releaseSince(spark, preexisting)
+      }
+    }
+    /** The plans of one run's executions, or None when its sink write
+      * does not arrive. */
+    def runPlans(): Option[Seq[SparkPlan]] = {
+      val plans = Seq.newBuilder[SparkPlan]
+      var next = executions.poll(30, TimeUnit.SECONDS)
+      while (next != null && next._1 != "overwrite") {
+        plans += next._2.executedPlan
+        next = executions.poll(30, TimeUnit.SECONDS)
+      }
+      Option(next).map(w => (plans += w._2.executedPlan).result())
     }
     try {
-      val cold = run()
-      val warm = run()
-      writes.poll(30, TimeUnit.SECONDS) // the cold run's write
-      val warmPlan = Option(writes.poll(30, TimeUnit.SECONDS))
-      val counts = warmPlan.fold("plan unavailable")(qe => planCounts(qe.executedPlan))
+      val cold = run("cold")
+      val warm = run("warm")
+      runPlans() // the cold run's
+      val counts = runPlans().fold("plan unavailable")(planCounts)
       Seq(f"[query-probe] $leg $name%-28s cold $cold%8.2f s  warm $warm%8.2f s",
         s"[query-probe] $leg $name $counts")
     } finally spark.listenerManager.unregister(listener)
   }
 
-  /** Node counts of an executed plan, looking through adaptive plans and
-    * query stages into what actually ran. */
-  private def planCounts(plan: SparkPlan): String = {
+  /** Node counts of executed plans, summed, looking through adaptive
+    * plans and query stages into what actually ran. */
+  private def planCounts(plans: Seq[SparkPlan]): String = {
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case s: QueryStageExec => nodes(s.plan)
       case _ => (p.children ++ p.subqueries).flatMap(nodes)
     })
-    val all = nodes(plan)
+    val all = plans.flatMap(nodes)
     def n(pf: PartialFunction[SparkPlan, Unit]) = all.count(pf.isDefinedAt)
     s"scans=${n { case _: FileSourceScanExec => }} " +
       s"exchanges=${n { case _: ShuffleExchangeExec | _: BroadcastExchangeExec => }} " +

@@ -86,6 +86,45 @@ class PlanSpec extends SparkSpec {
       """\[scoreKey#\d+\], \[scoreKey#\d+\]""".r.findFirstIn(l).isDefined), plan)
   }
 
+  /** Aggregates grouped on a whole read (a struct with Read's fields). */
+  private def readKeyedAggregates(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.types.StructType
+    val readFields = org.apache.spark.sql.Encoders.product[graft.model.Read].schema.fieldNames.toSeq
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    nodes(df.queryExecution.executedPlan).collect {
+      case a: BaseAggregateExec if a.groupingExpressions.exists(_.dataType match {
+        case s: StructType => s.fieldNames.toSeq == readFields
+        case _ => false
+      }) => a.simpleString(200)
+    }
+  }
+
+  test("genotyper: the default call shuffles three times and never regroups whole reads") {
+    import spark.implicits._
+    import graft.model.{DiscoveredVariant, Read}
+    // g2's call on inputs that need no exchange, so every hash exchange
+    // in the plan is the genotyper's own (g2 adds four read-synthesis
+    // repartitions and two discovery aggregates): the site-bin table,
+    // the read shuffle, the site aggregation
+    val reads = Seq(Read("a", "chr1", 100, 110, "ACGTAACGTA", "IIIIIIIIII", "10M", "10", 50,
+      readMapped = true, readNegativeStrand = false, duplicateRead = false,
+      primaryAlignment = true, sampleId = "s1")).toDS()
+    val variants = Seq(DiscoveredVariant("chr1", 104, "A", Some("G")),
+      DiscoveredVariant("chr1", 105, "AC", Some("A"))).toDS()
+    val call = graft.genomics.BiallelicGenotyper.call(reads, variants, ploidy = 2, binSize = 20.0)
+    val plan = planOf(call)
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size <= 3, plan)
+    assert(readKeyedAggregates(call).isEmpty, plan)
+    val g2 = Queries.g2_genotype_calls(spark, sf("0.001"))
+    assert(readKeyedAggregates(g2).isEmpty, planOf(g2))
+  }
+
   test("gVCF pipeline: anti-join broadcasts, no nested loop, partial aggs") {
     // g6 checkpoints the called cohort before the square-off self-join,
     // so inspect the cohort CONSTRUCTION plan (where the genotyper lives)

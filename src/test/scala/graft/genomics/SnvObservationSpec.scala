@@ -2,16 +2,21 @@ package graft.genomics
 
 import graft.SparkSpec
 import graft.kernels.{AlignmentOps, AlnClip, AlnDel, AlnIns, AlnMatch, AlnOp}
-import graft.model.Read
+import graft.model.{DiscoveredVariant, Read}
+import graft.operators.IntervalJoin
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** `Observer.snvObservations` (reads observed at the SNV candidates'
-  * own sites) against the declarative path it replaced, built inline as
-  * the oracle: the weighted pileup of every base equi-joined to the
-  * candidates on (contig, position[, sample]), support classified as alt,
-  * else ref, else other. Weights are compared summed per observation key:
-  * the pileup keys by the read's base, the kernel by its support.
+/** The genotyper's observation layer against declarative oracles built
+  * inline. `Observer.compressedPileup` against the per-read
+  * `basePileup` grouped and counted. `Observer.snvObservations` (reads
+  * observed at the SNV candidates' own sites) against the declarative
+  * path it replaced: that pileup equi-joined to the candidates on
+  * (contig, position[, sample]), support classified as alt, else ref,
+  * else other; weights are compared summed per observation key, since
+  * the pileup keys by the read's base and the kernel by its support.
+  * `Observer.indelObservations` against the whole-read regrouping it
+  * replaced.
   */
 class SnvObservationSpec extends SparkSpec {
   import Observer.SnvSite
@@ -19,8 +24,18 @@ class SnvObservationSpec extends SparkSpec {
   private val keyCols = Seq("contigName", "start", "referenceAllele", "alternateAllele",
     "sampleId", "support", "forwardStrand", "qual", "mapq")
 
+  private val pileupCols = Seq("contigName", "pos", "base", "refBase", "qual", "forwardStrand",
+    "mapq", "sampleId")
+
+  /** flatMap(basePileup).groupBy(every column).count, the weighted pileup
+    * by definition. */
+  private def declarativePileup(reads: Dataset[Read]): DataFrame = {
+    import spark.implicits._
+    reads.flatMap(Observer.basePileup).groupBy(pileupCols.map(col): _*).agg(count(lit(1)).as("w"))
+  }
+
   private def oracle(reads: Dataset[Read], snvs: DataFrame, perSample: Boolean): DataFrame = {
-    val pileup = Observer.compressedPileup(reads)
+    val pileup = declarativePileup(reads)
     val v = snvs.select(Seq(col("contigName").as("v_contig"), col("start").as("v_start"),
       col("referenceAllele").as("v_ref"), col("alternateAllele").as("v_alt")) ++
       (if (perSample) Seq(col("sampleId").as("v_sample")) else Nil): _*)
@@ -46,11 +61,13 @@ class SnvObservationSpec extends SparkSpec {
   private val rnd = new scala.util.Random(7)
   private val refSeq = Seq.fill(2600)("ACGT".charAt(rnd.nextInt(4))).mkString
 
-  /** A read at `start` agreeing with `refSeq`: optional soft clips, one
-    * optional insertion or deletion, mismatches (a third of them N) at
-    * about 5% of aligned bases, random strand, mapq and qualities.
+  /** A read at `start` agreeing with `refSeq`: optional soft clips,
+    * `gaps` aligned runs each followed by an optional insertion or
+    * deletion, mismatches (a third of them N) at about 5% of aligned
+    * bases, random strand, mapq and qualities.
     */
-  private def seededRead(i: Int, start: Long, sample: String): Read = {
+  private def seededRead(i: Int, start: Long, sample: String, gaps: Int = 1,
+      rnd: scala.util.Random = rnd): Read = {
     def bases(n: Int) = Seq.fill(n)("ACGT".charAt(rnd.nextInt(4))).mkString
     var at = start.toInt // reference cursor
     def aligned(n: Int): (AlnOp, String) = {
@@ -67,9 +84,7 @@ class SnvObservationSpec extends SparkSpec {
     def matchRun(n: Int): Seq[(AlnOp, String)] = (0 until n).map(_ => aligned(1))
     def clip(): Seq[(AlnOp, String)] =
       if (rnd.nextInt(4) == 0) { val n = 1 + rnd.nextInt(3); Seq(AlnClip(n) -> bases(n)) } else Nil
-    val lead = clip()
-    val first = matchRun(30 + rnd.nextInt(40))
-    val gap = rnd.nextInt(4) match {
+    def gap(): Seq[(AlnOp, String)] = rnd.nextInt(4) match {
       case 0 => val n = 1 + rnd.nextInt(3); Seq(AlnIns(n) -> bases(n))
       case 1 =>
         val n = 1 + rnd.nextInt(3)
@@ -78,8 +93,10 @@ class SnvObservationSpec extends SparkSpec {
         Seq(AlnDel(del) -> "")
       case _ => Nil
     }
-    val second = matchRun(20 + rnd.nextInt(40))
-    val parts = lead ++ first ++ gap ++ second ++ clip()
+    val lead = clip()
+    val first = matchRun(30 + rnd.nextInt(40))
+    val rest = (0 until gaps).flatMap(_ => gap() ++ matchRun(20 + rnd.nextInt(40)))
+    val parts = lead ++ first ++ rest ++ clip()
     val ops = AlignmentOps.collapse(parts.map(_._1))
     val sequence = parts.map(_._2).mkString
     val qual = sequence.map(_ => (35 + rnd.nextInt(39)).toChar)
@@ -115,12 +132,10 @@ class SnvObservationSpec extends SparkSpec {
     val rds = reads.toDS()
     val snvs = candidates(sites).toDF("contigName", "start", "referenceAllele", "alternateAllele")
     val want = summed(oracle(rds, snvs, perSample = false))
-    for (broadcastSites <- Seq(true, false)) {
-      val got = Observer.snvObservations(rds, snvs, perSample = false, broadcastSites)
-      assert(summed(got) === want)
-      // one row per observation key: each site is observed in one bin
-      assert(got.count() === got.select(keyCols.map(col): _*).distinct().count())
-    }
+    val got = Observer.snvObservations(rds, snvs, perSample = false)
+    assert(summed(got) === want)
+    // one row per observation key: each site is observed in one bin
+    assert(got.count() === got.select(keyCols.map(col): _*).distinct().count())
     // the seeded reads exercise what the kernel must get right
     val rows = want.map(_.split('|'))
     val multi = rows.filter(_(1) == "998").map(_(3)).distinct
@@ -168,7 +183,7 @@ class SnvObservationSpec extends SparkSpec {
     val perSample = (candidates(sites).map { case (c, p, r, a) => ("s1", c, p, r, a) } ++
       candidates(sites.filter(_ % 2 == 0)).map { case (c, p, r, a) => ("s2", c, p, r, a) })
       .toDF("sampleId", "contigName", "start", "referenceAllele", "alternateAllele")
-    val got = Observer.snvObservations(rds, perSample, perSample = true, broadcastSites = true)
+    val got = Observer.snvObservations(rds, perSample, perSample = true)
     assert(summed(got) === summed(oracle(rds, perSample, perSample = true)))
     val s2Sites = got.where(col("sampleId") === "s2").select("start").distinct()
       .as[Long].collect().toSet
@@ -192,8 +207,115 @@ class SnvObservationSpec extends SparkSpec {
     }
     val snvs = candidates(sites).toDF("contigName", "start", "referenceAllele", "alternateAllele")
     def obs(rs: Seq[Read]) =
-      summed(Observer.snvObservations(rs.toDS(), snvs, perSample = false, broadcastSites = true))
+      summed(Observer.snvObservations(rs.toDS(), snvs, perSample = false))
     assert(obs(good ++ bad) === obs(good))
     assert(obs(good).nonEmpty)
+  }
+
+  // ---- compressedPileup -------------------------------------------------
+
+  test("compressedPileup equals flatMap(basePileup).groupBy(every column).count, per sample") {
+    import spark.implicits._
+    val rds = reads.toDS()
+    def rows(df: DataFrame): Seq[Seq[Any]] =
+      df.select((pileupCols :+ "w").map(col): _*).collect().map(_.toSeq)
+        .sortBy(_.mkString("|")).toSeq
+    val want = rows(declarativePileup(rds))
+    assert(rows(Observer.compressedPileup(rds)) === want)
+    assert(want.map(_(7)).distinct.size === 2, "both samples")
+    assert(want.exists(r => r(2) != r(3)), "a mismatched base")
+    assert(want.exists(_(8) == 1L) && want.exists(_(8).asInstanceOf[Long] > 1L), "weights 1 and > 1")
+  }
+
+  test("compressedPileup emits each bin's rows in the same order at 1 and 4 shuffle partitions") {
+    import spark.implicits._
+    val rds = reads.toDS()
+    def byBin(partitions: Int): Map[Long, Seq[String]] = {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      try Observer.compressedPileup(rds).collect().toSeq
+        .groupBy(_.getAs[Long]("pos") / 1000).map { case (b, rs) => b -> rs.map(_.mkString("|")) }
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+    val one = byBin(1)
+    assert(one.keySet === Set(0L, 1L, 2L))
+    assert(byBin(4) === one)
+  }
+
+  // ---- indelObservations ------------------------------------------------
+
+  /** The path `indelObservations` replaced, as the oracle: the same
+    * interval join, then every overlapping read shuffled whole to gather
+    * its candidates (groupBy(struct(read)) + collect_list) and observed
+    * once against all of them.
+    */
+  private def regrouped(reads: Dataset[Read], indels: DataFrame, perSample: Boolean,
+      binSize: Double): DataFrame = {
+    import spark.implicits._
+    val v = indels.select(Seq(col("contigName").as("v_contig"), col("start").as("v_start"),
+      col("referenceAllele").as("v_ref"), col("alternateAllele").as("v_alt"),
+      (col("start") + greatest(length(col("referenceAllele")), lit(1))).as("v_end")) ++
+      (if (perSample) Seq(col("sampleId").as("v_sample")) else Nil): _*)
+    IntervalJoin.overlap(reads.toDF, "start", "end", v, "v_start", "v_end", binSize,
+        keys = Seq("contigName" -> "v_contig") ++
+          (if (perSample) Seq("sampleId" -> "v_sample") else Nil),
+        broadcastRight = true)
+      .select(struct(reads.columns.map(col): _*).as("r"),
+        struct(col("v_start"), col("v_ref"), col("v_alt")).as("v"))
+      .groupBy(col("r"))
+      .agg(collect_list(col("v")).as("vs"))
+      .as[(Read, Seq[(Long, String, Option[String])])]
+      .flatMap { case (r, vs) =>
+        Observer.observe(r, vs.map(t => DiscoveredVariant(r.contigName, t._1, t._2, t._3)))
+      }
+      .withColumn("w", lit(1L))
+  }
+
+  /** 300 reads with up to three indels each over 2.3 kbp, in two
+    * samples, the first 40 of them twice (identical rows).
+    */
+  private lazy val indelReads: Seq[Read] = {
+    val gen = new scala.util.Random(11)
+    val rs = (0 until 300).map(i => seededRead(i, gen.nextInt(2200).toLong,
+      if (i % 3 == 0) "s2" else "s1", gaps = 3, rnd = gen))
+    rs ++ rs.take(40)
+  }
+
+  /** Every indel the reads show, plus, at every third, a longer
+    * insertion allele no read shows at the same start.
+    */
+  private lazy val indelCandidates: Seq[(String, String, Long, String, String)] = {
+    val shown = indelReads.flatMap { r =>
+      val ops = AlignmentOps.parseRead(r.cigar, r.mdTag, r.sequence, r.qual)
+      AlignmentOps.variants(r.start, r.sequence, r.qual, ops)
+        .filter(v => v.ref.length != v.alt.length).map(v => (v.start, v.ref, v.alt))
+    }.distinct.sorted
+    shown.zipWithIndex.flatMap { case ((p, ref, alt), i) =>
+      ((p, ref, alt) +: (if (i % 3 == 0) Seq((p, ref, alt + "C")) else Nil)).map {
+        case (p, ref, alt) => ("s1", "chr1", p, ref, alt)
+      }
+    }
+  }
+
+  test("indelObservations equals the whole-read regrouping, perSample both ways") {
+    import spark.implicits._
+    val rds = indelReads.toDS()
+    val all = indelCandidates.toDF("sampleId", "contigName", "start", "referenceAllele",
+      "alternateAllele")
+    // s2 holds only the candidates at even starts
+    val perSample = all.unionByName(all.where(col("start") % 2 === 0)
+      .withColumn("sampleId", lit("s2")))
+    for ((indels, ps) <- Seq(all.drop("sampleId") -> false, perSample -> true)) {
+      val got = Observer.indelObservations(rds, indels, ps, binSize = 50.0)
+      val want = regrouped(rds, indels, ps, binSize = 50.0)
+      assert(got.count() === want.count())
+      assert(summed(got) === summed(want))
+      val supports = want.select("support").distinct().as[Int].collect().toSet
+      assert(supports === Set(Observer.SupportOther, Observer.SupportRef, Observer.SupportAlt,
+        Observer.SupportNonRef), supports)
+    }
+    assert(indelCandidates.size > 300, "dense candidates")
+    assert(indelReads.take(40).forall(r => indelCandidates.exists { case (_, _, p, _, _) =>
+      p >= r.start && p < r.end }), "duplicated reads overlap candidates")
   }
 }

@@ -35,4 +35,12 @@ class QueryProbeSpec extends SparkSpec {
         """broadcastJoins=\d+ windows=\d+""").r.findFirstIn(l).isDefined), out.mkString("\n"))
     callers.unpersist(blocking = true)
   }
+
+  test("plan counts cover every execution of the warm run, the barriers built with the query") {
+    // m9's audio scan runs in the Barriers.corpusScale checkpoint its
+    // constructor materializes; the plan its sink runs reads that barrier
+    val out = QueryProbe.probe(spark, sf("0.001"), query)
+    val scans = out.flatMap(l => """scans=(\d+)""".r.findFirstMatchIn(l)).map(_.group(1).toInt)
+    assert(scans.size === 1 && scans.head > 0, out.mkString("\n"))
+  }
 }
