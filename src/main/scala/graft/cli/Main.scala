@@ -3,7 +3,7 @@ package graft.cli
 import graft.genomics._
 import graft.model.{DiscoveredVariant, Read}
 import graft.sources.{Bam, Cram, Gff, Sam, Vcf}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CLI entry points mirroring the reference's six commands
@@ -13,13 +13,12 @@ import org.apache.spark.sql.functions._
   *
   *   graft.cli.Main discover <reads> <out> [minPhred] [minObs]
   *   graft.cli.Main biallelicGenotyper <reads> <out> [minPhred] [minObs]
-  *       [-ploidy N] [-contig_ploidy chrX=1,chrY=1] [-bin_size N]
-  *       [-cnv calls.gff]
+  *       [-ploidy N] [-contig_ploidy chrX=1,chrY=1] [-cnv calls.gff]
   *   graft.cli.Main jointer <genotypes-parquet|vcf> <out-vcf> [-from_gvcf]
   *   graft.cli.Main mergeDiscovered <variants-glob> <out>
   *   graft.cli.Main reassemble <reads> <out>
   *   graft.cli.Main trioGenotyper <reads> <out> <mother> <father> <child>
-  *       [-ploidy N] [-bin_size N]
+  *       [-ploidy N]
   *
   * Reads: .sam/.bam/.cram files or parquet directories of the Read
   * schema. CRAM with neither an embedded reference nor RR=false needs
@@ -32,12 +31,13 @@ import org.apache.spark.sql.functions._
   * calls into the same path (reference
   * avocado-cli/.../BiallelicGenotyper.scala:245-251); interval CNV calls
   * and whole-contig overrides compose, intervals winning inside their
-  * span. -bin_size pins the bin width of the genotyper's indel
-  * interval join (reads ⨝ indel candidates); without it the CLI sizes
-  * bins from the data ([[BiallelicGenotyper.chooseBinSize]]) — a
-  * constant tuned for one coverage is the first thing to go wrong at
-  * 100x. The SNV observation kernel and the gVCF pileup bin reads at a
-  * fixed 1000 bp.
+  * span. A flag not listed here is a usage error.
+  *
+  * The genotyper bins reads at one width, 1000 bp: the SNV kernel and
+  * the gVCF pileup always do, and the CLI runs `call`'s indel interval
+  * join at that default. The indel candidates broadcast, so the width
+  * only trades read replication against candidates scanned per probe
+  * row; neither depends on coverage, and no pass runs a sizing job.
   */
 object Main {
 
@@ -72,14 +72,25 @@ object Main {
     if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
   }
 
-  /** Positional args with `-flag value` pairs and bare switches removed. */
+  private val Usage = "usage: <command> <in> <out> [...] [-ploidy N] [-contig_ploidy c=N,...]" +
+    " [-cnv calls.gff] [-reference genome.fa] [-from_gvcf] [-near] [-clusters]"
+
+  /** Positional args with `-flag value` pairs and bare switches removed;
+    * a flag that is neither is a usage error, not a positional. */
   private def positional(args: Array[String]): Array[String] = {
-    val valued = Set("-ploidy", "-contig_ploidy", "-bin_size", "-cnv", "-reference")
+    val valued = Set("-ploidy", "-contig_ploidy", "-cnv", "-reference")
+    val switches = Set("-from_gvcf", "-near", "-clusters")
     val out = Array.newBuilder[String]
     var i = 0
     while (i < args.length) {
-      if (valued(args(i))) i += 2
-      else { if (!args(i).startsWith("-")) out += args(i); i += 1 }
+      val a = args(i)
+      if (valued(a)) i += 2
+      else if (switches(a)) i += 1
+      else {
+        require(!a.startsWith("-"), s"unknown flag '$a'; $Usage")
+        out += a
+        i += 1
+      }
     }
     out.result()
   }
@@ -108,45 +119,41 @@ object Main {
     (base, cn)
   }
 
-  /** Bin size for the genotyper's indel interval join: an explicit
-    * `-bin_size N` wins; otherwise sized from the data
-    * ([[BiallelicGenotyper.chooseBinSize]] — one cheap sampling job).
-    */
-  private[cli] def resolveBinSize(args: Array[String], reads: Dataset[Read]): Double =
-    flagValue(args, "-bin_size").map(_.toDouble)
-      .getOrElse(BiallelicGenotyper.chooseBinSize(reads))
+  /** Prefilter -> discovery -> genotype calls at the default bin width,
+    * the steps biallelicGenotyper and trioGenotyper share. */
+  private def genotype(spark: SparkSession, args: Array[String], readsPath: String,
+      minPhred: Int, minObs: Long): DataFrame = {
+    import spark.implicits._
+    val (basePloidy, cn) = ploidyConfig(spark, args)
+    val reads = PrefilterReads(loadReads(spark, readsPath, flagValue(args, "-reference")))
+    val variants = DiscoverVariants.discover(reads, minPhred, minObs)
+      .select("contigName", "start", "referenceAllele", "alternateAllele")
+      .as[DiscoveredVariant]
+    BiallelicGenotyper.call(reads, variants, ploidy = basePloidy, copyNumbers = cn)
+  }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: <command> <in> <out> [...]")
-    val cmd = args(0)
+    val pos = positional(args)
+    require(pos.length >= 3, Usage)
+    val cmd = pos(0)
     // reuse an already-running session (tests, notebooks); own and stop
     // only a session we created
     val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val spark = existing.getOrElse(session())
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     cmd match {
       case "discover" =>
-        val minPhred = if (args.length > 3) args(3).toInt else 20
-        val minObs = if (args.length > 4) args(4).toLong else 2L
-        DiscoverVariants.discover(PrefilterReads(loadReads(spark, args(1), flagValue(args, "-reference"))), minPhred, minObs)
-          .write.mode("overwrite").parquet(args(2))
-
-      case "biallelicGenotyper" =>
-        val pos = positional(args)
         val minPhred = if (pos.length > 3) pos(3).toInt else 20
         val minObs = if (pos.length > 4) pos(4).toLong else 2L
-        val (basePloidy, cn) = ploidyConfig(spark, args)
-        val reads = PrefilterReads(loadReads(spark, pos(1), flagValue(args, "-reference")))
-        val variants = DiscoverVariants.discover(reads, minPhred, minObs)
-          .select("contigName", "start", "referenceAllele", "alternateAllele")
-          .as[DiscoveredVariant]
-        val called = RewriteHets(
-          HardFilterGenotypes(BiallelicGenotyper.call(
-            reads, variants, ploidy = basePloidy,
-            binSize = resolveBinSize(args, reads), copyNumbers = cn)))
-        called.write.mode("overwrite").parquet(pos(2))
+        DiscoverVariants.discover(PrefilterReads(loadReads(spark, pos(1), flagValue(args, "-reference"))), minPhred, minObs)
+          .write.mode("overwrite").parquet(pos(2))
+
+      case "biallelicGenotyper" =>
+        val minPhred = if (pos.length > 3) pos(3).toInt else 20
+        val minObs = if (pos.length > 4) pos(4).toLong else 2L
+        RewriteHets(HardFilterGenotypes(genotype(spark, args, pos(1), minPhred, minObs)))
+          .write.mode("overwrite").parquet(pos(2))
 
       case "jointer" =>
         // -from_gvcf (reference CLI Jointer.scala:74-146): square the
@@ -154,7 +161,7 @@ object Main {
         // the joint layer; otherwise genotypes are already squared
         val fromGvcf = args.contains("-from_gvcf")
         val in0 = {
-          val p = args(1)
+          val p = pos(1)
           if (p.endsWith(".vcf") || p.endsWith(".g.vcf")) Vcf.read(spark, p)
           else spark.read.parquet(p)
         }
@@ -163,28 +170,20 @@ object Main {
         val gts = if (fromGvcf) SquareOff.squareOff(in) else in
         val joint = JointAnnotatorCaller(gts)
         Vcf.write(joint.withColumn("genotypeState", col("recalledState"))
-          .withColumn("genotypeQuality", col("recalledQuality")), args(2))
+          .withColumn("genotypeQuality", col("recalledQuality")), pos(2))
 
       case "mergeDiscovered" =>
-        spark.read.parquet(args(1))
+        spark.read.parquet(pos(1))
           .dropDuplicates("contigName", "start", "referenceAllele", "alternateAllele")
-          .write.mode("overwrite").parquet(args(2))
+          .write.mode("overwrite").parquet(pos(2))
 
       case "reassemble" =>
-        Realigner.realign(loadReads(spark, args(1), flagValue(args, "-reference")))
-          .write.mode("overwrite").parquet(args(2))
+        Realigner.realign(loadReads(spark, pos(1), flagValue(args, "-reference")))
+          .write.mode("overwrite").parquet(pos(2))
 
       case "trioGenotyper" =>
-        val pos = positional(args)
         require(pos.length >= 6, "trioGenotyper <reads> <out> <mother> <father> <child>")
-        val (basePloidy, cn) = ploidyConfig(spark, args)
-        val reads = PrefilterReads(loadReads(spark, pos(1), flagValue(args, "-reference")))
-        val variants = DiscoverVariants.discover(reads, 20, 2)
-          .select("contigName", "start", "referenceAllele", "alternateAllele")
-          .as[DiscoveredVariant]
-        val called = BiallelicGenotyper.call(
-          reads, variants, ploidy = basePloidy,
-          binSize = resolveBinSize(args, reads), copyNumbers = cn)
+        val called = genotype(spark, args, pos(1), 20, 2L)
           .withColumn("end", col("start") + greatest(length(col("referenceAllele")), lit(1)))
         TrioCaller(called, pos(3), pos(4), pos(5))
           .write.mode("overwrite").parquet(pos(2))
@@ -194,15 +193,15 @@ object Main {
         // documents parquet in, cleaned corpus out (exact dedup ->
         // contamination cut -> quality gate -> language gate)
         graft.operators.Pipeline
-          .cleanCorpus(spark.read.parquet(args(1)), "doc_id", "text")
-          .write.mode("overwrite").parquet(args(2))
+          .cleanCorpus(spark.read.parquet(pos(1)), "doc_id", "text")
+          .write.mode("overwrite").parquet(pos(2))
 
       case "dedup" =>
         // exact duplicate groups (fingerprint, multiplicity, keeper id);
         // -near switches to MinHash-LSH near-dup pairs on the xx64
         // production hash family; -clusters runs the full resolution
         // (pairs -> connected components -> per-cluster keeper election)
-        val docs = spark.read.parquet(args(1))
+        val docs = spark.read.parquet(pos(1))
         lazy val nearPairs = graft.operators.Dedup.minHashLshPairs(
           docs, "doc_id", "text", n = 3, k = 64, bands = 32,
           minAgree = 0.5, hashFamily = "xx64")
@@ -213,16 +212,16 @@ object Main {
               "doc_id", "text")
           else if (args.contains("-near")) nearPairs
           else graft.operators.Dedup.exactGroups(docs, "doc_id", "text")
-        out.write.mode("overwrite").parquet(args(2))
+        out.write.mode("overwrite").parquet(pos(2))
 
       case "decodeImages" =>
         // image payloads (id + binary column) -> decoded pixel stats via
         // javax.imageio; corrupt payloads drop (counted on the
         // multimodal.decode.badPayloads accumulator) instead of failing
         graft.operators.Multimodal
-          .decodeBatch(spark.read.parquet(args(1)), "doc_id", "payload")
+          .decodeBatch(spark.read.parquet(pos(1)), "doc_id", "payload")
           .toDF()
-          .write.mode("overwrite").parquet(args(2))
+          .write.mode("overwrite").parquet(pos(2))
 
       case other => sys.error(s"unknown command '$other'")
     }

@@ -38,6 +38,10 @@ import org.apache.spark.sql.functions._
   * matched row is an SNV observation, an unmatched one a non-ref
   * observation), then anti-joined against the broadcast candidate
   * positions to drop the non-ref rows under indel candidates.
+  *
+  * One bin width, 1000 bp, serves the SNV kernel, the gVCF pileup and,
+  * at `call`'s default `binSize`, the indel interval join; the CLI runs
+  * no sizing job.
   */
 object BiallelicGenotyper {
 
@@ -64,16 +68,13 @@ object BiallelicGenotyper {
       scoreAllSites = scoreAllSites)
   }
 
-  /** Data-driven bin sizing for the indel interval join's shuffle —
-    * the one tunable whose right value depends on the data, not the
-    * code. Targets ~`targetReadsPerBin` reads per (contig, bin) group:
-    * big enough to amortize per-group overhead, small enough that one
-    * bin's reads fit an executor's working set at any coverage. Stats
-    * come from a bounded sample (one cheap job over `fraction` of the
-    * reads — an explicit utility action, deliberately NOT inside the
-    * pure plan constructor `call()`), scaled back up. Clamped to
-    * [2x mean read span, 10 Mbp] so degenerate samples can't produce
-    * sub-read bins or whole-contig bins (the hot-key failure mode).
+  /** A bin width for the indel interval join sized from the data:
+    * ~`targetReadsPerBin` reads per (contig, bin), from one sampling job
+    * over `fraction` of the reads, clamped to [2x mean read span,
+    * 10 Mbp]. No CLI path calls it: the candidates broadcast, so a bin's
+    * reads are never shuffled together and the width does not depend on
+    * coverage. It stays for perfbench's traced call chain, which still
+    * times it and passes its width to [[call]].
     */
   def chooseBinSize(
       reads: Dataset[Read],

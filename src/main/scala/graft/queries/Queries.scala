@@ -844,11 +844,6 @@ object Queries {
 
   // ---- genomics pipeline on synthesized reads (G1, G2) -----------------
 
-  /** The g4/g6 cohort read set, exposed for the plan-shape spec that
-    * inspects the cohort genotyper's construction plan. */
-  def cohortReadsForProfile(spark: SparkSession, dir: String): Dataset[Read] =
-    cohortReads(spark, dir)
-
   /** The g1/g2 read set: one sample, contig from l_returnflag. */
   private def syntheticReads(spark: SparkSession, dir: String): Dataset[Read] =
     lineitemReads(spark, dir, contig = col("l_returnflag"), sample = lit("1"))
@@ -856,7 +851,7 @@ object Queries {
   /** The g4/g6 synthetic cohort: same reads as g1/g2, sample derived
     * from l_linestatus.
     */
-  private def cohortReads(spark: SparkSession, dir: String): Dataset[Read] =
+  private[graft] def cohortReads(spark: SparkSession, dir: String): Dataset[Read] =
     lineitemReads(spark, dir, contig = col("l_returnflag"), sample = col("l_linestatus"))
 
   /** Reads synthesized deterministically from lineitem: 10bp reads, all-A

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** VCF text source/sink (SURVEY.md S3/S7): genotype calls to/from VCF
@@ -26,33 +26,6 @@ object Vcf {
     ) ++ extraFormatLines ++ Seq(
       ("#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT" +: sampleIds).mkString("\t")
     )).mkString("\n")
-
-  /** Render called-genotype rows (genotyper output schema) to VCF data
-    * lines. POS is 1-based per spec (engine coordinates are 0-based
-    * half-open).
-    */
-  def renderLines(gts: DataFrame): Dataset[String] = {
-    val spark = gts.sparkSession
-    import spark.implicits._
-    val gt = when(col("genotypeState") === 0, "0/0")
-      .when(col("genotypeState") === 1, "0/1")
-      .when(col("genotypeState") === 2, "1/1")
-      .otherwise("./.")
-    gts.select(concat_ws("\t",
-      col("contigName"),
-      (col("start") + 1).cast("string"),
-      lit("."),
-      col("referenceAllele"),
-      coalesce(col("alternateAllele"), lit(".")),
-      coalesce(round(col("genotypeQuality"), 0).cast("int").cast("string"), lit(".")),
-      lit("PASS"),
-      lit("."),
-      lit("GT:GQ:DP"),
-      concat_ws(":",
-        gt,
-        coalesce(round(col("genotypeQuality"), 0).cast("int").cast("string"), lit(".")),
-        col("readDepth").cast("string"))).as("line")).as[String]
-  }
 
   /** Write a valid multi-sample VCF: per-sample cells are pivoted onto
     * one line per site (fixed sample-column order from the data's
@@ -211,43 +184,6 @@ object Vcf {
       .select("value").as[String]
     val out = if (singleFile) lines.coalesce(1) else lines
     out.write.mode("overwrite").text(path)
-  }
-
-  /** Single-file VCF via fast concat (reference Jointer.scala:74-86's
-    * -single + fast-concat flags): the WRITE stays fully distributed
-    * (every task writes its own part file), then the driver stitches the
-    * parts in name order with NIO byte copies — no coalesce(1) bottleneck
-    * where one task renders the whole cohort. Sort order guarantees the
-    * header part precedes data parts.
-    */
-  def writeFastConcat(gts: DataFrame, path: String,
-      filterHeaderLines: Seq[String] = Nil): Unit = {
-    import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-    import scala.jdk.CollectionConverters._
-    val tmp = path + ".parts"
-    write(gts, tmp, singleFile = false, filterHeaderLines = filterHeaderLines)
-    val target = Paths.get(path)
-    Option(target.getParent).foreach(Files.createDirectories(_))
-    val outStream = Files.newOutputStream(target,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    try {
-      val listing = Files.list(Paths.get(tmp)) // DirectoryStream: must close
-      val parts =
-        try listing.iterator().asScala.toSeq finally listing.close()
-      parts
-        .filter(_.getFileName.toString.startsWith("part-"))
-        .sortBy(_.getFileName.toString)
-        .foreach(p => Files.copy(p, outStream))
-    } finally outStream.close()
-    // drop the staging copy — the single file IS the output
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val ls = Files.list(p)
-        try ls.iterator().asScala.toSeq.foreach(rm) finally ls.close()
-      }
-      Files.deleteIfExists(p)
-    }
-    rm(Paths.get(tmp))
   }
 
   /** Parse VCF data lines back to the genotype schema, one row per

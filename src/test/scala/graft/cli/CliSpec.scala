@@ -119,22 +119,6 @@ class CliSpec extends SparkSpec {
     assert(row.getAs[Seq[String]]("alleles") === Seq("REF", "ALT", "ALT"))
   }
 
-  test("biallelicGenotyper sizes bins from the data; -bin_size overrides") {
-    val reads = graft.sources.Sam.read(spark, sam)
-    // default = the data-driven estimator (deterministic: fixed sample seed)
-    val auto = Main.resolveBinSize(Array("biallelicGenotyper", sam, "x"), reads)
-    assert(auto === graft.genomics.BiallelicGenotyper.chooseBinSize(reads))
-    assert(auto >= 2.0 && auto <= 1e7, s"bin size outside clamp: $auto")
-    assert(Main.resolveBinSize(
-      Array("biallelicGenotyper", sam, "x", "-bin_size", "512"), reads) === 512.0)
-    // calls are bin-size-invariant: data-driven and pinned runs agree
-    run("biallelicGenotyper", sam, s"$tmp/calls_auto")
-    run("biallelicGenotyper", sam, s"$tmp/calls_pinned", "-bin_size", "500")
-    val a = spark.read.parquet(s"$tmp/calls_auto").collect().map(_.toString).sorted
-    val b = spark.read.parquet(s"$tmp/calls_pinned").collect().map(_.toString).sorted
-    assert(a.sameElements(b), "calls must not depend on bin granularity")
-  }
-
   test("cleanCorpus runs the composed cleaning pipeline end to end") {
     run("cleanCorpus", s"${sf("0.001")}/documents.parquet", s"$tmp/cleaned")
     val c = spark.read.parquet(s"$tmp/cleaned")

@@ -175,4 +175,32 @@ class GenotyperSpec extends SparkSpec {
       fraction = 0.5)
     assert(bs2 >= 20.0, s"binSize $bs2 below 2x read span")
   }
+
+  test("call rows do not depend on the indel join's bin width, perSample both ways") {
+    import org.apache.spark.sql.functions.{col, length}
+    import spark.implicits._
+    val gen = new scala.util.Random(23)
+    val ref = GenotypeFixtures.reference(gen, 2600)
+    val reads = GenotypeFixtures.denseIndelReads(ref, 400, 2200, gen).toDS()
+    val s1 = reads.filter(col("sampleId") === "s1")
+    val site = Seq("contigName", "start", "referenceAllele", "alternateAllele")
+    // every variant a read shows is a candidate, so most reads meet indels
+    val variants = DiscoverVariants.discover(s1, 20, 1).select(site.map(col): _*)
+      .as[DiscoveredVariant].localCheckpoint()
+    val perSample = DiscoverVariants.discoverPerSample(reads, 20, 1)
+      .select(("sampleId" +: site).map(col): _*).localCheckpoint()
+    val widths = Seq(20.0, 1000.0, BiallelicGenotyper.chooseBinSize(reads))
+    assert(widths.distinct.size === 3, widths)
+    // (call, callPerSample) rows at each width, computed once
+    val Seq(narrow, default, sized) = widths.map(w =>
+      (BiallelicGenotyper.call(s1, variants, binSize = w).localCheckpoint(),
+        BiallelicGenotyper.callPerSample(reads, perSample, binSize = w).localCheckpoint()))
+    for (((single, cohort), w) <- Seq(default, sized).zip(widths.tail)) {
+      assert(GenotypeFixtures.sameRows(single, narrow._1), s"call at $w")
+      assert(GenotypeFixtures.sameRows(cohort, narrow._2), s"callPerSample at $w")
+    }
+    val indels = default._1.where(length(col("referenceAllele")) =!= length(col("alternateAllele")))
+    assert(indels.count() > 100, "dense indel calls")
+    assert(default._2.select("sampleId").distinct().count() === 2)
+  }
 }

@@ -1,7 +1,7 @@
 package graft.genomics
 
 import graft.SparkSpec
-import graft.kernels.{AlignmentOps, AlnClip, AlnDel, AlnIns, AlnMatch, AlnOp}
+import graft.kernels.AlignmentOps
 import graft.model.{DiscoveredVariant, Read}
 import graft.operators.IntervalJoin
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -59,59 +59,14 @@ class SnvObservationSpec extends SparkSpec {
   // ---- seeded reads over one random reference --------------------------
 
   private val rnd = new scala.util.Random(7)
-  private val refSeq = Seq.fill(2600)("ACGT".charAt(rnd.nextInt(4))).mkString
-
-  /** A read at `start` agreeing with `refSeq`: optional soft clips,
-    * `gaps` aligned runs each followed by an optional insertion or
-    * deletion, mismatches (a third of them N) at about 5% of aligned
-    * bases, random strand, mapq and qualities.
-    */
-  private def seededRead(i: Int, start: Long, sample: String, gaps: Int = 1,
-      rnd: scala.util.Random = rnd): Read = {
-    def bases(n: Int) = Seq.fill(n)("ACGT".charAt(rnd.nextInt(4))).mkString
-    var at = start.toInt // reference cursor
-    def aligned(n: Int): (AlnOp, String) = {
-      val ref = refSeq.substring(at, at + n)
-      at += n
-      val read = ref.map { r =>
-        if (rnd.nextDouble() < 0.05)
-          if (rnd.nextInt(3) == 0) 'N' else "ACGT".filterNot(_ == r).charAt(rnd.nextInt(3))
-        else r
-      }
-      // one op per base keeps the '='/'X' runs trivially consistent
-      (AlnMatch(n, if (read == ref) None else Some(ref)), read)
-    }
-    def matchRun(n: Int): Seq[(AlnOp, String)] = (0 until n).map(_ => aligned(1))
-    def clip(): Seq[(AlnOp, String)] =
-      if (rnd.nextInt(4) == 0) { val n = 1 + rnd.nextInt(3); Seq(AlnClip(n) -> bases(n)) } else Nil
-    def gap(): Seq[(AlnOp, String)] = rnd.nextInt(4) match {
-      case 0 => val n = 1 + rnd.nextInt(3); Seq(AlnIns(n) -> bases(n))
-      case 1 =>
-        val n = 1 + rnd.nextInt(3)
-        val del = refSeq.substring(at, at + n)
-        at += n
-        Seq(AlnDel(del) -> "")
-      case _ => Nil
-    }
-    val lead = clip()
-    val first = matchRun(30 + rnd.nextInt(40))
-    val rest = (0 until gaps).flatMap(_ => gap() ++ matchRun(20 + rnd.nextInt(40)))
-    val parts = lead ++ first ++ rest ++ clip()
-    val ops = AlignmentOps.collapse(parts.map(_._1))
-    val sequence = parts.map(_._2).mkString
-    val qual = sequence.map(_ => (35 + rnd.nextInt(39)).toChar)
-    val (cigar, md) = AlignmentOps.render(ops)
-    Read(s"r$i", "chr1", start, start + AlignmentOps.referenceLength(ops), sequence, qual,
-      cigar, md, 20 + rnd.nextInt(41), readMapped = true, readNegativeStrand = rnd.nextBoolean(),
-      duplicateRead = false, primaryAlignment = true, sampleId = sample)
-  }
+  private val refSeq = GenotypeFixtures.reference(rnd, 2600)
 
   /** 400 reads over 2.5 kbp (bins 0-2 at 1000 bp), many across the
     * 1000 bp border, in two samples.
     */
   private lazy val reads: Seq[Read] = (0 until 400).map { i =>
     val start = if (i % 4 == 0) 900L + rnd.nextInt(100) else rnd.nextInt(2400).toLong
-    seededRead(i, start, if (i % 3 == 0) "s2" else "s1")
+    GenotypeFixtures.seededRead(refSeq, i, start, if (i % 3 == 0) "s2" else "s1", gaps = 1, rnd = rnd)
   }
 
   /** SNV candidates: each a non-reference allele at its position, plus
@@ -275,9 +230,7 @@ class SnvObservationSpec extends SparkSpec {
     * samples, the first 40 of them twice (identical rows).
     */
   private lazy val indelReads: Seq[Read] = {
-    val gen = new scala.util.Random(11)
-    val rs = (0 until 300).map(i => seededRead(i, gen.nextInt(2200).toLong,
-      if (i % 3 == 0) "s2" else "s1", gaps = 3, rnd = gen))
+    val rs = GenotypeFixtures.denseIndelReads(refSeq, 300, 2200, new scala.util.Random(11))
     rs ++ rs.take(40)
   }
 

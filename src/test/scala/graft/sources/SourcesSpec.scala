@@ -43,13 +43,33 @@ class SourcesSpec extends SparkSpec {
       ("chr1", 222L, "AGG", "A", 2, 41),
       ("chr2", 5L, "T", "G", 0, 12)))
 
-    // site QUAL = max variant-sample genotype quality; hom-ref site is "."
-    val quals = spark.read.text(dir).collect().map(_.getString(0))
+    // POS is 1-based; site QUAL = max variant-sample genotype quality,
+    // "." at a hom-ref site; GT is the state's allele string
+    val fields = spark.read.text(dir).collect().map(_.getString(0))
       .filterNot(_.startsWith("#"))
-      .map(l => { val f = l.split("\t"); f(1) -> f(5) }).toMap
-    assert(quals("101") === "45.2")
-    assert(quals("223") === "99.0")
-    assert(quals("6") === ".")
+      .map(l => { val f = l.split("\t"); f(1) -> f }).toMap
+    assert(fields.keySet === Set("101", "223", "6"))
+    assert(fields("101").take(5).toSeq === Seq("chr1", "101", ".", "A", "C"))
+    assert(fields.view.mapValues(_(5)).toMap === Map("101" -> "45.2", "223" -> "99.0", "6" -> "."))
+    assert(fields.view.mapValues(_(9).split(":").head).toMap ===
+      Map("101" -> "0/1", "223" -> "1/1", "6" -> "0/0"))
+  }
+
+  test("VCF render emits 1-based positions and GT strings") {
+    import spark.implicits._
+    val calls = Seq(("chr1", 100L, "A", "C", 1, 45.2, 30))
+      .toDF("contigName", "start", "referenceAllele", "alternateAllele",
+        "genotypeState", "genotypeQuality", "readDepth")
+    val dir = java.nio.file.Files.createTempDirectory("vcfrender").toString + "/out"
+    Vcf.write(calls, dir, singleFile = true)
+    val Array(line) = spark.read.text(dir).collect().map(_.getString(0))
+      .filterNot(_.startsWith("#"))
+    val f = line.split("\t")
+    assert(f.take(7).toSeq === Seq("chr1", "101", ".", "A", "C", "45.2", "PASS"))
+    val sample = f(8).split(":").zip(f(9).split(":")).toMap
+    assert(sample("GT") === "0/1")
+    assert(sample("GQ") === "45")
+    assert(sample("DP") === "30")
   }
 
   test("VCF annotation round trip: MQ/FS/SB survive write -> read per sample") {
@@ -120,33 +140,6 @@ class SourcesSpec extends SparkSpec {
     val info2 = spark.read.text(dir2).as[String].collect()
       .find(l => !l.startsWith("#")).get.split("\t")(7)
     assert(info2 === ".", "plain dumps keep an empty INFO column")
-  }
-
-  test("VCF fast concat equals the coalesce(1) single file") {
-    import spark.implicits._
-    val calls = (0 until 200).map(i =>
-      (s"chr${1 + i % 3}", 100L + i, "A", "C", i % 3, 45.0 + i, 30))
-      .toDF("contigName", "start", "referenceAllele", "alternateAllele",
-        "genotypeState", "genotypeQuality", "readDepth")
-      .repartition(8)
-    val base = java.nio.file.Files.createTempDirectory("vcfcat").toString
-    Vcf.write(calls, s"$base/single", singleFile = true)
-    Vcf.writeFastConcat(calls, s"$base/concat.vcf")
-    val single = spark.read.text(s"$base/single").as[String].collect().toSeq
-    import scala.jdk.CollectionConverters._
-    val concat = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(s"$base/concat.vcf")).asScala.toSeq
-    assert(concat === single)
-    assert(concat.head.startsWith("##fileformat"))
-  }
-
-  test("VCF render emits 1-based positions and GT strings") {
-    import spark.implicits._
-    val calls = Seq(("chr1", 100L, "A", "C", 1, 45.2, 30))
-      .toDF("contigName", "start", "referenceAllele", "alternateAllele",
-        "genotypeState", "genotypeQuality", "readDepth")
-    val line = Vcf.renderLines(calls).head()
-    assert(line === "chr1\t101\t.\tA\tC\t45\tPASS\t.\tGT:GQ:DP\t0/1:45:30")
   }
 
   test("bucketed reads: groupBy and join on bucket keys plan no exchange") {
