@@ -33,11 +33,9 @@ import org.apache.spark.sql.functions._
   * and whole-contig overrides compose, intervals winning inside their
   * span. A flag not listed here is a usage error.
   *
-  * The genotyper bins reads at one width, 1000 bp: the SNV kernel and
-  * the gVCF pileup always do, and the CLI runs `call`'s indel interval
-  * join at that default. The indel candidates broadcast, so the width
-  * only trades read replication against candidates scanned per probe
-  * row; neither depends on coverage, and no pass runs a sizing job.
+  * The genotyper takes no bin width: `call` collects the candidates
+  * once and observes every read against them in one narrow pass, so no
+  * pass runs a sizing job.
   */
 object Main {
 
@@ -119,8 +117,8 @@ object Main {
     (base, cn)
   }
 
-  /** Prefilter -> discovery -> genotype calls at the default bin width,
-    * the steps biallelicGenotyper and trioGenotyper share. */
+  /** Prefilter -> discovery -> genotype calls, the steps
+    * biallelicGenotyper and trioGenotyper share. */
   private def genotype(spark: SparkSession, args: Array[String], readsPath: String,
       minPhred: Int, minObs: Long): DataFrame = {
     import spark.implicits._

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, QuaternaryExpression, TernaryExpression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, QuaternaryExpression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the hot scalar kernels (SURVEY.md
@@ -358,49 +358,6 @@ case class FisherPhred(a: Expression, b: Expression, c: Expression, d: Expressio
     copy(a = newFirst, b = newSecond, c = newThird, d = newFourth)
 }
 
-/** sorted_range(arr, lo, hi): the elements of `arr`, a long array sorted
-  * ascending, that lie in [lo, hi). Two binary searches and a copy of the
-  * slice per row, where a `filter` lambda would visit every element. The
-  * genotyper's SNV kernel trims each read's copy of its bin's candidate
-  * sites to the read's span with it, so a bin dense with candidates does
-  * not ride the read shuffle once per read.
-  */
-case class SortedRange(arr: Expression, lo: Expression, hi: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def first: Expression = arr
-  override def second: Expression = lo
-  override def third: Expression = hi
-  override def inputTypes = Seq(ArrayType(LongType), LongType, LongType)
-  override def dataType: DataType = arr.dataType
-  override def nullSafeEval(a: Any, l: Any, h: Any): Any =
-    SortedRange.slice(a.asInstanceOf[ArrayData], l.asInstanceOf[Long], h.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, l, h) => s"graft.functions.SortedRange.slice($a, $l, $h)")
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): SortedRange =
-    copy(arr = newFirst, lo = newSecond, hi = newThird)
-}
-
-object SortedRange {
-  def slice(arr: ArrayData, lo: Long, hi: Long): ArrayData = {
-    val n = arr.numElements()
-    // first index whose element is >= k
-    def lowerBound(k: Long): Int = {
-      var a = 0
-      var b = n
-      while (a < b) {
-        val m = (a + b) >>> 1
-        if (arr.getLong(m) < k) a = m + 1 else b = m
-      }
-      a
-    }
-    val i = lowerBound(lo)
-    val j = math.max(i, lowerBound(hi))
-    if (i == 0 && j == n) arr
-    else UnsafeArrayData.fromPrimitiveArray(Array.tabulate(j - i)(k => arr.getLong(i + k)))
-  }
-}
-
 object NativeExpressions {
 
   def phred_to_error(c: Column): Column =
@@ -433,10 +390,6 @@ object NativeExpressions {
     ColumnBridge.column(FisherPhred(
       ColumnBridge.expression(a), ColumnBridge.expression(b),
       ColumnBridge.expression(c), ColumnBridge.expression(d)))
-
-  def sorted_range(arr: Column, lo: Column, hi: Column): Column =
-    ColumnBridge.column(SortedRange(ColumnBridge.expression(arr),
-      ColumnBridge.expression(lo), ColumnBridge.expression(hi)))
 
   /** Register for SQL use: SELECT phred_to_error(q) ... */
   def register(spark: SparkSession): Unit = {

@@ -9,49 +9,45 @@ import org.apache.spark.sql.functions._
   * and emit genotype calls (the reference's flagship pipeline,
   * BiallelicGenotyper.scala:88-556, re-expressed Spark-first).
   *
-  * Plan shape of the default `call` (no gVCF): three shuffles and three
-  * broadcasts, checked against the formatted g2 plan. The candidates
-  * always broadcast, as the reference's J1 (TreeRegionJoin's broadcast
-  * interval tree) requires.
-  *   SNVs: reads ⨝ site bins     Observer.snvObservations. Shuffle 1:
-  *                               the site-bin table's groupBy(contig,
-  *                               bin) + collect_list; broadcast 1: that
-  *                               table, joined to reads keyed to their
-  *                               (contig, 1000 bp bin). Shuffle 2: the
-  *                               read shuffle, repartition on (contig,
-  *                               bin) — only reads in a candidate bin —
-  *                               then one compression pass per bin
-  *   indels: reads ⨝ variants    Observer.indelObservations: bin-bucketed
-  *                               interval join (J1/J2); broadcast 2: the
-  *                               indel candidates. No shuffle: the
-  *                               Observer.observe kernel runs on each
-  *                               (read, candidate) row
-  *   ⨝ broadcast(score table)    broadcast 3: hash join (J3) on one
-  *                               packed int key — replaces per-row
-  *                               log/exp with a lookup
-  *   groupBy(site, sample).agg   shuffle 3 (A3): partial+final hash agg
-  *                               keyed (site, sample, copyNumber), ~40
-  *                               flat columns
+  * Plan shape of the default `call` (no gVCF): constructing it runs one
+  * job, the collect of the candidates, as the reference's J1
+  * (TreeRegionJoin.scala:43-50) also collects them. After it the
+  * plan scans the reads once and has one shuffle and one broadcast
+  * exchange, checked by `PlanSpec`:
+  *   MapPartitions (reads)       Observer.observations: each read finds
+  *                               its candidates by binary search in the
+  *                               broadcast per-contig arrays (a Spark
+  *                               broadcast variable, not an exchange) and
+  *                               is parsed once. SNV rows compress per
+  *                               partition; indel rows have weight 1
+  *   ⨝ broadcast(score table)    the one broadcast exchange: hash join
+  *                               (J3) on one packed int key — replaces
+  *                               per-row log/exp with a lookup
+  *   groupBy(site, sample).agg   the one shuffle (A3): partial+final hash
+  *                               agg keyed (site, sample, copyNumber),
+  *                               ~40 flat columns; the partial agg runs in
+  *                               the read stage
   *   per-row emission exprs      narrow (argmax, GQ, Fisher, RMS)
-  * gVCF mode (scoreAllSites) observes every position instead: the full
-  * compressed pileup, left-joined to the broadcast SNV candidates (a
-  * matched row is an SNV observation, an unmatched one a non-ref
-  * observation), then anti-joined against the broadcast candidate
-  * positions to drop the non-ref rows under indel candidates.
+  * gVCF mode (scoreAllSites) observes every position instead: the
+  * compressed pileup (reads shuffled on (contig, bin), then compressed
+  * per bin), left-joined to the broadcast SNV candidates (a matched row is an SNV observation, an unmatched one a
+  * non-ref observation), then anti-joined against the broadcast
+  * candidate positions to drop the non-ref rows under indel candidates;
+  * its indel rows come from the same one-pass observer.
   *
-  * One bin width, 1000 bp, serves the SNV kernel, the gVCF pileup and,
-  * at `call`'s default `binSize`, the indel interval join; the CLI runs
-  * no sizing job.
+  * `binSize` stays in the signatures for their callers and is unused: the
+  * observer needs no bin width, and its SNV groups and the gVCF pileup
+  * bin at a fixed 1000 bp.
   */
 object BiallelicGenotyper {
 
   /** The metadata-validated entry point (P4; reference
     * BiallelicGenotyper.scala:99-105): require a single sample and
     * compatible sequence dictionaries BEFORE planning the join, then
-    * [[call]]. This variant runs two small driver-side aggregations, so
-    * it is separate from the pure plan constructor `call` — use it at
-    * pipeline boundaries, not inside loops. The CLI calls `call`
-    * directly and skips these two jobs.
+    * [[call]]. This variant runs two small aggregation jobs on top of
+    * the candidate collect `call` runs — use it at pipeline
+    * boundaries, not inside loops. The CLI calls `call` directly and
+    * skips these two jobs.
     */
   def callValidated(
       reads: Dataset[Read],
@@ -68,13 +64,11 @@ object BiallelicGenotyper {
       scoreAllSites = scoreAllSites)
   }
 
-  /** A bin width for the indel interval join sized from the data:
-    * ~`targetReadsPerBin` reads per (contig, bin), from one sampling job
-    * over `fraction` of the reads, clamped to [2x mean read span,
-    * 10 Mbp]. No CLI path calls it: the candidates broadcast, so a bin's
-    * reads are never shuffled together and the width does not depend on
-    * coverage. It stays for perfbench's traced call chain, which still
-    * times it and passes its width to [[call]].
+  /** A bin width sized from the data: ~`targetReadsPerBin` reads per
+    * (contig, bin), from one sampling job over `fraction` of the reads,
+    * clamped to [2x mean read span, 10 Mbp]. No CLI path calls it, and
+    * [[call]] ignores the width. It stays for perfbench's traced call
+    * chain, which still times it and passes its width to [[call]].
     */
   def chooseBinSize(
       reads: Dataset[Read],
@@ -105,7 +99,8 @@ object BiallelicGenotyper {
     * `copyNumbers` switches on variable-ploidy calling: each site's state
     * space follows the CNV map's local copy number (SURVEY.md A8/J5
     * integration — the reference threads copyNumber through the
-    * observation key the same way).
+    * observation key the same way). Construction collects the candidates
+    * (one job); `binSize` is unused.
     */
   def call(
       reads: Dataset[Read],
@@ -117,12 +112,12 @@ object BiallelicGenotyper {
       copyNumbers: Option[CopyNumberMap.Built] = None,
       scoreAllSites: Boolean = false): DataFrame =
     callImpl(reads, variants.toDF, perSample = false, ploidy, maxQual, maxMapQ,
-      binSize, copyNumbers, scoreAllSites)
+      copyNumbers, scoreAllSites)
 
   /** Multi-sample calling in ONE pass: `variants` carries a `sampleId`
     * column and each sample is scored ONLY against its own variant set —
-    * sampleId joins the SNV equi-join, the indel interval join, and the
-    * gVCF non-ref anti-join, and the wide agg already groups by sample.
+    * sampleId keys the observer's candidate lookup and the gVCF joins,
+    * and the wide agg already groups by sample.
     * Semantically identical to looping `call` over per-sample read
     * filters (the reference's per-sample invocation,
     * BiallelicGenotyper.scala:99-105 — its single-sample gate becomes
@@ -142,7 +137,7 @@ object BiallelicGenotyper {
     require(variants.columns.contains("sampleId"),
       "callPerSample: variants must carry a sampleId column (use DiscoverVariants.discoverPerSample)")
     callImpl(reads, variants, perSample = true, ploidy, maxQual, maxMapQ,
-      binSize, copyNumbers, scoreAllSites)
+      copyNumbers, scoreAllSites)
   }
 
   private def callImpl(
@@ -152,7 +147,6 @@ object BiallelicGenotyper {
       ploidy: Int,
       maxQual: Int,
       maxMapQ: Int,
-      binSize: Double,
       copyNumbers: Option[CopyNumberMap.Built],
       scoreAllSites: Boolean): DataFrame = {
 
@@ -163,38 +157,15 @@ object BiallelicGenotyper {
       .map(m => (m.minPloidy to m.maxPloidy) :+ m.basePloidy)
       .getOrElse(Seq(ploidy)).distinct
 
-    // -- split candidate variants: SNVs are observed at their own sites
-    // by one kernel; indels need the alignment-aware object kernel.
-    // No persist and no driver-side action here: call() must stay a pure
-    // plan constructor (a limit(1).count() probe would launch a Spark job
-    // on every call and the persist it guarded was never unpersisted — a
-    // cache leak in long-lived sessions). The indel branch is always
-    // unioned in; when no indel candidates exist it scans an empty
-    // filtered side, which AQE collapses at runtime.
+    // -- observations (K6/K8): one narrow pass over the reads, which
+    // collects the candidates once (the one job `call` runs) and scores
+    // no read twice. SNVs are observed at their own sites and compress
+    // map-side to weighted rows (avocado's Observer; the reference's
+    // SummarizedObservation insight, SummarizedObservation.scala:37-43 —
+    // the discrete observation key has tiny cardinality); indels run the
+    // alignment-aware kernel with nullOut ambiguity handling.
     val isSnv = col("alternateAllele").isNotNull &&
       length(col("referenceAllele")) === 1 && length(col("alternateAllele")) === 1
-    def renamed(df: DataFrame) = df.select(
-      Seq(
-        col("contigName").as("v_contig"),
-        col("start").as("v_start"),
-        col("referenceAllele").as("v_ref"),
-        col("alternateAllele").as("v_alt")) ++
-        (if (perSample) Seq(col("sampleId").as("v_sample")) else Nil): _*)
-    val vdf = renamed(variantsDf)
-    val snvV = renamed(variantsDf.where(isSnv))
-
-    // -- SNV path: weighted observations at the candidate sites only
-    // (avocado's Observer; the reference's SummarizedObservation insight,
-    // SummarizedObservation.scala:37-43 — the discrete observation key
-    // has tiny cardinality, so a site's reads compress to a few weighted
-    // rows). gVCF mode takes its SNV observations from the pileup it
-    // builds anyway (below).
-    lazy val siteObs = Observer.snvObservations(reads, variantsDf.where(isSnv), perSample)
-
-    // -- indel path (K6/K8), with nullOut ambiguity handling. Always
-    // unioned in: with no indel candidates the join side is an empty
-    // filter (near-zero cost under AQE), which keeps call() action-free.
-    val indelObs = Observer.indelObservations(reads, variantsDf.where(!isSnv), perSample, binSize)
 
     // -- gVCF non-ref model (P10/§2 gVCF; reference DiscoveredVariant
     // .scala:81 alternateAllele=None + ScoredObservation nonRef arrays):
@@ -207,10 +178,19 @@ object BiallelicGenotyper {
     // candidates classifies matched rows as SNV observations and leaves
     // the rest as non-ref rows; an anti-join on the (tiny, broadcast)
     // candidate-position set, whose null-alternate condition lets the SNV
-    // rows through, drops the non-ref rows under indel candidates.
-    val snvObs =
-      if (!scoreAllSites) siteObs
+    // rows through, drops the non-ref rows under indel candidates. The
+    // indel rows come from the one-pass observer.
+    val obs =
+      if (!scoreAllSites) Observer.observations(reads, variantsDf, perSample)
       else {
+        def renamed(df: DataFrame) = df.select(
+          Seq(
+            col("contigName").as("v_contig"),
+            col("start").as("v_start"),
+            col("referenceAllele").as("v_ref"),
+            col("alternateAllele").as("v_alt")) ++
+            (if (perSample) Seq(col("sampleId").as("v_sample")) else Nil): _*)
+        val snvV = renamed(variantsDf.where(isSnv))
         val pileup = Observer.compressedPileup(reads)
         val snvCond = {
           val base = pileup("contigName") === snvV("v_contig") && pileup("pos") === snvV("v_start")
@@ -231,7 +211,7 @@ object BiallelicGenotyper {
               .when(col("base") === col("v_ref"), Observer.SupportRef)
               .otherwise(Observer.SupportOther).as("support"),
             col("forwardStrand"), col("qual"), col("mapq"), col("w"))
-        val vPos = vdf.select(
+        val vPos = renamed(variantsDf).select(
           Seq(col("v_contig"), col("v_start")) ++
             (if (perSample) Seq(col("v_sample")) else Nil): _*).distinct()
         val antiCond = {
@@ -240,8 +220,8 @@ object BiallelicGenotyper {
           if (perSample) base && pileupObs("sampleId") === col("v_sample") else base
         }
         pileupObs.join(broadcast(vPos), antiCond, "left_anti")
+          .unionByName(Observer.observations(reads, variantsDf.where(!isSnv), perSample))
       }
-    val obs = snvObs.unionByName(indelObs)
 
     // -- score attachment (S9 + J3): clamp quals to the domain, take the
     // per-site copy number from the broadcast CNV map (or flat ploidy),
@@ -253,16 +233,15 @@ object BiallelicGenotyper {
     // ε = 1 and poison a whole genotype state with log 0 = -Inf); the
     // NoQual sentinel (deletion observations, mapQ-only model) passes
     // through; mapq to [1, maxMapQ] for the same -Inf reason.
-    val clamped = obs
-      .withColumn("copyNumber", cnCol)
-      .withColumn("qual",
-        when(col("qual") < 0, lit(graft.kernels.Likelihood.NoQual))
-          .otherwise(greatest(least(col("qual"), lit(maxQual)), lit(1))))
-      .withColumn("mapq", greatest(least(col("mapq"), lit(maxMapQ)), lit(1)))
+    val qual = when(col("qual") < 0, lit(graft.kernels.Likelihood.NoQual))
+      .otherwise(greatest(least(col("qual"), lit(maxQual)), lit(1)))
+    val mapq = greatest(least(col("mapq"), lit(maxMapQ)), lit(1))
     val scores = ScoreTable.buildForCopyNumbers(spark, cnValues, maxP, maxQual, maxMapQ)
-    val keyed = clamped
-      .withColumn("scoreKey",
-        ScoreTable.key(col("copyNumber"), col("qual"), col("mapq"), maxP, maxQual, maxMapQ))
+    val keyed = obs
+      .select(col("contigName"), col("start"), col("referenceAllele"), col("alternateAllele"),
+        col("sampleId"), col("support"), col("forwardStrand"), qual.as("qual"), mapq.as("mapq"),
+        col("w"), cnCol.as("copyNumber"),
+        ScoreTable.key(cnCol, qual, mapq, maxP, maxQual, maxMapQ).as("scoreKey"))
       .join(broadcast(scores), "scoreKey")
 
     // -- per-row per-state contribution (weighted by the compressed
@@ -308,36 +287,37 @@ object BiallelicGenotyper {
     val glArr = slice(
       array(states.map(g => col(s"gl_$g")): _*), lit(1), col("copyNumber") + 1)
     val sorted = reverse(array_sort(glArr))
-    aggd
-      .withColumn("genotypeLikelihoods", glArr)
-      .withColumn("genotypeState",
-        (array_position(col("genotypeLikelihoods"), element_at(sorted, 1)) - 1).cast("int"))
-      .withColumn("genotypeQuality",
-        round(lit(10.0 / math.log(10.0)) * (element_at(sorted, 1) - element_at(sorted, 2)), 3))
-      .withColumn("alleles",
-        concat(
-          array_repeat(lit("REF"), col("copyNumber") - col("genotypeState")),
-          array_repeat(lit("ALT"), col("genotypeState"))))
-      // K10 as a codegen'd Expression (same LogMath kernel the former
-      // per-row UDF wrapped — bit-identical, but inlined in whole-stage
-      // codegen instead of crossing a UDF serialization boundary)
-      .withColumn("strandBiasPhred",
-        round(graft.functions.NativeExpressions.fisher_phred(
-          col("altFwd"), col("altRev"), col("otherFwd"), col("otherRev")), 3))
-      .withColumn("rmsMapQ", round(sqrt(col("sumSqMapQ") / col("readDepth")), 3))
-      // richer genotype schema (reference BiallelicGenotyper.scala
-      // :699-747): strand-bias 2x2 components in the reference's order
-      // [otherFwd, otherRev, altFwd, altRev], the symbolic non-ref
-      // likelihood array (sliced like gl), and the nested annotations
-      // struct downstream VCF tooling reads
-      .withColumn("strandBiasComponents",
-        array(col("otherFwd"), col("otherRev"), col("altFwd"), col("altRev")))
-      .withColumn("nonReferenceLikelihoods",
-        slice(array(states.map(g => col(s"nr_ll_$g")): _*), lit(1), col("copyNumber") + 1))
-      .withColumn("variantCallingAnnotations",
-        struct(col("rmsMapQ"), col("strandBiasPhred").as("fisherStrandBiasPValue")))
-      .withColumn("end", col("start") + greatest(length(col("referenceAllele")), lit(1)))
-      .drop((Seq("altFwd", "altRev", "otherFwd", "otherRev", "sumSqMapQ") ++
-        states.map(g => s"nr_ll_$g")): _*)
+    val state = (array_position(glArr, element_at(sorted, 1)) - 1).cast("int")
+    val rmsMapQ = round(sqrt(col("sumSqMapQ") / col("readDepth")), 3)
+    // K10 as a codegen'd Expression (same LogMath kernel the former
+    // per-row UDF wrapped — bit-identical, but inlined in whole-stage
+    // codegen instead of crossing a UDF serialization boundary)
+    val strandBias = round(graft.functions.NativeExpressions.fisher_phred(
+      col("altFwd"), col("altRev"), col("otherFwd"), col("otherRev")), 3)
+    aggd.select(
+      (Seq("contigName", "start", "referenceAllele", "alternateAllele", "sampleId", "copyNumber") ++
+        states.map(g => s"gl_$g") ++
+        Seq("readDepth", "referenceReadDepth", "alternateReadDepth", "otherReadDepth")).map(col) ++
+        Seq(
+          glArr.as("genotypeLikelihoods"),
+          state.as("genotypeState"),
+          round(lit(10.0 / math.log(10.0)) * (element_at(sorted, 1) - element_at(sorted, 2)), 3)
+            .as("genotypeQuality"),
+          concat(array_repeat(lit("REF"), col("copyNumber") - state), array_repeat(lit("ALT"), state))
+            .as("alleles"),
+          strandBias.as("strandBiasPhred"),
+          rmsMapQ.as("rmsMapQ"),
+          // richer genotype schema (reference BiallelicGenotyper.scala
+          // :699-747): strand-bias 2x2 components in the reference's
+          // order [otherFwd, otherRev, altFwd, altRev], the symbolic
+          // non-ref likelihood array (sliced like gl), and the nested
+          // annotations struct downstream VCF tooling reads
+          array(col("otherFwd"), col("otherRev"), col("altFwd"), col("altRev"))
+            .as("strandBiasComponents"),
+          slice(array(states.map(g => col(s"nr_ll_$g")): _*), lit(1), col("copyNumber") + 1)
+            .as("nonReferenceLikelihoods"),
+          struct(rmsMapQ.as("rmsMapQ"), strandBias.as("fisherStrandBiasPValue"))
+            .as("variantCallingAnnotations"),
+          (col("start") + greatest(length(col("referenceAllele")), lit(1))).as("end")): _*)
   }
 }

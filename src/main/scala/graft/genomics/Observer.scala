@@ -1,8 +1,10 @@
 package graft.genomics
 
-import graft.kernels.{AlignmentOps, AlnClip, AlnDel, AlnIns, Likelihood}
+import graft.kernels.{AlignmentOps, AlnClip, AlnDel, AlnIns, AlnOp, Likelihood}
 import graft.model.{DiscoveredVariant, Read}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
+import scala.collection.mutable
 import scala.util.Try
 
 /** One read's evidence at one candidate variant site (the flattened,
@@ -28,6 +30,12 @@ case class SiteObservation(
   * indels by whether the read's own extracted variants contain the
   * candidate, with reference support requiring an intact match across the
   * deleted/anchor span.
+  *
+  * Two Spark entry points feed the genotyper. [[observations]] is the
+  * default call's one narrow pass: broadcast candidates, each read parsed
+  * once, SNV rows compressed per read partition. [[compressedPileup]] is
+  * gVCF mode's weighted pileup of every aligned base, compressed per
+  * (contig, bin) after a read shuffle.
   */
 object Observer {
 
@@ -53,8 +61,7 @@ object Observer {
       indelAnchors: Set[Long], // reference positions adjacent to an indel
       clipBoundaries: Set[Long]) // aligned positions where a soft clip abuts
 
-  private def walk(read: Read): SitePileup = {
-    val ops = AlignmentOps.parseRead(read.cigar, read.mdTag, read.sequence, read.qual)
+  private def walk(read: Read, ops: Seq[AlnOp]): SitePileup = {
     val bases = Map.newBuilder[Long, (Char, Int)]
     val refs = Map.newBuilder[Long, Char]
     val anchors = Set.newBuilder[Long]
@@ -105,61 +112,13 @@ object Observer {
       sampleId: String,
       w: Long)
 
-  /** Width of the (contig, position bin)s the read shuffles key by. */
+  /** Width of the (contig, position bin)s observations are grouped by. */
   private final val BinSize = 1000L
-
-  /** Reads keyed to the (contig, position bin)s their pileup feeds, for
-    * the bin shuffles of [[compressedPileup]] and [[snvObservations]], as
-    * (contig, bin, read, end of the read's span). The span comes from the
-    * CIGAR itself (what the walks actually emit), not the record's end
-    * field — an inconsistent end would clamp bases out of every bin and
-    * silently lose depth. A read crossing a bin border is replicated to
-    * every bin it touches; each bin emits only the positions it owns, so
-    * nothing double-counts.
-    */
-  private def binnedReads(
-      reads: org.apache.spark.sql.Dataset[Read]): org.apache.spark.sql.Dataset[(String, Long, Read, Long)] = {
-    import reads.sparkSession.implicits._
-    reads.flatMap { r =>
-      val refLen = Try(AlignmentOps.cigarRefLength(r.cigar)).getOrElse(0L)
-      val last = math.max(r.start, math.max(r.end - 1, r.start + refLen - 1))
-      (r.start / BinSize to last / BinSize).map(b => (r.contigName, b, r, last + 1))
-    }
-  }
-
-  /** Weighted pileup of every aligned base: flatMap([[basePileup]])
-    * .groupBy(every column).count by construction, without a per-base
-    * shuffle. Reads keyed by [[binnedReads]] go through [[compressBins]];
-    * each aligned base in the bin becomes one packed [[SiteKey]] (ref =
-    * the aligned reference base, alt = the read's base, support 0), and
-    * strings are built only for the emitted rows. It serves the
-    * genotyper's gVCF mode, which observes every position; the default
-    * call observes SNV candidates with [[snvObservations]], which never
-    * builds this table.
-    */
-  def compressedPileup(reads: org.apache.spark.sql.Dataset[Read]): org.apache.spark.sql.DataFrame = {
-    import reads.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, lit}
-    compressBins(binnedReads(reads)
-      .select(col("_1"), col("_2"), col("_3"), lit(null).cast("array<bigint>").as("sites"))) {
-      (r, bin, _, add) =>
-        Try(AlignmentOps.parseRead(r.cigar, r.mdTag, r.sequence, r.qual)).foreach { ops =>
-          val lo = bin * BinSize
-          AlignmentOps.foreachAlignedBase(r.start, r.sequence, ops) { (pos, idx, ref) =>
-            if (pos >= lo && pos < lo + BinSize)
-              add(SiteKey(pos - lo, ref, r.sequence.charAt(idx), SupportOther,
-                AlignmentOps.phred(r.qual, idx)))
-          }
-        }
-    } { (g, k, w) =>
-      WeightedBaseObs(g.contigName, g.bin * BinSize + SiteKey.offset(k), SiteKey.alt(k).toString,
-        SiteKey.ref(k).toString, SiteKey.qual(k), g.forwardStrand, g.mapq, g.sampleId, w)
-    }.toDF()
-  }
 
   /** One SNV candidate packed into a long: position in the high 32 bits,
     * then the reference and alternate base, 16 bits each. Longs sort by
-    * position first, and a bin's site list ships as one primitive array.
+    * position first, so a contig's sites ship as one sorted primitive
+    * array.
     */
   object SnvSite {
     def apply(pos: Long, ref: String, alt: String): Long = {
@@ -187,7 +146,7 @@ object Observer {
       w: Long)
 
   /** The per-read part of an observation key: one hash map of packed
-    * per-site keys per group, looked up once per read.
+    * per-site keys per group, looked up once per read and bin.
     */
   private case class ReadGroup(
       contigName: String, sampleId: String, forwardStrand: Boolean, mapq: Int, bin: Long)
@@ -213,133 +172,201 @@ object Observer {
     def qual(k: Long): Int = (k & 0xFFFF).toInt - 33
   }
 
-  /** The one per-bin compressor, behind [[compressedPileup]] and
-    * [[snvObservations]]. `binned` holds reads keyed to their (contig
-    * `_1`, bin `_2`), the read `_3` and a `sites` array; one shuffle puts
-    * each (contig, bin) in one partition (a fixed partition count: AQE
-    * would coalesce this small input into a few long per-read tasks).
-    * Each partition counts the [[SiteKey]]s `keys(read, bin, sites, add)`
-    * adds, one map per (contig, sample, strand, mapq, bin), and emits
-    * `row(group, key, weight)` sorted by group, then key: a bin's rows
-    * and their order do not depend on how the input was partitioned.
+  /** The one compressor: integer weights of packed [[SiteKey]]s, one map
+    * per [[ReadGroup]]. [[rows]] emits `row(group, key, weight)` sorted by
+    * group, then key, so the rows and their order depend only on what
+    * was added, not on the order it arrived in.
     */
-  private def compressBins[T: org.apache.spark.sql.Encoder](binned: org.apache.spark.sql.DataFrame)(
-      keys: (Read, Long, Array[Long], Long => Unit) => Unit)(
-      row: (ReadGroup, Long, Long) => T): org.apache.spark.sql.Dataset[T] = {
-    val spark = binned.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    binned
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("_1"), col("_2"))
-      .select(col("_2"), col("sites"), col("_3"))
-      .as[(Long, Array[Long], Read)]
-      .mapPartitions { it =>
-        val groups = scala.collection.mutable.HashMap.empty[ReadGroup,
-          scala.collection.mutable.LongMap[Array[Long]]]
-        it.foreach { case (bin, sites, r) =>
-          val counts = groups.getOrElseUpdate(
-            ReadGroup(r.contigName, r.sampleId, !r.readNegativeStrand, r.mapq, bin),
-            scala.collection.mutable.LongMap.empty[Array[Long]])
-          keys(r, bin, sites, k => counts.getOrElseUpdate(k, new Array[Long](1))(0) += 1)
-        }
-        groups.toArray.sortBy(_._1)(readGroupOrder).iterator.flatMap { case (g, counts) =>
-          counts.keys.toArray.sorted.iterator.map(k => row(g, k, counts(k)(0)))
-        }
+  private final class Compressor {
+    private val groups = mutable.HashMap.empty[ReadGroup,
+      mutable.LongMap[Array[Long]]]
+    def counts(g: ReadGroup): mutable.LongMap[Array[Long]] =
+      groups.getOrElseUpdate(g, mutable.LongMap.empty[Array[Long]])
+    def rows[T](row: (ReadGroup, Long, Long) => T): Iterator[T] =
+      groups.toArray.sortBy(_._1)(readGroupOrder).iterator.flatMap { case (g, counts) =>
+        counts.keys.toArray.sorted.iterator.map(k => row(g, k, counts(k)(0)))
       }
   }
 
-  /** Weighted observations of `reads` at the SNV candidates `snvs`
-    * (contigName, start, referenceAllele, alternateAllele, plus sampleId
-    * when `perSample`): the pileup restricted to candidate sites, without
-    * building the pileup of every base.
-    *
-    * The candidates become a site-bin table, one row per (contig, bin)
-    * (and sample) holding that bin's sites. Reads keyed by
-    * [[binnedReads]] meet it in a broadcast join BEFORE the read shuffle
-    * of [[compressBins]] and keep only the sites inside their own span,
-    * so a read that covers no candidate never shuffles and a read carries
-    * a handful of sites however dense its bin is. Support (alt, else ref,
-    * else other) is classified by [[observeSnvs]]. A bin holds only the
-    * sites it owns, so a read replicated across a border observes each
-    * site once.
+  private def add(counts: mutable.LongMap[Array[Long]], key: Long, w: Long): Unit =
+    counts.getOrElseUpdate(key, new Array[Long](1))(0) += w
+
+  /** Counts one read's evidence, position by position, into the group
+    * `counts` returns for the read and the position's bin; the group is
+    * looked up once per bin the read touches.
     */
-  def snvObservations(
-      reads: org.apache.spark.sql.Dataset[Read],
-      snvs: org.apache.spark.sql.DataFrame,
-      perSample: Boolean): org.apache.spark.sql.DataFrame = {
+  private final class ReadCounts(r: Read, counts: ReadGroup => mutable.LongMap[Array[Long]]) {
+    private var bin = Long.MinValue
+    private var current: mutable.LongMap[Array[Long]] = null
+    def add(pos: Long, ref: Char, alt: Char, support: Int, qual: Int): Unit = {
+      if (pos / BinSize != bin) {
+        bin = pos / BinSize
+        current = counts(ReadGroup(r.contigName, r.sampleId, !r.readNegativeStrand, r.mapq, bin))
+      }
+      Observer.add(current, SiteKey(pos - bin * BinSize, ref, alt, support, qual), 1L)
+    }
+  }
+
+  /** Weighted pileup of every aligned base: flatMap([[basePileup]])
+    * .groupBy(every column).count by construction, without a per-base
+    * shuffle. Reads are keyed to every 1000 bp (contig, bin) their span
+    * touches (the span from the CIGAR itself, what the walk emits, not
+    * the record's end field) and shuffled on it, so each bin's reads
+    * meet in one partition (a fixed partition count: AQE would coalesce
+    * this small input into a few long per-read tasks). Each partition
+    * counts its bins' aligned bases as packed [[SiteKey]]s (ref = the
+    * aligned reference base, alt = the read's base, support 0), a read
+    * across a border adding in each bin only the positions it owns, and
+    * builds strings only for the rows it emits, sorted by group and key.
+    * It serves the genotyper's gVCF mode, which observes every position;
+    * the default call observes the candidates with [[observations]],
+    * which never builds this table.
+    */
+  def compressedPileup(reads: Dataset[Read]): DataFrame = {
     val spark = reads.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val siteBins = snvs
-      .select(col("contigName"), col("start"), col("referenceAllele"), col("alternateAllele"),
-        (if (perSample) col("sampleId") else lit(null).cast("string")))
-      .as[(String, Long, String, String, String)]
-      .map { case (contig, pos, ref, alt, sample) =>
-        (contig, pos / BinSize, sample, SnvSite(pos, ref, alt))
+    import org.apache.spark.sql.functions.col
+    reads
+      .flatMap { r =>
+        val refLen = Try(AlignmentOps.cigarRefLength(r.cigar)).getOrElse(0L)
+        val last = math.max(r.start, math.max(r.end - 1, r.start + refLen - 1))
+        (r.start / BinSize to last / BinSize).map(b => (r.contigName, b, r))
       }
-      .toDF("site_contig", "site_bin", "site_sample", "site")
-      .groupBy(Seq(col("site_contig"), col("site_bin")) ++
-        (if (perSample) Seq(col("site_sample")) else Nil): _*)
-      .agg(array_sort(collect_list(col("site"))).as("sites"))
-    val cond = {
-      val base = col("_1") === col("site_contig") && col("_2") === col("site_bin")
-      if (perSample) base && col("_3.sampleId") === col("site_sample") else base
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("_1"), col("_2"))
+      .mapPartitions { it =>
+        val pileup = new Compressor
+        it.foreach { case (_, bin, r) =>
+          Try(AlignmentOps.parseRead(r.cigar, r.mdTag, r.sequence, r.qual)).foreach { ops =>
+            val counts = new ReadCounts(r, pileup.counts)
+            val lo = bin * BinSize
+            AlignmentOps.foreachAlignedBase(r.start, r.sequence, ops) { (pos, idx, ref) =>
+              if (pos >= lo && pos < lo + BinSize)
+                counts.add(pos, ref, r.sequence.charAt(idx), SupportOther, AlignmentOps.phred(r.qual, idx))
+            }
+          }
+        }
+        pileup.rows { (g, k, w) =>
+          WeightedBaseObs(g.contigName, g.bin * BinSize + SiteKey.offset(k), SiteKey.alt(k).toString,
+            SiteKey.ref(k).toString, SiteKey.qual(k), g.forwardStrand, g.mapq, g.sampleId, w)
+        }
+      }
+      .toDF()
+  }
+
+  /** The candidates of one contig (and sample): the SNVs as sorted
+    * [[SnvSite]]s, the other candidates sorted by start with their
+    * alleles, and the widest reference span among them, which bounds how
+    * far before a read an overlapping candidate can start.
+    */
+  private case class ContigCandidates(
+      snvs: Array[Long],
+      indelStarts: Array[Long],
+      indelRefs: Array[String],
+      indelAlts: Array[String],
+      indelSpan: Long)
+
+  /** Candidates by (contig, sample; null when not per sample). A
+    * candidate with a null contig, reference allele or (per sample)
+    * sample matches no read, as in an equi-join.
+    */
+  private def candidateTable(rows: Array[(String, Long, String, String, String)], perSample: Boolean)
+      : Map[(String, String), ContigCandidates] =
+    rows.filter(r => r._1 != null && r._3 != null && (r._5 != null || !perSample))
+      .groupBy(r => (r._1, r._5)).map { case (key, vs) =>
+        val (snvs, indels) = vs.partition(v => v._4 != null && v._3.length == 1 && v._4.length == 1)
+        val byStart = indels.sortBy(_._2)
+        key -> ContigCandidates(snvs.map(v => SnvSite(v._2, v._3, v._4)).sorted,
+          byStart.map(_._2), byStart.map(_._3), byStart.map(_._4),
+          byStart.map(v => math.max(v._3.length, 1).toLong).maxOption.getOrElse(0L))
+      }
+
+  /** The first index of the sorted `xs` holding a value >= `x`. */
+  private def lowerBound(xs: Array[Long], x: Long): Int = {
+    var lo = 0
+    var hi = xs.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (xs(mid) < x) lo = mid + 1 else hi = mid
     }
-    compressBins(binnedReads(reads)
-      .join(broadcast(siteBins), cond)
-      .withColumn("sites", graft.functions.NativeExpressions.sorted_range(
-        col("sites"), shiftleft(col("_3.start"), 32), shiftleft(col("_4"), 32)))
-      .where(size(col("sites")) > 0)) { (r, bin, sites, add) =>
-      observeSnvs(r, sites) { (site, support, qual) =>
-        add(SiteKey(SnvSite.pos(site) - bin * BinSize, SnvSite.ref(site), SnvSite.alt(site),
-          support, qual))
+    lo
+  }
+
+  /** Weighted observations of `reads` at the candidate variants
+    * `candidates` (contigName, start, referenceAllele, alternateAllele,
+    * plus sampleId when `perSample`; a read then observes only its own
+    * sample's candidates), in the genotyper's observation schema.
+    *
+    * The reference's broadcast probe (TreeRegionJoin's interval tree,
+    * SURVEY J1) in one narrow pass: the candidates are collected once
+    * (the one job this function runs) and broadcast per (contig[,
+    * sample]) as a sorted [[SnvSite]] array and a start-sorted indel
+    * array. Each read finds its candidates by binary search and is parsed
+    * once, only if it covers one. Its SNV evidence ([[observeSnvs]]: alt,
+    * else ref, else other) is counted in the partition's [[Compressor]],
+    * one group per (contig, sample, strand, mapq, 1000 bp bin), and
+    * emitted after the partition's last read, sorted by group and key; a
+    * read across a bin border counts each site in the bin that owns it.
+    * Its indel evidence ([[observeAt]], the alignment-aware kernel with
+    * nullOut handling) is emitted per (read, candidate), weight 1. A
+    * candidate overlaps a read when its [start, start + max(|ref|, 1))
+    * meets the read's [start, end). No read is shuffled and no
+    * string-keyed table is broadcast; a malformed read observes nothing.
+    */
+  def observations(
+      reads: Dataset[Read],
+      candidates: DataFrame,
+      perSample: Boolean): DataFrame = {
+    val spark = reads.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    val table = spark.sparkContext.broadcast(candidateTable(candidates
+      .select(col("contigName"), col("start"), col("referenceAllele"), col("alternateAllele"),
+        if (perSample) col("sampleId") else lit(null).cast("string"))
+      .as[(String, Long, String, String, String)]
+      .collect(), perSample))
+    reads.mapPartitions { it =>
+      val cands = table.value
+      val snvs = new Compressor
+      it.flatMap { r =>
+        val c = cands.getOrElse((r.contigName, if (perSample) r.sampleId else null), null)
+        if (c == null) Iterator.empty else observeRead(r, c, snvs)
+      } ++ snvs.rows { (g, k, w) =>
+        WeightedObservation(g.contigName, g.bin * BinSize + SiteKey.offset(k),
+          SiteKey.ref(k).toString, SiteKey.alt(k).toString, g.sampleId,
+          SiteKey.support(k), g.forwardStrand, SiteKey.qual(k), g.mapq, w)
       }
-    } { (g, k, w) =>
-      WeightedObservation(g.contigName, g.bin * BinSize + SiteKey.offset(k),
-        SiteKey.ref(k).toString, SiteKey.alt(k).toString, g.sampleId,
-        SiteKey.support(k), g.forwardStrand, SiteKey.qual(k), g.mapq, w)
     }.toDF()
   }
 
-  /** Observations of `reads` at the indel candidates `indels`
-    * (contigName, start, referenceAllele, alternateAllele, plus sampleId
-    * when `perSample`), each of weight 1: the bin-bucketed interval join
-    * (J1/J2, `binSize` wide bins) against the broadcast candidates, then
-    * [[observe]] on each (read, candidate) row. `observe` keeps no state
-    * between candidates, so, as in the reference's broadcast probe
-    * (TreeRegionJoin.joinAndGroupByRight), no read is shuffled to gather
-    * its candidates; the join streams reads, so a read's rows arrive
-    * together and it is walked once for all of them. A malformed read
-    * observes nothing.
+  /** One read against its contig's candidates: SNV evidence into
+    * `snvs`, indel observations returned.
     */
-  def indelObservations(
-      reads: org.apache.spark.sql.Dataset[Read],
-      indels: org.apache.spark.sql.DataFrame,
-      perSample: Boolean,
-      binSize: Double): org.apache.spark.sql.DataFrame = {
-    val spark = reads.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val v = indels.select(Seq(col("contigName").as("v_contig"), col("start").as("v_start"),
-      col("referenceAllele").as("v_ref"), col("alternateAllele").as("v_alt"),
-      (col("start") + greatest(length(col("referenceAllele")), lit(1))).as("v_end")) ++
-      (if (perSample) Seq(col("sampleId").as("v_sample")) else Nil): _*)
-    graft.operators.IntervalJoin.overlap(reads.toDF, "start", "end", v, "v_start", "v_end", binSize,
-        keys = Seq("contigName" -> "v_contig") ++
-          (if (perSample) Seq("sampleId" -> "v_sample") else Nil),
-        broadcastRight = true)
-      .select(struct(reads.columns.map(col): _*), col("v_start"), col("v_ref"), col("v_alt"))
-      .as[(Read, Long, String, Option[String])]
-      .mapPartitions { rows =>
-        var last: Read = null
-        var walked: Try[SitePileup] = null
-        rows.flatMap { case (r, start, ref, alt) =>
-          if (r != last) { last = r; walked = Try(walk(r)) }
-          walked.flatMap(p => Try(observeAt(r, p, DiscoveredVariant(r.contigName, start, ref, alt))))
-            .toOption.flatten
-        }
+  private def observeRead(r: Read, c: ContigCandidates, snvs: Compressor): Iterator[WeightedObservation] = {
+    lazy val ops = Try(AlignmentOps.parseRead(r.cigar, r.mdTag, r.sequence, r.qual))
+    val first = lowerBound(c.snvs, r.start << 32)
+    if (first < c.snvs.length &&
+        SnvSite.pos(c.snvs(first)) < r.start + Try(AlignmentOps.cigarRefLength(r.cigar)).getOrElse(0L)) {
+      val counts = new ReadCounts(r, snvs.counts)
+      ops.foreach(snvsOn(r, _, c.snvs, first) { (site, support, qual) =>
+        counts.add(SnvSite.pos(site), SnvSite.ref(site), SnvSite.alt(site), support, qual)
+      })
+    }
+    var i = lowerBound(c.indelStarts, r.start - c.indelSpan + 1)
+    if (i >= c.indelStarts.length || c.indelStarts(i) >= r.end) Iterator.empty
+    else {
+      val out = Seq.newBuilder[WeightedObservation]
+      lazy val walked = ops.flatMap(o => Try(walk(r, o)))
+      while (i < c.indelStarts.length && c.indelStarts(i) < r.end) {
+        val v = DiscoveredVariant(r.contigName, c.indelStarts(i), c.indelRefs(i), Option(c.indelAlts(i)))
+        if (v.end > r.start)
+          walked.flatMap(p => Try(observeAt(r, p, v))).toOption.flatten.foreach { o =>
+            out += WeightedObservation(o.contigName, o.start, o.referenceAllele, o.alternateAllele,
+              o.sampleId, o.support, o.forwardStrand, o.qual, o.mapq, 1L)
+          }
+        i += 1
       }
-      .withColumn("w", lit(1L))
+      out.result().iterator
+    }
   }
 
   /** What one read shows at the SNV candidates `sites` ([[SnvSite]]s,
@@ -348,21 +375,26 @@ object Observer {
     * observes every candidate. A malformed read observes nothing.
     */
   def observeSnvs(read: Read, sites: Array[Long])(emit: (Long, Int, Int) => Unit): Unit =
-    Try(AlignmentOps.parseRead(read.cigar, read.mdTag, read.sequence, read.qual)).foreach { ops =>
-      var i = 0
-      AlignmentOps.foreachAlignedBase(read.start, read.sequence, ops) { (pos, idx, _) =>
-        while (i < sites.length && SnvSite.pos(sites(i)) < pos) i += 1
-        var j = i
-        while (j < sites.length && SnvSite.pos(sites(j)) == pos) {
-          val s = sites(j)
-          val b = read.sequence.charAt(idx)
-          emit(s,
-            if (SnvSite.alt(s) == b) SupportAlt else if (SnvSite.ref(s) == b) SupportRef else SupportOther,
-            AlignmentOps.phred(read.qual, idx))
-          j += 1
-        }
+    Try(AlignmentOps.parseRead(read.cigar, read.mdTag, read.sequence, read.qual))
+      .foreach(snvsOn(read, _, sites, 0)(emit))
+
+  /** [[observeSnvs]] on a parsed read, from `sites(first)` on. */
+  private def snvsOn(read: Read, ops: Seq[AlnOp], sites: Array[Long], first: Int)(
+      emit: (Long, Int, Int) => Unit): Unit = {
+    var i = first
+    AlignmentOps.foreachAlignedBase(read.start, read.sequence, ops) { (pos, idx, _) =>
+      while (i < sites.length && SnvSite.pos(sites(i)) < pos) i += 1
+      var j = i
+      while (j < sites.length && SnvSite.pos(sites(j)) == pos) {
+        val s = sites(j)
+        val b = read.sequence.charAt(idx)
+        emit(s,
+          if (SnvSite.alt(s) == b) SupportAlt else if (SnvSite.ref(s) == b) SupportRef else SupportOther,
+          AlignmentOps.phred(read.qual, idx))
+        j += 1
       }
     }
+  }
 
   /** Explode a read into per-aligned-base pileup rows — runs ONCE per
     * read regardless of how many variants overlap it. Malformed reads
@@ -371,7 +403,7 @@ object Observer {
   def basePileup(read: Read): Seq[BaseObs] =
     Try {
       val ops = AlignmentOps.parseRead(read.cigar, read.mdTag, read.sequence, read.qual)
-      val out = new scala.collection.mutable.ArrayBuffer[BaseObs](read.sequence.length)
+      val out = new mutable.ArrayBuffer[BaseObs](read.sequence.length)
       AlignmentOps.foreachAlignedBase(read.start, read.sequence, ops) { (pos, idx, ref) =>
         val base = read.sequence.substring(idx, idx + 1)
         out += BaseObs(read.contigName, pos, base,
@@ -386,7 +418,7 @@ object Observer {
     */
   def observe(read: Read, variants: Seq[DiscoveredVariant]): Seq[SiteObservation] =
     Try {
-      val p = walk(read)
+      val p = walk(read, AlignmentOps.parseRead(read.cigar, read.mdTag, read.sequence, read.qual))
       variants.flatMap(observeAt(read, p, _))
     }.getOrElse(Nil)
 

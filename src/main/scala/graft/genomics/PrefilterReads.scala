@@ -50,9 +50,11 @@ object PrefilterReads {
     val mateKept = col("mateContigName").isNotNull &&
       keptContig(col("mateContigName"), autosomes, sex, mito)
     kept
-      .withColumn("mateStart", when(mateKept, col("mateStart")))
-      .withColumn("mateMapped", when(mateKept, col("mateMapped")).otherwise(lit(false)))
-      .withColumn("mateContigName", when(mateKept, col("mateContigName")))
+      .select(kept.columns.toSeq.map {
+        case c @ ("mateStart" | "mateContigName") => when(mateKept, col(c)).as(c)
+        case c @ "mateMapped" => when(mateKept, col(c)).otherwise(lit(false)).as(c)
+        case c => col(c)
+      }: _*)
       .as[Read]
   }
 }

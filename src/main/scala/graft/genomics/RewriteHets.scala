@@ -17,15 +17,14 @@ object RewriteHets {
     val p = if (df.columns.contains("copyNumber")) col("copyNumber") else lit(ploidy)
     val isHet = col("genotypeState") > 0 && col("genotypeState") < p
     val af = col("alternateReadDepth").cast("double") / col("readDepth")
-    // materialize the condition BEFORE rewriting genotypeState — later
-    // withColumns must not re-evaluate it against the rewritten state
-    df.withColumn("__rw", isHet && col("readDepth") > 0 && af >= maxHetFraction)
-      .withColumn("genotypeState",
-        when(col("__rw"), p.cast("int")).otherwise(col("genotypeState")))
-      .withColumn("alleles",
-        when(col("__rw"), array_repeat(lit("ALT"), p)).otherwise(col("alleles")))
-      .withColumn("genotypeQuality",
-        when(col("__rw"), lit(null).cast("double")).otherwise(col("genotypeQuality")))
-      .drop("__rw")
+    // one projection: every rewrite reads the input state, so the
+    // alleles and quality rewrites see the call's original genotypeState
+    val rw = isHet && col("readDepth") > 0 && af >= maxHetFraction
+    df.select(df.columns.toSeq.map {
+      case c @ "genotypeState"   => when(rw, p.cast("int")).otherwise(col(c)).as(c)
+      case c @ "alleles"         => when(rw, array_repeat(lit("ALT"), p)).otherwise(col(c)).as(c)
+      case c @ "genotypeQuality" => when(rw, lit(null).cast("double")).otherwise(col(c)).as(c)
+      case c                     => col(c)
+    }: _*)
   }
 }

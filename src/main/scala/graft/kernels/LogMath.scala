@@ -25,27 +25,11 @@ object LogMath {
   def sumLogProbabilities(ls: Array[Double]): Double =
     ls.sortBy(-_).foldLeft(Double.NegativeInfinity)(logSum)
 
-  /** Normalize a log-probability vector so probabilities sum to 1. */
-  def logNormalize(ls: Array[Double]): Array[Double] = {
-    val total = sumLogProbabilities(ls)
-    ls.map(_ - total)
-  }
-
-  /** log(1 - exp(l)) for l = log p, p in (0, 1). */
-  def logAdditiveInverse(l: Double): Double = {
-    if (l.isNegInfinity) 0.0
-    else if (l >= 0.0) Double.NegativeInfinity
-    else math.log1p(-math.exp(l))
-  }
-
   /** Phred scale: log error probability -> phred quality. */
   def logErrorToPhred(l: Double): Double = -10.0 * l / LN10
 
   /** Phred quality -> success probability (1 - 10^(-q/10)). */
   def phredToSuccessProbability(q: Int): Double = 1.0 - math.pow(10.0, -q / 10.0)
-
-  /** Phred quality -> error probability 10^(-q/10). */
-  def phredToErrorProbability(q: Int): Double = math.pow(10.0, -q / 10.0)
 
   // log n! — exact cumulative table for small n, Stirling series beyond.
   private val LogFactCache: Array[Double] = {
@@ -68,10 +52,6 @@ object LogMath {
   /** log binomial coefficient C(n, k). */
   def logChoose(n: Int, k: Int): Double =
     logFactorial(n) - logFactorial(k) - logFactorial(n - k)
-
-  /** log of the binomial pmf: C(n,k) p^k (1-p)^(n-k). */
-  def logBinomial(n: Int, k: Int, p: Double): Double =
-    logChoose(n, k) + k * math.log(p) + (n - k) * math.log1p(-p)
 
   /** Fisher's exact test (two-sided) on a 2x2 table
     * [[a, b], [c, d]], returned phred-scaled (−10·log10 p) — the

@@ -923,12 +923,8 @@ object Queries {
       .discover(reads, minPhred = 20, minObservations = 2)
       .select("contigName", "start", "referenceAllele", "alternateAllele")
       .as[DiscoveredVariant]
-      // NOTE deliberately NOT checkpointed: the genotyper references the
-      // variant frame on the SNV and indel sides, but the duplicate
-      // discovery overlaps with other stages across the 32 local threads
-      // and a checkpoint barrier measured SLOWER (g2 4.8->6s, g4 6->7.5s
-      // at sf0.1). On a cluster where two cohort scans dominate, check-
-      // point here as g6 does.
+      // not checkpointed: `call` collects the candidates once while the
+      // plan is built, so discovery runs once without a barrier
     BiallelicGenotyper.call(reads, variants, ploidy = 2, binSize = 20.0)
       .select(
         col("contigName"), col("start"), col("referenceAllele"), col("alternateAllele"),
@@ -1023,14 +1019,10 @@ object Queries {
       .discover(rds, minPhred = 20, minObservations = 2)
       .select("contigName", "start", "referenceAllele", "alternateAllele")
       .as[DiscoveredVariant]
-      // CHECKPOINTED since r10: the r8 measurement ("checkpoint costs
-      // 6->7.5s, thread-overlap hides the duplicate discovery") held
-      // only in the good scheduling draw — cold g4 is BIMODAL without
-      // it (6.5s when the SNV/indel discovery subtrees overlap, ~12s
-      // when they serialize; five of seven r10 full-suite draws hit the
-      // bad mode). The barrier buys a deterministic ~7s: worse than the
-      // best draw, far better than the expected value — and on a real
-      // cluster two cohort scans dominate anyway (the g6 rationale).
+      // CHECKPOINTED since r10, when the genotyper planned discovery
+      // twice (SNV and indel sides) and cold g4 was bimodal without the
+      // barrier. `call` now collects the candidates once, which reads
+      // the checkpoint; it stays so g4's rows time the same work.
       .localCheckpoint()
     val called = BiallelicGenotyper.call(rds, variants, ploidy = 2, binSize = 20.0)
       .withColumn("end", col("start") + 1)
@@ -1108,16 +1100,8 @@ object Queries {
       .discover(rds, minPhred = 20, minObservations = 2)
       .select("contigName", "start", "referenceAllele", "alternateAllele")
       .as[DiscoveredVariant]
-      // NOTE deliberately NOT checkpointed: the genotyper references the
-      // variant frame on the SNV and indel sides, but the duplicate
-      // discovery overlaps with other stages across the 32 local threads
-      // and a checkpoint barrier measured SLOWER (g2 4.8->6s, g4 6->7.5s
-      // at sf0.1; re-measured r17: warm 6.0-8.3s plain vs 7.0-8.7s
-      // checkpointed, cold 16s vs 17-22s — three fresh JVMs each;
-      // re-measured r18 AFTER the full-width synthesis fix, 3 reps:
-      // g2 warm ~4.3s plain vs 5.5-5.8s checkpointed, g5 ~4.5 vs
-      // 5.1-5.9 — the barrier still loses locally). On a cluster where
-      // two cohort scans dominate, checkpoint as g6 does.
+      // not checkpointed: `call` collects the candidates once while the
+      // plan is built, so discovery runs once without a barrier
     val called = BiallelicGenotyper.call(rds, variants, ploidy = 2, binSize = 20.0)
     graft.genomics.TrioCaller(called, "sN", "sA", "sR")
       .select(

@@ -79,24 +79,25 @@ class PlanSpec extends SparkSpec {
     // pileup is joined to the candidates either
     assert(!plan.contains("refBase"), plan)
     val joins = plan.linesIterator.filter(_.contains("Join")).toSeq
-    // reads meet the (contig, bin) site table in a broadcast join
-    assert(joins.exists(l => l.contains("BroadcastHashJoin") && l.contains("site_bin")), plan)
+    // reads meet the candidates in the observer's own pass, never in a join
+    assert(joins.forall(l => !l.contains("site_") && !l.contains("v_start")), plan)
     // the score table joins on one int key (a LongHashedRelation)
     assert(joins.exists(l => l.contains("BroadcastHashJoin") &&
       """\[scoreKey#\d+\], \[scoreKey#\d+\]""".r.findFirstIn(l).isDefined), plan)
   }
 
+  /** Every node of a physical plan, through the adaptive wrapper. */
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] =
+    p +: (p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+
   /** Aggregates grouped on a whole read (a struct with Read's fields). */
   private def readKeyedAggregates(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.types.StructType
     val readFields = org.apache.spark.sql.Encoders.product[graft.model.Read].schema.fieldNames.toSeq
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case _ => p.children.flatMap(nodes)
-    })
     nodes(df.queryExecution.executedPlan).collect {
       case a: BaseAggregateExec if a.groupingExpressions.exists(_.dataType match {
         case s: StructType => s.fieldNames.toSeq == readFields
@@ -105,21 +106,37 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("genotyper: the default call shuffles three times and never regroups whole reads") {
+  test("genotyper: default call scans reads once, shuffles once, broadcasts one int key") {
     import spark.implicits._
     import graft.model.{DiscoveredVariant, Read}
-    // g2's call on inputs that need no exchange, so every hash exchange
-    // in the plan is the genotyper's own (g2 adds four read-synthesis
-    // repartitions and two discovery aggregates): the site-bin table,
-    // the read shuffle, the site aggregation
-    val reads = Seq(Read("a", "chr1", 100, 110, "ACGTAACGTA", "IIIIIIIIII", "10M", "10", 50,
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    // g2's call on reads from a parquet file: the candidates are collected
+    // while the plan is built, so every scan, exchange and broadcast left
+    // in it is the observation pass's own
+    val dir = java.nio.file.Files.createTempDirectory("plan-reads").toString + "/reads"
+    Seq(Read("a", "chr1", 100, 110, "ACGTAACGTA", "IIIIIIIIII", "10M", "10", 50,
       readMapped = true, readNegativeStrand = false, duplicateRead = false,
-      primaryAlignment = true, sampleId = "s1")).toDS()
+      primaryAlignment = true, sampleId = "s1")).toDS().write.parquet(dir)
+    val reads = spark.read.parquet(dir).as[Read]
     val variants = Seq(DiscoveredVariant("chr1", 104, "A", Some("G")),
       DiscoveredVariant("chr1", 105, "AC", Some("A"))).toDS()
     val call = graft.genomics.BiallelicGenotyper.call(reads, variants, ploidy = 2, binSize = 20.0)
     val plan = planOf(call)
-    assert("Exchange hashpartitioning".r.findAllIn(plan).size <= 3, plan)
+    assert("FileScan".r.findAllIn(plan).size === 1, plan)
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size <= 1, plan)
+    assert(!plan.contains("Generate") && !plan.contains("explode"), plan)
+    val broadcasts = nodes(call.queryExecution.executedPlan).collect {
+      case b: BroadcastExchangeExec => b.mode
+    }
+    assert(broadcasts.size === 1, plan)
+    assert(broadcasts.forall {
+      case HashedRelationBroadcastMode(keys, _) =>
+        keys.map(_.dataType).forall(t => t == IntegerType || t == LongType)
+      case _ => false
+    }, broadcasts)
+    assert(plan.contains("scoreKey"), plan)
     assert(readKeyedAggregates(call).isEmpty, plan)
     val g2 = Queries.g2_genotype_calls(spark, sf("0.001"))
     assert(readKeyedAggregates(g2).isEmpty, planOf(g2))

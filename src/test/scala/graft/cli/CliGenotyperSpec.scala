@@ -86,6 +86,36 @@ class CliGenotyperSpec extends SparkSpec {
       "indel calls")
   }
 
+  test("biallelicGenotyper scans parquet input twice, broadcasts no string key") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
+    import org.apache.spark.sql.types.StringType
+    val reads = s"$tmp/parquet_reads"
+    seeded(Seq("s1")).toDS().write.mode("overwrite").parquet(reads)
+    val plans = runPlans("biallelicGenotyper", reads, s"$tmp/parquet_calls")
+    def nodes(p: SparkPlan): Seq[SparkPlan] = (p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })) ++ p.subqueries.flatMap(nodes)
+    val all = plans.flatMap(qe => nodes(qe.executedPlan))
+    val inputName = new java.io.File(reads).getName
+    val scans = all.collect {
+      case f: FileSourceScanExec if f.relation.location.rootPaths.exists(_.getName == inputName) => f
+    }
+    // one scan for discovery (the candidate collect), one for observation
+    assert(scans.size === 2, scans.map(_.simpleString(100)))
+    val stringKeyed = all.collect {
+      case b: BroadcastExchangeExec => b.mode
+    }.collect {
+      case m @ HashedRelationBroadcastMode(keys, _) if keys.exists(_.dataType == StringType) => m
+    }
+    assert(stringKeyed.isEmpty, stringKeyed)
+  }
+
   test("trioGenotyper writes the trio caller's rows over the same chain") {
     import spark.implicits._
     val reads = s"$tmp/trio_reads"

@@ -9,14 +9,16 @@ import org.apache.spark.sql.functions._
 
 /** The genotyper's observation layer against declarative oracles built
   * inline. `Observer.compressedPileup` against the per-read
-  * `basePileup` grouped and counted. `Observer.snvObservations` (reads
-  * observed at the SNV candidates' own sites) against the declarative
-  * path it replaced: that pileup equi-joined to the candidates on
-  * (contig, position[, sample]), support classified as alt, else ref,
-  * else other; weights are compared summed per observation key, since
-  * the pileup keys by the read's base and the kernel by its support.
-  * `Observer.indelObservations` against the whole-read regrouping it
-  * replaced.
+  * `basePileup` grouped and counted. The SNV rows of
+  * `Observer.observations` (the "snvObservations" tests: reads observed
+  * at the SNV candidates' own sites) against the declarative path they
+  * replaced: that pileup equi-joined to the candidates on (contig,
+  * position[, sample]), support classified as alt, else ref, else other;
+  * weights are compared summed per observation key, since the pileup
+  * keys by the read's base, the kernel by its support, and each read
+  * partition compresses its own rows. Its indel rows (the
+  * "indelObservations" test) against the bin-bucketed interval join and
+  * whole-read regrouping they replaced.
   */
 class SnvObservationSpec extends SparkSpec {
   import Observer.SnvSite
@@ -87,10 +89,13 @@ class SnvObservationSpec extends SparkSpec {
     val rds = reads.toDS()
     val snvs = candidates(sites).toDF("contigName", "start", "referenceAllele", "alternateAllele")
     val want = summed(oracle(rds, snvs, perSample = false))
-    val got = Observer.snvObservations(rds, snvs, perSample = false)
+    val got = Observer.observations(rds, snvs, perSample = false)
     assert(summed(got) === want)
-    // one row per observation key: each site is observed in one bin
-    assert(got.count() === got.select(keyCols.map(col): _*).distinct().count())
+    // one row per observation key within a read partition: each site is
+    // counted in one bin
+    val one = Observer.observations(rds.coalesce(1), snvs, perSample = false)
+    assert(one.count() === one.select(keyCols.map(col): _*).distinct().count())
+    assert(summed(one) === want)
     // the seeded reads exercise what the kernel must get right
     val rows = want.map(_.split('|'))
     val multi = rows.filter(_(1) == "998").map(_(3)).distinct
@@ -102,19 +107,6 @@ class SnvObservationSpec extends SparkSpec {
       sites.exists(p => Observer.basePileup(r).exists(b => b.pos == p && b.base == "N"))
     }
     assert(other, "an N base under a candidate")
-  }
-
-  test("sorted_range keeps the elements in [lo, hi)") {
-    import spark.implicits._
-    val df = Seq((Seq(5L, 7L, 7L, 9L), 0)).toDF("xs", "k")
-    def range(lo: Long, hi: Long): Seq[Long] =
-      df.select(graft.functions.NativeExpressions.sorted_range(col("xs"), lit(lo), lit(hi)))
-        .as[Seq[Long]].head()
-    assert(range(0, 100) === Seq(5L, 7L, 7L, 9L))
-    assert(range(5, 9) === Seq(5L, 7L, 7L))
-    assert(range(6, 8) === Seq(7L, 7L))
-    assert(range(10, 20) === Nil)
-    assert(range(8, 3) === Nil)
   }
 
   test("an N base is other support; each alt at a position is observed with its quality") {
@@ -138,7 +130,7 @@ class SnvObservationSpec extends SparkSpec {
     val perSample = (candidates(sites).map { case (c, p, r, a) => ("s1", c, p, r, a) } ++
       candidates(sites.filter(_ % 2 == 0)).map { case (c, p, r, a) => ("s2", c, p, r, a) })
       .toDF("sampleId", "contigName", "start", "referenceAllele", "alternateAllele")
-    val got = Observer.snvObservations(rds, perSample, perSample = true)
+    val got = Observer.observations(rds, perSample, perSample = true)
     assert(summed(got) === summed(oracle(rds, perSample, perSample = true)))
     val s2Sites = got.where(col("sampleId") === "s2").select("start").distinct()
       .as[Long].collect().toSet
@@ -162,7 +154,7 @@ class SnvObservationSpec extends SparkSpec {
     }
     val snvs = candidates(sites).toDF("contigName", "start", "referenceAllele", "alternateAllele")
     def obs(rs: Seq[Read]) =
-      summed(Observer.snvObservations(rs.toDS(), snvs, perSample = false))
+      summed(Observer.observations(rs.toDS(), snvs, perSample = false))
     assert(obs(good ++ bad) === obs(good))
     assert(obs(good).nonEmpty)
   }
@@ -197,12 +189,13 @@ class SnvObservationSpec extends SparkSpec {
     assert(byBin(4) === one)
   }
 
-  // ---- indelObservations ------------------------------------------------
+  // ---- indel observations ----------------------------------------------
 
-  /** The path `indelObservations` replaced, as the oracle: the same
-    * interval join, then every overlapping read shuffled whole to gather
-    * its candidates (groupBy(struct(read)) + collect_list) and observed
-    * once against all of them.
+  /** The path the observer's indel rows replaced, as the oracle: the
+    * bin-bucketed interval join against the candidates, then every
+    * overlapping read shuffled whole to gather its candidates
+    * (groupBy(struct(read)) + collect_list) and observed once against all
+    * of them.
     */
   private def regrouped(reads: Dataset[Read], indels: DataFrame, perSample: Boolean,
       binSize: Double): DataFrame = {
@@ -259,7 +252,7 @@ class SnvObservationSpec extends SparkSpec {
     val perSample = all.unionByName(all.where(col("start") % 2 === 0)
       .withColumn("sampleId", lit("s2")))
     for ((indels, ps) <- Seq(all.drop("sampleId") -> false, perSample -> true)) {
-      val got = Observer.indelObservations(rds, indels, ps, binSize = 50.0)
+      val got = Observer.observations(rds, indels, ps)
       val want = regrouped(rds, indels, ps, binSize = 50.0)
       assert(got.count() === want.count())
       assert(summed(got) === summed(want))
@@ -270,5 +263,42 @@ class SnvObservationSpec extends SparkSpec {
     assert(indelCandidates.size > 300, "dense candidates")
     assert(indelReads.take(40).forall(r => indelCandidates.exists { case (_, _, p, _, _) =>
       p >= r.start && p < r.end }), "duplicated reads overlap candidates")
+  }
+
+  // ---- one pass, any partitioning ---------------------------------------
+
+  test("observations over 1 and 4 read partitions equal the pileup join and the regrouping, perSample both ways") {
+    import spark.implicits._
+    val rs = reads ++ indelReads
+    assert(rs.exists(r => r.start < 1000 && r.end > 1000), "a read across the 1000 bp border")
+    val snvs = candidates(sites).flatMap { case (c, p, r, a) => Seq(("s1", c, p, r, a), ("s2", c, p, r, a)) }
+      .toDF("sampleId", "contigName", "start", "referenceAllele", "alternateAllele")
+    val indels = indelCandidates.toDF("sampleId", "contigName", "start", "referenceAllele",
+      "alternateAllele")
+    val all = snvs.where(col("sampleId") === "s1").unionByName(indels)
+    // s2 holds only the candidates at even starts
+    val perSample = all.unionByName(all.where(col("start") % 2 === 0).withColumn("sampleId", lit("s2")))
+    val isSnv = length(col("referenceAllele")) === 1 && length(col("alternateAllele")) === 1
+    for ((cands, ps) <- Seq(all.drop("sampleId") -> false, perSample -> true)) {
+      val byOne = spark.sparkContext.parallelize(rs, 1).toDS()
+      val want = summed(oracle(byOne, cands.where(isSnv), ps)
+        .unionByName(regrouped(byOne, cands.where(!isSnv), ps, binSize = 50.0)))
+      for (n <- Seq(1, 4)) {
+        val rds = spark.sparkContext.parallelize(rs, n).toDS()
+        assert(rds.rdd.getNumPartitions === n)
+        assert(summed(Observer.observations(rds, cands, ps)) === want, s"$n partitions, perSample $ps")
+      }
+    }
+    // the calls, likelihoods included, do not depend on the partitioning
+    val variants = all.drop("sampleId").as[DiscoveredVariant]
+    def calls(n: Int): (DataFrame, DataFrame) = {
+      val rds = spark.sparkContext.parallelize(rs, n).toDS()
+      (BiallelicGenotyper.call(rds, variants).localCheckpoint(),
+        BiallelicGenotyper.callPerSample(rds, perSample).localCheckpoint())
+    }
+    val (one, four) = (calls(1), calls(4))
+    assert(one._1.count() > 20 && one._2.select("sampleId").distinct().count() === 2)
+    assert(GenotypeFixtures.sameRows(four._1, one._1, relTol = 1e-14))
+    assert(GenotypeFixtures.sameRows(four._2, one._2, relTol = 1e-14))
   }
 }
