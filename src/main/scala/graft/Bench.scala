@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.annotation.nowarn
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are forced through the noop sink (not
@@ -283,7 +284,8 @@ object Bench {
     }
     (a.length.toLong * 8) / best / 1e9
   }
-  @volatile private var memSink = 0L
+  // written, never read: the store keeps the JIT from eliding the scan
+  @nowarn("cat=unused-privates") @volatile private var memSink = 0L
 
   /** Memory-bandwidth conviction gate (round 18). The r17 driver run was
     * ACCEPTED (CPU probes gate-clean) while its mid-suite mem probes
@@ -298,6 +300,13 @@ object Bench {
     * stalls at 0.41-0.60).
     */
   val MemGate = 0.6
+
+  /** A mid-run probe convicts its window when the CPU probe runs over
+    * 1.5x [[CalRefSec]] or memory bandwidth falls below [[MemGate]] x the
+    * run's best (`memRef`); either marks the run `contended`.
+    */
+  def convicts(cpuSec: Double, memGbps: Double, memRef: Double): Boolean =
+    cpuSec > 1.5 * CalRefSec || memGbps < MemGate * memRef
 
   /** Queries that spend less than this are not re-measured after a
     * conviction: their worst-case inflation is bounded by the floor
@@ -480,6 +489,14 @@ object Bench {
     def fnFor(name: String) = overrides.get(name).orElse(SparkEntry.queries.get(name))
     // best bandwidth seen this run — the mem-conviction reference
     var memRef = memPre
+    // `contended` = mid-run contamination flag: pre/post are already
+    // gate-clean in an accepted artifact, so only the mid probes can
+    // testify to contention arriving inside the suite — a window either
+    // probe convicts ([[convicts]]). An accepted contended artifact
+    // implies every convicted >ReRunFloorSec row was re-measured on a
+    // quiet box, with both values in `contention_reruns` — otherwise
+    // `rejected` is true.
+    var contended = false
     // quiet = CPU probe under the gate AND memory bandwidth recovered to
     // the run's own quiet band: a re-measurement taken during a bus
     // stall would record the same inflation the conviction flagged
@@ -527,8 +544,7 @@ object Bench {
       // cannot clear the conviction — verify the box stayed quiet
       // through the re-runs (CPU and memory bus), else the whole window
       // stays poisoned
-      if (calibrate(spark) > 1.5 * CalRefSec ||
-        memProbeGbps() < MemGate * memRef) contUnremediated ++= victims
+      if (convicts(calibrate(spark), memProbeGbps(), memRef)) contUnremediated ++= victims
     }
     selected.zipWithIndex.foreach { case (name, qi) =>
       if (qi > 0 && qi % 6 == 0) {
@@ -537,7 +553,7 @@ object Bench {
         val m = memProbeGbps()
         memMids += m
         memRef = math.max(memRef, m)
-        if (p > 1.5 * CalRefSec || m < MemGate * memRef) remeasureWindow()
+        if (convicts(p, m, memRef)) { contended = true; remeasureWindow() }
         window.clear()
       }
       fnFor(name).foreach { fn =>
@@ -572,7 +588,7 @@ object Bench {
       val m = memProbeGbps()
       memMids += m
       memRef = math.max(memRef, m)
-      if (p > 1.5 * CalRefSec || m < MemGate * memRef) remeasureWindow()
+      if (convicts(p, m, memRef)) { contended = true; remeasureWindow() }
     }
     val results = selected.flatMap(n => timings.get(n).map(n -> _))
     // final sweep (same cleanup every query boundary runs), then record
@@ -585,13 +601,6 @@ object Bench {
     val calPost = probeMin(spark, 5)
     val memPost = memProbeGbps()
     val rejected = shouldReject(calPost, contUnremediated.toSeq)
-    // `contended` = mid-run contamination flag: pre/post are already
-    // gate-clean in an accepted artifact, so only the mid probes can
-    // testify to contention arriving inside the suite. An accepted
-    // contended artifact now implies every convicted >ReRunFloorSec row
-    // was re-measured on a quiet box, with both values in
-    // `contention_reruns` — otherwise `rejected` is true.
-    val contended = midProbes.exists(_ > 1.5 * CalRefSec)
     val failed = results.collect { case (k, v) if v < 0 => k }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum

@@ -56,7 +56,7 @@ object Main {
   }
 
   private def loadReads(spark: SparkSession, path: String,
-      reference: Option[String] = None): Dataset[Read] = {
+      reference: Option[String]): Dataset[Read] = {
     import spark.implicits._
     if (path.endsWith(".cram")) Cram.read(spark, path, reference)
     else if (path.endsWith(".sam")) Sam.read(spark, path)

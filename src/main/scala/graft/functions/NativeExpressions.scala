@@ -15,28 +15,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * optimizer can see through them (null propagation, constant folding).
   */
 
-/** phred_to_error(q): 10^(-q/10) — phred quality to error probability. */
-case class PhredToError(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(q: Any): Any =
-    math.pow(10.0, -q.asInstanceOf[Number].doubleValue() / 10.0)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"java.lang.Math.pow(10.0, -((double) $c) / 10.0)")
-  override protected def withNewChildInternal(newChild: Expression): PhredToError =
-    copy(child = newChild)
-}
-
-/** log_error_to_phred(l): −10·l/ln(10) — log error prob to phred. */
-case class LogErrorToPhred(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(l: Any): Any =
-    -10.0 * l.asInstanceOf[Number].doubleValue() / math.log(10.0)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"(-10.0 * ((double) $c) / java.lang.Math.log(10.0))")
-  override protected def withNewChildInternal(newChild: Expression): LogErrorToPhred =
-    copy(child = newChild)
-}
-
 /** nfc_normalize(s): Unicode NFC normalization (canonical compose) —
   * the mandatory first pass before any text fingerprint/dedup hash at
   * corpus scale (é as one codepoint vs e+U+0301 must hash identically).
@@ -360,12 +338,6 @@ case class FisherPhred(a: Expression, b: Expression, c: Expression, d: Expressio
 
 object NativeExpressions {
 
-  def phred_to_error(c: Column): Column =
-    ColumnBridge.column(PhredToError(ColumnBridge.expression(c)))
-
-  def log_error_to_phred(c: Column): Column =
-    ColumnBridge.column(LogErrorToPhred(ColumnBridge.expression(c)))
-
   def cosine_to_query(c: Column, query: Array[Double]): Column =
     ColumnBridge.column(CosineToQuery(ColumnBridge.expression(c), query.toSeq))
 
@@ -391,12 +363,8 @@ object NativeExpressions {
       ColumnBridge.expression(a), ColumnBridge.expression(b),
       ColumnBridge.expression(c), ColumnBridge.expression(d)))
 
-  /** Register for SQL use: SELECT phred_to_error(q) ... */
+  /** Register for SQL use: SELECT cosine_sim(a, b) ... */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "phred_to_error", exprs => PhredToError(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "log_error_to_phred", exprs => LogErrorToPhred(exprs.head), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "cosine_sim", exprs => CosineSim(exprs.head, exprs(1)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

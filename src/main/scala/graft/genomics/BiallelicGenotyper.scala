@@ -1,6 +1,5 @@
 package graft.genomics
 
-import graft.kernels.LogMath
 import graft.model.{DiscoveredVariant, Read}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._

@@ -7,23 +7,6 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import scala.collection.mutable
 import scala.util.Try
 
-/** One read's evidence at one candidate variant site (the flattened,
-  * discrete observation key that joins the score table; the shape of the
-  * reference's SummarizedObservation, SummarizedObservation.scala:37-43).
-  * support: 2 = read shows the alt allele, 1 = read shows the reference,
-  * 0 = read shows some other allele.
-  */
-case class SiteObservation(
-    contigName: String,
-    start: Long,
-    referenceAllele: String,
-    alternateAllele: String,
-    sampleId: String,
-    support: Int,
-    forwardStrand: Boolean,
-    qual: Int,
-    mapq: Int)
-
 /** Per-read allele observation kernel (SURVEY.md K6; reference
   * Observer.scala:48-140): classify what a read shows at each overlapping
   * candidate site. SNVs are classified from the aligned base at the site;
@@ -85,27 +68,16 @@ object Observer {
     SitePileup(bases.result(), refs.result(), vars, anchors.result(), clips.result())
   }
 
-  /** One aligned base of one read: the exploded pileup row for the
-    * declarative SNV path (support classification happens as codegen'd
-    * column expressions after an equi-join on position, not in this
-    * kernel).
+  /** Aligned bases of reads with equal (contig, position, base,
+    * reference base, quality, strand, mapq, sample): the pileup row, `w`
+    * bases. [[basePileup]] emits one per aligned base (w = 1),
+    * [[compressedPileup]] one per distinct row.
     */
-  case class BaseObs(
-      contigName: String,
-      pos: Long,
-      base: String,
-      refBase: String, // aligned reference base (from MD; = base on match)
-      qual: Int,
-      forwardStrand: Boolean,
-      mapq: Int,
-      sampleId: String)
-
-  /** [[BaseObs]] plus the compressed multiplicity. */
   case class WeightedBaseObs(
       contigName: String,
       pos: Long,
       base: String,
-      refBase: String,
+      refBase: String, // aligned reference base (from MD; = base on match)
       qual: Int,
       forwardStrand: Boolean,
       mapq: Int,
@@ -130,8 +102,13 @@ object Observer {
     def alt(site: Long): Char = (site & 0xFFFF).toChar
   }
 
-  /** [[SiteObservation]] plus its compressed multiplicity: the
-    * genotyper's observation schema.
+  /** `w` reads' equal evidence at one candidate variant site: the
+    * genotyper's observation schema (the discrete observation key that
+    * joins the score table, in the shape of the reference's
+    * SummarizedObservation, SummarizedObservation.scala:37-43, plus its
+    * multiplicity). support: 2 = the read shows the alt allele, 1 = the
+    * reference, 0 = some other allele, 3 = no allele
+    * ([[SupportNonRef]]).
     */
   case class WeightedObservation(
       contigName: String,
@@ -208,7 +185,7 @@ object Observer {
   }
 
   /** Weighted pileup of every aligned base: flatMap([[basePileup]])
-    * .groupBy(every column).count by construction, without a per-base
+    * .groupBy(every column but w).count by construction, without a per-base
     * shuffle. Reads are keyed to every 1000 bp (contig, bin) their span
     * touches (the span from the CIGAR itself, what the walk emits, not
     * the record's end field) and shuffled on it, so each bin's reads
@@ -359,10 +336,7 @@ object Observer {
       while (i < c.indelStarts.length && c.indelStarts(i) < r.end) {
         val v = DiscoveredVariant(r.contigName, c.indelStarts(i), c.indelRefs(i), Option(c.indelAlts(i)))
         if (v.end > r.start)
-          walked.flatMap(p => Try(observeAt(r, p, v))).toOption.flatten.foreach { o =>
-            out += WeightedObservation(o.contigName, o.start, o.referenceAllele, o.alternateAllele,
-              o.sampleId, o.support, o.forwardStrand, o.qual, o.mapq, 1L)
-          }
+          walked.flatMap(p => Try(observeAt(r, p, v))).toOption.flatten.foreach(out += _)
         i += 1
       }
       out.result().iterator
@@ -396,106 +370,112 @@ object Observer {
     }
   }
 
-  /** Explode a read into per-aligned-base pileup rows — runs ONCE per
-    * read regardless of how many variants overlap it. Malformed reads
-    * emit nothing.
+  /** Explode a read into per-aligned-base pileup rows, weight 1 each —
+    * runs ONCE per read regardless of how many variants overlap it.
+    * Malformed reads emit nothing.
     */
-  def basePileup(read: Read): Seq[BaseObs] =
+  def basePileup(read: Read): Seq[WeightedBaseObs] =
     Try {
       val ops = AlignmentOps.parseRead(read.cigar, read.mdTag, read.sequence, read.qual)
-      val out = new mutable.ArrayBuffer[BaseObs](read.sequence.length)
+      val out = new mutable.ArrayBuffer[WeightedBaseObs](read.sequence.length)
       AlignmentOps.foreachAlignedBase(read.start, read.sequence, ops) { (pos, idx, ref) =>
         val base = read.sequence.substring(idx, idx + 1)
-        out += BaseObs(read.contigName, pos, base,
+        out += WeightedBaseObs(read.contigName, pos, base,
           if (ref == base.charAt(0)) base else ref.toString, AlignmentOps.phred(read.qual, idx),
-          !read.readNegativeStrand, read.mapq, read.sampleId)
+          !read.readNegativeStrand, read.mapq, read.sampleId, 1L)
       }
       out.toSeq
     }.getOrElse(Nil)
 
-  /** Observations of one read at the given candidate variants. Malformed
-    * reads observe nothing (per-row failure isolation).
+  /** Observations of one read at the given candidate variants on its
+    * contig, weight 1 each: the SNVs through [[observeSnvs]], as
+    * [[observations]] classifies them, the others through the indel
+    * kernel. Malformed reads observe nothing (per-row failure isolation).
     */
-  def observe(read: Read, variants: Seq[DiscoveredVariant]): Seq[SiteObservation] =
+  def observe(read: Read, variants: Seq[DiscoveredVariant]): Seq[WeightedObservation] =
     Try {
-      val p = walk(read, AlignmentOps.parseRead(read.cigar, read.mdTag, read.sequence, read.qual))
-      variants.flatMap(observeAt(read, p, _))
+      val (snvs, others) = variants.partition(v =>
+        v.referenceAllele.length == 1 && v.alternateAllele.exists(_.length == 1))
+      val out = Seq.newBuilder[WeightedObservation]
+      observeSnvs(read, snvs.map(v => SnvSite(v.start, v.referenceAllele, v.alternateAllele.get))
+          .sorted.toArray) { (site, support, qual) =>
+        out += WeightedObservation(read.contigName, SnvSite.pos(site), SnvSite.ref(site).toString,
+          SnvSite.alt(site).toString, read.sampleId, support, !read.readNegativeStrand, qual,
+          read.mapq, 1L)
+      }
+      if (others.nonEmpty) {
+        val p = walk(read, AlignmentOps.parseRead(read.cigar, read.mdTag, read.sequence, read.qual))
+        others.foreach(out ++= observeAt(read, p, _))
+      }
+      out.result()
     }.getOrElse(Nil)
 
-  /** What the walked read `p` shows at one candidate `v`. */
-  private def observeAt(read: Read, p: SitePileup, v: DiscoveredVariant): Option[SiteObservation] = {
+  /** What the walked read `p` shows at one indel (or other non-SNV)
+    * candidate `v`, weight 1.
+    */
+  private def observeAt(read: Read, p: SitePileup, v: DiscoveredVariant): Option[WeightedObservation] = {
     val alt = v.alternateAllele.getOrElse("")
-    def obs(support: Int, q: Int) = Some(SiteObservation(
+    def obs(support: Int, q: Int) = Some(WeightedObservation(
       v.contigName, v.start, v.referenceAllele, alt, read.sampleId,
-      support, !read.readNegativeStrand, q, read.mapq))
-    val isSnv = v.referenceAllele.length == 1 && alt.length == 1
-    if (isSnv) {
-      p.base.get(v.start) match {
-        case Some((b, q)) if b.toString == alt              => obs(SupportAlt, q)
-        case Some((b, q)) if b.toString == v.referenceAllele => obs(SupportRef, q)
-        case Some((_, q))                                    => obs(SupportOther, q)
-        case None                                            => None
-      }
-    } else {
-      val key = (v.start, v.referenceAllele, alt)
-      p.variants.get(key) match {
-        case Some(q) => obs(SupportAlt, q)
-        case None =>
-          val span = v.start until v.end
-          // a read whose OWN extracted variant sits at this same
-          // start attests a DIFFERENT allele of this site: that is
-          // other-alt evidence (reference otherAlt reclassification,
-          // BiallelicGenotyper.scala:337-346), and it must win over
-          // the ambiguity null-out below — at a multiallelic indel
-          // site the competing carrier reads ARE the evidence that
-          // this allele is absent (e.g. the T->TAAA carriers at the
-          // T->CAAA candidate, reference suite 1/4120185).
-          val competing = p.variants.keys.exists(_._1 == v.start)
-          // ambiguity window: a nearby indel anchor or a soft-clip
-          // boundary means this read's alignment cannot attest
-          // presence/absence of the indel (fragmented insertions,
-          // clipped-out inserts) -> observe nothing (the reference's
-          // nullOut reclassification, BiallelicGenotyper.scala:287-373)
-          val w = math.max(v.referenceAllele.length, alt.length) + 8L
-          val ambiguous =
-            p.indelAnchors.exists(a => a >= v.start - w && a <= v.end + w) ||
-              p.clipBoundaries.exists(c => c >= v.start - w && c <= v.end + w)
-          val covered = span.forall(p.base.contains)
-          // Insertion tail-matching (reference BiallelicGenotyper
-          // .scala:306-330): in a repeat tract, a read whose aligned
-          // tail past the anchor is consistent with BOTH haplotypes
-          // (its bases equal the alt haplotype insBases ++ refTail for
-          // as far as it reaches) cannot attest absence of the
-          // insertion — observe nothing rather than reference support.
-          def insertionTailAmbiguous: Boolean = {
-            val isIns = v.referenceAllele.length == 1 && alt.length > 1
-            if (!isIns) false
-            else {
-              val tailPos = Iterator.from(1).map(v.start + _)
-                .takeWhile(p.base.contains).toSeq
-              val readTail = tailPos.map(p.base(_)._1).mkString
-              val refTail = tailPos.map(p.refBase(_)).mkString
-              val altHap = (alt.drop(1) + refTail).take(readTail.length)
-              readTail.isEmpty || readTail == altHap
-            }
+      support, !read.readNegativeStrand, q, read.mapq, 1L))
+    val key = (v.start, v.referenceAllele, alt)
+    p.variants.get(key) match {
+      case Some(q) => obs(SupportAlt, q)
+      case None =>
+        val span = v.start until v.end
+        // a read whose OWN extracted variant sits at this same
+        // start attests a DIFFERENT allele of this site: that is
+        // other-alt evidence (reference otherAlt reclassification,
+        // BiallelicGenotyper.scala:337-346), and it must win over
+        // the ambiguity null-out below — at a multiallelic indel
+        // site the competing carrier reads ARE the evidence that
+        // this allele is absent (e.g. the T->TAAA carriers at the
+        // T->CAAA candidate, reference suite 1/4120185).
+        val competing = p.variants.keys.exists(_._1 == v.start)
+        // ambiguity window: a nearby indel anchor or a soft-clip
+        // boundary means this read's alignment cannot attest
+        // presence/absence of the indel (fragmented insertions,
+        // clipped-out inserts) -> observe nothing (the reference's
+        // nullOut reclassification, BiallelicGenotyper.scala:287-373)
+        val w = math.max(v.referenceAllele.length, alt.length) + 8L
+        val ambiguous =
+          p.indelAnchors.exists(a => a >= v.start - w && a <= v.end + w) ||
+            p.clipBoundaries.exists(c => c >= v.start - w && c <= v.end + w)
+        val covered = span.forall(p.base.contains)
+        // Insertion tail-matching (reference BiallelicGenotyper
+        // .scala:306-330): in a repeat tract, a read whose aligned
+        // tail past the anchor is consistent with BOTH haplotypes
+        // (its bases equal the alt haplotype insBases ++ refTail for
+        // as far as it reaches) cannot attest absence of the
+        // insertion — observe nothing rather than reference support.
+        def insertionTailAmbiguous: Boolean = {
+          val isIns = v.referenceAllele.length == 1 && alt.length > 1
+          if (!isIns) false
+          else {
+            val tailPos = Iterator.from(1).map(v.start + _)
+              .takeWhile(p.base.contains).toSeq
+            val readTail = tailPos.map(p.base(_)._1).mkString
+            val refTail = tailPos.map(p.refBase(_)).mkString
+            val altHap = (alt.drop(1) + refTail).take(readTail.length)
+            readTail.isEmpty || readTail == altHap
           }
-          // nulled (nonref) observations keep the read in the depth
-          // and nonReferenceLikelihoods accounting without touching
-          // the alt/ref blend — reference nullOut semantics
-          if (competing) {
-            if (p.base.contains(v.start)) obs(SupportOther, p.base(v.start)._2)
-            else None
-          } else if (ambiguous) {
-            if (p.base.contains(v.start)) obs(SupportNonRef, p.base(v.start)._2)
-            else None
-          } else if (covered) {
-            if (insertionTailAmbiguous) obs(SupportNonRef, p.base(v.start)._2)
-            else {
-              val quals = span.map(p.base(_)._2)
-              obs(SupportRef, quals.sum / quals.length)
-            }
-          } else None
-      }
+        }
+        // nulled (nonref) observations keep the read in the depth
+        // and nonReferenceLikelihoods accounting without touching
+        // the alt/ref blend — reference nullOut semantics
+        if (competing) {
+          if (p.base.contains(v.start)) obs(SupportOther, p.base(v.start)._2)
+          else None
+        } else if (ambiguous) {
+          if (p.base.contains(v.start)) obs(SupportNonRef, p.base(v.start)._2)
+          else None
+        } else if (covered) {
+          if (insertionTailAmbiguous) obs(SupportNonRef, p.base(v.start)._2)
+          else {
+            val quals = span.map(p.base(_)._2)
+            obs(SupportRef, quals.sum / quals.length)
+          }
+        } else None
     }
   }
 }

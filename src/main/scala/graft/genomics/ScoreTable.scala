@@ -33,14 +33,10 @@ object ScoreTable {
     (copyNumber * qualRadix + (qual - Likelihood.NoQual)) * mapqRadix + mapq
   }
 
-  def build(spark: SparkSession, ploidy: Int = 2, maxQual: Int = 93, maxMapQ: Int = 93): DataFrame =
-    buildForCopyNumbers(spark, Seq(ploidy), ploidy, maxQual, maxMapQ)
-
-  /** Variable-ploidy variant: one row per (copyNumber, qual, mapq),
-    * keyed `scoreKey` ([[key]]), with per-state columns sized for
-    * maxPloidy and zero-padded above each row's own copy number (padding
-    * contributes nothing to the sums; the emission slices to the site's
-    * real state count).
+  /** One row per (copyNumber, qual, mapq), keyed `scoreKey` ([[key]]),
+    * with per-state columns sized for maxPloidy and zero-padded above
+    * each row's own copy number (padding contributes nothing to the
+    * sums; the emission slices to the site's real state count).
     */
   def buildForCopyNumbers(
       spark: SparkSession,

@@ -78,29 +78,4 @@ object AsOfJoin {
       .where(col("__tag") === 1)
       .select(leftCols.map(col) ++ payload.map(c => col("__m").getField(c).as(c)): _*)
   }
-
-  /** Pre-flight skew diagnostic for [[asOf]]: keys whose combined
-    * (left + right) row count meets `threshold` — each lands ENTIRE on
-    * one task in the per-key ordered scan (the operator's documented
-    * hot-key property). One partial+final aggregation per side, merged
-    * on the (small, already-aggregated) key counts; run it before a big
-    * as-of job the way HardLimiter's accumulator guards its exact
-    * flavor. Returns (key, n_left, n_right, n_total), hottest first.
-    */
-  def hotKeys(
-      left: DataFrame,
-      right: DataFrame,
-      leftKey: String,
-      rightKey: String,
-      threshold: Long = 10000000L): DataFrame = {
-    val l = left.groupBy(col(leftKey).as("key")).agg(count(lit(1)).as("n_left"))
-    val r = right.groupBy(col(rightKey).as("key")).agg(count(lit(1)).as("n_right"))
-    l.join(r, Seq("key"), "full_outer")
-      .select(col("key"),
-        coalesce(col("n_left"), lit(0L)).as("n_left"),
-        coalesce(col("n_right"), lit(0L)).as("n_right"))
-      .withColumn("n_total", col("n_left") + col("n_right"))
-      .where(col("n_total") >= threshold)
-      .orderBy(col("n_total").desc)
-  }
 }

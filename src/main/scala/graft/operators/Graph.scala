@@ -37,7 +37,6 @@ object Graph {
       bCol: String,
       iters: Int = 3,
       scalePpm: Long = 1000000L): DataFrame = {
-    val spark = edges.sparkSession
     val e = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
       .localCheckpoint(true)

@@ -40,9 +40,10 @@ object Layout {
       .repartitionByRange(partitions, col(zName))
       .sortWithinPartitions(zName)
 
-  /** N-dimensional locality audit: per partition the bounding-box
-    * VOLUME over the given dimensions (∏ max−min+1) — the N-dim
-    * generalization of [[boundingAreas]]'s pruning-cost proxy.
+  /** Locality audit: per partition the bounding-box VOLUME over the
+    * given dimensions (∏ max−min+1; the area for two). The sum over
+    * partitions is what a min/max-pruned scan pays for a point/range
+    * query — smaller is better.
     * BigInt: three dimensions near the 21-bit budget already put the
     * product past 2⁶³ — a Long would silently wrap negative and the
     * audit comparison would invert. Null dimension values are dropped
@@ -75,28 +76,5 @@ object Layout {
             BigInt(hi(j)) - BigInt(lo(j)) + 1).product.toString)
         }
       }.collect().toSeq.map(BigInt(_))
-  }
-
-  /** Locality audit: per partition the bounding box AREA over the two
-    * dimensions (max−min+1 each). The sum over partitions is what a
-    * min/max-pruned scan pays for a point/range query — smaller is
-    * better. Used by the spec to prove the curve beats a hash layout.
-    */
-  def boundingAreas(df: DataFrame, aCol: Column, bCol: Column): Seq[Long] = {
-    import df.sparkSession.implicits._
-    df.select(aCol.cast("long").as("a"), bCol.cast("long").as("b"))
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          var (aLo, aHi, bLo, bHi) = (Long.MaxValue, Long.MinValue,
-            Long.MaxValue, Long.MinValue)
-          it.foreach { case (a, b) =>
-            if (a < aLo) aLo = a; if (a > aHi) aHi = a
-            if (b < bLo) bLo = b; if (b > bHi) bHi = b
-          }
-          Iterator((aHi - aLo + 1) * (bHi - bLo + 1))
-        }
-      }.collect().toSeq
   }
 }

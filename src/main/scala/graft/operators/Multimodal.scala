@@ -49,7 +49,7 @@ object Multimodal {
     *    null fields rather than guessing.
     *  - Anything else: metadata columns null — the declarative analog
     *    of decodeBatch's bad-payload row drop; count unknowns with
-    *    [[extractMetaObserved]] or `container IS NULL`.
+    *    `container IS NULL`.
     *
     * Scale: a narrow per-row projection over the leading payload bytes;
     * with parquet this reads only the scanned binary column, no
@@ -96,18 +96,6 @@ object Multimodal {
       .withColumn("timescale", when(mp4Canonical, beU32At(moov + 29)))
       .withColumn("duration_ts", when(mp4Canonical, beU32At(moov + 33)))
   }
-
-  /** As [[extractMeta]], additionally counting payloads that matched no
-    * known container into `obs` (metric `unknown_payloads`) — the
-    * declarative analog of decodeBatch's bad-payload accumulator:
-    * CollectMetrics rides the same plan, so the count costs no second
-    * scan and is exact (no task-retry over-count).
-    */
-  def extractMetaObserved(df: DataFrame, obs: org.apache.spark.sql.Observation,
-                          binCol: String = "payload"): DataFrame =
-    extractMeta(df, binCol).observe(obs,
-      sum(when(col("container").isNull && col(binCol).isNotNull, 1L).otherwise(0L))
-        .as("unknown_payloads"))
 
   /** Modality-aware sequence packing (M11): assign interleaved
     * text/image/audio/video items to fixed token-budget context bins —

@@ -443,24 +443,6 @@ object SimilaritySearch {
     }
   }
 
-  /** Probe a bucketed table written by writeBucketed: the index's
-    * persisted width/seed override the caller's (they must — the probe
-    * has to hash like the build); partition + row-group pruning reach
-    * only the probed buckets' rows.
-    */
-  def annTopKBucketed(spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String, embCol: String, dim: Int, query: Array[Double], k: Int,
-      nBits: Int = 8, seed: Long = 42, nProbes: Int = 1): DataFrame = {
-    val meta = readBucketedMeta(spark, path)
-    val nb = meta.map(_.nBits).getOrElse(nBits)
-    val sd = meta.map(_.seed).getOrElse(seed)
-    val buckets = probeBuckets(query, dim, nb, sd, nProbes)
-    prunedIndexScan(spark, path, meta, buckets)
-      .select(col(idCol), cosine(col(embCol), query).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
-  }
-
   /** IVF (inverted-file) cell assignment: each vector joins the cell of
     * its nearest centroid (max cosine, ties to the lowest centroid id).
     * Centroids are a handful of driver-resident vectors (a query-time

@@ -1,23 +1,19 @@
 package graft.sources
 
-import graft.model.Read
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed parquet storage — the Spark-native co-location mechanism
-  * for the engine's hottest shuffle: pre-hash a table into N buckets on
+  * for a shuffle that repeats across runs: pre-hash a table into N buckets on
   * its join/aggregation keys at WRITE time, so every downstream
   * groupBy/join on those keys reads a scan that already satisfies the
   * required partitioning and plans NO exchange.
   *
-  * At 100 TB this converts the genotyper's (contig, bin) read shuffle —
-  * the largest data movement in the pipeline — into a one-time cost
-  * paid at ingest, amortized over every subsequent calling run; the
-  * same pattern the ANN path uses with partition-pruned cell storage
-  * (`SimilaritySearch.writeBucketed`), here with hash buckets because
-  * genomic bins are too numerous for directory partitioning alone.
-  * (Reference counterpart: ADAM persists sorted/partitioned alignments
-  * for avocado's repeated-analysis workflows.)
+  * A shuffle on those keys becomes a one-time cost paid at ingest,
+  * amortized over every later run; the same pattern the ANN path uses
+  * with partition-pruned cell storage (`SimilaritySearch.writeBucketed`),
+  * here with hash buckets for keys too numerous for directory
+  * partitioning. Read the table back with `spark.table`: the bucket spec
+  * rides the catalog entry, so the scan reports the hash partitioning.
   */
 object Bucketed {
 
@@ -40,27 +36,4 @@ object Bucketed {
       else base
     sorted.option("path", path).saveAsTable(table)
   }
-
-  /** Reads bucketed on (contigName, bin) with bin = floor(start /
-    * binSize) — the exact key the genotyper's pileup compression
-    * shuffles on, so a calling run over this table starts from
-    * co-located data.
-    */
-  def writeReadsBinned(
-      reads: Dataset[Read],
-      table: String,
-      path: String,
-      binSize: Long = 1000L,
-      buckets: Int = 32): Unit =
-    write(
-      reads.withColumn("bin", floor(col("start") / lit(binSize)).cast("long")),
-      table, path,
-      bucketCols = Seq("contigName", "bin"),
-      buckets = buckets,
-      sortCols = Seq("contigName", "bin", "start"))
-
-  /** The bucketed table back as a DataFrame (bucket metadata rides the
-    * catalog entry, so the scan reports the hash partitioning).
-    */
-  def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
 }

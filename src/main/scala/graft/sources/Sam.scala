@@ -67,7 +67,6 @@ object Sam {
 
   /** First `@RG SM:` tag of the SAM header, else "sample". */
   private def headerSample(spark: SparkSession, path: String): String = {
-    import spark.implicits._
     spark.read.textFile(path)
       .filter(_.startsWith("@RG")).limit(1).collect().headOption
       .flatMap(_.split("\t").find(_.startsWith("SM:")).map(_.substring(3)))
@@ -76,7 +75,6 @@ object Sam {
 
   /** Sequence dictionary from the file's @SQ header lines (P4). */
   def dictionary(spark: SparkSession, path: String): graft.genomics.SequenceDictionary = {
-    import spark.implicits._
     graft.genomics.SequenceDictionary.fromSamHeader(
       spark.read.textFile(path)
         .filter(_.startsWith("@SQ")).collect().toSeq)

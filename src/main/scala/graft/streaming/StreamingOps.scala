@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 /** Structured Streaming surface. The reference is pure batch (SURVEY.md
   * §2.8), so this is greenfield: the events table drives the same
   * relational operators in micro-batch. Watermarked windowed
-  * aggregation for the declarative path; mapGroupsWithState for custom
+  * aggregation for the declarative path; flatMapGroupsWithState for custom
   * session state the window model can't express.
   */
 object StreamingOps {
@@ -88,30 +88,6 @@ object StreamingOps {
       .groupBy(window(col("event_time"), "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"), col("n"), col("sum_value"))
-
-  case class UserEvent(user_id: Long, ts: Long, value: Double)
-  case class UserRunning(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Custom keyed state: running per-user totals via mapGroupsWithState
-    * — the KeyValueGroupedDataset stateful path (for semantics windows
-    * can't express, e.g. lifetime counters).
-    */
-  def runningUserTotals(events: DataFrame): Dataset[UserRunning] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value")).as[UserEvent]
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[UserRunning, UserRunning](GroupStateTimeout.NoTimeout) {
-        (uid: Long, batch: Iterator[UserEvent], state: GroupState[UserRunning]) =>
-          val prev = state.getOption.getOrElse(UserRunning(uid, 0L, 0.0))
-          val (n, v) = batch.foldLeft((prev.n_events, prev.total_value)) {
-            case ((cn, cv), e) => (cn + 1, cv + e.value)
-          }
-          val next = UserRunning(uid, n, v)
-          state.update(next)
-          next
-      }
-  }
 
   // event_time rides along: the watermark column must survive into the
   // stateful operator for EventTimeTimeout to be allowed
@@ -659,7 +635,7 @@ object StreamingOps {
       .groupByKey(_._1)
       .mapValues(t => (t._3.toDouble, t._2))
       .agg(agg.toColumn.name("top"))
-      .flatMap { case (w, tops) => tops.map { case (e, uid) => (w, uid) } }
+      .flatMap { case (w, tops) => tops.map { case (_, uid) => (w, uid) } }
       .toDF("window_start", "user_id")
     top.join(est.select(col("window_start"), col("u").cast("long").as("user_id"),
         col("est_cnt"), col("exact_cnt")), Seq("window_start", "user_id"))

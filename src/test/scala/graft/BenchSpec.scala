@@ -32,6 +32,16 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.shouldReject(Bench.CalGate * Bench.CalRefSec * 1.01, Nil))
   }
 
+  test("convicts: a memory-only conviction marks the run contended, a clean window does not") {
+    val memRef = 8.0
+    // CPU probe clean, memory bus stalled below MemGate x the run's best
+    assert(Bench.convicts(Bench.CalRefSec, 0.5 * memRef, memRef))
+    // CPU probe hot, memory clean
+    assert(Bench.convicts(1.6 * Bench.CalRefSec, memRef, memRef))
+    // both inside their bands
+    assert(!Bench.convicts(Bench.CalRefSec, 0.9 * memRef, memRef))
+  }
+
   test("simulated hot mid-probe with no quiet box: no bench_out.json is written") {
     // the window the hot probe convicts: one heavy query, one cheap one
     val timing = Map("g6_gvcf_squareoff" -> 121.6, "a1_distinct" -> 0.3)

@@ -5,30 +5,6 @@ import org.apache.spark.sql.functions._
 
 class NativeExpressionsSpec extends SparkSpec {
 
-  test("phred_to_error and log_error_to_phred evaluate correctly via Column API") {
-    import spark.implicits._
-    val df = Seq(10, 20, 30).toDF("q")
-    val out = df.select(
-      col("q"),
-      NativeExpressions.phred_to_error(col("q")).as("err"),
-      NativeExpressions.log_error_to_phred(log(NativeExpressions.phred_to_error(col("q")))).as("back"))
-      .collect()
-    out.foreach { r =>
-      val q = r.getInt(0)
-      assert(math.abs(r.getDouble(1) - math.pow(10, -q / 10.0)) < 1e-15)
-      assert(math.abs(r.getDouble(2) - q) < 1e-9) // round trip
-    }
-  }
-
-  test("expressions work from SQL after registration and stay codegen'd") {
-    NativeExpressions.register(spark)
-    val row = spark.sql("SELECT phred_to_error(30) AS e, log_error_to_phred(ln(0.001)) AS p").head()
-    assert(math.abs(row.getDouble(0) - 0.001) < 1e-15)
-    assert(math.abs(row.getDouble(1) - 30.0) < 1e-9)
-    // null propagation (UnaryExpression default null handling)
-    assert(spark.sql("SELECT phred_to_error(CAST(NULL AS INT)) IS NULL AS n").head().getBoolean(0))
-  }
-
   test("nfc_normalize recomposes, is idempotent, ASCII-identity, and null-propagating") {
     import spark.implicits._
     val composed = "caf\u00e9"   // e-acute as one codepoint

@@ -281,12 +281,20 @@ class SnvObservationSpec extends SparkSpec {
     val isSnv = length(col("referenceAllele")) === 1 && length(col("alternateAllele")) === 1
     for ((cands, ps) <- Seq(all.drop("sampleId") -> false, perSample -> true)) {
       val byOne = spark.sparkContext.parallelize(rs, 1).toDS()
-      val want = summed(oracle(byOne, cands.where(isSnv), ps)
+      val pileupSnvs = oracle(byOne, cands.where(isSnv), ps)
+      val want = summed(pileupSnvs
         .unionByName(regrouped(byOne, cands.where(!isSnv), ps, binSize = 50.0)))
+      // the per-read `observe` (its SNVs through observeSnvs) classifies
+      // the SNV candidates as the pileup join does
+      val snvWant = summed(pileupSnvs)
+      assert(summed(regrouped(byOne, cands.where(isSnv), ps, binSize = 50.0)) === snvWant,
+        s"observe, perSample $ps")
       for (n <- Seq(1, 4)) {
         val rds = spark.sparkContext.parallelize(rs, n).toDS()
         assert(rds.rdd.getNumPartitions === n)
-        assert(summed(Observer.observations(rds, cands, ps)) === want, s"$n partitions, perSample $ps")
+        val got = Observer.observations(rds, cands, ps)
+        assert(summed(got) === want, s"$n partitions, perSample $ps")
+        assert(summed(got.where(isSnv)) === snvWant, s"SNV rows, $n partitions, perSample $ps")
       }
     }
     // the calls, likelihoods included, do not depend on the partitioning

@@ -59,20 +59,6 @@ class AsOfJoinSpec extends SparkSpec {
     assert(out === Seq((1L, Some(9L), Some(9.0))))
   }
 
-  test("hotKeys names the keys that would serialize onto one task") {
-    import spark.implicits._
-    val l = (Seq.fill(40)(7L) ++ Seq.fill(3)(8L)).zipWithIndex
-      .map { case (k, i) => (i.toLong, k, i.toLong) }.toDF("id", "k", "ts")
-    val r = Seq((7L, 1L, 1L, 1.0), (9L, 1L, 2L, 2.0)).toDF("rk", "rts", "ok", "price")
-    val hot = AsOfJoin.hotKeys(l, r, "k", "rk", threshold = 10L)
-      .collect().map(row => (row.getLong(0), row.getLong(3)))
-    assert(hot.toSeq === Seq((7L, 41L)), "only key 7 (40 left + 1 right) crosses 10")
-    // right-only keys count too (full outer): threshold 1 surfaces all
-    val all = AsOfJoin.hotKeys(l, r, "k", "rk", threshold = 1L)
-      .collect().map(_.getLong(0))
-    assert(all.contains(9L), "right-only key visible in the diagnostic")
-  }
-
   /** Deterministic property driver (no scalatestplus in the offline
     * cache): sample the generator across fixed seeds.
     */

@@ -423,30 +423,6 @@ class ScaleOpsSpec extends SparkSpec {
     assert(Dedup.lastOversizedBuckets.exists(_.value === 0L))
   }
 
-  test("bucketed ANN table: partition-pruned probe equals in-memory probe") {
-    import spark.implicits._
-    val dim = 8
-    val rnd = new scala.util.Random(7)
-    val rows = (0L until 200L).map(i => (i, Array.fill(dim)(rnd.nextGaussian().toFloat)))
-    val df = rows.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ann").toString + "/buckets"
-    SimilaritySearch.writeBucketed(df, "vec_id", "embedding", dim, dir, nBits = 4)
-    val query = rows.head._2.map(_.toDouble)
-
-    val fromDisk = SimilaritySearch
-      .annTopKBucketed(spark, dir, "vec_id", "embedding", dim, query, k = 5, nBits = 4)
-    val inMem = SimilaritySearch
-      .annTopK(df, "vec_id", "embedding", dim, query, k = 5, nBits = 4)
-      .as[(Long, Double)].collect().toSeq
-    assert(fromDisk.as[(Long, Double)].collect().toSeq === inMem)
-
-    // the probe must prune partitions at the scan, not filter post-scan
-    val plan = fromDisk.queryExecution.executedPlan.toString
-    val qb = SimilaritySearch.queryBucket(query, dim, nBits = 4)
-    assert(plan.contains("PartitionFilters") && plan.contains(s"bucket"),
-      s"expected partition pruning on bucket=$qb in:\n$plan")
-  }
-
   test("ivf-pq: residual codes decompose as ivfCells + pqEncode(v - centroid)") {
     import spark.implicits._
     val dim = 16
@@ -1321,8 +1297,7 @@ class ScaleOpsSpec extends SparkSpec {
       (4L, Array[Byte](0x89.toByte, 0x50)),             // truncated PNG magic
       (5L, null.asInstanceOf[Array[Byte]]))             // null payload
       .toDF("doc_id", "payload")
-    val obs = new org.apache.spark.sql.Observation("meta")
-    val out = Multimodal.extractMetaObserved(rows, obs)
+    val out = Multimodal.extractMeta(rows)
       .select("doc_id", "container", "width", "height", "channels", "sample_rate",
         "n_frames", "timescale", "duration_ts")
       .collect().map(r => r.getLong(0) -> r).toMap
@@ -1345,8 +1320,6 @@ class ScaleOpsSpec extends SparkSpec {
       (2 to 8).foreach(i => assert(out(id).isNullAt(i), s"doc $id col $i must be null"))
     }
     assert(out(5L).isNullAt(1), "null payload parses to nulls, not an error")
-    // the observed metric counts non-null unknowns only (3 and 4)
-    assert(obs.get("unknown_payloads") === 2L)
   }
 
   test("mp4FrameTable: stsz/stco offsets slice the exact frame bytes the writer laid down") {

@@ -144,8 +144,8 @@ class ZOrderSpec extends SparkSpec {
     val parts = 16
     val zed = Layout.zorder(ev, col("a"), col("b"), parts)
     val hashed = ev.repartition(parts)
-    val zArea = Layout.boundingAreas(zed, col("a"), col("b")).sum
-    val hArea = Layout.boundingAreas(hashed, col("a"), col("b")).sum
+    val zArea = Layout.boundingVolumes(zed, Seq(col("a"), col("b"))).sum
+    val hArea = Layout.boundingVolumes(hashed, Seq(col("a"), col("b"))).sum
     assert(zArea * 2 < hArea,
       s"curve locality must beat hash layout: z=$zArea hash=$hArea")
     // the layout is a pure rearrangement: no rows gained or lost

@@ -1,30 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** The band-join optimizer rule must turn a raw SQL abs-difference join
   * (normally a nested-loop plan) into a bucketed equi-join with
-  * identical results. Registered via experimental.extraOptimizations
-  * for the same shared-session reason as [[IntervalJoinRewriteSpec]].
+  * identical results. The rule comes from the shared session's
+  * production rule set ([[SparkSpec]] installs it).
   */
-class BandJoinRewriteSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("BandJoinRewriteSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.experimental.extraOptimizations = Seq(BandJoinRewrite())
-    s
-  }
-
-  override def afterAll(): Unit = {
-    spark.experimental.extraOptimizations = Nil
-    super.afterAll()
-  }
+class BandJoinRewriteSpec extends SparkSpec {
 
   private def mkTables(): Unit = {
     import spark.implicits._

@@ -1,33 +1,22 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** The optimizer rule must turn a raw SQL overlap join (normally a
   * nested-loop plan) into a binned equi-join with identical results.
-  *
-  * Registered via experimental.extraOptimizations rather than a fresh
-  * `withExtensions` session: under `sbt test` a shared session already
-  * exists and getOrCreate would silently ignore builder extensions.
-  * (Production registration is `withExtensions(new GraftExtensions)` or
-  * spark.sql.extensions=graft.plans.GraftExtensions.)
+  * The rule comes from the shared session's production rule set
+  * ([[SparkSpec]] installs it); this suite sets only the bin width, and
+  * unsets it afterwards for the suites that share the session.
   */
-class IntervalJoinRewriteSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+class IntervalJoinRewriteSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("IntervalJoinRewriteSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.graft.intervalJoin.binSize", "50")
-    s.experimental.extraOptimizations = Seq(IntervalJoinRewrite())
-    s
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.conf.set("spark.graft.intervalJoin.binSize", "50")
   }
 
   override def afterAll(): Unit = {
-    spark.experimental.extraOptimizations = Nil
+    spark.conf.unset("spark.graft.intervalJoin.binSize")
     super.afterAll()
   }
 

@@ -151,9 +151,11 @@ class SourcesSpec extends SparkSpec {
         primaryAlignment = true, sampleId = "s1")
     }.toDS()
     val dir = java.nio.file.Files.createTempDirectory("bucketed").toString
-    Bucketed.writeReadsBinned(reads, "t_reads_binned", s"$dir/reads", binSize = 1000L, buckets = 8)
+    Bucketed.write(reads.withColumn("bin", floor(col("start") / 1000L).cast("long")),
+      "t_reads_binned", s"$dir/reads", bucketCols = Seq("contigName", "bin"), buckets = 8,
+      sortCols = Seq("contigName", "bin", "start"))
     try {
-      val t = Bucketed.read(spark, "t_reads_binned")
+      val t = spark.table("t_reads_binned")
       // the pileup-shaped aggregation: partial+final over the bucket keys
       // must run directly on the bucketed scan — zero shuffles
       val agg = t.groupBy("contigName", "bin")
@@ -169,8 +171,8 @@ class SourcesSpec extends SparkSpec {
         col("start").as("vstart")).distinct()
       Bucketed.write(variants.toDF(), "t_vars_binned", s"$dir/vars",
         bucketCols = Seq("contigName", "bin"), buckets = 8)
-      val joined = Bucketed.read(spark, "t_reads_binned").as("r")
-        .join(Bucketed.read(spark, "t_vars_binned").as("v"), Seq("contigName", "bin"))
+      val joined = spark.table("t_reads_binned").as("r")
+        .join(spark.table("t_vars_binned").as("v"), Seq("contigName", "bin"))
       val joinPlan = joined.queryExecution.executedPlan.toString
       assert(!joinPlan.contains("Exchange hashpartitioning"), joinPlan)
       assert(joined.count() > 0)

@@ -149,19 +149,4 @@ class StreamingSpec extends SparkSpec {
         .digest(t.getBytes("UTF-8")).map("%02x".format(_)).mkString)
     assert(fps === expected)
   }
-
-  test("stateful running user totals accumulate across the stream") {
-    val streamed = StreamingOps.runToMemorySink(
-      StreamingOps.runningUserTotals(StreamingOps.readEvents(spark, dir)).toDF(),
-      "user_totals", OutputMode.Update())
-
-    // final state per user == batch per-user aggregate
-    val lastPerUser = streamed
-      .groupBy("user_id").agg(max(col("n_events")).as("n_events"))
-    val batch = StreamingOps.readEventsBatch(spark, s"$dir/events.parquet")
-      .groupBy("user_id").agg(count(lit(1)).as("n_events"))
-    val s = lastPerUser.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = batch.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(s === b)
-  }
 }
