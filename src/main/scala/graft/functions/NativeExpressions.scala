@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, QuaternaryExpression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, QuaternaryExpression, TernaryExpression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the hot scalar kernels (SURVEY.md
@@ -336,6 +336,36 @@ case class FisherPhred(a: Expression, b: Expression, c: Expression, d: Expressio
     copy(a = newFirst, b = newSecond, c = newThird, d = newFourth)
 }
 
+/** genotype_log_likelihoods(copyNumber, qual, mapq): the genotype
+  * likelihood model (SURVEY.md K7) of one observation row, as
+  * `[allele 0..maxPloidy, other 0..maxPloidy]` — the same
+  * [[graft.kernels.Likelihood]] kernel and the same doubles the
+  * genotyper's generated score table used to hold (S9), zero above the
+  * row's copy number as the table's padding was. Evaluated per row inside
+  * whole-stage codegen, ε once per row, instead of joining a broadcast
+  * table: the observations are compressed before scoring, so the table
+  * saved no arithmetic and cost a plan-time relation and a broadcast job.
+  */
+case class GenotypeLogLikelihoods(
+    copyNumber: Expression, qual: Expression, mapq: Expression, maxPloidy: Int)
+    extends TernaryExpression with ImplicitCastInputTypes {
+  override def first: Expression = copyNumber
+  override def second: Expression = qual
+  override def third: Expression = mapq
+  override def inputTypes = Seq.fill(3)(IntegerType)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def nullSafeEval(cn: Any, q: Any, mq: Any): Any =
+    UnsafeArrayData.fromPrimitiveArray(graft.kernels.Likelihood.logLikelihoods(
+      q.asInstanceOf[Int], mq.asInstanceOf[Int], cn.asInstanceOf[Int], maxPloidy))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (cn, q, mq) =>
+      "org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(" +
+        s"graft.kernels.Likelihood.logLikelihoods($q, $mq, $cn, $maxPloidy))")
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): GenotypeLogLikelihoods =
+    copy(copyNumber = newFirst, qual = newSecond, mapq = newThird)
+}
+
 object NativeExpressions {
 
   def cosine_to_query(c: Column, query: Array[Double]): Column =
@@ -362,6 +392,11 @@ object NativeExpressions {
     ColumnBridge.column(FisherPhred(
       ColumnBridge.expression(a), ColumnBridge.expression(b),
       ColumnBridge.expression(c), ColumnBridge.expression(d)))
+
+  def genotype_log_likelihoods(copyNumber: Column, qual: Column, mapq: Column,
+      maxPloidy: Int): Column =
+    ColumnBridge.column(GenotypeLogLikelihoods(ColumnBridge.expression(copyNumber),
+      ColumnBridge.expression(qual), ColumnBridge.expression(mapq), maxPloidy))
 
   /** Register for SQL use: SELECT cosine_sim(a, b) ... */
   def register(spark: SparkSession): Unit = {

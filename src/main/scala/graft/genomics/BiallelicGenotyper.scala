@@ -1,5 +1,6 @@
 package graft.genomics
 
+import graft.functions.NativeExpressions
 import graft.model.{DiscoveredVariant, Read}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -11,17 +12,18 @@ import org.apache.spark.sql.functions._
   * Plan shape of the default `call` (no gVCF): constructing it runs one
   * job, the collect of the candidates, as the reference's J1
   * (TreeRegionJoin.scala:43-50) also collects them. After it the
-  * plan scans the reads once and has one shuffle and one broadcast
-  * exchange, checked by `PlanSpec`:
+  * plan scans the reads once and has one shuffle, no join and no
+  * broadcast exchange, checked by `PlanSpec`:
   *   MapPartitions (reads)       Observer.observations: each read finds
   *                               its candidates by binary search in the
   *                               broadcast per-contig arrays (a Spark
   *                               broadcast variable, not an exchange) and
   *                               is parsed once. SNV rows compress per
   *                               partition; indel rows have weight 1
-  *   ⨝ broadcast(score table)    the one broadcast exchange: hash join
-  *                               (J3) on one packed int key — replaces
-  *                               per-row log/exp with a lookup
+  *   Project (per-row scoring)   genotype_log_likelihoods: the K7 kernel
+  *                               on each compressed row, in the read
+  *                               stage's codegen (the reference joins a
+  *                               generated score table here, S9 + J3)
   *   groupBy(site, sample).agg   the one shuffle (A3): partial+final hash
   *                               agg keyed (site, sample, copyNumber),
   *                               ~40 flat columns; the partial agg runs in
@@ -149,12 +151,8 @@ object BiallelicGenotyper {
       copyNumbers: Option[CopyNumberMap.Built],
       scoreAllSites: Boolean): DataFrame = {
 
-    val spark = reads.sparkSession
     val maxP = math.max(ploidy, copyNumbers.map(_.maxPloidy).getOrElse(ploidy))
     val states = 0 to maxP
-    val cnValues = copyNumbers
-      .map(m => (m.minPloidy to m.maxPloidy) :+ m.basePloidy)
-      .getOrElse(Seq(ploidy)).distinct
 
     // -- observations (K6/K8): one narrow pass over the reads, which
     // collects the candidates once (the one job `call` runs) and scores
@@ -222,9 +220,12 @@ object BiallelicGenotyper {
           .unionByName(Observer.observations(reads, variantsDf.where(!isSnv), perSample))
       }
 
-    // -- score attachment (S9 + J3): clamp quals to the domain, take the
-    // per-site copy number from the broadcast CNV map (or flat ploidy),
-    // then join the broadcast score table on its packed int key.
+    // -- scoring (K7): clamp quals to the domain, take the per-site copy
+    // number from the broadcast CNV map (or flat ploidy), then evaluate
+    // the likelihood kernel on the row: `ll` holds the allele then the
+    // other log-likelihood per state 0..maxP, zero above the row's copy
+    // number (the same doubles the reference's generated score table
+    // holds, S9, without a table to join).
     val cnCol = copyNumbers
       .map(m => m.copyNumberAt(col("contigName"), col("start")))
       .getOrElse(lit(ploidy))
@@ -235,13 +236,13 @@ object BiallelicGenotyper {
     val qual = when(col("qual") < 0, lit(graft.kernels.Likelihood.NoQual))
       .otherwise(greatest(least(col("qual"), lit(maxQual)), lit(1)))
     val mapq = greatest(least(col("mapq"), lit(maxMapQ)), lit(1))
-    val scores = ScoreTable.buildForCopyNumbers(spark, cnValues, maxP, maxQual, maxMapQ)
-    val keyed = obs
+    val scored = obs
       .select(col("contigName"), col("start"), col("referenceAllele"), col("alternateAllele"),
-        col("sampleId"), col("support"), col("forwardStrand"), qual.as("qual"), mapq.as("mapq"),
+        col("sampleId"), col("support"), col("forwardStrand"), mapq.as("mapq"),
         col("w"), cnCol.as("copyNumber"),
-        ScoreTable.key(cnCol, qual, mapq, maxP, maxQual, maxMapQ).as("scoreKey"))
-      .join(broadcast(scores), "scoreKey")
+        NativeExpressions.genotype_log_likelihoods(cnCol, qual, mapq, maxP).as("ll"))
+    def aLL(g: Int) = col("ll").getItem(g)
+    def oLL(g: Int) = col("ll").getItem(maxP + 1 + g)
 
     // -- per-row per-state contribution (weighted by the compressed
     // multiplicity), then the wide hash agg (A3). Nulled (nonref)
@@ -251,18 +252,18 @@ object BiallelicGenotyper {
     // nonReferenceLikelihoods = nonref obs + ref obs blended).
     val w = col("w")
     val contribs = states.map { g =>
-      (when(col("support") === Observer.SupportAlt, col(s"a_ll_$g"))
+      (when(col("support") === Observer.SupportAlt, aLL(g))
         .when(col("support") === Observer.SupportNonRef, lit(0.0))
-        .otherwise(col(s"o_ll_$g")) * w).as(s"c_$g")
+        .otherwise(oLL(g)) * w).as(s"c_$g")
     }
     val nrContribs = states.map { g =>
-      (when(col("support") === Observer.SupportNonRef, col(s"a_ll_$g"))
-        .when(col("support") === Observer.SupportRef, col(s"o_ll_$g"))
+      (when(col("support") === Observer.SupportNonRef, aLL(g))
+        .when(col("support") === Observer.SupportRef, oLL(g))
         .otherwise(lit(0.0)) * w).as(s"nr_c_$g")
     }
     val glSums = states.map(g => sum(col(s"c_$g")).as(s"gl_$g"))
     val nrSums = states.map(g => sum(col(s"nr_c_$g")).as(s"nr_ll_$g"))
-    val aggd = keyed
+    val aggd = scored
       .select(col("contigName") +: col("start") +: col("referenceAllele") +:
         col("alternateAllele") +: col("sampleId") +: col("copyNumber") +:
         col("support") +: col("forwardStrand") +: col("mapq") +: col("w") +:
@@ -291,7 +292,7 @@ object BiallelicGenotyper {
     // K10 as a codegen'd Expression (same LogMath kernel the former
     // per-row UDF wrapped — bit-identical, but inlined in whole-stage
     // codegen instead of crossing a UDF serialization boundary)
-    val strandBias = round(graft.functions.NativeExpressions.fisher_phred(
+    val strandBias = round(NativeExpressions.fisher_phred(
       col("altFwd"), col("altRev"), col("otherFwd"), col("otherRev")), 3)
     aggd.select(
       (Seq("contigName", "start", "referenceAllele", "alternateAllele", "sampleId", "copyNumber") ++

@@ -103,8 +103,8 @@ object Observer {
   }
 
   /** `w` reads' equal evidence at one candidate variant site: the
-    * genotyper's observation schema (the discrete observation key that
-    * joins the score table, in the shape of the reference's
+    * genotyper's observation schema (the discrete observation key the
+    * likelihood kernel scores, in the shape of the reference's
     * SummarizedObservation, SummarizedObservation.scala:37-43, plus its
     * multiplicity). support: 2 = the read shows the alt allele, 1 = the
     * reference, 0 = some other allele, 3 = no allele

@@ -10,9 +10,10 @@ package graft.kernels
   *   P(read shows ALT | g) = (g·(1−ε) + (m−g)·ε) / m
   *   P(read shows REF | g) = (g·ε + (m−g)·(1−ε)) / m
   *
-  * Log-space, per state, precomputable over the small discrete domain
-  * (quality × mapQ × m) — which is exactly why the genotyper joins a
-  * generated score table instead of evaluating this per row.
+  * Log-space, per state. The genotyper evaluates it on every compressed
+  * observation row ([[logLikelihoods]] behind the `genotype_log_likelihoods`
+  * expression); a compressed row stands for many reads, so the per-row
+  * cost is small next to a join against a precomputed table.
   */
 object Likelihood {
 
@@ -32,23 +33,29 @@ object Likelihood {
     1.0 - baseOk * LogMath.phredToSuccessProbability(mapQ)
   }
 
-  /** Log-likelihoods of a read *supporting the allele*, indexed by
-    * g = 0..m alt copies.
-    */
-  def alleleLogLikelihoods(baseQ: Int, mapQ: Int, m: Int): Array[Double] = {
-    val e = epsilon(baseQ, mapQ)
-    Array.tabulate(m + 1) { g =>
-      math.log(g * (1.0 - e) + (m - g) * e) - math.log(m.toDouble)
-    }
-  }
+  private def alleleLogLikelihood(e: Double, m: Int, g: Int): Double =
+    math.log(g * (1.0 - e) + (m - g) * e) - math.log(m.toDouble)
 
-  /** Log-likelihoods of a read *supporting the reference* (or any other
-    * allele), indexed by g = 0..m alt copies of the scored allele.
+  private def otherLogLikelihood(e: Double, m: Int, g: Int): Double =
+    math.log(g * e + (m - g) * (1.0 - e)) - math.log(m.toDouble)
+
+  /** Both per-state vectors of one observation, sized for `maxPloidy`:
+    * `[allele 0..maxPloidy, other 0..maxPloidy]`, with ε computed once.
+    * The allele vector is the log-likelihood of a read *supporting the
+    * allele* under g = 0..m alt copies, the other vector that of a read
+    * supporting the reference (or any other allele). States above the
+    * copy number `m` are 0.0, so a site scored at a lower copy number
+    * than its neighbours adds nothing in them.
     */
-  def otherLogLikelihoods(baseQ: Int, mapQ: Int, m: Int): Array[Double] = {
+  def logLikelihoods(baseQ: Int, mapQ: Int, m: Int, maxPloidy: Int): Array[Double] = {
     val e = epsilon(baseQ, mapQ)
-    Array.tabulate(m + 1) { g =>
-      math.log(g * e + (m - g) * (1.0 - e)) - math.log(m.toDouble)
+    val out = new Array[Double](2 * (maxPloidy + 1))
+    var g = 0
+    while (g <= math.min(m, maxPloidy)) {
+      out(g) = alleleLogLikelihood(e, m, g)
+      out(maxPloidy + 1 + g) = otherLogLikelihood(e, m, g)
+      g += 1
     }
+    out
   }
 }

@@ -911,7 +911,7 @@ object Queries {
     DiscoverVariants.discover(syntheticReads(spark, dir), minPhred = 20, minObservations = 2)
 
   /** End-to-end genotyping: discovery, interval join of reads x variants,
-    * observer kernel, broadcast score-table join, wide per-site hash agg,
+    * observer kernel, per-row likelihood scoring, wide per-site hash agg,
     * genotype emission — the full flagship pipeline, with the oracle
     * computing the same likelihood model in closed form.
     */

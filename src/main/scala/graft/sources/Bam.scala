@@ -6,9 +6,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 
 import java.io.{BufferedInputStream, ByteArrayOutputStream, DataOutputStream, EOFException, FileInputStream, FileOutputStream, InputStream}
 import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.util.zip.{CRC32, Deflater, GZIPInputStream}
 import scala.collection.mutable.ArrayBuffer
-import scala.util.Try
 
 /** BAM binary source/sink in pure JDK (SURVEY.md S1 — the reference
   * loads BAM via htsjdk/`sc.loadAlignments`,
@@ -28,7 +28,11 @@ import scala.util.Try
 object Bam {
 
   private val SeqCode = "=ACMGRSVTWYHKDBN"
+  private val SeqBytes = SeqCode.getBytes(ISO_8859_1)
   private val CigarOps = "MIDNSHP=X"
+  /** Bit `op` is set for the reference-consuming ops `M D N = X`. */
+  private val RefConsumingOps = CigarOps.indices
+    .filter(i => "MDN=X".indexOf(CigarOps(i)) >= 0).map(1 << _).sum
 
   private val FlagPaired = 0x1
   private val FlagUnmapped = 0x4
@@ -77,94 +81,119 @@ object Bam {
     (refs, sample)
   }
 
-  /** Decode one record body (everything after the 4-byte block_size). */
-  private def decodeRecord(b: ByteBuffer, refs: IndexedSeq[String], sample: String): Option[Read] =
-    Try {
-          val refId = b.getInt
-          val pos = b.getInt
-          val lReadName = b.get() & 0xff
-          val mapq = b.get() & 0xff
-          b.getShort // bin
-          val nCigar = b.getShort & 0xffff
-          val flag = b.getShort & 0xffff
-          val lSeq = b.getInt
-          val nextRefId = b.getInt
-          val nextPos = b.getInt
-          b.getInt // tlen
-          val nameBytes = new Array[Byte](lReadName)
-          b.get(nameBytes)
-          val readName = new String(nameBytes, 0, lReadName - 1, "ISO-8859-1")
-          val cigar = (0 until nCigar).map { _ =>
-            val v = b.getInt
-            (v >>> 4, CigarOps((v & 0xf)))
+  /** Decode one record body (everything after the 4-byte block_size),
+    * reading the fields in place from the body's bytes. Name, sequence,
+    * qualities and MD become ISO-8859-1 strings built from byte arrays
+    * (bytes at or above 0x80 become U+0080-U+00FF), and the CIGAR string
+    * and reference span come from one walk over the ops. `None` when the
+    * body is malformed: shorter than its fields or a tag says, a
+    * zero-length read name, a negative sequence length, a CIGAR op code
+    * above 8, or a `Z`/`H` string or `B` array (its count read unsigned)
+    * running past the body.
+    */
+  private[sources] def decodeRecord(b: Array[Byte], refs: IndexedSeq[String], sample: String): Option[Read] = {
+    val len = b.length
+    def u16(p: Int): Int = (b(p) & 0xff) | (b(p + 1) & 0xff) << 8
+    def i32(p: Int): Int = u16(p) | u16(p + 2) << 16
+    if (len < 32) return None
+    val lReadName = b(8) & 0xff
+    val nCigar = u16(12)
+    val lSeq = i32(16)
+    val cigarAt = 32 + lReadName
+    val seqAt = cigarAt + 4 * nCigar
+    val qualAt = seqAt + (lSeq + 1L) / 2
+    if (lReadName == 0 || lSeq < 0 || qualAt + lSeq > len) return None
+
+    val cigar = new java.lang.StringBuilder(if (nCigar == 0) 1 else 4 * nCigar)
+    var refLength = 0L
+    var i = 0
+    while (i < nCigar) {
+      val v = i32(cigarAt + 4 * i)
+      val op = v & 0xf
+      if (op >= CigarOps.length) return None
+      cigar.append(v >>> 4).append(CigarOps.charAt(op))
+      if ((RefConsumingOps & (1 << op)) != 0) refLength += v >>> 4
+      i += 1
+    }
+    if (nCigar == 0) cigar.append('*')
+
+    val seq = new Array[Byte](lSeq)
+    i = 0
+    while (i < lSeq) {
+      val packed = b(seqAt + (i >> 1))
+      seq(i) = SeqBytes(if ((i & 1) == 0) (packed >> 4) & 0xf else packed & 0xf)
+      i += 1
+    }
+    val q0 = qualAt.toInt
+    val qual =
+      if (lSeq > 0 && b(q0) == 0xff.toByte) "*"
+      else {
+        val qs = new Array[Byte](lSeq)
+        i = 0
+        while (i < lSeq) { qs(i) = (b(q0 + i) + 33).toByte; i += 1 }
+        new String(qs, ISO_8859_1)
+      }
+
+    // tags: keep the last MD:Z, skip the rest by their declared widths
+    var md = ""
+    var p = q0 + lSeq
+    while (p < len) {
+      if (p + 3 > len) return None
+      val tpe = b(p + 2).toChar
+      val isMd = b(p) == 'M' && b(p + 1) == 'D' && tpe == 'Z'
+      p += 3
+      tpe match {
+        case 'A' | 'c' | 'C' => p += 1
+        case 's' | 'S'       => p += 2
+        case 'i' | 'I' | 'f' => p += 4
+        case 'Z' | 'H' =>
+          var nul = p
+          while (nul < len && b(nul) != 0) nul += 1
+          if (nul == len) return None
+          if (isMd) md = new String(b, p, nul - p, ISO_8859_1)
+          p = nul + 1
+        case 'B' =>
+          if (p + 5 > len) return None
+          val width = b(p).toChar match {
+            case 'c' | 'C' => 1
+            case 's' | 'S' => 2
+            case _         => 4
           }
-          val seqBytes = new Array[Byte]((lSeq + 1) / 2)
-          b.get(seqBytes)
-          val seq = new StringBuilder(lSeq)
-          var i = 0
-          while (i < lSeq) {
-            val byte = seqBytes(i / 2) & 0xff
-            seq.append(SeqCode(if (i % 2 == 0) byte >>> 4 else byte & 0xf))
-            i += 1
-          }
-          val qualBytes = new Array[Byte](lSeq)
-          b.get(qualBytes)
-          val qual =
-            if (lSeq > 0 && (qualBytes(0) & 0xff) == 0xff) "*"
-            else qualBytes.map(q => (q + 33).toChar).mkString
-          // tags: find MD (type Z)
-          var md = ""
-          while (b.remaining() > 0) {
-            val tag = s"${b.get().toChar}${b.get().toChar}"
-            val tpe = b.get().toChar
-            tpe match {
-              case 'A'       => b.get()
-              case 'c' | 'C' => b.get()
-              case 's' | 'S' => b.getShort
-              case 'i' | 'I' => b.getInt
-              case 'f'       => b.getFloat
-              case 'Z' | 'H' =>
-                val sb = new StringBuilder
-                var c = b.get()
-                while (c != 0) { sb.append(c.toChar); c = b.get() }
-                if (tag == "MD" && tpe == 'Z') md = sb.toString
-              case 'B' =>
-                val elemType = b.get().toChar
-                val n = b.getInt
-                val width = elemType match {
-                  case 'c' | 'C' => 1
-                  case 's' | 'S' => 2
-                  case _         => 4
-                }
-                b.position(b.position() + n * width)
-              case _ => b.position(b.limit()) // unknown: stop tag walk
-            }
-          }
-          val cigarStr =
-            if (cigar.isEmpty) "*" else cigar.map { case (n, op) => s"$n$op" }.mkString
-          val start = pos.toLong
-          val paired = (flag & FlagPaired) != 0
-          Read(
-            readName = readName,
-            contigName = if (refId >= 0 && refId < refs.size) refs(refId) else "*",
-            start = start,
-            end = start + AlignmentOps.cigarRefLength(cigar),
-            sequence = seq.toString,
-            qual = qual,
-            cigar = cigarStr,
-            mdTag = md,
-            mapq = mapq,
-            readMapped = (flag & FlagUnmapped) == 0,
-            readNegativeStrand = (flag & FlagReverse) != 0,
-            duplicateRead = (flag & FlagDuplicate) != 0,
-            primaryAlignment = (flag & (FlagSecondary | FlagSupplementary)) == 0,
-            sampleId = sample,
-            mateContigName =
-              if (paired && nextRefId >= 0 && nextRefId < refs.size) Some(refs(nextRefId))
-              else None,
-            mateStart = if (paired && nextPos >= 0) Some(nextPos.toLong) else None,
-            mateMapped = paired && (flag & FlagMateUnmapped) == 0)
-    }.toOption
+          val end = p + 5 + (i32(p + 1) & 0xffffffffL) * width
+          if (end > len) return None
+          p = end.toInt
+        case _ => p = len // unknown: stop tag walk
+      }
+      if (p > len) return None
+    }
+
+    val refId = i32(0)
+    val start = i32(4).toLong
+    val flag = u16(14)
+    val nextRefId = i32(20)
+    val nextPos = i32(24)
+    val paired = (flag & FlagPaired) != 0
+    Some(Read(
+      readName = new String(b, 32, lReadName - 1, ISO_8859_1),
+      contigName = if (refId >= 0 && refId < refs.size) refs(refId) else "*",
+      start = start,
+      end = start + refLength,
+      sequence = new String(seq, ISO_8859_1),
+      qual = qual,
+      cigar = cigar.toString,
+      mdTag = md,
+      mapq = b(9) & 0xff,
+      readMapped = (flag & FlagUnmapped) == 0,
+      readNegativeStrand = (flag & FlagReverse) != 0,
+      duplicateRead = (flag & FlagDuplicate) != 0,
+      primaryAlignment = (flag & (FlagSecondary | FlagSupplementary)) == 0,
+      sampleId = sample,
+      mateContigName =
+        if (paired && nextRefId >= 0 && nextRefId < refs.size) Some(refs(nextRefId))
+        else None,
+      mateStart = if (paired && nextPos >= 0) Some(nextPos.toLong) else None,
+      mateMapped = paired && (flag & FlagMateUnmapped) == 0))
+  }
 
   /** Iterate records from a decompressed stream positioned at a record
     * boundary. `keepGoing` is consulted BEFORE each record is read -- the
@@ -181,14 +210,11 @@ object Bam {
 
       private def decodeOne(): Option[Read] = {
         if (!keepGoing()) { done = true; return None }
-        val sizeBytes = new Array[Byte](4)
         val first = in.read()
         if (first < 0) { done = true; return None }
-        sizeBytes(0) = first.toByte
-        System.arraycopy(readFully(in, 3), 0, sizeBytes, 1, 3)
-        val blockSize = le(sizeBytes).getInt
-        val b = le(readFully(in, blockSize))
-        decodeRecord(b, refs, sample)
+        val rest = readFully(in, 3)
+        val blockSize = first | (rest(0) & 0xff) << 8 | (rest(1) & 0xff) << 16 | rest(2) << 24
+        decodeRecord(readFully(in, blockSize), refs, sample)
       }
 
       override def hasNext: Boolean = {
@@ -459,8 +485,9 @@ object Bam {
       val len = new java.io.File(f).length()
       (0L until len by splitSize).map(s => (f, s, math.min(s + splitSize, len)))
     }
-    spark.createDataset(chunks)
-      .repartition(chunks.size)
+    // one chunk per partition, no exchange (a repartition round-robins
+    // each one-row partition from a random start, so chunks collide)
+    spark.createDataset(spark.sparkContext.parallelize(chunks, chunks.size))
       .flatMap { case (f, s, e) => chunkReads(f, s, e, defaultSample) }
   }
 

@@ -38,8 +38,7 @@ class GenotyperSpec extends SparkSpec {
     assert(row.getAs[Int]("referenceReadDepth") === 4)
 
     // hand-computed GL under the Li model
-    val aLL = Likelihood.alleleLogLikelihoods(30, 60, 2)
-    val oLL = Likelihood.otherLogLikelihoods(30, 60, 2)
+    val (aLL, oLL) = Likelihood.logLikelihoods(30, 60, 2, 2).splitAt(3)
     val expected = (0 to 2).map(g => 6 * aLL(g) + 4 * oLL(g))
     val got = row.getSeq[Double](row.fieldIndex("genotypeLikelihoods"))
     (0 to 2).foreach(g => assert(math.abs(got(g) - expected(g)) < 1e-9, s"state $g"))
@@ -85,26 +84,32 @@ class GenotyperSpec extends SparkSpec {
     val features = Seq(("chr1", 100L, 120L, "DUP")).toDF("contigName", "start", "end", "featureType")
     val cnMap = CopyNumberMap.fromFeatures(features)
     val reads = (0 until 9).map(i => read(s"alt$i", snvOff = 5)) ++
-      (0 until 3).map(i => read(s"ref$i"))
-    val rds = reads.toDS()
-    val variants = Seq(DiscoveredVariant("chr1", 105, "A", Some("C"))).toDS()
-    val row = BiallelicGenotyper
-      .call(rds, variants, ploidy = 2, binSize = 100.0, copyNumbers = Some(cnMap))
-      .collect().head
+      (0 until 3).map(i => read(s"ref$i")) ++
+      (0 until 6).map(i => read(s"fa$i", start = 500, snvOff = 5))
+    // both sites in one call: maxPloidy 3 pads the diploid site's states
+    val variants = Seq(DiscoveredVariant("chr1", 105, "A", Some("C")),
+      DiscoveredVariant("chr1", 505, "A", Some("C"))).toDS()
+    val rows = BiallelicGenotyper
+      .call(reads.toDS(), variants, ploidy = 2, binSize = 100.0, copyNumbers = Some(cnMap))
+      .collect().map(r => r.getAs[Long]("start") -> r).toMap
+    val row = rows(105L)
     assert(row.getAs[Int]("copyNumber") === 3)
-    assert(row.getSeq[Double](row.fieldIndex("genotypeLikelihoods")).length === 4)
+    val gl = row.getSeq[Double](row.fieldIndex("genotypeLikelihoods"))
+    assert(gl.length === 4)
+    val (a3, o3) = Likelihood.logLikelihoods(30, 60, 3, 3).splitAt(4)
+    (0 to 3).foreach(g => assert(math.abs(gl(g) - (9 * a3(g) + 3 * o3(g))) < 1e-9, s"cn 3, state $g"))
     // 9 alt / 3 ref at cn=3 -> 2 alt copies most likely
     assert(row.getAs[Int]("genotypeState") === 2)
     assert(row.getSeq[String](row.fieldIndex("alleles")).toList === List("REF", "ALT", "ALT"))
 
-    // outside any CNV -> diploid unchanged
-    val far = Seq(DiscoveredVariant("chr1", 505, "A", Some("C"))).toDS()
-    val farReads = (0 until 6).map(i => read(s"fa$i", start = 500, snvOff = 5)).toDS()
-    val frow = BiallelicGenotyper
-      .call(farReads, far, ploidy = 2, binSize = 100.0, copyNumbers = Some(cnMap))
-      .collect().head
+    // outside any CNV -> diploid unchanged; the padded state adds nothing
+    val frow = rows(505L)
     assert(frow.getAs[Int]("copyNumber") === 2)
     assert(frow.getAs[Int]("genotypeState") === 2)
+    val fgl = frow.getSeq[Double](frow.fieldIndex("genotypeLikelihoods"))
+    val a2 = Likelihood.logLikelihoods(30, 60, 2, 2).take(3)
+    assert(fgl.length === 3)
+    (0 to 2).foreach(g => assert(math.abs(fgl(g) - 6 * a2(g)) < 1e-9, s"cn 2, state $g"))
   }
 
   test("richer genotype schema: strand-bias components, nonref likelihoods, annotations") {

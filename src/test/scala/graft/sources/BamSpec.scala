@@ -55,7 +55,12 @@ class BamSpec extends SparkSpec {
     val whole = Bam.readLocal(s"$dir/big.bam").sortBy(_.readName)
     for (splitSize <- Seq(1000L, 8192L, 77777L)) {
       val split = Bam.read(spark, s"$dir/big.bam", splitSize = splitSize)
-      assert(split.rdd.getNumPartitions > 1, s"splitSize $splitSize: one chunk")
+      // one chunk per partition, placed without an exchange
+      val chunks = (new java.io.File(s"$dir/big.bam").length() + splitSize - 1) / splitSize
+      assert(chunks > 1, s"splitSize $splitSize: one chunk")
+      assert(split.rdd.getNumPartitions === chunks, s"splitSize $splitSize")
+      val scanPlan = split.queryExecution.executedPlan.toString
+      assert(!scanPlan.contains("Exchange"), scanPlan)
       val got = split.collect().toSeq.sortBy(_.readName)
       assert(got.size === whole.size, s"splitSize $splitSize")
       got.zip(whole).foreach { case (a, b) => assert(a === b, s"splitSize $splitSize") }
