@@ -168,7 +168,10 @@ object Main {
         val gts = if (fromGvcf) SquareOff.squareOff(in) else in
         val joint = JointAnnotatorCaller(gts)
         Vcf.write(joint.withColumn("genotypeState", col("recalledState"))
-          .withColumn("genotypeQuality", col("recalledQuality")), pos(2))
+          .withColumn("genotypeQuality", col("recalledQuality")), pos(2),
+          // declare the hard-filter IDs biallelicGenotyper put in filtersFailed
+          filterHeaderLines =
+            if (joint.columns.contains("filtersFailed")) HardFilterGenotypes.filterHeaderLines() else Nil)
 
       case "mergeDiscovered" =>
         spark.read.parquet(pos(1))

@@ -65,38 +65,53 @@ object HardFilterGenotypes {
     else df.where(qualOk)
   }
 
-  /** The 9 named predicates for one class; (name, fails) pairs in
-    * header order.
+  /** One class's hard filter: its FILTER id, the threshold that enables
+    * it (> 0), its `##FILTER` description and its failing predicate.
     */
-  private def filters(t: Thresholds, c: String): Seq[(String, Column)] = {
+  private case class HardFilter(id: String, threshold: Double, description: String, fails: Column)
+
+  /** The enabled ones of the 9 filters of class `c` ("SNP" or "INDEL"),
+    * in header order: the one table [[annotate]] and [[filterHeaderLines]]
+    * both read.
+    */
+  private def filters(t: Thresholds, c: String): Seq[HardFilter] = {
     val dp = col("readDepth")
     val gq = col("genotypeQuality")
     val hom = col("genotypeState") > 0 &&
       col("genotypeState") === coalesce(col("copyNumber"), lit(2))
     val qd = gq / dp
     val af = col("alternateReadDepth").cast("double") / dp
-    def enabled(th: Double, p: Column): Column = if (th > 0) p else lit(false)
+    val hasAf = dp.isNotNull && col("alternateReadDepth").isNotNull
+    def f(v: Double) = "%f".format(v)
     Seq(
-      s"HET${c}QD" -> enabled(t.minHetQualityByDepth,
+      HardFilter(s"HET${c}QD", t.minHetQualityByDepth,
+        s"Quality by depth was below ${f(t.minHetQualityByDepth)} for a heterozygous $c.",
         !hom && dp.isNotNull && gq.isNotNull && qd < t.minHetQualityByDepth),
-      s"HOM${c}QD" -> enabled(t.minHomQualityByDepth,
+      HardFilter(s"HOM${c}QD", t.minHomQualityByDepth,
+        s"Quality by depth was below ${f(t.minHomQualityByDepth)} for a homozygous $c.",
         hom && dp.isNotNull && gq.isNotNull && qd < t.minHomQualityByDepth),
-      s"${c}FS" -> enabled(t.maxPhredStrandBias,
-        col("strandBiasPhred").isNotNull &&
-          col("strandBiasPhred") > t.maxPhredStrandBias),
-      s"${c}MQ" -> enabled(t.minRmsMapQ,
+      HardFilter(s"${c}FS", t.maxPhredStrandBias,
+        s"Phred Fisher scored strand bias was above ${f(t.maxPhredStrandBias)} for a $c.",
+        col("strandBiasPhred").isNotNull && col("strandBiasPhred") > t.maxPhredStrandBias),
+      HardFilter(s"${c}MQ", t.minRmsMapQ,
+        s"RMS mapping quality was below ${f(t.minRmsMapQ)} for a $c.",
         col("rmsMapQ").isNotNull && col("rmsMapQ") < t.minRmsMapQ),
-      s"${c}MINDP" -> enabled(t.minDepth.toDouble, dp.isNotNull && dp < t.minDepth),
-      s"${c}MAXDP" -> enabled(t.maxDepth.toDouble, dp.isNotNull && dp > t.maxDepth),
-      s"HET${c}MINAF" -> enabled(t.minHetAltAllelicFraction,
-        !hom && dp.isNotNull && col("alternateReadDepth").isNotNull &&
-          af <= t.minHetAltAllelicFraction),
-      s"HET${c}MAXAF" -> enabled(t.maxHetAltAllelicFraction,
-        !hom && dp.isNotNull && col("alternateReadDepth").isNotNull &&
-          af > t.maxHetAltAllelicFraction),
-      s"HOM${c}MINAF" -> enabled(t.minHomAltAllelicFraction,
-        hom && dp.isNotNull && col("alternateReadDepth").isNotNull &&
-          af <= t.minHomAltAllelicFraction))
+      HardFilter(s"${c}MINDP", t.minDepth.toDouble,
+        s"Read depth was below ${t.minDepth} for a $c.",
+        dp.isNotNull && dp < t.minDepth),
+      HardFilter(s"${c}MAXDP", t.maxDepth.toDouble,
+        s"Read depth was above ${t.maxDepth} for a $c.",
+        dp.isNotNull && dp > t.maxDepth),
+      HardFilter(s"HET${c}MINAF", t.minHetAltAllelicFraction,
+        s"Allelic fraction was below ${f(t.minHetAltAllelicFraction)} for a het $c.",
+        !hom && hasAf && af <= t.minHetAltAllelicFraction),
+      HardFilter(s"HET${c}MAXAF", t.maxHetAltAllelicFraction,
+        s"Allelic fraction was above ${f(t.maxHetAltAllelicFraction)} for a het $c.",
+        !hom && hasAf && af > t.maxHetAltAllelicFraction),
+      HardFilter(s"HOM${c}MINAF", t.minHomAltAllelicFraction,
+        s"Allelic fraction was below ${f(t.minHomAltAllelicFraction)} for a hom $c.",
+        hom && hasAf && af <= t.minHomAltAllelicFraction))
+      .filter(_.threshold > 0)
   }
 
   /** Annotate (never drop): filtersFailed lists every failed filter for
@@ -119,10 +134,11 @@ object HardFilterGenotypes {
     // every predicate inside one whole-stage-codegen span.
     val none = typedLit(Seq.empty[String])
     val snpFails = filters(snp, "SNP")
-      .map { case (n, p) => when(isSnp && p, array(lit(n))).otherwise(none) }
+      .map(h => when(isSnp && h.fails, array(lit(h.id))).otherwise(none))
     val indelFails = filters(indel, "INDEL")
-      .map { case (n, p) => when(!isSnp && p, array(lit(n))).otherwise(none) }
-    df.withColumn("filtersFailed", concat(snpFails ++ indelFails: _*))
+      .map(h => when(!isSnp && h.fails, array(lit(h.id))).otherwise(none))
+    // `none` first keeps the type an array when every filter is disabled
+    df.withColumn("filtersFailed", concat(none +: (snpFails ++ indelFails): _*))
       .withColumn("filtersPassed", size(col("filtersFailed")) === 0)
   }
 
@@ -132,31 +148,9 @@ object HardFilterGenotypes {
     */
   def filterHeaderLines(
       snp: Thresholds = snpDefaults,
-      indel: Thresholds = indelDefaults): Seq[String] = {
-    def line(id: String, desc: String) =
-      s"""##FILTER=<ID=$id,Description="$desc">"""
-    def f(v: Double) = "%f".format(v)
-    def cls(t: Thresholds, c: String, word: String): Seq[Option[String]] = Seq(
-      Option.when(t.minHetQualityByDepth > 0)(line(s"HET${c}QD",
-        s"Quality by depth was below ${f(t.minHetQualityByDepth)} for a heterozygous $word.")),
-      Option.when(t.minHomQualityByDepth > 0)(line(s"HOM${c}QD",
-        s"Quality by depth was below ${f(t.minHomQualityByDepth)} for a homozygous $word.")),
-      Option.when(t.maxPhredStrandBias > 0)(line(s"${c}FS",
-        s"Phred Fisher scored strand bias was above ${f(t.maxPhredStrandBias)} for a $word.")),
-      Option.when(t.minRmsMapQ > 0)(line(s"${c}MQ",
-        s"RMS mapping quality was below ${f(t.minRmsMapQ)} for a $word.")),
-      Option.when(t.minDepth > 0)(line(s"${c}MINDP",
-        s"Read depth was below ${t.minDepth} for a $word.")),
-      Option.when(t.maxDepth > 0)(line(s"${c}MAXDP",
-        s"Read depth was above ${t.maxDepth} for a $word.")),
-      Option.when(t.minHetAltAllelicFraction > 0)(line(s"HET${c}MINAF",
-        s"Allelic fraction was below ${f(t.minHetAltAllelicFraction)} for a het $word.")),
-      Option.when(t.maxHetAltAllelicFraction > 0)(line(s"HET${c}MAXAF",
-        s"Allelic fraction was above ${f(t.maxHetAltAllelicFraction)} for a het $word.")),
-      Option.when(t.minHomAltAllelicFraction > 0)(line(s"HOM${c}MINAF",
-        s"Allelic fraction was below ${f(t.minHomAltAllelicFraction)} for a hom $word.")))
-    (cls(snp, "SNP", "SNP") ++ cls(indel, "INDEL", "INDEL")).flatten
-  }
+      indel: Thresholds = indelDefaults): Seq[String] =
+    (filters(snp, "SNP") ++ filters(indel, "INDEL"))
+      .map(h => s"""##FILTER=<ID=${h.id},Description="${h.description}">""")
 
   /** Full pipeline: emission gate then annotation. */
   def apply(df: DataFrame, minEmitQuality: Double = 10.0,

@@ -1,6 +1,7 @@
 package graft.genomics
 
 import graft.model.Read
+import graft.sources.SamFormat
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -60,11 +61,10 @@ object SequenceDictionary {
     SequenceDictionary(headerLines
       .filter(_.startsWith("@SQ"))
       .flatMap { l =>
-        val f = l.split("\t")
         for {
-          sn <- f.find(_.startsWith("SN:")).map(_.substring(3))
-          ln <- f.find(_.startsWith("LN:")).map(_.substring(3).toLong)
-        } yield SequenceRecord(sn, ln)
+          sn <- SamFormat.headerField(l, "SN")
+          ln <- SamFormat.headerField(l, "LN")
+        } yield SequenceRecord(sn, ln.toLong)
       }.toSeq)
 
   /** Derive a lower-bound dictionary from mapped reads (contig ->

@@ -52,8 +52,10 @@ object AlignmentOps {
 
   // ---- CIGAR tokenizer --------------------------------------------------
 
-  private val CigarCodes = "MIDNSHP=X"
-  private val RefConsuming = "M=XDN"
+  /** The CIGAR op codes, in the order BAM numbers them 0-8. */
+  val CigarCodes = "MIDNSHP=X"
+  /** The ops that consume reference bases. */
+  val RefConsuming = "M=XDN"
   private val ReadConsuming = "M=XIS"
 
   /** The one CIGAR tokenizer: `"*"` and `""` have no ops; anything else

@@ -29,18 +29,11 @@ object Bam {
 
   private val SeqCode = "=ACMGRSVTWYHKDBN"
   private val SeqBytes = SeqCode.getBytes(ISO_8859_1)
-  private val CigarOps = "MIDNSHP=X"
+  private val CigarOps = AlignmentOps.CigarCodes
   /** Bit `op` is set for the reference-consuming ops `M D N = X`. */
   private val RefConsumingOps = CigarOps.indices
-    .filter(i => "MDN=X".indexOf(CigarOps(i)) >= 0).map(1 << _).sum
-
-  private val FlagPaired = 0x1
-  private val FlagUnmapped = 0x4
-  private val FlagMateUnmapped = 0x8
-  private val FlagReverse = 0x10
-  private val FlagSecondary = 0x100
-  private val FlagDuplicate = 0x400
-  private val FlagSupplementary = 0x800
+    .filter(i => AlignmentOps.RefConsuming.indexOf(CigarOps(i)) >= 0).map(1 << _).sum
+  private val Magic = "BAM\u0001".getBytes(ISO_8859_1)
 
   // ---- decode ----------------------------------------------------------
 
@@ -58,23 +51,19 @@ object Bam {
   private def le(bytes: Array[Byte]): ByteBuffer =
     ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
 
-  /** Parse the BAM header from a decompressed stream: (reference names,
-    * sample id from the first @RG SM:, falling back to `defaultSample`).
-    * Consumes exactly the header bytes.
+  /** Parse the BAM header from a decompressed stream: (reference names
+    * from the binary list, sample id from the first @RG SM:, falling back
+    * to `defaultSample`). Consumes exactly the header bytes.
     */
   private def parseHeader(in: InputStream, defaultSample: String): (IndexedSeq[String], String) = {
-    val magic = readFully(in, 4)
-    require(magic.sameElements("BAM".getBytes("ISO-8859-1")), "not a BAM stream")
+    require(readFully(in, 4).sameElements(Magic), "not a BAM stream")
     val lText = le(readFully(in, 4)).getInt
-    val headerText = new String(readFully(in, lText), "ISO-8859-1")
-    val sample = headerText.linesIterator
-      .find(_.startsWith("@RG"))
-      .flatMap(_.split("\t").find(_.startsWith("SM:")).map(_.substring(3)))
-      .getOrElse(defaultSample)
+    val headerText = new String(readFully(in, lText), ISO_8859_1)
+    val sample = SamFormat.sample(headerText.linesIterator.toSeq, defaultSample)
     val nRef = le(readFully(in, 4)).getInt
     val refs = (0 until nRef).map { _ =>
       val lName = le(readFully(in, 4)).getInt
-      val name = new String(readFully(in, lName), "ISO-8859-1").stripSuffix("\u0000")
+      val name = new String(readFully(in, lName), ISO_8859_1).stripSuffix("\u0000")
       readFully(in, 4) // l_ref, unused
       name
     }
@@ -172,27 +161,16 @@ object Bam {
     val flag = u16(14)
     val nextRefId = i32(20)
     val nextPos = i32(24)
-    val paired = (flag & FlagPaired) != 0
-    Some(Read(
-      readName = new String(b, 32, lReadName - 1, ISO_8859_1),
-      contigName = if (refId >= 0 && refId < refs.size) refs(refId) else "*",
-      start = start,
-      end = start + refLength,
-      sequence = new String(seq, ISO_8859_1),
-      qual = qual,
-      cigar = cigar.toString,
-      mdTag = md,
-      mapq = b(9) & 0xff,
-      readMapped = (flag & FlagUnmapped) == 0,
-      readNegativeStrand = (flag & FlagReverse) != 0,
-      duplicateRead = (flag & FlagDuplicate) != 0,
-      primaryAlignment = (flag & (FlagSecondary | FlagSupplementary)) == 0,
-      sampleId = sample,
+    val paired = SamFormat.isPaired(flag)
+    Some(SamFormat.toRead(
+      new String(b, 32, lReadName - 1, ISO_8859_1),
+      if (refId >= 0 && refId < refs.size) refs(refId) else "*",
+      start, start + refLength, new String(seq, ISO_8859_1), qual, cigar.toString, md,
+      b(9) & 0xff, flag, sample,
       mateContigName =
         if (paired && nextRefId >= 0 && nextRefId < refs.size) Some(refs(nextRefId))
         else None,
-      mateStart = if (paired && nextPos >= 0) Some(nextPos.toLong) else None,
-      mateMapped = paired && (flag & FlagMateUnmapped) == 0))
+      mateStart = if (paired && nextPos >= 0) Some(nextPos.toLong) else None))
   }
 
   /** Iterate records from a decompressed stream positioned at a record
@@ -230,14 +208,14 @@ object Bam {
   /** Decode one BAM stream to reads. `sampleId` falls back to the
     * header's first @RG SM: when present.
     */
-  def decode(raw: InputStream, defaultSample: String = "sample"): Iterator[Read] = {
+  def decode(raw: InputStream, defaultSample: String = SamFormat.DefaultSample): Iterator[Read] = {
     val in = new GZIPInputStream(new BufferedInputStream(raw), 1 << 16)
     val (refs, sample) = parseHeader(in, defaultSample)
     recordIterator(in, refs, sample, () => true)
   }
 
   /** Decode one local .bam file. */
-  def readLocal(path: String, defaultSample: String = "sample"): Seq[Read] = {
+  def readLocal(path: String, defaultSample: String = SamFormat.DefaultSample): Seq[Read] = {
     val in = new FileInputStream(path)
     try decode(in, defaultSample).toVector
     finally in.close()
@@ -473,22 +451,14 @@ object Bam {
     * validation; provably-once because every block offset belongs to
     * exactly one chunk).
     */
-  def read(spark: SparkSession, path: String, defaultSample: String = "sample",
+  def read(spark: SparkSession, path: String, defaultSample: String = SamFormat.DefaultSample,
       splitSize: Long = 64L << 20): Dataset[Read] = {
     import spark.implicits._
-    val files: Seq[String] = {
-      val p = new java.io.File(path)
-      if (p.isDirectory) p.listFiles().filter(_.getName.endsWith(".bam")).map(_.getPath).sorted.toSeq
-      else Seq(path)
-    }
-    val chunks: Seq[(String, Long, Long)] = files.flatMap { f =>
+    val chunks = SamFormat.inputFiles(path, ".bam").flatMap { f =>
       val len = new java.io.File(f).length()
       (0L until len by splitSize).map(s => (f, s, math.min(s + splitSize, len)))
     }
-    // one chunk per partition, no exchange (a repartition round-robins
-    // each one-row partition from a random start, so chunks collide)
-    spark.createDataset(spark.sparkContext.parallelize(chunks, chunks.size))
-      .flatMap { case (f, s, e) => chunkReads(f, s, e, defaultSample) }
+    SamFormat.scanSplits(spark, chunks) { case (f, s, e) => chunkReads(f, s, e, defaultSample) }
   }
 
   // ---- encode ----------------------------------------------------------
@@ -527,41 +497,28 @@ object Bam {
   /** Write reads as a single local .bam (fixtures / small outputs; a
     * distributed sink would shard this per partition).
     */
-  def write(reads: Seq[Read], path: String, sample: String = "sample"): Unit = {
-    val refs = reads.map(_.contigName).distinct.sorted
-    val refIdx = refs.zipWithIndex.toMap
-    val refLen = reads.groupBy(_.contigName).view.mapValues(_.map(_.end).max + 1000).toMap
+  def write(reads: Seq[Read], path: String, sample: String = SamFormat.DefaultSample): Unit = {
+    // an unplaced read (contig `*`) gets no @SQ line and refID -1
+    val contigs = SamFormat.contigLengths(reads)
+    val refIdx = contigs.map(_._1).zipWithIndex.toMap.withDefaultValue(-1)
 
     val payload = new ByteArrayOutputStream()
     val d = new DataOutputStream(payload)
     def putIntLe(v: Int): Unit = {
       d.write(v & 0xff); d.write((v >> 8) & 0xff); d.write((v >> 16) & 0xff); d.write((v >> 24) & 0xff)
     }
-    d.write("BAM".getBytes("ISO-8859-1"))
-    val headerText = (Seq("@HD\tVN:1.6\tSO:coordinate") ++
-      refs.map(r => s"@SQ\tSN:$r\tLN:${refLen(r)}") ++
-      Seq(s"@RG\tID:rg1\tSM:$sample")).mkString("", "\n", "\n")
-    val ht = headerText.getBytes("ISO-8859-1")
+    d.write(Magic)
+    val ht = SamFormat.headerText(contigs, sample).getBytes(ISO_8859_1)
     putIntLe(ht.length); d.write(ht)
-    putIntLe(refs.size)
-    refs.foreach { r =>
-      val nb = (r + "\u0000").getBytes("ISO-8859-1")
+    putIntLe(contigs.size)
+    contigs.foreach { case (name, len) =>
+      val nb = (name + "\u0000").getBytes(ISO_8859_1)
       putIntLe(nb.length); d.write(nb)
-      putIntLe(refLen(r).toInt)
+      putIntLe(len.toInt)
     }
     reads.foreach { r =>
       val rec = ByteBuffer.allocate(1 << 16).order(ByteOrder.LITTLE_ENDIAN)
       val cigar = AlignmentOps.cigarOps(r.cigar)
-      var flag = 0
-      if (!r.readMapped) flag |= FlagUnmapped
-      if (r.readNegativeStrand) flag |= FlagReverse
-      if (r.duplicateRead) flag |= FlagDuplicate
-      if (!r.primaryAlignment) flag |= FlagSecondary
-      val paired = r.mateContigName.isDefined || r.mateStart.isDefined
-      if (paired) {
-        flag |= FlagPaired
-        if (!r.mateMapped) flag |= FlagMateUnmapped
-      }
       rec.putInt(refIdx(r.contigName))
       rec.putInt(r.start.toInt)
       val nameBytes = (r.readName + "\u0000").getBytes("ISO-8859-1")
@@ -569,7 +526,7 @@ object Bam {
       rec.put(r.mapq.toByte)
       rec.putShort(0.toShort) // bin (unused by this decoder)
       rec.putShort(cigar.size.toShort)
-      rec.putShort(flag.toShort)
+      rec.putShort(SamFormat.flag(r).toShort)
       rec.putInt(r.sequence.length)
       rec.putInt(r.mateContigName.flatMap(refIdx.get).getOrElse(-1))
       rec.putInt(r.mateStart.map(_.toInt).getOrElse(-1))

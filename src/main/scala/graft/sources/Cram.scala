@@ -35,16 +35,7 @@ import scala.collection.mutable.ArrayBuffer
 object Cram {
 
   import CramCodec._
-
-  // BAM flag bits (SAM spec)
-  private val FlagPaired = 0x1
-  private val FlagUnmapped = 0x4
-  private val FlagMateUnmapped = 0x8
-  private val FlagReverse = 0x10
-  private val FlagMateReverse = 0x20
-  private val FlagSecondary = 0x100
-  private val FlagDuplicate = 0x400
-  private val FlagSupplementary = 0x800
+  import SamFormat.{FlagMateUnmapped, FlagUnmapped}
 
   // CRAM record (CF) bits
   private val CfQualsPreserved = 0x1
@@ -52,8 +43,7 @@ object Cram {
   private val CfMateDownstream = 0x4
   private val CfUnknownBases = 0x8
 
-  // mate (MF) bits
-  private val MfMateNegStrand = 0x1
+  // mate (MF) bit; its mate-strand bit 0x1 has no Read field
   private val MfMateUnmapped = 0x2
 
   private val EofStart = 4542278 // ITF-8 payload spelling "EOF"
@@ -514,14 +504,10 @@ object Cram {
         if (j < recs.length) {
           val m = recs(j)
           r.mateRefId = m.refId; r.matePos = m.ap
-          r.mateFlags =
-            (if ((m.bf & FlagUnmapped) != 0) MfMateUnmapped else 0) |
-              (if ((m.bf & FlagReverse) != 0) MfMateNegStrand else 0)
+          r.mateFlags = if ((m.bf & FlagUnmapped) != 0) MfMateUnmapped else 0
           if (m.mateRefId == -2 && m.nf < 0) {
             m.mateRefId = r.refId; m.matePos = r.ap
-            m.mateFlags =
-              (if ((r.bf & FlagUnmapped) != 0) MfMateUnmapped else 0) |
-                (if ((r.bf & FlagReverse) != 0) MfMateNegStrand else 0)
+            m.mateFlags = if ((r.bf & FlagUnmapped) != 0) MfMateUnmapped else 0
           }
         }
       }
@@ -568,7 +554,8 @@ object Cram {
       refSlice: RefSlice): Read = {
 
     val mapped = (r.bf & FlagUnmapped) == 0
-    val start0 = (r.ap - 1).toLong.max(0L)
+    // AP is 1-based; an unplaced read's AP 0 is start -1, as in SAM and BAM
+    val start0 = (r.ap - 1).toLong
     var mdFromRef: Option[String] = None
 
     val (seq, cigarStr, refLen) =
@@ -697,53 +684,22 @@ object Cram {
         new String(bytes, 0, if (bytes.nonEmpty && bytes.last == 0) bytes.length - 1 else bytes.length, "ISO-8859-1")
     }.orElse(if (mapped) mdFromRef else None).getOrElse("")
 
-    val paired = (r.bf & FlagPaired) != 0
-    val mateUnmappedBit =
-      if (r.mateFlags >= 0) (r.mateFlags & MfMateUnmapped) != 0
-      else (r.bf & FlagMateUnmapped) != 0
-    var flags = r.bf
-    if (r.mateFlags >= 0) {
-      flags = flags & ~(FlagMateUnmapped | FlagMateReverse)
-      if ((r.mateFlags & MfMateUnmapped) != 0) flags |= FlagMateUnmapped
-      if ((r.mateFlags & MfMateNegStrand) != 0) flags |= FlagMateReverse
-    }
-
-    Read(
-      readName = r.name,
-      contigName = if (r.refId >= 0 && r.refId < refs.size) refs(r.refId) else "*",
-      start = start0,
-      end = start0 + refLen,
-      sequence = seq,
-      qual = qual,
-      cigar = cigarStr,
-      mdTag = mdTag,
-      mapq = r.mq,
-      readMapped = mapped,
-      readNegativeStrand = (flags & FlagReverse) != 0,
-      duplicateRead = (flags & FlagDuplicate) != 0,
-      primaryAlignment = (flags & (FlagSecondary | FlagSupplementary)) == 0,
-      sampleId =
-        if (r.rg >= 0 && r.rg < rgSamples.size) rgSamples(r.rg) else defaultSample,
+    // a detached or downstream mate's MF overrides BF's mate-unmapped bit
+    val flag =
+      if (r.mateFlags < 0) r.bf
+      else if ((r.mateFlags & MfMateUnmapped) != 0) r.bf | FlagMateUnmapped
+      else r.bf & ~FlagMateUnmapped
+    val paired = SamFormat.isPaired(flag)
+    SamFormat.toRead(r.name,
+      if (r.refId >= 0 && r.refId < refs.size) refs(r.refId) else "*",
+      start0, start0 + refLen, seq, qual, cigarStr, mdTag, r.mq, flag,
+      if (r.rg >= 0 && r.rg < rgSamples.size) rgSamples(r.rg) else defaultSample,
       mateContigName =
         if (paired && r.mateRefId >= 0 && r.mateRefId < refs.size) Some(refs(r.mateRefId)) else None,
-      mateStart = if (paired && r.matePos > 0) Some((r.matePos - 1).toLong) else None,
-      mateMapped = paired && !mateUnmappedBit)
+      mateStart = if (paired && r.matePos > 0) Some((r.matePos - 1).toLong) else None)
   }
 
   // ---- file level ---------------------------------------------------------
-
-  /** SAM header text → (@SQ names in order, @RG SM values in order). */
-  private def parseSamHeader(text: String, defaultSample: String): (IndexedSeq[String], IndexedSeq[String]) = {
-    val sq = ArrayBuffer.empty[String]
-    val rg = ArrayBuffer.empty[String]
-    text.linesIterator.foreach { line =>
-      if (line.startsWith("@SQ"))
-        line.split("\t").find(_.startsWith("SN:")).foreach(f => sq += f.substring(3))
-      else if (line.startsWith("@RG"))
-        rg += line.split("\t").find(_.startsWith("SM:")).map(_.substring(3)).getOrElse(defaultSample)
-    }
-    (sq.toIndexedSeq, rg.toIndexedSeq)
-  }
 
   private def readFileDefinition(raf: RandomAccessFile): Unit = {
     val magic = new Array[Byte](26)
@@ -768,11 +724,13 @@ object Cram {
     (hdr, payload)
   }
 
-  /** Driver-side header walk: SAM text + every data-container offset.
-    * Reads only headers (seek + skip), so listing a 300 GB file costs
-    * ~KBs of IO per container.
+  /** Driver-side header walk: the SAM header's @SQ names and @RG samples
+    * (CRAM has no binary reference list of its own) and every
+    * data-container offset. Reads only headers (seek + skip), so listing
+    * a 300 GB file costs ~KBs of IO per container.
     */
-  private def scanContainers(path: String): (String, Seq[Long]) = {
+  private def scanContainers(path: String, defaultSample: String)
+      : (IndexedSeq[String], IndexedSeq[String], Seq[Long]) = {
     val raf = new RandomAccessFile(path, "r")
     try {
       readFileDefinition(raf)
@@ -794,7 +752,8 @@ object Cram {
         if (!isEof(h)) offsets += off
         off += h.headerSize + h.length
       }
-      (text, offsets.toSeq)
+      val header = text.linesIterator.toSeq
+      (SamFormat.contigNames(header), SamFormat.samples(header, defaultSample), offsets.toSeq)
     } finally raf.close()
   }
 
@@ -825,34 +784,25 @@ object Cram {
 
   /** Decode one local .cram file (fixtures, CLI single-node paths). */
   def readLocal(path: String, reference: Option[String] = None,
-      defaultSample: String = "sample"): Seq[Read] = {
-    val (text, offsets) = scanContainers(path)
-    val (refs, rgs) = parseSamHeader(text, defaultSample)
+      defaultSample: String = SamFormat.DefaultSample): Seq[Read] = {
+    val (refs, rgs, offsets) = scanContainers(path, defaultSample)
     offsets.flatMap(decodeContainerAt(path, _, refs, rgs, defaultSample, reference))
   }
 
   /** Distributed scan: one task per container (a container is
-    * self-contained: its compression header travels with it). Mirrors
-    * [[Bam.read]]'s shape; no .crai index needed.
+    * self-contained: its compression header travels with it), through
+    * the split scan [[Bam.read]] uses; no .crai index needed.
     */
   def read(spark: SparkSession, path: String, reference: Option[String] = None,
-      defaultSample: String = "sample"): Dataset[Read] = {
+      defaultSample: String = SamFormat.DefaultSample): Dataset[Read] = {
     import spark.implicits._
-    val files: Seq[String] = {
-      val p = new java.io.File(path)
-      if (p.isDirectory) p.listFiles().filter(_.getName.endsWith(".cram")).map(_.getPath).sorted.toSeq
-      else Seq(path)
+    val containers = SamFormat.inputFiles(path, ".cram").flatMap { f =>
+      val (refs, rgs, offsets) = scanContainers(f, defaultSample)
+      offsets.map(off => (f, off, refs, rgs))
     }
-    val work: Seq[(String, Long, Seq[String], Seq[String])] = files.flatMap { f =>
-      val (text, offsets) = scanContainers(f)
-      val (refs, rgs) = parseSamHeader(text, defaultSample)
-      offsets.map(off => (f, off, refs.toSeq, rgs.toSeq))
+    SamFormat.scanSplits(spark, containers) { case (f, off, refs, rgs) =>
+      decodeContainerAt(f, off, refs, rgs, defaultSample, reference).iterator
     }
-    spark.createDataset(work)
-      .repartition(math.max(1, math.min(work.size, 10000)))
-      .flatMap { case (f, off, refs, rgs) =>
-        decodeContainerAt(f, off, refs.toIndexedSeq, rgs.toIndexedSeq, defaultSample, reference)
-      }
   }
 
   // ---- writer -------------------------------------------------------------
@@ -964,21 +914,17 @@ object Cram {
     *   file decodes standalone; false leaves retrieval to the reader's
     *   FASTA (the samtools-style external-reference layout).
     */
-  def write(reads: Seq[Read], path: String, sample: String = "sample",
+  def write(reads: Seq[Read], path: String, sample: String = SamFormat.DefaultSample,
       reference: Option[Map[String, String]] = None,
       embedRef: Boolean = true,
       recordsPerSlice: Int = 4096): Unit = {
     val refBased = reference.isDefined
-    val contigs = reads.filter(_.contigName != "*").map(_.contigName).distinct.sorted
-    val refIdx = contigs.zipWithIndex.toMap
-    val refLen: Map[String, Long] = reference match {
-      case Some(m) => contigs.map(c => c -> m.get(c).map(_.length.toLong).getOrElse(1000L)).toMap
-      case None => reads.filter(_.contigName != "*").groupBy(_.contigName)
-        .view.mapValues(_.map(_.end).max + 1000).toMap
+    val placed = SamFormat.contigLengths(reads)
+    val contigs = reference match {
+      case Some(m) => placed.map { case (c, _) => c -> m.get(c).map(_.length.toLong).getOrElse(1000L) }
+      case None => placed
     }
-    val headerText = (Seq("@HD\tVN:1.6\tSO:coordinate") ++
-      contigs.map(c => s"@SQ\tSN:$c\tLN:${refLen(c)}") ++
-      Seq(s"@RG\tID:rg1\tSM:$sample")).mkString("", "\n", "\n")
+    val refIdx = contigs.map(_._1).zipWithIndex.toMap
 
     val out = new ByteArrayOutputStream()
     // file definition: magic, version 3.0, 20-byte file id
@@ -990,7 +936,7 @@ object Cram {
     // header container: one raw block of int32 length + SAM text
     val headerPayload = {
       val b = new ByteArrayOutputStream()
-      val text = headerText.getBytes("ISO-8859-1")
+      val text = SamFormat.headerText(contigs, sample).getBytes("ISO-8859-1")
       writeInt32Le(b, text.length)
       b.write(text, 0, text.length)
       blockBytes(0, 0, 0, b.toByteArray)
@@ -1063,16 +1009,8 @@ object Cram {
     // CF values first (their Huffman alphabet goes into the header)
     val subs = new SubMatrix(Array.fill(5)(0x1b.toByte))
     val recs = group.map { r =>
-      var bf = 0
-      if (!r.readMapped) bf |= FlagUnmapped
-      if (r.readNegativeStrand) bf |= FlagReverse
-      if (r.duplicateRead) bf |= FlagDuplicate
-      if (!r.primaryAlignment) bf |= FlagSecondary
-      val paired = r.mateContigName.isDefined || r.mateStart.isDefined
-      if (paired) {
-        bf |= FlagPaired
-        if (!r.mateMapped) bf |= FlagMateUnmapped
-      }
+      val bf = SamFormat.flag(r)
+      val paired = SamFormat.isPaired(bf)
       var cf = 0
       if (r.qual != "*") cf |= CfQualsPreserved
       if (paired) cf |= CfDetached

@@ -116,6 +116,20 @@ class CliGenotyperSpec extends SparkSpec {
     assert(stringKeyed.isEmpty, stringKeyed)
   }
 
+  test("jointer declares every FILTER id it writes from biallelicGenotyper calls") {
+    val calls = s"$tmp/joint_calls"
+    Main.main(Array("biallelicGenotyper", bam, calls))
+    val vcf = s"$tmp/joint.vcf"
+    Main.main(Array("jointer", calls, vcf))
+    val lines = spark.read.textFile(vcf).collect().toSeq
+    val declared = lines.filter(_.startsWith("##FILTER=<ID="))
+      .map(_.stripPrefix("##FILTER=<ID=").takeWhile(_ != ',')).toSet
+    val written = lines.filterNot(_.startsWith("#")).map(_.split("\t")(6))
+      .filter(f => f != "PASS" && f != ".").flatMap(_.split(";")).toSet
+    assert(written.nonEmpty, "some calls fail a hard filter")
+    assert(written.subsetOf(declared), s"undeclared: ${written -- declared}")
+  }
+
   test("trioGenotyper writes the trio caller's rows over the same chain") {
     import spark.implicits._
     val reads = s"$tmp/trio_reads"

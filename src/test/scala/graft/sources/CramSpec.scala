@@ -125,6 +125,12 @@ class CramSpec extends SparkSpec {
     val ds = Cram.read(spark, s"$dir/many.cram")
     assert(ds.rdd.getNumPartitions === math.ceil(2000.0 / 128).toInt,
       "one task per container")
+    // each container on its own partition, placed without an exchange
+    val scanPlan = ds.queryExecution.executedPlan.toString
+    assert(!scanPlan.contains("Exchange"), scanPlan)
+    val sizes = ds.mapPartitions(it => Iterator(it.size))(org.apache.spark.sql.Encoders.scalaInt)
+      .collect().toSeq
+    assert(sizes.forall(n => n >= 1 && n <= 128), sizes)
     val got = ds.collect().toSeq.sortBy(_.readName)
     assert(got === local)
     assert(got.size === reads.size)
