@@ -73,6 +73,7 @@ object SamFormat {
       contigs.map { case (name, len) => s"@SQ\tSN:$name\tLN:$len" } ++
       Seq(s"@RG\tID:rg1\tSM:$sample")).mkString("", "\n", "\n")
 
+  /** The value of a header line's `tag:` field. */
   def headerField(line: String, tag: String): Option[String] =
     line.split("\t").find(_.startsWith(tag + ":")).map(_.substring(tag.length + 1))
 
